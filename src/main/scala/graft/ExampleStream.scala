@@ -64,12 +64,8 @@ object ExampleStream {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[4]"))
-      .appName("graft-example-stream")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.builder(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[4]"), "4")
+      .appName("graft-example-stream").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val g = new graft.runtime.Geist(spark, graft.runtime.RuntimeConfig(

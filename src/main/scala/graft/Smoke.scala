@@ -1,22 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev smoke-driver: replays the driver's t1 entry check plus a few
   * public-API probes. Run: sbt "runMain graft.Smoke"
   */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      // driver-generated parquet stores naive timestamps: read them as
-      // TIMESTAMP (UTC session) rather than TIMESTAMP_NTZ so timestamp
-      // functions and the DuckDB oracle see identical values
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.builder("local[4]", "4").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     println("ENTRY_ROWS=" + SparkEntry.entry(spark).count())

@@ -1,11 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
-
-import graft.compile.SpecCompiler
-import graft.spec.StreamSpec
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
@@ -19,17 +14,6 @@ import graft.spec.StreamSpec
   * the real operator implementations, not ad-hoc SQL.
   */
 object SparkEntry {
-
-  /** Kept at the historic access paths (tests, notebooks): the shared
-    * table loader and the frozen gate models live in [[EntrySupport]]
-    * since the round-6 tier split. */
-  private[graft] def t(s: SparkSession, dir: String, name: String): DataFrame =
-    EntrySupport.t(s, dir, name)
-  private[graft] def FrozenBpeMerges = EntrySupport.FrozenBpeMerges
-  private[graft] def FrozenQualityWeightsMicro = EntrySupport.FrozenQualityWeightsMicro
-  private[graft] def FrozenQualityBiasMicro = EntrySupport.FrozenQualityBiasMicro
-  private[graft] def FrozenPcaComponentsMicro = EntrySupport.FrozenPcaComponentsMicro
-  private[graft] def FrozenPcaMeanMicro = EntrySupport.FrozenPcaMeanMicro
 
   // ----------------------------------------------------------- queries
 

@@ -289,13 +289,8 @@ object StreamBench {
 
   def main(args: Array[String]): Unit = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-stream-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.builder(s"local[$cpus]", cpus)
+      .appName("graft-stream-bench").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val r = run(spark)
     println(s"""{"metric":"streaming","unit":"mixed","streaming":${jsonFragment(r)}}""")

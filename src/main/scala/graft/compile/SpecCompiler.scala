@@ -85,7 +85,6 @@ object SpecCompiler {
       case _ => gjson.eventPred(event, p)
     }
     def keepCol(event: Column): Column = predCol(keep, event)
-    def branchCol(b: Branch, event: Column): Column = predCol(b.pred, event)
     /** keep ∧ branch fused into ONE predicate expression = one JSON parse
       * per row instead of two.
       */

@@ -154,21 +154,6 @@ object gjson {
     override protected def withNewChildInternal(newChild: Expression): Expression = copy(child = newChild)
   }
 
-  /** gjson single-path string extraction; null when the path does not exist
-    * (callers choose missing-field defaults).
-    */
-  case class GJsonGetExpr(child: Expression, path: ParsedPath)
-      extends UnaryExpression with CodegenFallback {
-    override def dataType: DataType = StringType
-    override def nullable: Boolean = true
-    override def nullSafeEval(input: Any): Any =
-      Js.parse(input.asInstanceOf[UTF8String].toString)
-        .flatMap(GJsonPath.eval(_, path))
-        .map(v => UTF8String.fromString(GJsonPath.stringOf(v)))
-        .orNull
-    override protected def withNewChildInternal(newChild: Expression): Expression = copy(child = newChild)
-  }
-
   /** extractItemsFromArray (D1, transformer.go:336-359): explode a JSON
     * array into a map of {concat-key → raw item JSON}; items whose key is
     * empty are dropped. Key fields use gjson `Result.Str` (string-typed
@@ -300,9 +285,6 @@ object gjson {
 
   def eventPred(col: Column, pred: EventPred): Column =
     ExpressionUtils.column(EventPredExpr(ExpressionUtils.expression(col), pred))
-
-  def gjsonGet(col: Column, path: String): Column =
-    ExpressionUtils.column(GJsonGetExpr(ExpressionUtils.expression(col), GJsonPath.parse(path)))
 
   def itemsFromArray(col: Column, arrayPath: String, delimiter: String, idFields: Seq[String]): Column =
     ExpressionUtils.column(ItemsFromArrayExpr(ExpressionUtils.expression(col),

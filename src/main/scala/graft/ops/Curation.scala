@@ -1839,10 +1839,9 @@ object Curation {
     * skills TWICE (both pair endpoints) and its own raw frame twice (the
     * max-norm), so skills localCheckpoint per round — a cache would grow
     * the LOGICAL plan ~8× per round and the plan STRING geometrically —
-    * with superseded checkpoint blocks released via
-    * `bridge.unpersistLocalCheckpoint`. The returned frame is itself a
-    * LOCAL CHECKPOINT (materialized inside the call; blocks are
-    * ContextCleaner-collected once unreferenced).
+    * with superseded checkpoint blocks released through [[Rounds]]. The
+    * returned frame is itself a LOCAL CHECKPOINT (materialized inside the
+    * call; blocks are ContextCleaner-collected once unreferenced).
     *
     * Output: (item, wins, games, skill_micro), one row per item ever
     * judged. No rank column by design — ordering is `ORDER BY skill_micro
@@ -1878,7 +1877,7 @@ object Curation {
       .select(col("item"), coalesce(col("wins"), lit(0L)).as("wins"), col("games"))
       .persist()
 
-    var cur = base.select(col("item"), lit(M).as("s")).localCheckpoint(true)
+    var cur = Rounds.checkpoint(base.select(col("item"), lit(M).as("s")))._1
     for (_ <- 1 to iters) {
       val sa = cur.select(col("item").as("a"), col("s").as("__sa"))
       val sb = cur.select(col("item").as("b"), col("s").as("__sb"))
@@ -1904,22 +1903,15 @@ object Curation {
       // broadcast one-row max-norm (never 0 while any judgment exists:
       // some item won, its denominator is positive, its raw is positive)
       val mx = raw.agg(max(col("r")).as("__mx"))
-      val next = raw.crossJoin(broadcast(mx))
+      cur = Rounds.advance(Seq(raw, cur), raw.crossJoin(broadcast(mx))
         .select(col("item"), idiv(col("r") * M, greatest(col("__mx"), lit(1L)))
-          .as("s"))
-        .localCheckpoint(true)
-      raw.unpersist()
-      org.apache.spark.sql.graft.bridge.unpersistLocalCheckpoint(cur)
-      cur = next
+          .as("s")))._1
     }
-    // checkpoint the RESULT before releasing the final round's blocks —
-    // the seedDistance contract (the result must not alias released
-    // storage; a cache would stay recomputable-from-lineage into
-    // destroyed blocks)
-    val out = base.join(cur, "item")
-      .select(col("item"), col("wins"), col("games"), col("s").as("skill_micro"))
-      .localCheckpoint(true)
-    org.apache.spark.sql.graft.bridge.unpersistLocalCheckpoint(cur)
+    // the result joins onto the final round, so it is checkpointed before
+    // that round is released
+    val out = Rounds.finish(base.join(cur, "item")
+      .select(col("item"), col("wins"), col("games"), col("s").as("skill_micro")),
+      Seq(cur))
     oriented.unpersist(); pairs.unpersist(); base.unpersist()
     out
   }

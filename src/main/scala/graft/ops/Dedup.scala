@@ -830,14 +830,24 @@ object Dedup {
       .filter(col("cos_sim") >= threshold)
   }
 
+  /** Type-agnostic convergence fingerprint of a frame's (a, b) rows for the
+    * connected-components loops: xor-folded row hashes work for
+    * string/negative/any-typed ids (a plain sum would break on non-numeric
+    * ids; summing hashes overflows under ANSI; xor is order-independent and
+    * overflow-free). 0 on an empty frame.
+    */
+  private def fingerprint(a: String, b: String): Column =
+    coalesce(bit_xor(xxhash64(col(a), col(b))), lit(0L))
+
   /** Connected components over an undirected pair frame (idA, idB) —
     * the clustering step that turns verified near-dup pairs into dedup
     * groups. Iterative min-label propagation: each round, every node takes
     * the minimum component label among itself and its neighbors; converges
     * in O(cluster diameter) rounds (near-dup clusters are shallow — two
     * docs are linked through at most a few intermediates), each round one
-    * shuffle keyed by node id. Convergence is detected by the monotone
-    * label sum (one scalar action per round, no row-level diff join). For
+    * shuffle keyed by node id. Convergence is detected by a fingerprint of
+    * the labels, probed in the round's checkpoint job (no row-level diff
+    * join). For
     * graphs with deep chains swap in the big-star/small-star variant
     * (Kiveris et al., "Connected Components in MapReduce"); the API is the
     * same.
@@ -847,29 +857,22 @@ object Dedup {
     * CHECKPOINT (lineage truncated — recomputing would otherwise replay
     * the whole loop; non-reliable storage, so on a real cluster executor
     * loss after the call means re-running the operator): its blocks are
-    * collected by the ContextCleaner once the frame is unreferenced, or
-    * release them eagerly with `bridge.unpersistLocalCheckpoint` after
-    * consuming — plain `.unpersist()` does NOT touch checkpoint blocks.
+    * collected by the ContextCleaner once the frame is unreferenced —
+    * plain `.unpersist()` does NOT touch checkpoint blocks.
     * Superseded per-round frames are released inside the loop.
     */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 20): DataFrame = {
     val edges = pairs.select(col("idA").as("a"), col("idB").as("b"))
       .union(pairs.select(col("idB").as("a"), col("idA").as("b")))
       .cache()
-    var labels = edges.select(col("a").as("id")).distinct()
-      .withColumn("component", col("id")).cache()
-    // type-agnostic convergence fingerprint: labels only ever decrease, so
-    // the (id, component) set changes iff any label changed — xor-folded
-    // row hashes detect that for string/negative/any-typed ids (a plain
-    // sum(component) would break on non-numeric ids; summing hashes
-    // overflows under ANSI; xor is order-independent and overflow-free)
-    def labelFingerprint(df: DataFrame): Long = {
-      val v = df.agg(bit_xor(xxhash64(col("id"), col("component")))).collect()(0)
-      if (v.isNullAt(0)) 0L else v.getLong(0)
-    }
+    // labels only ever decrease, so the (id, component) set changes iff
+    // any label changed: the fingerprint detects convergence
+    var (labels, probe) = Rounds.checkpoint(
+      edges.select(col("a").as("id")).distinct().withColumn("component", col("id")),
+      count(lit(1)), fingerprint("id", "component"))
     var iter = 0
-    var converged = labels.isEmpty // empty pair graph: nothing to propagate
-    var prevFp = if (converged) 0L else labelFingerprint(labels)
+    var converged = probe.getLong(0) == 0L // empty pair graph: nothing to propagate
+    var prevFp = probe.getLong(1)
     while (!converged && iter < maxIter) {
       val viaNeighbors = edges
         .join(labels.select(col("id").as("b"), col("component")), "b")
@@ -881,16 +884,11 @@ object Dedup {
       // merely RENDERING it (explainString for the SQL listener fires on
       // every action, UI on or off) allocates geometrically — the 100×
       // ScaleProbe run OOMed the driver exactly there.
-      val next = labels.union(viaNeighbors)
-        .groupBy("id").agg(min(col("component")).as("component"))
-        .localCheckpoint(true)
-      val nextFp = labelFingerprint(next)
-      // round 0's frame is a cache() (unpersist releases it); later rounds
-      // are local checkpoints, whose blocks Dataset.unpersist does NOT
-      // touch — release them explicitly or the block manager accumulates
-      // one dead label frame per round
-      labels.unpersist()
-      org.apache.spark.sql.graft.bridge.unpersistLocalCheckpoint(labels)
+      val (next, fp) = Rounds.advance(Seq(labels),
+        labels.union(viaNeighbors)
+          .groupBy("id").agg(min(col("component")).as("component")),
+        fingerprint("id", "component"))
+      val nextFp = fp.getLong(0)
       labels = next
       converged = nextFp == prevFp
       prevFp = nextFp
@@ -944,19 +942,14 @@ object Dedup {
     // canonical (larger a, smaller b), self-loops dropped, deduped: the
     // star operations are neighborhood-set operations, multiplicity only
     // costs shuffle bytes
-    var e = pairs
-      .select(greatest(col("idA"), col("idB")).as("a"),
-        least(col("idA"), col("idB")).as("b"))
-      .where(col("a") =!= col("b")).distinct().cache()
-
-    def fingerprint(df: DataFrame): Long = {
-      val v = df.agg(bit_xor(xxhash64(col("a"), col("b")))).collect()(0)
-      if (v.isNullAt(0)) 0L else v.getLong(0)
-    }
-
+    var (e, probe) = Rounds.checkpoint(
+      pairs.select(greatest(col("idA"), col("idB")).as("a"),
+          least(col("idA"), col("idB")).as("b"))
+        .where(col("a") =!= col("b")).distinct(),
+      count(lit(1)), fingerprint("a", "b"))
     var iter = 0
-    var converged = e.isEmpty // edgeless graph: every node is its own root
-    var prevFp = if (converged) 0L else fingerprint(e)
+    var converged = probe.getLong(0) == 0L // edgeless graph: every node is its own root
+    var prevFp = probe.getLong(1)
     while (!converged && iter < maxIter) {
       // large-star over the doubled neighborhood: u's closed minimum m ≤ u,
       // emitted edges (v, m) for v > u — already (larger, smaller) form
@@ -982,10 +975,8 @@ object Dedup {
       // — caching does not truncate lineage, checkpointing does. Local
       // checkpoint suffices in one JVM; on a real cluster set a reliable
       // spark.checkpoint.dir so executor loss cannot drop a round.
-      val cp = small.localCheckpoint(true)
-      val fp = fingerprint(cp)
-      e.unpersist() // round 0: cache; later rounds: no-op (checkpoint)
-      org.apache.spark.sql.graft.bridge.unpersistLocalCheckpoint(e)
+      val (cp, p) = Rounds.advance(Seq(e), small, fingerprint("a", "b"))
+      val fp = p.getLong(0)
       e = cp
       converged = fp == prevFp
       prevFp = fp
@@ -1002,18 +993,13 @@ object Dedup {
       .groupBy("id").agg(min(col("component")).as("component"))
     // checkpoint the RESULT, not cache it: a cached frame stays
     // recomputable-from-lineage, and that lineage reads e's checkpoint
-    // blocks — which the releases below destroy. On a cluster a lost or
-    // evicted cached partition would then fail with "checkpoint block not
-    // found"; localCheckpoint(true) materializes `out` AND truncates its
-    // lineage first (the BFS-epilogue rule), making the leaf drop safe.
-    // Same return contract as [[connectedComponents]]: a checkpointed
-    // frame the context cleaner reclaims when the caller drops it.
-    val out = nodes
+    // blocks, which the release destroys. Same return contract as
+    // [[connectedComponents]]: a checkpointed frame the context cleaner
+    // reclaims when the caller drops it.
+    val out = Rounds.finish(nodes
       .join(labels, Seq("id"), "left")
-      .select(col("id"), coalesce(col("component"), col("id")).as("component"))
-      .localCheckpoint(true)
-    e.unpersist()
-    org.apache.spark.sql.graft.bridge.unpersistLocalCheckpoint(e)
+      .select(col("id"), coalesce(col("component"), col("id")).as("component")),
+      Seq(e))
     nodes.unpersist()
     (out, iter)
   }

@@ -59,6 +59,32 @@ object Graph {
   private def truncateLineage(df: DataFrame): DataFrame =
     df.sparkSession.createDataFrame(df.rdd, df.schema)
 
+  /** The leaky PageRank chain loop ([[pageRank]], [[weightedPageRank]],
+    * [[personalizedPageRank]]): `iters` applications of `step` to `start`.
+    * Each round references the previous ranks exactly once, so lineage is a
+    * chain and batching is safe: only every `persistEvery`-th round and the
+    * last persist, materialize with one count, drop the previous window's
+    * frame, and leaf-ify for the next window. The result is persisted (the
+    * caller owns `unpersist()`), except at iters = 0 where it is `start`.
+    */
+  private def chainRounds(start: DataFrame, iters: Int, persistEvery: Int)(
+      step: DataFrame => DataFrame): DataFrame = {
+    var ranks = start
+    var cur: DataFrame = null
+    for (i <- 1 to iters) {
+      var next = step(ranks)
+      if (i % persistEvery == 0 || i == iters) {
+        next = next.persist()
+        next.count() // materialize before dropping the previous window
+        if (cur != null) cur.unpersist()
+        cur = next
+        if (i != iters) next = truncateLineage(next)
+      }
+      ranks = next
+    }
+    ranks
+  }
+
   /** Integer-exact PageRank over `edges` (one row per directed edge).
     * Returns (node, pr) in micro-units for every node appearing as a src
     * or dst. Parallel edges count as parallel (pre-`distinct` them if not
@@ -109,25 +135,29 @@ object Graph {
     lazy val danglingNodes = nodes.join(outDeg.select(col("src").as("node")),
       Seq("node"), "left_anti").withColumn("__dang", lit(1)).persist()
 
-    var ranks = nodes.withColumn("pr", lit(1000000L))
-    // window bookkeeping: every round persists in redistribute mode (its
-    // cache is what makes the broadcast-share chain single-execution, see
-    // below), but only window boundaries materialize; `windowFrames`
-    // collects the window's interior caches so they can drop once the
-    // boundary count has run
-    var cur: DataFrame = null
-    var windowFrames: List[DataFrame] = Nil
-    for (i <- 1 to iters) {
-      val contribs = eo.join(ranks, eo("src") === ranks("node"))
+    val start = nodes.withColumn("pr", lit(1000000L))
+    def contribs(ranks: DataFrame): DataFrame =
+      eo.join(ranks, eo("src") === ranks("node"))
         .select(col("dst").as("node"), expr("pr div outdeg").as("c"))
         .groupBy("node").agg(sum("c").as("s"))
-      var next =
-        if (!redistributeDangling)
-          nodes.join(contribs, Seq("node"), "left")
+    val ranks =
+      if (!redistributeDangling)
+        chainRounds(start, iters, persistEvery) { ranks =>
+          nodes.join(contribs(ranks), Seq("node"), "left")
             .select(col("node"),
               (lit(150000L) + expr("(17 * coalesce(s, CAST(0 AS BIGINT))) div 20"))
                 .as("pr"))
-        else {
+        }
+      else {
+        // window bookkeeping: every round persists (its cache is what makes
+        // the broadcast-share chain single-execution, see below), but only
+        // window boundaries materialize; `windowFrames` collects the
+        // window's interior caches so they can drop once the boundary count
+        // has run
+        var ranks = start
+        var cur: DataFrame = null
+        var windowFrames: List[DataFrame] = Nil
+        for (i <- 1 to iters) {
           // per-node share of this round's dangling mass, floor(sum / N),
           // computed entirely plan-side as a broadcast one-row aggregate
           // (count(1) over ranks IS the node count). The loop stays
@@ -143,47 +173,46 @@ object Graph {
             .agg(coalesce(
               expr("sum(CASE WHEN __dang = 1 THEN pr END) div count(1)"),
               lit(0L)).as("__share"))
-          nodes.join(contribs, Seq("node"), "left")
+          var next = nodes.join(contribs(ranks), Seq("node"), "left")
             .crossJoin(broadcast(shareDf))
             .select(col("node"),
               (lit(150000L) +
                 expr("(17 * (coalesce(s, CAST(0 AS BIGINT)) + __share)) div 20"))
                 .as("pr"))
+            .persist()
+          windowFrames ::= next
+          // Window sizing: fewer actions win decisively — every intermediate
+          // materialization was measured 3-5× more expensive than letting
+          // the final count's single job cascade populate the per-round
+          // caches (per-round counts: 5.7-10.3 s at sf0.1 in a busy JVM;
+          // fused single action: 1.5-2.1 s in the same JVM — and an
+          // explicit cache-warming count on the edge frame alone cost more
+          // than the whole fused run). Stage races on not-yet-populated
+          // caches are bounded by the caches themselves (each frame
+          // computes at most once per concurrent reader, typically ≤ 2,
+          // never exponentially). So this arm fuses up to 8 rounds per
+          // action; the window cap exists only to bound the LOGICAL tree
+          // (it doubles per round — 2^8 bodies ≈ 10^4 analyzer nodes — and
+          // interior caches drop at each boundary, keeping live cache ≤ 8
+          // node-sized frames). The leaky arm is a chain and keeps
+          // persistEvery batching.
+          if (i % 8 == 0 || i == iters) {
+            next.count() // materialize before dropping the previous window
+            if (cur != null) cur.unpersist()
+            windowFrames.drop(1).foreach(_.unpersist()) // keep the boundary frame
+            windowFrames = Nil
+            cur = next
+            // leaf-ify the checkpoint so the next window's logical plan
+            // starts from a constant-size tree regardless of iteration count
+            // (safe here and ONLY here: truncateLineage on an unmaterialized
+            // frame would eagerly run the plan's stages without populating
+            // the cache)
+            if (i != iters) next = truncateLineage(next)
+          }
+          ranks = next
         }
-      if (redistributeDangling) {
-        next = next.persist()
-        windowFrames ::= next
+        ranks
       }
-      // Window sizing: fewer actions win decisively — every intermediate
-      // materialization was measured 3-5× more expensive than letting the
-      // final count's single job cascade populate the per-round caches
-      // (per-round counts: 5.7-10.3 s at sf0.1 in a busy JVM; fused
-      // single action: 1.5-2.1 s in the same JVM — and an explicit
-      // cache-warming count on the edge frame alone cost more than the
-      // whole fused run). Stage races on not-yet-populated caches are
-      // bounded by the caches themselves (each frame computes at most
-      // once per concurrent reader, typically ≤ 2, never exponentially).
-      // So redistribute fuses up to 8 rounds per action; the window cap
-      // exists only to bound the LOGICAL tree (it doubles per round —
-      // 2^8 bodies ≈ 10^4 analyzer nodes — and interior caches drop at
-      // each boundary, keeping live cache ≤ 8 node-sized frames). The
-      // leaky path is a chain and keeps persistEvery batching.
-      val window = if (redistributeDangling) 8 else persistEvery
-      if (i % window == 0 || i == iters) {
-        if (!redistributeDangling) next = next.persist()
-        next.count() // materialize before dropping the previous window
-        if (cur != null) cur.unpersist()
-        windowFrames.drop(1).foreach(_.unpersist()) // keep the boundary frame
-        windowFrames = Nil
-        cur = next
-        // leaf-ify the checkpoint so the next window's logical plan starts
-        // from a constant-size tree regardless of iteration count (safe
-        // here and ONLY here: truncateLineage on an unmaterialized frame
-        // would eagerly run the plan's stages without populating the cache)
-        if (i != iters) next = truncateLineage(next)
-      }
-      ranks = next
-    }
     // for iters >= 1 the final round always checkpoints (i == iters arm),
     // so the result is materialized and the helper caches can drop; for
     // iters == 0 the returned start frame recomputes through the caller's
@@ -224,24 +253,15 @@ object Graph {
     val eo = e.join(outW, "src").persist()
     val nodes = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node"))).distinct().persist()
-    var ranks = nodes.withColumn("pr", lit(1000000L))
-    var cur: DataFrame = null
-    for (i <- 1 to iters) {
+    val ranks = chainRounds(nodes.withColumn("pr", lit(1000000L)), iters,
+      persistEvery) { ranks =>
       val contribs = eo.join(ranks, eo("src") === ranks("node"))
         .select(col("dst").as("node"), expr("(pr * w) div sumw").as("c"))
         .groupBy("node").agg(sum("c").as("s"))
-      var next = nodes.join(contribs, Seq("node"), "left")
+      nodes.join(contribs, Seq("node"), "left")
         .select(col("node"),
           (lit(150000L) + expr("(17 * coalesce(s, CAST(0 AS BIGINT))) div 20"))
             .as("pr"))
-      if (i % persistEvery == 0 || i == iters) {
-        next = next.persist()
-        next.count()
-        if (cur != null) cur.unpersist()
-        cur = next
-        if (i != iters) next = truncateLineage(next)
-      }
-      ranks = next
     }
     e.unpersist()
     eo.unpersist()
@@ -291,24 +311,16 @@ object Graph {
       .join(seedSet, Seq("node"), "left")
       .select(col("node"), coalesce(col("__s"), lit(0L)).as("__s"))
       .persist()
-    var ranks = nodes.select(col("node"), (col("__s") * lit(1000000L)).as("pr"))
-    var cur: DataFrame = null
-    for (i <- 1 to iters) {
+    val ranks = chainRounds(
+      nodes.select(col("node"), (col("__s") * lit(1000000L)).as("pr")), iters,
+      persistEvery) { ranks =>
       val contribs = eo.join(ranks, eo("src") === ranks("node"))
         .select(col("dst").as("node"), expr("pr div outdeg").as("c"))
         .groupBy("node").agg(sum("c").as("s"))
-      var next = nodes.join(contribs, Seq("node"), "left")
+      nodes.join(contribs, Seq("node"), "left")
         .select(col("node"),
           (col("__s") * lit(150000L) +
             expr("(17 * coalesce(s, CAST(0 AS BIGINT))) div 20")).as("pr"))
-      if (i % persistEvery == 0 || i == iters) {
-        next = next.persist()
-        next.count()
-        if (cur != null) cur.unpersist()
-        cur = next
-        if (i != iters) next = truncateLineage(next)
-      }
-      ranks = next
     }
     e.unpersist()
     eo.unpersist()
@@ -339,9 +351,10 @@ object Graph {
     * join references); the distance table is a union of already-checkpointed
     * frontier leaves, so referencing it twice (anti-join + result) re-reads
     * caches, never recomputes, and the logical tree grows O(1) per round.
-    * The eager checkpoint doubles as the empty-frontier probe: BFS stops as
-    * soon as the reachable set is exhausted, so `maxHops` larger than the
-    * graph's diameter costs nothing.
+    * The round's checkpoint job doubles as the empty-frontier probe
+    * ([[Rounds.checkpoint]]): BFS stops as soon as the reachable set is
+    * exhausted, so `maxHops` larger than the graph's diameter costs
+    * nothing.
     *
     * Output: (node, hops) with hops in [0, maxHops], one row per reached
     * node. Unreached nodes are absent (left-join the node set and treat
@@ -350,8 +363,7 @@ object Graph {
     * returned frame is a LOCAL CHECKPOINT (materialized before the per-hop
     * frontier blocks — its former lineage leaves — are released inside the
     * call; localCheckpoint data is unrecoverable once dropped). Its blocks
-    * are ContextCleaner-collected when the frame is unreferenced, or
-    * release eagerly via `bridge.unpersistLocalCheckpoint`.
+    * are ContextCleaner-collected when the frame is unreferenced.
     *
     * Duplicate edges: the loop is CORRECT under them (the per-round
     * frontier `distinct` absorbs dupes) and by default does NOT dedup —
@@ -366,50 +378,14 @@ object Graph {
       seeds: DataFrame, seedCol: String, maxHops: Int = 3,
       dedupEdges: Boolean = false): DataFrame = {
     require(maxHops >= 0, "maxHops must be >= 0")
-    // no edge distinct by DEFAULT: BFS is duplicate-insensitive, so on
-    // mostly-unique edges a dedup is a full edge-table shuffle bought for
-    // nothing; dedupEdges opts in for duplicate-heavy streams (scaladoc)
-    val e0 = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .where(col("src").isNotNull && col("dst").isNotNull)
-    val e = (if (dedupEdges) e0.distinct() else e0).persist()
-    // LAZY checkpoint + count: the empty-frontier probe's own job
-    // materializes the checkpoint blocks (lineage truncates at job end), so
-    // each round runs ONE action instead of checkpoint-then-probe — the
-    // probe is synchronous, so the release order below is unchanged
-    var frontier = seeds.select(col(seedCol).as("node")).distinct()
-      .withColumn("hops", lit(0L)).localCheckpoint(false)
-    var dist = frontier
-    var leaves: List[DataFrame] = frontier :: Nil
-    var hop = 0
-    var exhausted = frontier.count() == 0L
-    while (hop < maxHops && !exhausted) {
-      val reached = e
-        .join(frontier.select(col("node").as("src")), Seq("src"), "left_semi")
-        .select(col("dst").as("node")).distinct()
-      val fresh = reached.join(dist, Seq("node"), "left_anti")
-        .withColumn("hops", lit(hop + 1L))
-      val cp = fresh.localCheckpoint(false)
-      exhausted = cp.count() == 0L
-      if (!exhausted) {
-        dist = dist.union(cp)
-        leaves ::= cp
-        frontier = cp
-      } else {
-        cp.unpersist()
-        org.apache.spark.sql.graft.bridge.unpersistLocalCheckpoint(cp)
-      }
-      hop += 1
+    frontierBfs(edges, srcCol, dstCol, dedupEdges, maxHops,
+      seeds.select(col(seedCol).as("node")).distinct().withColumn("hops", lit(0L))) {
+      (e, frontier, dist, hop) =>
+        e.join(frontier.select(col("node").as("src")), Seq("src"), "left_semi")
+          .select(col("dst").as("node")).distinct()
+          .join(dist, Seq("node"), "left_anti")
+          .withColumn("hops", lit(hop))
     }
-    // materialize the result as its OWN local checkpoint BEFORE releasing
-    // the per-hop frontiers: `dist` is the union of every round's
-    // checkpointed frontier, so the result must stop referencing their
-    // blocks first. (A persist()+count() is not enough: when maxHops=0 the
-    // result IS the hop-0 frame, and releasing that leaf would drop the
-    // result's own storage.)
-    val out = dist.localCheckpoint(true)
-    leaves.foreach(org.apache.spark.sql.graft.bridge.unpersistLocalCheckpoint(_))
-    e.unpersist()
-    out
   }
 
   /** BFS with seed ATTRIBUTION: like [[seedDistance]], but every reached
@@ -442,44 +418,50 @@ object Graph {
       seeds: DataFrame, seedCol: String, maxHops: Int = 3,
       dedupEdges: Boolean = false): DataFrame = {
     require(maxHops >= 0, "maxHops must be >= 0")
+    frontierBfs(edges, srcCol, dstCol, dedupEdges, maxHops,
+      seeds.select(col(seedCol).as("node")).distinct()
+        .withColumn("hops", lit(0L)).withColumn("seed", col("node"))) {
+      (e, frontier, dist, hop) =>
+        e.join(frontier.select(col("node").as("src"), col("seed")), Seq("src"))
+          .groupBy(col("dst").as("node")).agg(min(col("seed")).as("seed"))
+          .join(dist, Seq("node"), "left_anti")
+          .select(col("node"), lit(hop).as("hops"), col("seed"))
+    }
+  }
+
+  /** The frontier-only BFS loop of [[seedDistance]] and [[seedAttribution]]:
+    * `start` is the hop-0 frontier, and `expand(edges, frontier, dist, hop)`
+    * returns the nodes first reached at `hop` — edges out of the frontier,
+    * anti-joined against the accumulated distance table. The empty-frontier
+    * probe is each round's checkpoint job, so BFS stops as soon as the
+    * reachable set is exhausted. The result is a union of checkpointed
+    * rounds, so it is checkpointed itself before they are released (at
+    * maxHops = 0 it IS the hop-0 round).
+    */
+  private def frontierBfs(edges: DataFrame, srcCol: String, dstCol: String,
+      dedupEdges: Boolean, maxHops: Int, start: DataFrame)(
+      expand: (DataFrame, DataFrame, DataFrame, Long) => DataFrame): DataFrame = {
+    // no edge distinct by DEFAULT: BFS is duplicate-insensitive, so on
+    // mostly-unique edges a dedup is a full edge-table shuffle bought for
+    // nothing; dedupEdges opts in for duplicate-heavy streams (scaladoc)
     val e0 = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
       .where(col("src").isNotNull && col("dst").isNotNull)
     val e = (if (dedupEdges) e0.distinct() else e0).persist()
-    // lazy checkpoint + count probe: one action per round (see
-    // [[seedDistance]] — the probe job materializes the checkpoint)
-    var frontier = seeds.select(col(seedCol).as("node")).distinct()
-      .withColumn("hops", lit(0L)).withColumn("seed", col("node"))
-      .localCheckpoint(false)
+    var (frontier, probe) = Rounds.checkpoint(start, count(lit(1)))
     var dist = frontier
-    var leaves: List[DataFrame] = frontier :: Nil
-    var hop = 0
-    var exhausted = frontier.count() == 0L
-    while (hop < maxHops && !exhausted) {
-      val reached = e
-        .join(frontier.select(col("node").as("src"), col("seed")), Seq("src"))
-        .groupBy(col("dst").as("node")).agg(min(col("seed")).as("seed"))
-      val fresh = reached.join(dist, Seq("node"), "left_anti")
-        .select(col("node"), lit(hop + 1L).as("hops"), col("seed"))
-      val cp = fresh.localCheckpoint(false)
-      exhausted = cp.count() == 0L
-      if (!exhausted) {
-        dist = dist.union(cp)
-        leaves ::= cp
-        frontier = cp
-      } else {
-        cp.unpersist()
-        org.apache.spark.sql.graft.bridge.unpersistLocalCheckpoint(cp)
-      }
+    var rounds = List(frontier)
+    var hop = 0L
+    while (hop < maxHops && probe.getLong(0) > 0L) {
       hop += 1
+      val (cp, p) = Rounds.checkpoint(expand(e, frontier, dist, hop), count(lit(1)))
+      rounds ::= cp
+      probe = p
+      if (p.getLong(0) > 0L) {
+        dist = dist.union(cp)
+        frontier = cp
+      }
     }
-    // materialize the result as its OWN local checkpoint BEFORE releasing
-    // the per-hop frontiers: `dist` is the union of every round's
-    // checkpointed frontier, so the result must stop referencing their
-    // blocks first. (A persist()+count() is not enough: when maxHops=0 the
-    // result IS the hop-0 frame, and releasing that leaf would drop the
-    // result's own storage.)
-    val out = dist.localCheckpoint(true)
-    leaves.foreach(org.apache.spark.sql.graft.bridge.unpersistLocalCheckpoint(_))
+    val out = Rounds.finish(dist, rounds)
     e.unpersist()
     out
   }
@@ -794,11 +776,10 @@ object Graph {
       .distinct().persist()
     val nbrs = und.select(col("u").as("n"), col("v").as("nb"))
       .union(und.select(col("v").as("n"), col("u").as("nb")))
-    var labels = und.select(col("u").as("node")).union(und.select(col("v").as("node")))
-      .distinct().withColumn("label", col("node"))
-      .localCheckpoint(true)
-    var r = 0
-    while (r < rounds) {
+    var labels = Rounds.checkpoint(
+      und.select(col("u").as("node")).union(und.select(col("v").as("node")))
+        .distinct().withColumn("label", col("node")))._1
+    for (_ <- 1 to rounds) {
       val nbrLabels = nbrs
         .join(labels.select(col("node").as("nb"), col("label").as("nbl")), "nb")
         .groupBy(col("n"), col("nbl")).agg(count(lit(1)).as("c"))
@@ -807,11 +788,7 @@ object Graph {
       val next = labels
         .join(winners.withColumnRenamed("n", "node"), Seq("node"), "left")
         .select(col("node"), coalesce(col("__new"), col("label")).as("label"))
-      val cp = next.localCheckpoint(true)
-      labels.unpersist() // no-op past round 0 — release the checkpoint too
-      org.apache.spark.sql.graft.bridge.unpersistLocalCheckpoint(labels)
-      labels = cp
-      r += 1
+      labels = Rounds.advance(Seq(labels), next)._1
     }
     und.unpersist()
     labels
@@ -848,12 +825,9 @@ object Graph {
       .where(col("a") =!= col("b") && col("a").isNotNull && col("b").isNotNull)
       .select(least(col("a"), col("b")).as("u"), greatest(col("a"), col("b")).as("v"))
       .distinct()
-    // lazy checkpoint + count: the convergence count's own job materializes
-    // the checkpoint (one action per round instead of two); the count is
-    // synchronous, so the release below still happens only after the new
-    // round's blocks exist
-    var e = e0.localCheckpoint(false)
-    var n = e.count()
+    // the edge count is each round's probe: its job materializes the round
+    var (e, probe) = Rounds.checkpoint(e0, count(lit(1)))
+    var n = probe.getLong(0)
     var converged = n == 0
     var rounds = 0
     while (!converged && rounds < maxRounds) {
@@ -863,10 +837,8 @@ object Graph {
       val e2 = e
         .join(keep.withColumnRenamed("node", "u"), Seq("u"), "left_semi")
         .join(keep.withColumnRenamed("node", "v"), Seq("v"), "left_semi")
-      val cp = e2.localCheckpoint(false)
-      val n2 = cp.count()
-      e.unpersist() // no-op for checkpoint rounds — release blocks too
-      org.apache.spark.sql.graft.bridge.unpersistLocalCheckpoint(e)
+      val (cp, p) = Rounds.advance(Seq(e), e2, count(lit(1)))
+      val n2 = p.getLong(0)
       e = cp
       converged = n2 == n
       n = n2

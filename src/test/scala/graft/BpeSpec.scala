@@ -40,14 +40,14 @@ class BpeSpec extends AnyFunSuite {
   }
 
   test("frozen contract tokenizer is exactly the sf0.001 corpus learning result") {
-    // provenance gate for SparkEntry.FrozenBpeMerges: the inlined merge
+    // provenance gate for EntrySupport.FrozenBpeMerges: the inlined merge
     // table IS learnFromCorpus on the full sf0.001 documents — if the
     // learner (tokenization, tie-breaks, merge order) ever changes, this
     // golden forces the frozen table and its oracle to be regenerated.
     val docs = SparkTestBase.spark.read
       .parquet("/root/testdata/sf0.001/documents.parquet")
     val learned = Bpe.learnFromCorpus(docs, "text", numMerges = 64)
-    assert(learned == SparkEntry.FrozenBpeMerges)
+    assert(learned == EntrySupport.FrozenBpeMerges)
   }
 
   test("ns_bpe contract query is a zero-shuffle scan (merge ranks ride the closure)") {

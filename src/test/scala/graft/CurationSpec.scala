@@ -469,7 +469,7 @@ class CurationSpec extends AnyFunSuite {
   test("bloom decontamination produces exactly the broadcast-exact results") {
     // Bloom pre-filter + exact join == exact decontaminate (no false
     // negatives; the join removes false positives) — on the real corpus
-    val docs = SparkEntry.t(spark, "/root/testdata/sf0.001", "documents")
+    val docs = EntrySupport.t(spark, "/root/testdata/sf0.001", "documents")
     val corpus = docs.filter(col("doc_id") % 17 =!= 0)
     val bench = docs.filter(col("doc_id") % 17 === 0)
     val exact = Curation.decontaminate(corpus, bench, "text", "doc_id", n = 4)
@@ -501,7 +501,7 @@ class CurationSpec extends AnyFunSuite {
 
   test("the README curation pipeline composes end-to-end on the test corpus") {
     import graft.ops.{Dedup, TextAnalysis}
-    val docs = SparkEntry.t(spark, "/root/testdata/sf0.001", "documents")
+    val docs = EntrySupport.t(spark, "/root/testdata/sf0.001", "documents")
       .select(col("doc_id"), col("text"), col("lang"))
     val evalBench = docs.filter(col("doc_id") % 13 === 0).select("doc_id", "text")
 

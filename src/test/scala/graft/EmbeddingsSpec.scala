@@ -88,9 +88,9 @@ class EmbeddingsSpec extends AnyFunSuite {
     val e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val m = Embeddings.trainPca(e, "embedding", dim = 64, k = 4)
     assert(m.componentsMicro.map(_.toSeq).toSeq ==
-      SparkEntry.FrozenPcaComponentsMicro.map(_.toSeq).toSeq,
+      EntrySupport.FrozenPcaComponentsMicro.map(_.toSeq).toSeq,
       "frozen PCA basis drifted — re-derive the inlined array and its oracle")
-    assert(m.meanMicro.toSeq == SparkEntry.FrozenPcaMeanMicro.toSeq,
+    assert(m.meanMicro.toSeq == EntrySupport.FrozenPcaMeanMicro.toSeq,
       "frozen PCA mean drifted — re-derive the inlined array and its oracle")
   }
 
@@ -262,8 +262,8 @@ class EmbeddingsSpec extends AnyFunSuite {
 
   test("projection scan is shuffle-free (components ride the closure)") {
     val e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    val m = graft.ops.Embeddings.PcaModel(SparkEntry.FrozenPcaComponentsMicro,
-      SparkEntry.FrozenPcaMeanMicro, 64, 1000000L)
+    val m = graft.ops.Embeddings.PcaModel(EntrySupport.FrozenPcaComponentsMicro,
+      EntrySupport.FrozenPcaMeanMicro, 64, 1000000L)
     val plan = Embeddings.project(e, "vec_id", "embedding", m)
       .queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange"), s"projection must not shuffle:\n$plan")
@@ -292,37 +292,8 @@ class EmbeddingsSpec extends AnyFunSuite {
   test("job-count gate: kCenterSelect is linear in k (stateless rounds, no lineage growth)") {
     // mirrors GraphSpec's loop gates: each round is one TakeOrdered scan,
     // so jobs grow by a constant per added center
-    def countJobs(body: => Unit): Int = {
-      val group = s"graft-kcgate-${java.util.UUID.randomUUID().toString.take(8)}"
-      val n = new java.util.concurrent.atomic.AtomicInteger(0)
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          if (js.properties != null &&
-            group == js.properties.getProperty("spark.jobGroup.id"))
-            n.incrementAndGet()
-          ()
-        }
-      }
-      spark.sparkContext.addSparkListener(listener)
-      spark.sparkContext.setJobGroup(group, "kcenter job gate")
-      try {
-        body
-        var last = -1; var stable = 0; var waited = 0
-        while (stable < 3 && waited < 5000) {
-          Thread.sleep(100); waited += 100
-          val cur = n.get()
-          if (cur == last) stable += 1 else { stable = 0; last = cur }
-        }
-      } finally {
-        spark.sparkContext.clearJobGroup()
-        spark.sparkContext.removeSparkListener(listener)
-      }
-      assert(n.get() > 0, "job-group scoping captured no jobs")
-      n.get()
-    }
     import spark.implicits._
-    def run(k: Int): Int = countJobs {
+    def run(k: Int): Int = SparkTestBase.countJobs {
       val pts = (0 until 24)
         .map(i => (i.toLong, Seq((i * 37 % 24).toDouble, (i * 11 % 24).toDouble)))
         .toDF("id", "vec")

@@ -248,6 +248,33 @@ class GraphSpec extends AnyFunSuite {
     assert(d1 <= 40, s"per-round job cost out of bounds: j2=$j2 j4=$j4")
   }
 
+  test("checkpointed loops release every replaced round: only the result's RDD stays persisted") {
+    // each round's blocks must drop once the next round has materialized,
+    // and a result built from rounds must not read released blocks — so
+    // across one call the persistent-RDD set grows by at most the RDD the
+    // returned frame reads (SCALE.md "Iterative operators")
+    val chain = (0 until 6).map(i => (s"rel$i", s"rel${i + 1}")).toDF("src", "dst")
+    val seeds = Seq("rel0").toDF("seed")
+    val pairs = (0 until 6).map(i => (i + 500L, i + 501L)).toDF("idA", "idB")
+    val judgments = Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 1L)).toDF("w", "l")
+    val loops: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
+      "seedDistance" -> (() => Graph.seedDistance(chain, "src", "dst", seeds, "seed", 4)),
+      "seedAttribution" -> (() =>
+        Graph.seedAttribution(chain, "src", "dst", seeds, "seed", 4)),
+      "labelPropagation" -> (() => Graph.labelPropagation(chain, "src", "dst", rounds = 3)),
+      "kCore" -> (() => Graph.kCore(chain, "src", "dst", k = 2L)),
+      "connectedComponents" -> (() => graft.ops.Dedup.connectedComponents(pairs)),
+      "connectedComponentsStar" -> (() => graft.ops.Dedup.connectedComponentsStar(pairs)),
+      "bradleyTerry" -> (() => graft.ops.Curation.bradleyTerry(judgments, "w", "l", iters = 3)))
+    for ((name, run) <- loops) {
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      val out = run()
+      out.collect()
+      val added = spark.sparkContext.getPersistentRDDs.keySet -- before
+      assert(added.size <= 1, s"$name left ${added.size} RDDs persisted: $added")
+    }
+  }
+
   test("job-count gate: star-contraction CC jobs stay proportional to executed rounds") {
     // the third iterative loop under the SCALE.md rule: a chain forces
     // multiple large/small-star rounds, and the per-round checkpoint must

@@ -17,7 +17,7 @@ class PlanSpec extends AnyFunSuite {
     df.queryExecution.executedPlan.toString
 
   test("filter + projection push down to the parquet scan") {
-    val li = SparkEntry.t(spark, sf, "lineitem")
+    val li = EntrySupport.t(spark, sf, "lineitem")
     val q = li.filter(col("l_quantity") > 30).select("l_orderkey", "l_quantity")
     val plan = planOf(q)
     assert(plan.contains("PushedFilters: [IsNotNull(l_quantity), GreaterThan(l_quantity,30.0)]"),
@@ -94,7 +94,7 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("minhash LSH computes the signature once (single project, no nested re-eval)") {
-    val docs = SparkEntry.t(spark, sf, "documents")
+    val docs = EntrySupport.t(spark, sf, "documents")
     val q = graft.ops.Dedup.minhashCandidates(docs, "text", "doc_id")
     val plan = planOf(q)
     // the single-pass expression appears in the plan; the legacy nested-HOF
@@ -104,7 +104,7 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("lshTopK dedup exchange carries ids+sim only, never the embedding arrays") {
-    val e = SparkEntry.t(spark, sf, "embeddings")
+    val e = EntrySupport.t(spark, sf, "embeddings")
       .select(col("vec_id").as("id"), col("embedding").cast("array<double>").as("vec"))
     val plan = planOf(graft.ops.Similarity.lshTopK(e.filter(col("id") < 10), e, k = 3))
     // the (query_id, neighbor_id) dedup plans as an aggregate whose only
@@ -116,7 +116,7 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("IVF refinement sample is a narrow filter (no single-partition GlobalLimit funnel)") {
-    val e = SparkEntry.t(spark, sf, "embeddings")
+    val e = EntrySupport.t(spark, sf, "embeddings")
       .select(col("vec_id").as("id"), col("embedding").cast("array<double>").as("vec"))
     val plan = planOf(graft.ops.Similarity.refinementSample(e, maxRefineVectors = 10, seed = 7))
     assert(!plan.contains("GlobalLimit") && !plan.contains("Sort "),
@@ -125,7 +125,7 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("exact dedup groups on the digest, not the document bytes") {
-    val docs = SparkEntry.t(spark, sf, "documents")
+    val docs = EntrySupport.t(spark, sf, "documents")
     val plan = planOf(graft.ops.Dedup.exact(docs, "text", "doc_id"))
     // shuffle key must be the md5 digest column, keeping shuffle rows small
     assert(plan.contains("md5"), plan.take(1500))
@@ -133,7 +133,7 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("decontamination broadcasts the benchmark gram set (corpus side never shuffles grams)") {
-    val docs = SparkEntry.t(spark, sf, "documents")
+    val docs = EntrySupport.t(spark, sf, "documents")
     val q = graft.ops.Curation.decontaminate(
       docs.filter(col("doc_id") % 17 =!= 0), docs.filter(col("doc_id") % 17 === 0),
       "text", "doc_id", n = 4)
@@ -159,7 +159,7 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("line dedup resolves first-occurrence via partial agg on the line hash (no window sort)") {
-    val docs = SparkEntry.t(spark, sf, "documents")
+    val docs = EntrySupport.t(spark, sf, "documents")
     val structured = docs.select(col("doc_id"),
       regexp_replace(col("text"), " ", "\n").as("text"))
     val plan = planOf(graft.ops.Curation.lineDedup(structured, "text", "doc_id"))
@@ -171,7 +171,7 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("quality filter is a narrow projection (one pass, zero shuffle)") {
-    val docs = SparkEntry.t(spark, sf, "documents")
+    val docs = EntrySupport.t(spark, sf, "documents")
     val plan = planOf(graft.ops.Curation.qualityFilter(docs, "text", "doc_id"))
     assert(!plan.contains("Exchange"), s"quality filter must not shuffle:\n${plan.take(2000)}")
     assert("curationstatsexpr".r.findAllIn(plan.toLowerCase).size == 1,
@@ -179,7 +179,7 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("stratified rate sampling is a pushable narrow predicate (zero shuffle)") {
-    val docs = SparkEntry.t(spark, sf, "documents")
+    val docs = EntrySupport.t(spark, sf, "documents")
     val plan = planOf(graft.ops.Curation.stratifiedSample(
       docs, "doc_id", "lang", Map("en" -> 250), defaultPermille = 500))
     assert(!plan.contains("Exchange"), s"rate sampling must not shuffle:\n${plan.take(2000)}")
@@ -373,7 +373,7 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("exact substring dedup shuffles 120-bit keys, never gram text") {
-    val docs = SparkEntry.t(spark, sf, "documents")
+    val docs = EntrySupport.t(spark, sf, "documents")
     val q = graft.ops.Curation.exactSubstrDedup(docs, "text", "doc_id", minTokens = 8)
     val plan = planOf(q)
     // duplicated-gram resolution groups on the fixed-width md5 key with a
@@ -390,7 +390,7 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("dsir scoring with precomputed totals is a pure scan (zero shuffle, one feature pass)") {
-    val docs = SparkEntry.t(spark, sf, "documents")
+    val docs = EntrySupport.t(spark, sf, "documents")
     val totals = Array.fill(64)(1L)
     val q = graft.ops.Curation.dsirScores(docs, docs, "text", "doc_id", buckets = 64,
       targetTotals = Some(totals), rawTotals = Some(totals))
@@ -401,7 +401,7 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("boilerplate signals are narrow with one tokenization pass; reassembly shuffles once") {
-    val docs = SparkEntry.t(spark, sf, "documents")
+    val docs = EntrySupport.t(spark, sf, "documents")
     val sig = planOf(graft.ops.Curation.lineSignals(docs, "text", "doc_id")).toLowerCase
     assert(!sig.contains("exchange"), s"line signals must not shuffle:\n${sig.take(2000)}")
     assert("tokensetcountsexpr".r.findAllIn(sig).size == 1,
@@ -412,7 +412,7 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("vocabulary: partial-aggregated count, heap-based top-K (no global sort); split is narrow") {
-    val docs = SparkEntry.t(spark, sf, "documents")
+    val docs = EntrySupport.t(spark, sf, "documents")
     val plan = planOf(graft.ops.TextAnalysis.vocabulary(docs, "text", minCount = 2L, topK = 100))
     assert("HashAggregate".r.findAllIn(plan).size >= 2,
       s"map-side combine must absorb hot tokens:\n${plan.take(2500)}")
@@ -427,7 +427,7 @@ class PlanSpec extends AnyFunSuite {
     // cell a nullable join key, so Catalyst inserts an isnotnull(...)
     // pre-join filter that re-runs the whole O(nCentroids·dim) scan a
     // second time per row — at 100 TB that doubles the assignment stage
-    val e = SparkEntry.t(spark, sf, "embeddings")
+    val e = EntrySupport.t(spark, sf, "embeddings")
       .select(col("vec_id").as("id"), col("embedding").cast("array<double>").as("vec"))
     val plan = planOf(graft.ops.Dedup.semanticDedup(e, "vec", "id",
       threshold = 0.48, nCentroids = 2)).toLowerCase
@@ -436,7 +436,7 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("lm scoring: token arrays never cross a shuffle; model joins + final agg are partial-aggregated") {
-    val docs = SparkEntry.t(spark, sf, "documents")
+    val docs = EntrySupport.t(spark, sf, "documents")
     val model = graft.ops.Lm.train(docs.filter(col("doc_id") < 50), "text")
     val plan = planOf(graft.ops.Lm.score(docs, "text", "doc_id", model))
     // every Exchange keys on scalar token/id columns — the toks array is
@@ -450,7 +450,7 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("bm25: df table broadcasts; top-k is per-partition heaps, not a global sort") {
-    val docs = SparkEntry.t(spark, sf, "documents")
+    val docs = EntrySupport.t(spark, sf, "documents")
     val plan = planOf(graft.ops.Search.bm25(docs, "text", "doc_id",
       Seq("join", "filter"), k = 10))
     assert(plan.contains("TakeOrderedAndProject"),
@@ -460,7 +460,7 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("prototypicality: centroid lookup broadcasts; one cell exchange serves both windows") {
-    val e = SparkEntry.t(spark, sf, "embeddings")
+    val e = EntrySupport.t(spark, sf, "embeddings")
       .select(col("vec_id").as("id"), col("embedding").cast("array<double>").as("vec"))
     val plan = planOf(graft.ops.Similarity.prototypicality(e, "vec", "id", nCentroids = 2))
     assert(plan.contains("BroadcastHashJoin"),
@@ -470,7 +470,7 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("PQ ANN: corpus encodes in the scan stage; only (ids, sim) reach the ranking exchange") {
-    val e = SparkEntry.t(spark, sf, "embeddings")
+    val e = EntrySupport.t(spark, sf, "embeddings")
       .select(col("vec_id").as("id"), col("embedding").cast("array<double>").as("vec"))
     val model = graft.ops.Similarity.trainPq(e, m = 8, ksub = 16)
     val plan = planOf(graft.ops.Similarity.pqTopK(
@@ -491,7 +491,7 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("IVFADC: cell equi-join on broadcast query side; corpus carries codes, never vectors") {
-    val e = SparkEntry.t(spark, sf, "embeddings")
+    val e = EntrySupport.t(spark, sf, "embeddings")
       .select(col("vec_id").as("id"), col("embedding").cast("array<double>").as("vec"))
     val cents = graft.ops.Similarity.trainCentroids(e, nCentroids = 4)
     val model = graft.ops.Similarity.trainPq(e, m = 8, ksub = 16)
@@ -513,7 +513,7 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("pHash banding: media scan prunes to (id, payload); band join keys the exchange") {
-    val docs = SparkEntry.t(spark, sf, "documents")
+    val docs = EntrySupport.t(spark, sf, "documents")
     val media = graft.ops.Multimodal.fromDocuments(docs, "doc_id", "text", "text/plain")
     val plan = planOf(graft.ops.Multimodal.phashCandidates(media, maxDist = 3))
     assert(plan.contains("ReadSchema: struct<doc_id:bigint,text:string>"),
@@ -525,7 +525,7 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("incremental exact dedup: every exchange keys on the digest; text dies at the scan") {
-    val docs = SparkEntry.t(spark, sf, "documents")
+    val docs = EntrySupport.t(spark, sf, "documents")
     val idx = graft.ops.Dedup.exactIndex(docs.filter(col("doc_id") < 250), "text", "doc_id")
     val plan = planOf(graft.ops.Dedup.incrementalExact(
       docs.filter(col("doc_id") >= 250), idx, "text", "doc_id"))
@@ -538,7 +538,7 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("pipeline disposition: ONE corpus scan, one digest-keyed exchange") {
-    val docs = SparkEntry.t(spark, sf, "documents")
+    val docs = EntrySupport.t(spark, sf, "documents")
     val plan = planOf(graft.ops.Pipelines.disposition(docs, "text", "doc_id"))
     assert("Scan parquet".r.findAllIn(plan).size == 1,
       s"all stages must fuse into one corpus pass:\n${plan.take(2500)}")
@@ -550,7 +550,7 @@ class PlanSpec extends AnyFunSuite {
 
   test("bucketed index tables join with NO exchange on either side") {
     import org.apache.spark.sql.functions.md5
-    val docs = SparkEntry.t(spark, sf, "documents")
+    val docs = EntrySupport.t(spark, sf, "documents")
     val idx = graft.ops.Dedup.exactIndex(docs, "text", "doc_id")
     val batch = docs.select(col("doc_id"), md5(col("text")).as("digest"))
     graft.ops.Tables.writeBucketed(idx, "t_exact_idx", "digest", 4)
@@ -576,7 +576,7 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("frame near-dup: banded (frame, fp) join, partial-aggregated overlap counts") {
-    val docs = SparkEntry.t(spark, sf, "documents")
+    val docs = EntrySupport.t(spark, sf, "documents")
     val media = graft.ops.Multimodal.fromDocuments(docs, "doc_id", "text", "text/plain")
     val plan = planOf(graft.ops.Multimodal.frameNearDupCandidates(media))
     assert(!plan.contains("CartesianProduct") && !plan.contains("BroadcastNestedLoopJoin"),
@@ -587,7 +587,7 @@ class PlanSpec extends AnyFunSuite {
 
   test("rrf fusion: top-k plans as TakeOrderedAndProject, contributions partial-aggregate") {
     import org.apache.spark.sql.functions.lit
-    val docs = SparkEntry.t(spark, sf, "documents")
+    val docs = EntrySupport.t(spark, sf, "documents")
     val text = graft.ops.Search.tfTopK(docs, "text", "doc_id", Seq("join", "filter"), k = 50)
     val ids = docs.select(col("doc_id").as("id"),
       (col("doc_id") % 50 + lit(1)).cast("int").as("rank"))
@@ -599,7 +599,7 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("domain tagging is projection-only; domain stats partial-aggregate") {
-    val docs = SparkEntry.t(spark, sf, "documents")
+    val docs = EntrySupport.t(spark, sf, "documents")
       .selectExpr("doc_id", "concat('https://', source, '.example.com/', doc_id) AS url")
     val tag = planOf(graft.ops.Web.domainTag(docs, "url", blocklist = Seq("x.example.com")))
     assert(!tag.contains("Exchange"), s"domain tagging must not shuffle:\n${tag.take(2000)}")
@@ -609,7 +609,7 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("link extraction is scan-stage; edge aggregation partial-aggregates, doc text stays out of the exchange") {
-    val docs = SparkEntry.t(spark, sf, "documents")
+    val docs = EntrySupport.t(spark, sf, "documents")
       .selectExpr("doc_id", "concat('https://', source, '.example.com/d/', doc_id) AS url",
         "concat('<a href=\"/x/', doc_id, '\">a</a>', text) AS text")
     val links = graft.ops.Web.extractLinks(docs, "text", "url", "doc_id")
@@ -627,7 +627,7 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("keyProfile: partial-agg counts, heap top-k, one-row totals broadcast") {
-    val e = SparkEntry.t(spark, sf, "events")
+    val e = EntrySupport.t(spark, sf, "events")
     val plan = planOf(graft.ops.Skew.keyProfile(e.select(col("event_type")), Seq("event_type"), k = 5))
     assert(plan.contains("TakeOrderedAndProject"),
       s"top-k must be per-partition heaps, not a global sort:\n${plan.take(2500)}")
@@ -638,7 +638,7 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("domainFilterTable: broadcast anti join, corpus side stays scan-stage") {
-    val docs = SparkEntry.t(spark, sf, "documents")
+    val docs = EntrySupport.t(spark, sf, "documents")
       .selectExpr("doc_id", "concat('https://', source, '.example.com/d/', doc_id) AS url")
     val bl = Seq("x.example.com").toDF("domain")
     val plan = planOf(graft.ops.Web.domainFilterTable(docs, "url", bl))
@@ -650,7 +650,7 @@ class PlanSpec extends AnyFunSuite {
 
   test("registrableDomainTable: per-length broadcast joins, corpus side never shuffles") {
     import spark.implicits._
-    val hosts = SparkEntry.t(spark, sf, "documents")
+    val hosts = EntrySupport.t(spark, sf, "documents")
       .selectExpr("doc_id", "concat(source, '.example.co.uk') AS host")
     val psl = Seq("uk", "co.uk", "com.au", "github.io").toDF("suffix")
     val df = graft.ops.Web.registrableDomainTable(hosts, "host", psl)
@@ -674,7 +674,7 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("keywords: partial-agg tf, one-row n_docs broadcast, per-partition heap rank") {
-    val docs = SparkEntry.t(spark, sf, "documents")
+    val docs = EntrySupport.t(spark, sf, "documents")
     val plan = planOf(graft.ops.TextAnalysis.keywords(docs, "text", "doc_id", k = 5))
     // tf and df both map-side combine before their exchanges
     assert("HashAggregate".r.findAllIn(plan).size >= 4,
@@ -688,7 +688,7 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("sketch-tier profile: tokens never shuffle — HLL/GK sketches partial-aggregate map-side") {
-    val docs = SparkEntry.t(spark, sf, "documents")
+    val docs = EntrySupport.t(spark, sf, "documents")
     val plan = planOf(graft.ops.Profile.groupProfileSketch(docs, "text", "lang"))
     // the distinct-token branch must partially aggregate the HLL sketch
     // BEFORE its exchange: the shuffle then carries one sketch row per
@@ -703,14 +703,14 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("heavy hitters: vocabulary-sized exchange (partial counts), never raw tokens") {
-    val docs = SparkEntry.t(spark, sf, "documents")
+    val docs = EntrySupport.t(spark, sf, "documents")
     val plan = planOf(graft.ops.Profile.heavyHitters(docs, "text", "lang", 5))
     assert("partial_count".r.findAllIn(plan).nonEmpty,
       s"token counts must map-side combine before the exchange:\n${plan.take(3000)}")
   }
 
   test("as-of join plans as union + ONE key exchange — no join node at all") {
-    val e = SparkEntry.t(spark, sf, "events")
+    val e = EntrySupport.t(spark, sf, "events")
       .select(col("user_id"), unix_micros(col("ts")).as("t"), col("event_id"))
     val l = e.filter(col("event_id") % 2 === 0)
     val r = e.filter(col("event_id") % 2 === 1)
@@ -722,7 +722,7 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("funnel: N steps ride ONE key exchange (chained sort-free windows, no joins)") {
-    val e = SparkEntry.t(spark, sf, "events")
+    val e = EntrySupport.t(spark, sf, "events")
       .select(col("user_id"), unix_micros(col("ts")).as("t"), col("event_type"))
     val plan = planOf(graft.ops.Temporal.funnel(e, Seq("user_id"), "t", Seq(
       col("event_type") === "signup",
@@ -740,7 +740,7 @@ class PlanSpec extends AnyFunSuite {
     val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      val docs = SparkEntry.t(spark, sf, "documents")
+      val docs = EntrySupport.t(spark, sf, "documents")
       val diff = graft.ops.Tables.snapshotDiff(
         docs.filter(col("doc_id") < 400), docs.filter(col("doc_id") >= 100),
         "doc_id", "text")
@@ -766,7 +766,7 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("corpus signature reduces map-side: partial aggregate, 64-row exchange") {
-    val docs = SparkEntry.t(spark, sf, "documents")
+    val docs = EntrySupport.t(spark, sf, "documents")
     val plan = planOf(graft.ops.Dedup.corpusSignature(docs, "text", portable = true))
     // two HashAggregate nodes around the hash_idx exchange = the corpus
     // reduces to numHashes rows per partition BEFORE shuffling
@@ -777,7 +777,7 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("embedding profile partial-aggregates: exchange bounded by dim rows per partition") {
-    val e = SparkEntry.t(spark, sf, "embeddings")
+    val e = EntrySupport.t(spark, sf, "embeddings")
     val plan = planOf(graft.ops.Embeddings.embeddingProfile(e, "embedding", dim = 64))
     assert("HashAggregate".r.findAllIn(plan).size >= 2,
       s"partial moment-aggregate expected:\n${plan.take(2500)}")
@@ -786,7 +786,7 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("epochShuffle: windows partition by hash bucket — no global single-partition window") {
-    val docs = SparkEntry.t(spark, sf, "documents")
+    val docs = EntrySupport.t(spark, sf, "documents")
     val q = graft.ops.Curation.epochShuffle(docs, "doc_id", epoch = 0)
     val plan = planOf(q)
     // the rank window must run per-bucket: its exchange hashes on __bk
@@ -1012,7 +1012,7 @@ class PlanSpec extends AnyFunSuite {
 
   test("giniByGroup: rank window and rollup share one group-keyed exchange") {
     val q = graft.ops.Profile.giniByGroup(
-      SparkEntry.t(spark, sf, "documents"), "n_chars", Seq("source"))
+      EntrySupport.t(spark, sf, "documents"), "n_chars", Seq("source"))
     val plan = planOf(q)
     // the window hash-partitions on the group key; the groupBy that follows
     // reuses that partitioning — a second Exchange would re-shuffle the
@@ -1036,7 +1036,7 @@ class PlanSpec extends AnyFunSuite {
 
   test("selectByTokenBudget: one slim group-key window exchange, no payload columns") {
     val q = graft.ops.Curation.selectByTokenBudget(
-      SparkEntry.t(spark, sf, "documents")
+      EntrySupport.t(spark, sf, "documents")
         .select(col("doc_id"), col("source"), col("n_chars").as("score"),
           col("n_chars").as("toks")),
       Seq("source"), "doc_id", "score", "toks", tokenBudget = 1000L)
@@ -1051,7 +1051,7 @@ class PlanSpec extends AnyFunSuite {
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
       val plan = planOf(graft.ops.Temporal.acf(
-        SparkEntry.t(spark, sf, "events"), "ts", 3600L, Seq(1, 2, 24)))
+        EntrySupport.t(spark, sf, "events"), "ts", 3600L, Seq(1, 2, 24)))
       assert(plan.contains("ReusedExchange"),
         s"dense-series subplans must reuse the count exchange:\n${plan.take(3000)}")
       // exactly two narrow scans regardless of lag count: the min/max
@@ -1069,7 +1069,7 @@ class PlanSpec extends AnyFunSuite {
     val prev = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
-      val e = SparkEntry.t(spark, sf, "events")
+      val e = EntrySupport.t(spark, sf, "events")
         .select(col("event_type").as("ra"), col("event_type").as("rb"))
       val plan = planOf(graft.ops.Profile.cohenKappa(e, "ra", "rb"))
       // three consumers (marginals ×2, totals) re-derive from the identical
@@ -1086,7 +1086,7 @@ class PlanSpec extends AnyFunSuite {
     val prev = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
-      val e = SparkEntry.t(spark, sf, "events")
+      val e = EntrySupport.t(spark, sf, "events")
         .select(col("event_type").as("g"), col("event_type").as("p"))
       val plan = planOf(graft.ops.Profile.confusionReport(e, "g", "p"))
       assert(plan.contains("ReusedExchange"),
@@ -1306,7 +1306,7 @@ class PlanSpec extends AnyFunSuite {
     // at production model sizes one explain/AQE log line became a
     // multi-GB driver allocation (caught by the 100× ScaleProbe run)
     val cents = Array.fill(512)(Array.fill(64)(0.5))
-    val df = SparkEntry.t(spark, sf, "embeddings")
+    val df = EntrySupport.t(spark, sf, "embeddings")
       .select(col("vec_id"), col("embedding").cast("array<double>").as("vec"))
       .select(graft.functions.text.nearestCentroid(col("vec"), cents).as("cell"))
       .filter(col("cell") >= 0)

@@ -67,7 +67,7 @@ class TemporalSpec extends AnyFunSuite {
   }
 
   test("as-of matches a brute-force window argmax on real event data") {
-    val e = SparkEntry.t(spark, "/root/testdata/sf0.001", "events")
+    val e = EntrySupport.t(spark, "/root/testdata/sf0.001", "events")
       .select(col("user_id"), unix_micros(col("ts")).as("t"), col("event_id"))
     val l = e.filter(col("event_id") % 3 === 0).withColumnRenamed("event_id", "lid")
     val r = e.filter(col("event_id") % 3 === 1).withColumnRenamed("event_id", "rid")
@@ -117,7 +117,7 @@ class TemporalSpec extends AnyFunSuite {
   }
 
   test("sessionStats aggregates the labeled stream; counts match streaming session_window semantics") {
-    val e = SparkEntry.t(spark, "/root/testdata/sf0.001", "events")
+    val e = EntrySupport.t(spark, "/root/testdata/sf0.001", "events")
       .select(col("user_id"), unix_micros(col("ts")).as("t"))
     val gapUs = 3600L * 1000000L
     val stats = Temporal.sessionStats(e, Seq("user_id"), "t", gapUs)
