@@ -1,10 +1,17 @@
 package graft.compile
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.catalyst.expressions.{Expression, Generator, GenericInternalRow}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.bridge
+import org.apache.spark.sql.types.{BooleanType, IntegerType, MapType, StringType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
-import graft.functions.gjson
+import graft.functions.{Re2, gjson}
 import graft.functions.gjson.{CompiledField, GType}
+import graft.json.Js
 import graft.path.GJsonPath
 import graft.spec._
 
@@ -25,22 +32,38 @@ import graft.spec._
   * its own DataFrame; one input row can appear in several branches, each
   * with a different schema — exactly the reference's []*Transformed.
   *
-  * Scale notes: every stage is a narrow transformation (filter/project) —
-  * no shuffle is introduced anywhere in a compiled pipeline, so throughput
-  * scales linearly with partitions and the whole pipeline pipelines inside
-  * one Spark stage. Predicates and projections each parse the event JSON
-  * once per row (see graft.functions.gjson).
+  * All of it evaluates in ONE tagged pass ([[CompiledPipeline.tag]],
+  * [[ExtractFieldsGen]]): a
+  * generator that parses each event once and emits per-branch routed/ok
+  * flags and columns; branch outputs, the ingested-bytes predicate and
+  * the error side-output are filters over that pass, so a caller that
+  * caches it (the runtime, per micro-batch) runs the chain once per event.
+  *
+  * Scale notes: every stage is a narrow transformation (generate, filter,
+  * project) — no shuffle is introduced anywhere in a compiled pipeline, so
+  * throughput scales linearly with partitions and the whole pipeline
+  * pipelines inside one Spark stage.
   */
 object SpecCompiler {
 
-  /** One output branch of a compiled transform. */
-  sealed trait Branch {
+  /** One output branch of a compiled transform: a router predicate and the
+    * transform of a routed event into the branch's columns, both evaluated
+    * inside the tagged pass ([[ExtractFieldsGen]]).
+    */
+  sealed trait Branch extends Serializable {
     def id: String
     /** Router predicate (on top of the spec-level keep filter). */
     def pred: EventPred
-    /** Projection of the event column into this branch's schema. */
-    def project(event: Column): Column
-    def outputColumns: Seq[String]
+    /** The branch's output columns. */
+    def schema: StructType
+    def outputColumns: Seq[String] = schema.fieldNames.toSeq
+    /** Whether [[transform]] reads the parsed document (not only the raw text). */
+    def readsJson: Boolean = true
+    /** The branch's column values for a routed event, or null when the
+      * event fails the branch's transform (the unretryable-error path).
+      * `raw` is null for a null event.
+      */
+    def transform(root: Option[Js], raw: UTF8String): Array[Any]
   }
 
   final case class FieldsBranch(
@@ -49,8 +72,34 @@ object SpecCompiler {
       fields: Seq[CompiledField],
       regexp: Option[CompiledRegexp]
   ) extends Branch {
-    def project(event: Column): Column = gjson.extractFields(event, fields)
-    def outputColumns: Seq[String] = fields.map(_.id)
+    private val fieldArr = fields.toArray
+    private val uaIdx = fields.indices.filter(i => fields(i).gtype == gjson.GUserAgent).toArray
+    private val reIdx = regexp.map(re => fields.indexWhere(_.id == re.spec.field)).getOrElse(-1)
+    // a regexp consumes its source field unless keepField; the payload is
+    // appended as `regexppayload`
+    private val outIdx = fields.indices
+      .filterNot(i => i == reIdx && !regexp.exists(_.spec.keepField)).toArray
+    val schema: StructType = StructType(outIdx.map { i =>
+      StructField(fields(i).id, fields(i).gtype.dataType, nullable = fields(i).gtype == gjson.GUserAgent)
+    } ++ regexp.map(_ => StructField("regexppayload", StringType)))
+    def transform(root: Option[Js], raw: UTF8String): Array[Any] = {
+      val event = if (raw == null) UTF8String.EMPTY_UTF8 else raw
+      val vals = fieldArr.map(gjson.fieldValue(_, root, event))
+      // userAgent unescape failure fails the whole event into the error path
+      // (reference: extractFields returns err → Transform errors)
+      if (uaIdx.exists(vals(_) == null)) return null
+      val payload = regexp.map { re =>
+        vals(reIdx) match {
+          case null => null
+          case bytes: Array[Byte] => re.kernel(new String(bytes, java.nio.charset.StandardCharsets.UTF_8))
+          case v => re.kernel(v.toString)
+        }
+      }
+      // a regexp non-match is the reference's error path (applyRegExp fails
+      // the event, transformer.go:229-243): split off, never a null payload
+      if (payload.contains(null)) return null
+      outIdx.map(vals(_)) ++ payload
+    }
   }
 
   final case class ItemsBranch(
@@ -58,38 +107,145 @@ object SpecCompiler {
       pred: EventPred,
       spec: ExtractItemsFromArray
   ) extends Branch {
-    def project(event: Column): Column =
-      struct(gjson.itemsFromArray(event, spec.items.jsonPathToArray,
-        spec.items.idFromItemFields.delimiter, spec.items.idFromItemFields.fields).as(spec.id))
-    def outputColumns: Seq[String] = Seq(spec.id)
+    private val arrayPath = GJsonPath.parse(spec.items.jsonPathToArray)
+    private val idPaths = spec.items.idFromItemFields.fields.map(GJsonPath.parse)
+    val schema: StructType = StructType(Seq(
+      StructField(spec.id, MapType(StringType, StringType, valueContainsNull = false), nullable = false)))
+    def transform(root: Option[Js], raw: UTF8String): Array[Any] =
+      Array(gjson.itemsMap(root, arrayPath, spec.items.idFromItemFields.delimiter, idPaths))
   }
 
-  /** Regexp applied to the whole raw event (no extractFields present). */
+  /** Regexp applied to the whole raw event (no extractFields present). A
+    * routed event the regexp does NOT match is the reference's error path
+    * (applyRegExp panics on non-match → regexpTransform returns err →
+    * nothing reaches the sink, transformer.go:191-196 + 229-236).
+    */
   final case class RegexpBranch(id: String, pred: EventPred, regexp: CompiledRegexp) extends Branch {
-    def project(event: Column): Column = struct(regexp.payload(event).as("regexppayload"))
-    def outputColumns: Seq[String] = Seq("regexppayload")
+    val schema: StructType = StructType(Seq(StructField("regexppayload", StringType)))
+    override def readsJson: Boolean = false
+    def transform(root: Option[Js], raw: UTF8String): Array[Any] = {
+      val payload = if (raw == null) null else regexp.kernel(raw.toString)
+      if (payload == null) null else Array(payload)
+    }
   }
 
   final case class CompiledRegexp(spec: RegexpSpec, groups: Seq[String]) {
-    def payload(src: Column): Column =
-      gjson.regexpPayload(src, spec.expression, groups, spec.timeConversion)
+    val kernel: gjson.RegexpKernel =
+      gjson.RegexpKernel(Re2.toJavaRegex(spec.expression), groups, spec.timeConversion)
+  }
+
+  /** The tagged pass: ONE JSON parse per event evaluates the keep filter,
+    * every branch's router predicate and every routed branch's transform.
+    * Emits exactly one row per input row:
+    *   - the event's length in characters (null for a null event);
+    *   - the raw event, kept only where a consumer may still need it — rows
+    *     the pass did not run on (`active` false) and rows some routed
+    *     branch failed to transform; null otherwise;
+    *   - per branch: `routed`, `ok` (routed and transformed), then the
+    *     branch's columns (set only when ok).
+    * A generator rather than a struct projection: filters over its output
+    * reference generated attributes, so Catalyst cannot push them below the
+    * Generate and re-inline the chain (the duplicated-evaluation pattern
+    * PlanSpec and RuntimeSpec guard against).
+    */
+  case class ExtractFieldsGen(event: Expression, active: Expression, keep: EventPred,
+      branches: Seq[Branch])
+      extends Expression with Generator with CodegenFallback {
+    override def children: Seq[Expression] = Seq(event, active)
+    @transient override lazy val elementSchema: StructType = StructType(
+      Seq(StructField("len", IntegerType), StructField("raw", StringType)) ++
+        branches.zipWithIndex.flatMap { case (b, i) =>
+          Seq(StructField(s"routed$i", BooleanType, nullable = false),
+            StructField(s"ok$i", BooleanType, nullable = false)) ++
+            b.schema.fields.map(f => f.copy(name = s"b${i}_${f.name}", nullable = true))
+        })
+    @transient private lazy val bs = branches.toArray
+    @transient private lazy val width = elementSchema.length
+    @transient private lazy val readsJson =
+      keep != EventPred.True0() || bs.exists(b => b.readsJson || b.pred != EventPred.True0())
+    override def eval(input: InternalRow): IterableOnce[InternalRow] = {
+      val raw = event.eval(input).asInstanceOf[UTF8String]
+      val out = new Array[Any](width)
+      if (raw != null) out(0) = raw.numChars
+      if (active.eval(input) != true) out(1) = raw
+      else {
+        val root = if (raw == null || !readsJson) None else Js.parse(raw.toString)
+        val kept = keep.eval(root)
+        var failed = false
+        var o = 2
+        var i = 0
+        while (i < bs.length) {
+          val b = bs(i)
+          val routed = kept && b.pred.eval(root)
+          val row = if (routed) b.transform(root, raw) else null
+          out(o) = routed
+          out(o + 1) = row != null
+          if (row != null) System.arraycopy(row, 0, out, o + 2, row.length)
+          else failed ||= routed
+          o += 2 + b.schema.length
+          i += 1
+        }
+        if (failed) out(1) = raw
+      }
+      new GenericInternalRow(out) :: Nil
+    }
+    // the branch list prints as a summary: plan strings stay short
+    override protected def stringArgs: Iterator[Any] =
+      Iterator(event, active, s"<${branches.size} branches>")
+    override protected def withNewChildrenInternal(newChildren: IndexedSeq[Expression]): Expression =
+      copy(event = newChildren(0), active = newChildren(1))
   }
 
   final case class CompiledPipeline(spec: StreamSpec, keep: EventPred, branches: Seq[Branch]) {
+    import CompiledPipeline._
 
-    /** Trivially-true predicates compile to lit(true) — avoids a needless
-      * per-row JSON parse (EventPredExpr parses once per evaluation).
-      */
-    private def predCol(p: EventPred, event: Column): Column = p match {
-      case EventPred.True0() => lit(true)
-      case _ => gjson.eventPred(event, p)
+    /** The tagged pass over `df` for the branches at indices `on`. */
+    private def pass(df: DataFrame, on: Seq[Int], eventCol: String, keepColumns: Seq[String],
+        active: Column): DataFrame = {
+      val names = Seq(Len, eventCol) ++ on.flatMap(i =>
+        Seq(routed(i), ok(i)) ++ branches(i).outputColumns.map(out(i, _)))
+      df.select(keepColumns.map(c => col(s"`$c`")) :+
+        bridge.column(ExtractFieldsGen(bridge.expression(col(eventCol)),
+          bridge.expression(active), keep, on.map(branches))).as(names): _*)
     }
-    def keepCol(event: Column): Column = predCol(keep, event)
-    /** keep ∧ branch fused into ONE predicate expression = one JSON parse
-      * per row instead of two.
+
+    /** ONE evaluation of the whole transform per event: a frame with one
+      * row per input row carrying `keepColumns`, the event length (`__len`),
+      * the raw event under `eventCol` (only where the pass did not run or
+      * some routed branch failed), and per branch its routed/ok flags and
+      * output columns. The pass runs only where `active` holds. Every
+      * consumer — counters ([[ingested]], [[failed]]), branch outputs
+      * ([[rowsOf]]), the error side-output — reads this one frame, so
+      * "ingested" and "error" are complements by construction.
       */
-    def routedCol(b: Branch, event: Column): Column =
-      predCol(EventPred.and(keep, b.pred), event)
+    def tag(df: DataFrame, eventCol: String = "value", keepColumns: Seq[String] = Nil,
+        active: Column = lit(true)): DataFrame =
+      pass(df, branches.indices, eventCol, keepColumns, active)
+
+    /** Branch `i`'s output rows (routed and transformed) of a tagged frame,
+      * projected to the branch schema after `keepColumns`.
+      */
+    def rowsOf(tagged: DataFrame, i: Int, keepColumns: Seq[String] = Nil): DataFrame =
+      tagged.filter(col(routed(i)) && col(ok(i)))
+        .select(keepColumns.map(c => col(s"`$c`")) ++
+          branches(i).outputColumns.map(c => col(s"`${out(i, c)}`").as(c)): _*)
+
+    /** True on tagged rows that yield ≥1 transformed record — the H1
+      * `BytesIngested` predicate (executor.go:214-237: a non-nil transform
+      * output credits the raw event's bytes; excluded / unrouted /
+      * transform-error events credit nothing).
+      */
+    def ingested: Column = anyBranch(i => col(routed(i)) && col(ok(i)))
+
+    /** True on tagged rows that some routed branch failed to transform
+      * (regexp non-match or time conversion, userAgent unescape) — the
+      * unretryable-error side-output feeding the houe policy
+      * (discard/DLQ/fail, entity/spec.go:20-26).
+      */
+    def failed: Column = anyBranch(i => col(routed(i)) && !col(ok(i)))
+
+    private def anyBranch(f: Int => Column): Column =
+      branches.indices.map(f).reduceOption(_ || _).getOrElse(lit(false))
 
     /** All surviving rows for one branch, projected to the branch schema.
       * Input frame must expose the raw JSON event as `eventCol` (string).
@@ -98,179 +254,33 @@ object SpecCompiler {
     def branchFrame(df: DataFrame, b: Branch, eventCol: String = "value"): DataFrame =
       applyWith(df, b, eventCol, keepColumns = Nil)
 
-    /** One-evaluation project-then-filter (round-11 optimization): emits
-      * each row's columns (plus an optional appended `payload` column)
-      * only when every `nonNull` column and the payload are non-null —
-      * through ONE explode(filter(array(struct(…)))) generator, so the
-      * projection chain evaluates exactly once per row. The plain
-      * `.withColumn(…).filter(isNotNull)` formulation lets Catalyst's
-      * filter pushdown substitute the deterministic alias into the
-      * Filter, re-evaluating the entire extraction chain there and again
-      * in the Project above it (measured: the whole
-      * to_json∘from_json∘extract∘regexp chain ran 2× per row on the
-      * e1_regexp / g7_kafka_mapping gates — the optimization guide's
-      * duplicated-expensive-expression pattern, JVM flavor). Output rows
-      * and columns are bit-identical to the unfused form; `drop` removes
-      * consumed input columns (the regexp keepField contract).
-      */
-    private def fuseKeep(df: DataFrame, payload: Option[(String, Column)],
-        nonNull: Seq[String], drop: Seq[String]): DataFrame = {
-      val cols = df.columns.toSeq
-      val s = struct(cols.map(c => col(s"`$c`")) ++
-        payload.map { case (n, c) => c.as(n) }: _*)
-      val checks = nonNull ++ payload.map(_._1)
-      val kept = df.select(explode(filter(array(s),
-        t => checks.map(t.getField(_).isNotNull).reduce(_ && _))).as("__r"))
-      val outCols = (cols ++ payload.map(_._1)).filterNot(drop.contains)
-      kept.select(outCols.map(c => col(s"__r.`$c`").as(c)): _*)
-    }
-
     /** Like branchFrame but keeps selected passthrough columns (e.g. Kafka
-      * key/timestamp) alongside the projected fields.
+      * key/timestamp) alongside the projected fields. The pass covers only
+      * this branch.
       */
     def applyWith(df: DataFrame, b: Branch, eventCol: String, keepColumns: Seq[String]): DataFrame = {
-      val ev = col(eventCol)
-      lazy val routed = df.filter(routedCol(b, ev))
-      b match {
-        case fb: FieldsBranch =>
-          // filter and projection fuse into ONE generator (flatMap: the
-          // row's fields when the keep∧branch predicate passes, nothing
-          // otherwise) — one JSON parse per row instead of a predicate
-          // parse plus an extraction parse; a trivially-true predicate
-          // keeps the plain projection
-          val plainSelect = EventPred.and(keep, fb.pred) match {
-            case EventPred.True0() => true
-            case _ => false
-          }
-          val projected =
-            if (plainSelect)
-              df.select(keepColumns.map(col) :+ fb.project(ev).as("__t"): _*)
-                .select(keepColumns.map(col) ++ fb.outputColumns.map(c => col(s"__t.`$c`").as(c)): _*)
-            else
-              df.select(keepColumns.map(col) :+
-                gjson.extractFieldsRows(ev, fb.fields,
-                  EventPred.and(keep, fb.pred)).as(fb.outputColumns): _*)
-          // userAgent unescape failure fails the whole event into the error
-          // path (reference: extractFields returns err → Transform errors);
-          // those rows are excluded here and surfaced via errorFrame. On
-          // the PLAIN-SELECT path the downstream filters are fused with
-          // the regexp stage into ONE generator so the extraction chain
-          // evaluates once per row (round-11: Catalyst's filter pushdown
-          // substitutes a deterministic alias into the Filter,
-          // re-evaluating the whole to_json∘extract∘regexp chain there AND
-          // in the Project — measured 2× per-row cost on the e1/g7 gates;
-          // the guide's duplicated-UDF-evaluation pattern). On the
-          // GENERATOR path the projected columns are already concrete
-          // attributes (nothing to re-evaluate through the pushed
-          // filter), so the plain null-check filters are cheaper than
-          // paying a second generator's struct+explode per row.
-          val uaCols = fb.fields.filter(_.gtype == gjson.GUserAgent).map(_.id)
-          fb.regexp match {
-            case Some(re) if fb.outputColumns.contains(re.spec.field) =>
-              // Non-matching rows are the reference's error path; they are
-              // split off here (see errorFrame) rather than silently kept.
-              if (plainSelect)
-                fuseKeep(projected,
-                  payload = Some("regexppayload" -> re.payload(col(re.spec.field))),
-                  nonNull = uaCols,
-                  drop = if (re.spec.keepField) Nil else Seq(re.spec.field))
-              else {
-                val uaKept = uaCols.foldLeft(projected)((d, c) =>
-                  d.filter(col(c).isNotNull))
-                val withPayload = uaKept.withColumn("regexppayload",
-                  re.payload(col(re.spec.field)))
-                val dropped =
-                  if (re.spec.keepField) withPayload
-                  else withPayload.drop(re.spec.field)
-                dropped.filter(col("regexppayload").isNotNull)
-              }
-            case _ if uaCols.nonEmpty =>
-              if (plainSelect)
-                fuseKeep(projected, payload = None, nonNull = uaCols, drop = Nil)
-              else uaCols.foldLeft(projected)((d, c) => d.filter(col(c).isNotNull))
-            case _ => projected
-          }
-        case rb: RegexpBranch =>
-          // A routed event the whole-event regexp does NOT match is the
-          // reference's error path (applyRegExp panics on non-match →
-          // regexpTransform returns err → nothing reaches the sink,
-          // transformer.go:191-196 + 229-236): split it off to errorFrame
-          // rather than emitting a null-payload row — keeps the sink
-          // output, ingestedCol, and the houe policy mutually consistent.
-          // The payload projection and its non-null filter fuse into ONE
-          // generator (the fuseKeep rationale: alias substitution would
-          // otherwise run the whole chain twice per row).
-          routed
-            .select(keepColumns.map(col) :+
-              explode(filter(array(rb.project(ev)),
-                t => t.getField("regexppayload").isNotNull)).as("__t"): _*)
-            .select(keepColumns.map(col) ++ rb.outputColumns.map(c => col(s"__t.`$c`").as(c)): _*)
-        case _ =>
-          routed
-            .select(keepColumns.map(col) :+ b.project(ev).as("__t"): _*)
-            .select(keepColumns.map(col) ++ b.outputColumns.map(c => col(s"__t.`$c`").as(c)): _*)
-      }
+      val i = branches.indexOf(b)
+      rowsOf(pass(df, Seq(i), eventCol, keepColumns, lit(true)), i, keepColumns)
     }
 
-    /** Rows that matched a regexp-bearing branch but failed the regexp (or
-      * its time conversion) — the unretryable-error side-output feeding the
-      * houe policy (discard/DLQ/fail, entity/spec.go:20-26).
+    /** Input rows that some routed branch failed to transform — [[failed]]
+      * over a tagged pass of `df`, with `df`'s columns.
       */
-    def errorFrame(df: DataFrame, eventCol: String = "value"): DataFrame = {
-      val ev = col(eventCol)
-      val preds = branches.flatMap {
-        case fb: FieldsBranch =>
-          val regexpErr = fb.regexp
-            .filter(re => fb.outputColumns.contains(re.spec.field))
-            .map { re =>
-              val extracted = gjson.extractFields(ev, fb.fields.filter(_.id == re.spec.field))
-                .getField(re.spec.field)
-              routedCol(fb, ev) && re.payload(extracted).isNull
-            }
-          val uaErr = fb.fields.filter(_.gtype == gjson.GUserAgent).map { f =>
-            routedCol(fb, ev) &&
-              gjson.extractFields(ev, Seq(f)).getField(f.id).isNull
-          }
-          regexpErr.toSeq ++ uaErr
-        case rb: RegexpBranch =>
-          Seq(routedCol(rb, ev) && rb.regexp.payload(ev).isNull)
-        case _ => Nil
-      }
-      if (preds.isEmpty) df.limit(0)
-      else df.filter(preds.reduce(_ || _))
-    }
-
-    /** True where the event yields ≥1 transformed record in some branch —
-      * the H1 `BytesIngested` accounting predicate (executor.go:214-237:
-      * a non-nil transform output appends to `transformed` and credits the
-      * raw event's bytes; excluded / unrouted / transform-error events
-      * credit nothing). Per branch this is routed ∧ not-an-error-row, i.e.
-      * the exact complement of `errorFrame`'s predicate within the routed
-      * set.
-      */
-    def ingestedCol(ev: Column): Column = {
-      val perBranch = branches.map {
-        case fb: FieldsBranch =>
-          val uaOk = fb.fields.filter(_.gtype == gjson.GUserAgent).map(f =>
-            gjson.extractFields(ev, Seq(f)).getField(f.id).isNotNull)
-          val reOk = fb.regexp
-            .filter(re => fb.outputColumns.contains(re.spec.field))
-            .map { re =>
-              val extracted = gjson.extractFields(ev, fb.fields.filter(_.id == re.spec.field))
-                .getField(re.spec.field)
-              re.payload(extracted).isNotNull
-            }
-          (Seq(routedCol(fb, ev)) ++ uaOk ++ reOk.toSeq).reduce(_ && _)
-        case rb: RegexpBranch =>
-          routedCol(rb, ev) && rb.regexp.payload(ev).isNotNull
-        case b => routedCol(b, ev)
-      }
-      if (perBranch.isEmpty) lit(false) else perBranch.reduce(_ || _)
-    }
+    def errorFrame(df: DataFrame, eventCol: String = "value"): DataFrame =
+      tag(df, eventCol, keepColumns = df.columns.toSeq.filterNot(_ == eventCol))
+        .filter(failed).select(df.columns.toSeq.map(c => col(s"`$c`")): _*)
 
     /** Apply the whole transform: one (branchId, DataFrame) per branch. */
     def apply(df: DataFrame, eventCol: String = "value"): Seq[(String, DataFrame)] =
       branches.map(b => b.id -> branchFrame(df, b, eventCol))
+  }
+
+  object CompiledPipeline {
+    /** Tagged-frame column holding each event's length in characters. */
+    val Len = "__len"
+    private def routed(i: Int) = s"__routed_$i"
+    private def ok(i: Int) = s"__ok_$i"
+    private def out(i: Int, c: String) = s"__b${i}_$c"
   }
 
   def compile(spec: StreamSpec): CompiledPipeline = {

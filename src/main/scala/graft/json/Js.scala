@@ -11,8 +11,9 @@ package graft.json
   * A DOM that re-serializes loses both. We therefore parse with offsets and
   * expose `raw` as a view into the original input.
   *
-  * The parser is lenient like gjson: a malformed document yields `None`, and
-  * path lookups on it behave as "not exists" (missing-field semantics).
+  * The parser is lenient like gjson: a malformed document — including one
+  * nested deeper than [[Js.MaxDepth]] — yields `None`, and path lookups on
+  * it behave as "not exists" (missing-field semantics).
   */
 sealed trait Js {
   def src: String
@@ -56,11 +57,18 @@ object Js {
     }
   }
 
+  /** Deepest container nesting a document may have. The parser recurses
+    * once per level, so without a bound a deeply nested event throws
+    * StackOverflowError out of a task instead of reading as malformed.
+    */
+  val MaxDepth = 1024
+
   private final class JsParseException extends RuntimeException(null, null, false, false)
 
   private final class Parser(s: String) {
     private[this] var i = 0
     private[this] val n = s.length
+    private[this] var depth = 0
 
     private def fail(): Nothing = throw new JsParseException
 
@@ -71,8 +79,8 @@ object Js {
     def parseValue(): Js = {
       if (i >= n) fail()
       s.charAt(i) match {
-        case '{' => parseObj()
-        case '[' => parseArr()
+        case '{' => enter(); leave(parseObj())
+        case '[' => enter(); leave(parseArr())
         case '"' => parseStr()
         case 't' =>
           val st = i; expect("true"); JsBool(value = true, s, st, i)
@@ -84,6 +92,12 @@ object Js {
         case _ => fail()
       }
     }
+
+    private def enter(): Unit = {
+      depth += 1
+      if (depth > MaxDepth) fail()
+    }
+    private def leave(container: Js): Js = { depth -= 1; container }
 
     private def expect(lit: String): Unit = {
       if (i + lit.length > n || !s.regionMatches(i, lit, 0, lit.length)) fail()

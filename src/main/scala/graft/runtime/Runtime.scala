@@ -57,10 +57,12 @@ final case class NotificationEvent(level: String, streamId: String, message: Str
     origin: String = "", stack: Seq[String] = Nil)
 
 /** Bounded non-blocking notification bus: full buffer drops events
-  * (pkg/notify/notify.go:155-158, default size 64).
+  * (pkg/notify/notify.go:155-158, default size 64) and counts them.
   */
 final class Notifier(bufferSize: Int = 64) {
   val queue = new ArrayBlockingQueue[NotificationEvent](bufferSize)
+  /** Notifications refused because the buffer was full. */
+  val dropped = new AtomicLong(0)
   def notify(level: String, streamId: String, msg: String): Unit = {
     // ERROR pays for a stack excerpt; other levels only walk the few
     // frames needed to name the caller (notifications fire per batch/retry,
@@ -89,8 +91,9 @@ final class Notifier(bufferSize: Int = 64) {
           } else ""
         (origin, Nil)
       }
-    queue.offer(NotificationEvent(level, streamId, msg,
-      java.time.Instant.now(), origin, stack)) // drop on full
+    if (!queue.offer(NotificationEvent(level, streamId, msg,
+        java.time.Instant.now(), origin, stack)))
+      dropped.incrementAndGet()
   }
   def drain(): Seq[NotificationEvent] = {
     val out = new java.util.ArrayList[NotificationEvent]()
@@ -210,14 +213,12 @@ final class Stream(
   }
 
   def processBatch(rawEvents: DataFrame): String = {
-    // caches must unpersist even when the batch throws — under I3 the
+    // the cache must unpersist even when the batch throws — under I3 the
     // self-heal loop re-runs a failing batch indefinitely, so a leak here
     // would accumulate one orphaned cached frame per restart cycle
-    var hookFrame: Option[DataFrame] = None
-    var cachedEvents: Option[DataFrame] = None
+    var tagged: Option[DataFrame] = None
     val t0 = System.nanoTime()
-    try processBatchInner(rawEvents,
-      f => { hookFrame = Some(f); f }, f => { cachedEvents = Some(f); f })
+    try processBatchInner(rawEvents, f => { tagged = Some(f); f })
     finally {
       // deferred, like the reference's processEventExit (executor.go:
       // 344-352, registered before any work): Microbatches and the
@@ -225,24 +226,23 @@ final class Stream(
       // failures, transform errors, and sink failures included
       metrics.microbatches.incrementAndGet()
       metrics.eventProcessingTimeMicros.addAndGet((System.nanoTime() - t0) / 1000)
-      hookFrame.foreach(_.unpersist())
-      cachedEvents.foreach(_.unpersist())
+      tagged.foreach(_.unpersist())
     }
   }
 
-  private def processBatchInner(rawEvents: DataFrame,
-      trackHook: DataFrame => DataFrame,
-      trackEvents: DataFrame => DataFrame): String = {
+  private def processBatchInner(rawEvents: DataFrame, track: DataFrame => DataFrame): String = {
     var resourceId = "<noResourceId>"
 
-    // F9 pre-transform hook: distributed per-event action evaluation.
-    // hook mode carries (raw event count, raw byte volume, ingested-
-    // candidate bytes) out of the hook aggregation so the processed
-    // counters need no second rawEvents scan and no separate ingested pass
-    var hookStats: Option[(Long, Long, Long)] = None
-    val events = supervisor.config.preTransformHook match {
-      case None => rawEvents
+    // ONE tagged pass per micro-batch, cached: the transform chain (parse,
+    // routing, fields, userAgent, regexp) runs once per event, and the
+    // counters, every branch load and the dead-letter write read this
+    // cache — none re-evaluates the chain
+    val hooked = supervisor.config.preTransformHook.isDefined
+    val tagged = track((supervisor.config.preTransformHook match {
+      case None => pipeline.tag(rawEvents)
       case Some(h) =>
+        // F9 pre-transform hook: distributed per-event action evaluation,
+        // inside the tagged pass; the transform runs only on 'p' rows
         val sparkS = supervisor.spark
         import sparkS.implicits._
         val sid = spec.id
@@ -261,82 +261,45 @@ final class Stream(
             case Hooks.RetryableError | Hooks.UnretryableError => ("u", e, e.length)
             case Hooks.Shutdown => ("x", e, e.length)
           }
-        }.toDF("__act", "value", "__rawlen").cache()
-        trackHook(acted)
-        // one aggregation covers every hook-action decision (previously two
-        // isEmpty probes = two extra job submissions per micro-batch), the
-        // processed counters (count + raw byte volume per action), AND the
-        // ingested-candidate bytes over the surviving 'p' rows; the DLQ
-        // write stays lazy — only submitted when flagged rows exist
-        val actRows = acted.groupBy(org.apache.spark.sql.functions.col("__act"))
-          .agg(org.apache.spark.sql.functions.count(org.apache.spark.sql.functions.lit(1)).as("__n"),
-            org.apache.spark.sql.functions.coalesce(
-              org.apache.spark.sql.functions.sum(col("__rawlen")).cast("long"),
-              org.apache.spark.sql.functions.lit(0L)).as("__b"),
-            org.apache.spark.sql.functions.coalesce(
-              org.apache.spark.sql.functions.sum(
-                org.apache.spark.sql.functions.when(
-                  col("__act") === "p" && pipeline.ingestedCol(col("value")),
-                  org.apache.spark.sql.functions.length(col("value")))).cast("long"),
-              org.apache.spark.sql.functions.lit(0L)).as("__i"))
-          .collect()
-        val actCounts = actRows.map(r => r.getString(0) -> r.getLong(1)).toMap
-        hookStats = Some((actRows.map(_.getLong(1)).sum,
-          actRows.map(_.getLong(2)).sum, actRows.map(_.getLong(3)).sum))
-        // the reference credits Events/Bytes at the top of the per-event
-        // loop, BEFORE the hook-action dispatch (executor.go:196-198) — so
-        // a batch the hook flags unretryable under houe=fail still advances
-        // the processed counters (the throw below happens after this)
-        metrics.eventsProcessed.addAndGet(hookStats.get._1)
-        metrics.bytesProcessed.addAndGet(hookStats.get._2)
-        if (actCounts.getOrElse("u", 0L) > 0) {
-          spec.ops.handlingOfUnretryableEvents match {
-            case Houe.Fail => throw new RuntimeException(s"hook flagged unretryable events in ${spec.id} (houe=fail)")
-            case Houe.Dlq => supervisor.config.sinkRoot.foreach(root =>
-              acted.filter(org.apache.spark.sql.functions.col("__act") === "u")
-                .select("value").write.mode("append").parquet(s"$root/${spec.id}__dlq"))
-            case _ => supervisor.notifier.notify("WARN", spec.id, "hook: unretryable events discarded")
-          }
-        }
-        if (actCounts.getOrElse("x", 0L) > 0)
-          shutdownRequested = true
-        acted.filter(org.apache.spark.sql.functions.col("__act") === "p").select("value")
-    }
+        }.toDF("__act", "value", "__rawlen")
+        pipeline.tag(acted, keepColumns = Seq("__act", "__rawlen"), active = col("__act") === "p")
+    }).cache())
 
-    // cache: the event frame feeds every branch, the error frame, and the
-    // stats action — without it each is a full recomputation of the batch
-    val cachedEvents = trackEvents(events.cache())
-    val branches = pipeline(cachedEvents)
+    // ONE aggregation over the cache (it also materializes it) carries the
+    // processed counters, the ingested bytes, the error count and the hook
+    // action tallies. Per-batch job budget: each extra action is a fixed
+    // scheduler cost on every micro-batch.
+    val len = col(CompiledPipeline.Len)
+    def tally(act: String) = if (hooked) count(when(col("__act") === act, 1)) else lit(0L)
+    val stats = tagged.select(
+      count(lit(1)),
+      coalesce(sum(if (hooked) col("__rawlen") else len).cast("long"), lit(0L)),
+      coalesce(sum(when(pipeline.ingested, len)).cast("long"), lit(0L)),
+      count(when(pipeline.failed, 1)),
+      tally("u"), tally("x")).collect()(0)
 
     // Processed counters advance whether or not the sink loads succeed
     // (executor_test.go:536-575: Microbatches/EventsProcessed/BytesProcessed
     // grow across the MockLoader_Error and RetryableError legs while the
-    // sink counters stay flat) — so they are accounted BEFORE the loads
-    // (hook mode accounted them above, before the houe dispatch;
-    // Microbatches + processing time are deferred in processBatch).
-    //
-    // Per-batch job budget: micro-batch throughput at high rates is
-    // bounded by fixed per-job cost, so each fused action is direct
-    // events/sec. Without a hook, cachedEvents has exactly rawEvents'
-    // rows, so ONE action computes count, byte volume, AND the
-    // ingested-candidate bytes (and materializes the cache every branch
-    // load reuses). With a hook, count + raw bytes already came out of
-    // the hook aggregation above — no second rawEvents scan either way.
-    import org.apache.spark.sql.functions.{coalesce => fnCoalesce, count => fnCount, length => fnLength, lit => fnLit, sum => fnSum, when => fnWhen}
-    val ingestedBytesCol = fnCoalesce(
-      fnSum(fnWhen(pipeline.ingestedCol(col("value")), fnLength(col("value"))))
-        .cast("long"), fnLit(0L)).as("__ingestable")
-    val fusedStats = hookStats.getOrElse {
-      val r = cachedEvents.select(
-        fnCount(fnLit(1)),
-        fnCoalesce(fnSum(fnLength(col("value"))).cast("long"), fnLit(0L)),
-        ingestedBytesCol).collect()(0)
-      metrics.eventsProcessed.addAndGet(r.getLong(0))
-      metrics.bytesProcessed.addAndGet(r.getLong(1))
-      (r.getLong(0), r.getLong(1), r.getLong(2))
+    // sink counters stay flat) — so they are accounted BEFORE the loads.
+    // The reference credits them at the top of the per-event loop, BEFORE
+    // the hook-action dispatch (executor.go:196-198), so a batch the hook
+    // flags unretryable under houe=fail still advances them.
+    metrics.eventsProcessed.addAndGet(stats.getLong(0))
+    metrics.bytesProcessed.addAndGet(stats.getLong(1))
+    if (stats.getLong(4) > 0) {
+      spec.ops.handlingOfUnretryableEvents match {
+        case Houe.Fail => throw new RuntimeException(s"hook flagged unretryable events in ${spec.id} (houe=fail)")
+        case Houe.Dlq => supervisor.config.sinkRoot.foreach(root =>
+          tagged.filter(col("__act") === "u")
+            .select("value").write.mode("append").parquet(s"$root/${spec.id}__dlq"))
+        case _ => supervisor.notifier.notify("WARN", spec.id, "hook: unretryable events discarded")
+      }
     }
+    if (stats.getLong(5) > 0) shutdownRequested = true
 
-    branches.foreach { case (_, branchDf0) =>
+    pipeline.branches.indices.foreach { i =>
+      val branchDf0 = pipeline.rowsOf(tagged, i)
       // F10 post-transform hook stage on the branch output.
       val branchDf = supervisor.config.postTransformStage
         .map(stage => stage(spec, branchDf0)).getOrElse(branchDf0)
@@ -349,29 +312,25 @@ final class Stream(
       }
     }
 
-    // unretryable error path (regexp non-match): houe policy (I4)
-    val errors = pipeline.errorFrame(cachedEvents)
-    spec.ops.handlingOfUnretryableEvents match {
+    // unretryable transform errors (regexp non-match, userAgent unescape):
+    // houe policy (I4), AFTER the loads — the count came with the stats
+    if (stats.getLong(3) > 0) spec.ops.handlingOfUnretryableEvents match {
       case Houe.Fail =>
-        if (!errors.isEmpty)
-          throw new RuntimeException(s"unretryable events in stream ${spec.id} with houe=fail")
+        throw new RuntimeException(s"unretryable events in stream ${spec.id} with houe=fail")
       case Houe.Dlq =>
         supervisor.config.sinkRoot.foreach { root =>
-          val dlq = errors
-          if (!dlq.isEmpty) dlq.write.mode("append").parquet(s"$root/${spec.id}__dlq")
+          tagged.filter(pipeline.failed).select("value")
+            .write.mode("append").parquet(s"$root/${spec.id}__dlq")
         }
-      case _ => // default/discard: drop, count via notifier
-        ()
+      case _ => // default/discard: drop
     }
 
     // H1 BytesIngested (executor.go:236-249): the raw bytes of (post-hook)
     // events whose transform produced ≥1 record, CREDITED only once the
     // whole batch — every sink load AND the houe policy — succeeded (a
     // throwing load above skips this line). An all-excluded batch credits
-    // 0 (nothing transformed → no load, executor_test.go:518-533). The
-    // value itself was fused into the stats action (hook-free mode) or the
-    // hook aggregation ('p'-row sum, post-hook values) — no extra job.
-    metrics.bytesIngested.addAndGet(fusedStats._3)
+    // 0 (nothing transformed → no load, executor_test.go:518-533).
+    metrics.bytesIngested.addAndGet(stats.getLong(2))
     if (shutdownRequested) supervisor.requestShutdown(spec.id)
     resourceId
   }
@@ -394,9 +353,9 @@ final class Stream(
     // executor_test.go:518-533 pins SinkOperations/EventsStoredInSink flat
     // across an all-excluded batch). ONE action probes the batch size AND
     // (keyed sinks) the deterministic min row key, materializing the cache
-    // the write below reuses — per-batch job count is the throughput floor
-    // at high event rates. The probe sits OUTSIDE the retry loop: retries
-    // re-run only the write.
+    // the write below reuses — every job is a fixed cost paid on each
+    // micro-batch. The probe sits OUTSIDE the retry loop: retries re-run
+    // only the write.
     val keyed = supervisor.config.customLoaders.get(spec.sink.sinkType).isEmpty &&
       keyedSinkFor(tableName).isDefined && out.columns.contains("key")
     val probeCols = org.apache.spark.sql.functions.count(
@@ -902,6 +861,8 @@ final class Geist(spark: SparkSession, config: RuntimeConfig = RuntimeConfig()) 
     StreamSpec.parse(json)
   def metrics(streamId: String): Map[String, Long] = supervisor.metrics(streamId).snapshot
   def notifications(): Seq[NotificationEvent] = supervisor.notifier.drain()
+  /** Notifications dropped so far because the buffer was full. */
+  def droppedNotifications: Long = supervisor.notifier.dropped.get
   def deployedIds: Set[String] = supervisor.deployedIds
   def readback(streamId: String): Option[KeyedTableSink] =
     supervisor.stream(streamId).flatMap(_.keyedSink)

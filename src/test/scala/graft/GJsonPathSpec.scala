@@ -155,6 +155,19 @@ class GJsonPathSpec extends AnyFunSuite {
     assert(GJsonPath.get("not json", "a").isEmpty)
   }
 
+  test("nesting depth is bounded: 1,000 levels parse, 10,000 read as malformed") {
+    def nest(n: Int) = "[" * n + "]" * n
+    assert(Js.parse(nest(1000)).isDefined)
+    assert(Js.parse(nest(Js.MaxDepth)).isDefined)
+    assert(Js.parse(nest(Js.MaxDepth + 1)).isEmpty)
+    // unbounded recursion used to throw StackOverflowError here
+    assert(Js.parse(nest(10000)).isEmpty)
+    val deepObj = "{\"a\":" * 10000 + "1" + "}" * 10000
+    assert(Js.parse(deepObj).isEmpty)
+    // the extract path sees the whole too-deep event as missing
+    assert(GJsonPath.get(s"""{"name": "x", "nest": ${nest(10000)}}""", "name").isEmpty)
+  }
+
   test("string escapes are unescaped in values") {
     assert(str("""{"a": "x\nyA\""}""", "a") == "x\nyA\"")
   }

@@ -4,6 +4,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.runtime.{Geist, RuntimeConfig}
 
+import scala.jdk.CollectionConverters._
+
 /** Lifecycle / runtime conformance mirroring the reference's engine tests
   * (geist_test.go, internal/pkg/engine/executor_test.go, supervisor_test.go).
   */
@@ -474,13 +476,14 @@ class RuntimeSpec extends AnyFunSuite {
   }
 
   test("job-count gate: a micro-batch stays within its job budget (streaming throughput floor)") {
-    // per-batch Spark job count is the micro-batch throughput floor at
-    // high event rates (SCALE.md "Streaming runtime"): the round-8 fusion
-    // took a batch from 6 jobs to 3 — the hook aggregation carries action
-    // tallies + processed counters + ingested bytes, the sink probe
-    // carries batch size + min row key and materializes the cache the
-    // write reuses. This pins the budget so an innocent extra .count()
-    // can't silently tax every micro-batch at every deployment.
+    // every Spark job is a fixed cost paid on every micro-batch — the
+    // whole cost of a thin one-event publish (SCALE.md "Streaming
+    // runtime"). The batch fuses its accounting: ONE aggregation over the
+    // cached tagged pass carries the processed counters, ingested bytes,
+    // error count and hook action tallies; the sink probe carries batch
+    // size + min row key and materializes the per-table cache the write
+    // reuses. This pins the budget so an innocent extra .count() can't
+    // silently tax every micro-batch at every deployment.
     val keyedSink =
       """{"type": "bigtable", "config": {"customConfig": {"tables": [
         |  {"name": "t", "rowKey": {"keys": ["name"], "delimiter": "#"},
@@ -504,12 +507,15 @@ class RuntimeSpec extends AnyFunSuite {
     }
     val hookJobs = jobsPerPublish(hook = true)
     val plainJobs = jobsPerPublish(hook = false)
-    // measured composition (both modes): 3 ACTIONS — [hook aggregation |
-    // fused stats] + sink probe + parquet write — which AQE executes as 7
+    // measured composition (both modes): 3 ACTIONS — the stats
+    // aggregation (which also builds the tagged cache, running the
+    // transform chain once per event; with a hook, the hook map runs
+    // inside it) + sink probe + parquet write — which AQE executes as 7
     // scheduler jobs (each aggregate's shuffle runs as 2 stage-
     // materialization sub-jobs plus the result job; the narrow write is
-    // 1). Budget 8 leaves one job of engine variance while still failing
-    // a regression to per-concern actions (6 actions ≈ 13+ jobs).
+    // 1). houe=fail|dlq adds no emptiness probe: the error count rides the
+    // stats row. Budget 8 leaves one job of engine variance while still
+    // failing a regression to per-concern actions (6 actions ≈ 13+ jobs).
     assert(hookJobs <= 8, s"hook-mode micro-batch used $hookJobs jobs (budget 8 ≈ 3 actions)")
     assert(plainJobs <= 8, s"hook-free micro-batch used $plainJobs jobs (budget 8 ≈ 3 actions)")
   }
@@ -539,5 +545,224 @@ class RuntimeSpec extends AnyFunSuite {
     intercept[graft.runtime.RetryableStreamException] { sup.publish(idR, tiny) }
     assert(counters(sup, idR) == processedOnly)
     sup.shutdownAll()
+  }
+
+  // ---------------------------------------------------------------------
+  // One tagged pass per micro-batch: the transform chain (parse, routing,
+  // userAgent, regexp) runs once per event, and every consumer — counters,
+  // sink loads, dead-letter write — reads the batch's one cache.
+  // ---------------------------------------------------------------------
+
+  /** Exclude + userAgent + regexp spec into a keyed sink. */
+  private def chainSpec(suffix: String, houe: String) =
+    s"""{
+       |  "namespace": "tp", "streamIdSuffix": "$suffix", "version": 1,
+       |  "description": "...",
+       |  "ops": {"handlingOfUnretryableEvents": "$houe"},
+       |  "source": {"type": "geistapi"},
+       |  "transform": {
+       |    "excludeEventsWith": [{"key": "kind", "values": ["heartbeat"]}],
+       |    "extractFields": [{"fields": [
+       |      {"id": "name", "jsonPath": "name"},
+       |      {"id": "device", "jsonPath": "ua", "type": "userAgent"},
+       |      {"id": "line", "jsonPath": "payload", "type": "string"}
+       |    ]}],
+       |    "regexp": {"expression": "^(?P<n>\\\\d+)$$", "field": "line"}
+       |  },
+       |  "sink": {"type": "bigtable", "config": {"customConfig": {"tables": [
+       |    {"name": "t", "rowKey": {"keys": ["name"], "delimiter": "#"},
+       |     "columnFamilies": [{"name": "d", "columnQualifiers": [
+       |       {"id": "device", "name": "dev"}, {"id": "regexppayload", "name": "p"}]}]}
+       |  ]}}}
+       |}""".stripMargin
+
+  /** Excluded heartbeats (one with a broken userAgent), regexp
+    * non-matches, a userAgent-unescape failure, good events, and two
+    * events the parity hook below skips or flags unretryable.
+    */
+  private val mixedBatch = Seq(
+    """{"kind": "heartbeat", "name": "hb1", "ua": "Mozilla%2F5.0", "payload": "1"}""",
+    """{"kind": "click", "name": "good1", "ua": "Mozilla%2F5.0", "payload": "11"}""",
+    """{"kind": "click", "name": "nomatch1", "ua": "Mozilla%2F5.0", "payload": "abc"}""",
+    """{"kind": "click", "name": "badua", "ua": "%ZZ broken", "payload": "12"}""",
+    """{"kind": "heartbeat", "name": "hb2", "ua": "%ZZ", "payload": "x"}""",
+    """{"kind": "view", "name": "good2", "ua": "curl%2F8.0", "payload": "2222"}""",
+    """{"kind": "view", "name": "nomatch2", "ua": "curl%2F8.0", "payload": "12a"}""",
+    """{"kind": "view", "name": "good3", "payload": "3"}""",
+    """{"kind": "click", "name": "skipme", "ua": "Mozilla%2F5.0", "payload": "7"}""",
+    """{"kind": "click", "name": "hookbad", "ua": "Mozilla%2F5.0", "payload": "8"}""")
+
+  private val parityHook: graft.runtime.Hooks.PreTransformHook = (_, e) =>
+    if (e.contains("skipme")) graft.runtime.Hooks.Skip
+    else if (e.contains("hookbad")) graft.runtime.Hooks.UnretryableError
+    else graft.runtime.Hooks.Proceed(Geist.setJsonField(e, "hooked", "yes"))
+
+  /** Counters (duration counters as "ran" flags), sorted sink rows and
+    * sorted dead-letter rows after one mixed micro-batch.
+    */
+  private def parityRun(hook: Boolean, houe: String): (Map[String, Long], Seq[String], Seq[String]) = {
+    val root = tmpDir()
+    val sup = new graft.runtime.Supervisor(spark, RuntimeConfig(
+      sinkRoot = Some(root), retryBackoffBaseMs = 1,
+      preTransformHook = if (hook) Some(parityHook) else None))
+    val id = sup.registerStream(chainSpec(s"parity-$hook-$houe", houe))
+      .fold(e => fail(e.msg), identity)
+    val s = spark
+    import s.implicits._
+    val batch = mixedBatch.toDF("value")
+    if (houe == "fail") intercept[RuntimeException] { sup.stream(id).get.processBatch(batch) }
+    else sup.stream(id).get.processBatch(batch)
+    val snap = sup.metrics(id).snapshot
+    val ctr = counters(sup, id) ++ Map(
+      "EventProcessingTimeMicros" -> math.min(snap("EventProcessingTimeMicros"), 1L),
+      "SinkProcessingTimeMicros" -> math.min(snap("SinkProcessingTimeMicros"), 1L))
+    def rows(path: String): Seq[String] =
+      if (!new java.io.File(path).exists()) Nil
+      else spark.read.parquet(path).collect().map(_.toString).toSeq.sorted
+    val out = (ctr, rows(s"$root/$id"), rows(s"$root/${id}__dlq"))
+    sup.shutdownAll()
+    out
+  }
+
+  test("counter parity: one mixed batch pins counters, sink rows and DLQ rows per houe and hook mode") {
+    // expected values recorded from the raw-event-cache runtime (one
+    // transform pass per consumer) before the single tagged pass replaced it
+    val ua = """{"platform":"","operatingSystem":{"name":"","fullName":"","version":""},""" +
+      """"localization":"","browser":{"name":"","version":"","engine":"","engineVersion":""},""" +
+      """"bot":false,"mobile":false}"""
+    val uaBot = ua.replace("\"bot\":false", "\"bot\":true")
+    val hookSink = Seq(s"""[good1,$ua,{"n":"11"}]""", s"""[good2,$uaBot,{"n":"2222"}]""",
+      s"""[good3,$ua,{"n":"3"}]""")
+    val plainSink = hookSink ++ Seq(s"""[hookbad,$ua,{"n":"8"}]""", s"""[skipme,$ua,{"n":"7"}]""")
+    val plainDlq = Seq(3, 2, 6).map(i => s"[${mixedBatch(i)}]")
+    val hookDlq = Seq(
+      s"[${mixedBatch(9)}]",
+      """[{"kind":"click","name":"badua","ua":"%ZZ broken","payload":"12","hooked":"yes"}]""",
+      """[{"kind":"click","name":"nomatch1","ua":"Mozilla%2F5.0","payload":"abc","hooked":"yes"}]""",
+      """[{"kind":"view","name":"nomatch2","ua":"curl%2F8.0","payload":"12a","hooked":"yes"}]""")
+    def ctr(ingested: Long, stored: Long, sinkOps: Long) = Map(
+      "Microbatches" -> 1L, "EventsProcessed" -> 10L, "BytesProcessed" -> 707L,
+      "EventsStoredInSink" -> stored, "SinkOperations" -> sinkOps, "BytesIngested" -> ingested,
+      "EventProcessingTimeMicros" -> 1L, "SinkProcessingTimeMicros" -> sinkOps)
+    val expected = Map(
+      (false, "dlq") -> (ctr(344, 5, 1), plainSink, plainDlq),
+      (false, "fail") -> (ctr(0, 5, 1), plainSink, Nil),
+      (false, "discard") -> (ctr(344, 5, 1), plainSink, Nil),
+      // the hook flags one event unretryable: houe=fail throws before any load
+      (true, "dlq") -> (ctr(221, 3, 1), hookSink, hookDlq),
+      (true, "fail") -> (ctr(0, 0, 0), Nil, Nil),
+      (true, "discard") -> (ctr(221, 3, 1), hookSink, Nil))
+    expected.foreach { case ((hook, houe), want) =>
+      assert(parityRun(hook, houe) == want, s"hook=$hook houe=$houe")
+    }
+  }
+
+  test("the transform chain runs once per event: sink and dead-letter writes read one tagged cache") {
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.command.DataWritingCommandExec
+    import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+    object Plans extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    val kernels = Set("ExtractFieldsGen", "ExtractFieldsExpr", "EventPredExpr",
+      "RegexpPayloadExpr", "ParseUserAgentExpr", "ItemsFromArrayExpr")
+    // kernel expressions evaluated by `plan`: above the batch cache only
+    // (the innermost cached relation, the one not built over another
+    // cache), or through it down to the source
+    def kernelsIn(plan: SparkPlan, lineage: Boolean): Seq[String] = Plans.flatMap(plan) {
+      case scan: InMemoryTableScanExec =>
+        val inner = scan.relation.cachedPlan
+        val overCache = Plans.find(inner)(_.isInstanceOf[InMemoryTableScanExec]).isDefined
+        if (overCache || lineage) kernelsIn(inner, lineage) else Nil
+      case node => node.expressions.flatMap(_.collect {
+        case e if kernels(e.getClass.getSimpleName) => e.getClass.getSimpleName
+      })
+    }
+    val writes = new java.util.concurrent.ConcurrentHashMap[String, SparkPlan]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        Plans.collect(qe.executedPlan) { case w: DataWritingCommandExec => w }.foreach { w =>
+          w.cmd match {
+            case i: InsertIntoHadoopFsRelationCommand =>
+              writes.put(if (i.outputPath.getName.endsWith("__dlq")) "dlq" else "sink", w.child)
+            case _ =>
+          }
+        }
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val sup = new graft.runtime.Supervisor(spark, RuntimeConfig(
+      sinkRoot = Some(tmpDir()), retryBackoffBaseMs = 1))
+    val id = sup.registerStream(chainSpec("once", "dlq")).fold(e => fail(e.msg), identity)
+    val s = spark
+    import s.implicits._
+    spark.listenerManager.register(listener)
+    try {
+      sup.stream(id).get.processBatch(mixedBatch.toDF("value"))
+      val deadline = System.currentTimeMillis() + 10000
+      while (writes.size < 2 && System.currentTimeMillis() < deadline) Thread.sleep(50)
+    } finally spark.listenerManager.unregister(listener)
+    sup.shutdownAll()
+    assert(writes.keySet.asScala == Set("sink", "dlq"), s"both writes observed: ${writes.keySet}")
+    Seq("sink", "dlq").foreach { w =>
+      val plan = writes.get(w)
+      assert(kernelsIn(plan, lineage = false).isEmpty,
+        s"$w write re-runs the chain above the batch cache: ${kernelsIn(plan, lineage = false)}\n$plan")
+      val counts = kernelsIn(plan, lineage = true).groupBy(identity).view.mapValues(_.size).toMap
+      assert(counts.values.forall(_ == 1), s"$w write evaluates a kernel more than once: $counts")
+    }
+    // the batch form of the same pipeline: each kernel once per row, no
+    // Catalyst filter pushdown duplicating the regexp into a Filter
+    val p = graft.compile.SpecCompiler.compile(
+      graft.spec.StreamSpec.parseUnsafe(chainSpec("oncebatch", "dlq")))
+    val out = p(mixedBatch.toDF("value")).head._2
+    val counts = kernelsIn(out.queryExecution.executedPlan, lineage = true)
+      .groupBy(identity).view.mapValues(_.size).toMap
+    assert(counts.values.forall(_ == 1), s"batch pipeline evaluates a kernel more than once: $counts")
+  }
+
+  test("a 10,000-deep event reads as malformed and routes under the stream's houe") {
+    val deep = s"""{"kind": "click", "name": "deep", "payload": "5", "nest": ${"[" * 10000}${"]" * 10000}}"""
+    val good = """{"kind": "click", "name": "ok", "ua": "Mozilla%2F5.0", "payload": "6"}"""
+    val s = spark
+    import s.implicits._
+    def run(houe: String): (Map[String, Long], Long, Long) = {
+      val root = tmpDir()
+      val sup = new graft.runtime.Supervisor(spark, RuntimeConfig(
+        sinkRoot = Some(root), retryBackoffBaseMs = 1))
+      val id = sup.registerStream(chainSpec(s"deep-$houe", houe)).fold(e => fail(e.msg), identity)
+      val batch = Seq(good, deep).toDF("value")
+      // an unparseable event extracts every field as missing: its empty
+      // payload fails the regexp, an unretryable transform error
+      if (houe == "fail") intercept[RuntimeException] { sup.stream(id).get.processBatch(batch) }
+      else sup.stream(id).get.processBatch(batch)
+      def rows(path: String) =
+        if (new java.io.File(path).exists()) spark.read.parquet(path).count() else 0L
+      val out = (counters(sup, id), rows(s"$root/$id"), rows(s"$root/${id}__dlq"))
+      sup.shutdownAll()
+      out
+    }
+    val (dlqCtr, dlqSink, dlqRows) = run("dlq")
+    assert(dlqSink == 1 && dlqRows == 1, "good event to the sink, deep event to the DLQ")
+    assert(dlqCtr("EventsProcessed") == 2 && dlqCtr("BytesIngested") == good.length)
+    val (failCtr, failSink, failDlq) = run("fail")
+    assert(failSink == 1 && failDlq == 0 && failCtr("BytesIngested") == 0,
+      "houe=fail loads first, then fails the batch")
+    val (discCtr, discSink, discDlq) = run("discard")
+    assert(discSink == 1 && discDlq == 0 && discCtr("BytesIngested") == good.length)
+  }
+
+  test("notifications past the 64-slot buffer are dropped and counted") {
+    val n = new graft.runtime.Notifier()
+    (1 to 100).foreach(i => n.notify("INFO", "s", s"m$i"))
+    assert(n.dropped.get == 36)
+    assert(n.drain().map(_.message) == (1 to 64).map(i => s"m$i"))
+    n.notify("INFO", "s", "after")
+    assert(n.dropped.get == 36 && n.drain().map(_.message) == Seq("after"))
+    // the same counter on the public API: each geistapi deploy notifies once
+    val g = new Geist(spark, RuntimeConfig(retryBackoffBaseMs = 1))
+    (1 to 70).foreach(i =>
+      g.registerStream(apiSpec("nt", s"drop$i")).fold(e => fail(e.msg), identity))
+    assert(g.droppedNotifications == 6)
+    assert(g.notifications().size == 64)
+    g.shutdown()
   }
 }
