@@ -188,11 +188,6 @@ final class Stream(
   private[runtime] def keyedSinkFor(table: String): Option[KeyedTableSink] =
     keyedSinks.get(table).orElse(keyedSinks.get("default"))
 
-  /** Process one micro-batch of raw events (the executor's ProcessEvent —
-    * engine/executor.go:175-251): pipeline → per-table sink stages → load
-    * with retry/backoff (executor.go:282-329) → houe policy on the
-    * unretryable side-output. Returns the resource id of the last write.
-    */
   @volatile private[runtime] var shutdownRequested = false
 
   // I3 self-heal bookkeeping (engine/executor.go:136-153): whether the last
@@ -212,6 +207,11 @@ final class Stream(
     backoffMs
   }
 
+  /** Process one micro-batch of raw events (the executor's ProcessEvent —
+    * engine/executor.go:175-251): pipeline → per-table sink stages → load
+    * with retry/backoff (executor.go:282-329) → houe policy on the
+    * unretryable side-output. Returns the resource id of the last write.
+    */
   def processBatch(rawEvents: DataFrame): String = {
     // the cache must unpersist even when the batch throws — under I3 the
     // self-heal loop re-runs a failing batch indefinitely, so a leak here
@@ -287,14 +287,12 @@ final class Stream(
     // flags unretryable under houe=fail still advances them.
     metrics.eventsProcessed.addAndGet(stats.getLong(0))
     metrics.bytesProcessed.addAndGet(stats.getLong(1))
-    if (stats.getLong(4) > 0) {
-      spec.ops.handlingOfUnretryableEvents match {
-        case Houe.Fail => throw new RuntimeException(s"hook flagged unretryable events in ${spec.id} (houe=fail)")
-        case Houe.Dlq => supervisor.config.sinkRoot.foreach(root =>
-          tagged.filter(col("__act") === "u")
-            .select("value").write.mode("append").parquet(s"$root/${spec.id}__dlq"))
-        case _ => supervisor.notifier.notify("WARN", spec.id, "hook: unretryable events discarded")
-      }
+    val houe = spec.ops.handlingOfUnretryableEvents
+    val (errors, hookUnretryable) = (stats.getLong(3), stats.getLong(4))
+    if (hookUnretryable > 0) houe match {
+      case Houe.Fail => throw new RuntimeException(s"hook flagged unretryable events in ${spec.id} (houe=fail)")
+      case Houe.Dlq => // dead-lettered with the transform errors after the loads
+      case _ => supervisor.notifier.notify("WARN", spec.id, "hook: unretryable events discarded")
     }
     if (stats.getLong(5) > 0) shutdownRequested = true
 
@@ -313,16 +311,13 @@ final class Stream(
     }
 
     // unretryable transform errors (regexp non-match, userAgent unescape):
-    // houe policy (I4), AFTER the loads — the count came with the stats
-    if (stats.getLong(3) > 0) spec.ops.handlingOfUnretryableEvents match {
-      case Houe.Fail =>
-        throw new RuntimeException(s"unretryable events in stream ${spec.id} with houe=fail")
-      case Houe.Dlq =>
-        supervisor.config.sinkRoot.foreach { root =>
-          tagged.filter(pipeline.failed).select("value")
-            .write.mode("append").parquet(s"$root/${spec.id}__dlq")
-        }
-      case _ => // default/discard: drop
+    // houe policy (I4), AFTER the loads — the count came with the stats.
+    // Under dlq ONE append carries them and the hook-flagged rows.
+    if (errors > 0 && houe == Houe.Fail)
+      throw new RuntimeException(s"unretryable events in stream ${spec.id} with houe=fail")
+    if (errors + hookUnretryable > 0 && houe == Houe.Dlq) supervisor.config.sinkRoot.foreach { root =>
+      val dead = if (hooked) pipeline.failed || col("__act") === "u" else pipeline.failed
+      tagged.filter(dead).select("value").write.mode("append").parquet(s"$root/${spec.id}__dlq")
     }
 
     // H1 BytesIngested (executor.go:236-249): the raw bytes of (post-hook)
@@ -356,36 +351,32 @@ final class Stream(
     // the write below reuses — every job is a fixed cost paid on each
     // micro-batch. The probe sits OUTSIDE the retry loop: retries re-run
     // only the write.
-    val keyed = supervisor.config.customLoaders.get(spec.sink.sinkType).isEmpty &&
-      keyedSinkFor(tableName).isDefined && out.columns.contains("key")
-    val probeCols = org.apache.spark.sql.functions.count(
-      org.apache.spark.sql.functions.lit(1)) +:
-      (if (keyed) Seq(org.apache.spark.sql.functions.min(col("key"))) else Nil)
-    val probe = out.select(probeCols: _*).collect()(0)
+    // The target, chosen once: an A5 pluggable loader, else the keyed
+    // table when the rows carry a key, else the void sink.
+    val loader = supervisor.config.customLoaders.get(spec.sink.sinkType)
+    val keyed = keyedSinkFor(tableName).filter(_ => loader.isEmpty && out.columns.contains("key"))
+    val probe = out.select(count(lit(1)) +: keyed.map(_ => min(col("key"))).toSeq: _*).collect()(0)
     val batchRows = probe.getLong(0)
     if (batchRows == 0L) return (0L, "")
-    val minKey = if (keyed) Option(probe.getString(1)).getOrElse("") else ""
     while (true) {
       try {
         val t0 = System.nanoTime()
-        val (n, rid) = supervisor.config.customLoaders.get(spec.sink.sinkType) match {
-          case Some(loader) => // A5: pluggable loader returns the resource id
-            (batchRows, loader(spec, out))
-          case None => keyedSinkFor(tableName) match {
-            case Some(ks) if out.columns.contains("key") =>
-              ks.write(out, batchRows) // size hint packs small-batch files
-              (batchRows, minKey) // both came out of the fused probe
-            case _ =>
-              (voidSink.load(out, batchRows), "<noResourceId>")
-          }
+        val rid = (loader, keyed) match {
+          case (Some(l), _) => l(spec, out) // the loader returns the resource id
+          case (None, Some(ks)) =>
+            ks.write(out, batchRows) // size hint packs small-batch files
+            Option(probe.getString(1)).getOrElse("") // the min key came with the probe
+          case (None, None) =>
+            voidSink.load()
+            "<noResourceId>"
         }
         metrics.sinkOperations.incrementAndGet()
         // per successful load, like the reference's sinkMetrics.Events
         // (executor.go:295) — NOT at batch end, so a later houe=fail abort
         // still accounts rows that did land in the sink
-        metrics.eventsStoredInSink.addAndGet(n)
+        metrics.eventsStoredInSink.addAndGet(batchRows)
         metrics.sinkProcessingTimeMicros.addAndGet((System.nanoTime() - t0) / 1000)
-        return (n, rid)
+        return (batchRows, rid)
       } catch {
         case e: VoidSink#SimulatedError if e.retryable && attempt < maxRetries =>
           attempt += 1
@@ -522,48 +513,56 @@ final class Supervisor(val spark: SparkSession, val config: RuntimeConfig) {
 
   /** Register (or upgrade) a stream spec and (re)deploy it — the
     * RegisterStream + handleStreamRegistryModified flow
-    * (geist.go:83-108, supervisor.go:220-250).
+    * (geist.go:83-108, supervisor.go:220-250): parse → [[prepare]] →
+    * persist → [[replace]]. A spec that parses but cannot compile (e.g.
+    * unsupported gjson path syntax) or whose source config is invalid is
+    * rejected without persisting it or killing the healthy deployment.
     */
-  def registerStream(specJson: String): Either[SpecValidationException, String] = {
-    // Validate AND compile before touching the registry or the running
-    // stream: a spec that parses but cannot compile (e.g. unsupported
-    // gjson path syntax) must be rejected without persisting it or
-    // killing the healthy deployment.
-    StreamSpec.parse(specJson).flatMap { parsed =>
-      val resolved = resolveOps(parsed)
-      try SpecCompiler.compile(resolved)
-      catch {
-        case e: Exception =>
-          return Left(SpecValidationException(s"spec ${parsed.id} failed to compile: ${e.getMessage}"))
-      }
-      // source-config dry validation: catches bad eventsim/kafka config
-      // before the registry persists anything or the old stream stops
-      try validateSource(resolved)
-      catch {
-        case e: Exception =>
-          return Left(SpecValidationException(s"spec ${parsed.id} source config invalid: ${e.getMessage}"))
-      }
+  def registerStream(specJson: String): Either[SpecValidationException, String] =
+    StreamSpec.parse(specJson).flatMap(prepare).flatMap { case (spec, pipeline) =>
       registry.register(specJson).flatMap { _ =>
-        deployLock.synchronized {
-          // hot-swap: stop any existing deployment of this id (I7)
-          Option(streams.get(resolved.id)).foreach(shutdownStream)
-          if (!registry.isDisabled(parsed)) {
-            try { deploy(resolved); Right(resolved.id) }
-            catch {
-              case e: Exception =>
-                // environmental deploy failure: surface via the contract (the
-                // spec is persisted; bootstrap/retry can redeploy once fixed)
-                notifier.notify("ERROR", resolved.id, s"deploy failed: ${e.getMessage}")
-                streams.remove(resolved.id)
-                Left(SpecValidationException(s"spec ${resolved.id} failed to deploy: ${e.getMessage}"))
-            }
-          } else {
-            notifier.notify("INFO", resolved.id, "stream registered disabled; not deployed")
-            Right(resolved.id)
+        if (registry.isDisabled(spec)) {
+          deployLock.synchronized { Option(streams.get(spec.id)).foreach(shutdownStream) }
+          notifier.notify("INFO", spec.id, "stream registered disabled; not deployed")
+          Right(spec.id)
+        } else
+          try { replace(spec, pipeline); Right(spec.id) }
+          catch { case e: Exception =>
+            // environmental deploy failure: surface via the contract (the
+            // spec is persisted; a later sync deploys it once fixed)
+            notifier.notify("ERROR", spec.id, s"deploy failed: ${e.getMessage}")
+            Left(SpecValidationException(s"spec ${spec.id} failed to deploy: ${e.getMessage}"))
           }
-        }
       }
     }
+
+  /** Everything that can reject a spec before anything is persisted or a
+    * running version stops: resolve the env's ops (registry.go:88-106
+    * adjustOpsConfig — opsPerEnv overrides replace the base ops
+    * wholesale), compile once, and dry-run the source config.
+    */
+  private def prepare(spec: StreamSpec): Either[SpecValidationException, (StreamSpec, CompiledPipeline)] = {
+    val resolved = spec.copy(ops = spec.opsFor(config.env))
+    def check[A](what: String)(f: => A): Either[SpecValidationException, A] =
+      try Right(f)
+      catch { case e: Exception => Left(SpecValidationException(s"spec ${spec.id} $what: ${e.getMessage}")) }
+    for {
+      pipeline <- check("failed to compile")(SpecCompiler.compile(resolved))
+      _ <- check("source config invalid")(validateSource(resolved))
+    } yield (resolved, pipeline)
+  }
+
+  /** Hot-swap (I7): stop whatever runs under the spec's id and start the
+    * prepared pipeline as a new Stream. A Stream whose start throws is
+    * removed again, so it never reports as deployed and a later sync
+    * retries it.
+    */
+  private def replace(spec: StreamSpec, pipeline: CompiledPipeline): Unit = deployLock.synchronized {
+    Option(streams.get(spec.id)).foreach(shutdownStream)
+    val st = new Stream(spec, pipeline, metrics(spec.id), this)
+    streams.put(spec.id, st)
+    try startStreamingQuery(st)
+    catch { case e: Exception => shutdownStream(st); throw e }
   }
 
   /** Dry-run the source configuration (no query started, nothing stopped). */
@@ -581,56 +580,39 @@ final class Supervisor(val spark: SparkSession, val config: RuntimeConfig) {
     case _ =>
   }
 
-  /** Effective ops for this environment (registry.go:88-106
-    * adjustOpsConfig): opsPerEnv overrides replace the base ops wholesale.
+  /** Bootstrap persisted specs and deploy the enabled ones — the restart
+    * entry point (registry.go Fetch + deployAllStreams). On a fresh
+    * supervisor this is exactly a [[sync]]; on a live one, reconciling is
+    * what a re-bootstrap should do.
     */
-  private def resolveOps(spec: StreamSpec): StreamSpec =
-    spec.copy(ops = spec.opsFor(config.env))
-
-  /** Bootstrap persisted specs and deploy the enabled ones — the restart /
-    * cross-pod sync entry point (registry.go Fetch + deployAllStreams).
-    */
-  def bootstrap(): Unit = {
-    registry.fetch()
-    registry.all.foreach { spec =>
-      if (!registry.isDisabled(spec) && !streams.containsKey(spec.id))
-        try deployLock.synchronized { deploy(resolveOps(spec)) }
-        catch { case e: Exception =>
-          notifier.notify("ERROR", spec.id, s"bootstrap deploy failed: ${e.getMessage}") }
-    }
-  }
+  def bootstrap(): Unit = sync()
 
   /** J2 cross-pod registry sync (supervisor.go:281-317
     * handleStreamRegistryModified): another driver persisted spec changes;
     * re-fetch the shared registry table and reconcile the local
-    * deployment — hot-swap streams whose persisted version is newer, shut
-    * down streams now disabled for this env, deploy newly-registered ones.
-    * The reference fans the trigger out via an admin event stream; with
-    * the registry as a shared table, any control signal (timer, admin
-    * topic, HTTP) simply invokes sync().
+    * deployment — shut down streams now disabled for this env, deploy
+    * specs with nothing running under their id, hot-swap streams whose
+    * persisted version is newer. One spec's failure does not stop the
+    * others. The reference fans the trigger out via an admin event
+    * stream; with the registry as a shared table, any control signal
+    * (timer, admin topic, HTTP) simply invokes sync().
     */
   def sync(): Unit = {
     registry.fetch()
     registry.all.foreach { spec =>
       try deployLock.synchronized {
-        (Option(streams.get(spec.id)), registry.isDisabled(spec)) match {
-          case (Some(st), true) =>
-            notifier.notify("INFO", spec.id, "sync: disabled in registry; shutting down")
-            shutdownStream(st)
-          case (Some(st), false) if spec.version > st.spec.version =>
-            // same safety ordering as registerStream: prove the new spec
-            // compiles and its source config is sane BEFORE stopping the
-            // healthy running version — a spec that deploys on the driver
-            // that persisted it can still fail environmentally here
-            val resolved = resolveOps(spec)
-            SpecCompiler.compile(resolved)
-            validateSource(resolved)
+        val running = Option(streams.get(spec.id))
+        if (registry.isDisabled(spec)) running.foreach { st =>
+          notifier.notify("INFO", spec.id, "sync: disabled in registry; shutting down")
+          shutdownStream(st)
+        } else if (running.forall(spec.version > _.spec.version)) {
+          // as in registerStream, the running version stops only once the
+          // new one is prepared — a spec that deploys on the driver that
+          // persisted it can still fail environmentally here
+          val (resolved, pipeline) = prepare(spec).fold(e => throw e, identity)
+          if (running.isDefined)
             notifier.notify("INFO", spec.id, s"sync: hot-swapping to version ${spec.version}")
-            shutdownStream(st)
-            deployOrRemove(resolved)
-          case (None, false) =>
-            deployOrRemove(resolveOps(spec))
-          case _ => () // already current, or disabled and not deployed
+          replace(resolved, pipeline)
         }
       }
       catch { case e: Exception =>
@@ -689,22 +671,7 @@ final class Supervisor(val spark: SparkSession, val config: RuntimeConfig) {
     }
   }
 
-  /** Deploy, and on failure remove the half-registered Stream so a later
-    * sync/register can retry (a zombie entry would otherwise report as
-    * deployed forever while no query runs).
-    */
-  private def deployOrRemove(spec: StreamSpec): Unit =
-    try deploy(spec)
-    catch { case e: Exception => streams.remove(spec.id); throw e }
-
-  private def deploy(spec: StreamSpec): Unit = {
-    val pipeline = SpecCompiler.compile(spec)
-    val st = new Stream(spec, pipeline, metrics(spec.id), this)
-    streams.put(spec.id, st)
-    startStreamingQuery(st)
-  }
-
-  /** Start (or I3-restart) the stream's query. Separate from [[deploy]] so
+  /** Start (or I3-restart) the stream's query. Separate from [[replace]] so
     * a self-heal restart reuses the SAME Stream — compiled pipeline, sink
     * instances and their error counters survive, matching the reference's
     * StreamExtract restart loop which keeps the executor and loader.

@@ -330,35 +330,23 @@ final class KeyedTableSink(
   }
 }
 
-/** Void/noop sink (G8): counts loads, optional error simulation via sink
-  * properties (simulateError: alwaysRetryable | alwaysUnretryable,
-  * maxErrors) — /root/reference/internal/pkg/entity/void/loader.go:40-156.
+/** Void/noop sink (G8): optional error simulation via sink properties
+  * (simulateError: alwaysRetryable | alwaysUnretryable, maxErrors) — the
+  * reference's internal/pkg/entity/void/loader.go:40-156.
   */
 final class VoidSink(props: Map[String, String]) {
-  import java.util.concurrent.atomic.{AtomicLong, AtomicInteger}
-  val eventsLoaded = new AtomicLong(0)
-  val batches = new AtomicLong(0)
-  private val errorsSimulated = new AtomicInteger(0)
+  private val errorsSimulated = new java.util.concurrent.atomic.AtomicInteger(0)
   private val maxErrors = props.get("maxErrors").flatMap(_.toIntOption).getOrElse(Int.MaxValue)
 
   final case class SimulatedError(retryable: Boolean)
     extends RuntimeException(s"simulated ${if (retryable) "retryable" else "unretryable"} error")
 
-  /** Returns the batch row count; throws per the simulateError contract.
-    * `knownCount` skips the count job when the caller already probed the
-    * batch size (the runtime's fused emptiness probe) — per-micro-batch
-    * job count is the streaming throughput floor.
-    */
-  def load(df: DataFrame, knownCount: Long = -1L): Long = {
+  /** Loads nothing; throws per the simulateError contract. */
+  def load(): Unit =
     props.get("simulateError") match {
       case Some(mode @ ("alwaysRetryable" | "alwaysUnretryable")) if errorsSimulated.get() < maxErrors =>
         errorsSimulated.incrementAndGet()
         throw SimulatedError(retryable = mode == "alwaysRetryable")
       case _ =>
     }
-    val n = if (knownCount >= 0) knownCount else df.count()
-    eventsLoaded.addAndGet(n)
-    batches.incrementAndGet()
-    n
-  }
 }

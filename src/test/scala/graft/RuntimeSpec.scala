@@ -179,6 +179,30 @@ class RuntimeSpec extends AnyFunSuite {
     g2.shutdown()
   }
 
+  test("a persisted stream whose start fails at bootstrap is not reported deployed, and sync retries it") {
+    val specTable = tmpDir() + "/specs"
+    val broken = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val builder = (s: org.apache.spark.sql.SparkSession, _: graft.spec.StreamSpec) => {
+      if (broken.get) throw new IllegalStateException("source unavailable")
+      import s.implicits._
+      Seq("""{"name": "n1"}""").toDF("value")
+    }
+    def driver() = new Geist(spark, RuntimeConfig(specTablePath = Some(specTable),
+      retryBackoffBaseMs = 1, customSources = Map("flaky" -> builder)))
+    val a = driver()
+    assert(a.registerStream(
+      apiSpec("rt", "flaky").replace(""""type": "geistapi"""", """"type": "flaky"""")).isRight)
+    broken.set(true)
+    val b = driver()
+    b.bootstrap()
+    assert(!b.deployedIds.contains("rt-flaky"), "a stream whose start threw must not report as deployed")
+    assert(b.notifications().exists(n => n.level == "ERROR" && n.streamId == "rt-flaky"))
+    broken.set(false)
+    b.sync()
+    assert(b.deployedIds.contains("rt-flaky"), "sync retries the stream once its source starts")
+    a.shutdown(); b.shutdown()
+  }
+
   test("a spec that parses but cannot compile is rejected without killing the running stream") {
     val g = new Geist(spark, RuntimeConfig(retryBackoffBaseMs = 1))
     assert(g.registerStream(apiSpec("rt", "guard", 1)).isRight)
@@ -598,9 +622,11 @@ class RuntimeSpec extends AnyFunSuite {
     else graft.runtime.Hooks.Proceed(Geist.setJsonField(e, "hooked", "yes"))
 
   /** Counters (duration counters as "ran" flags), sorted sink rows and
-    * sorted dead-letter rows after one mixed micro-batch.
+    * sorted dead-letter rows after one mixed micro-batch, plus the number
+    * of appends to the dead-letter table (its distinct write-job ids).
     */
-  private def parityRun(hook: Boolean, houe: String): (Map[String, Long], Seq[String], Seq[String]) = {
+  private def parityRun(hook: Boolean, houe: String)
+      : ((Map[String, Long], Seq[String], Seq[String]), Int) = {
     val root = tmpDir()
     val sup = new graft.runtime.Supervisor(spark, RuntimeConfig(
       sinkRoot = Some(root), retryBackoffBaseMs = 1,
@@ -619,7 +645,10 @@ class RuntimeSpec extends AnyFunSuite {
     def rows(path: String): Seq[String] =
       if (!new java.io.File(path).exists()) Nil
       else spark.read.parquet(path).collect().map(_.toString).toSeq.sorted
-    val out = (ctr, rows(s"$root/$id"), rows(s"$root/${id}__dlq"))
+    val dlqFiles = Option(new java.io.File(s"$root/${id}__dlq").list()).toSeq.flatten
+    val dlqAppends = dlqFiles.flatMap("""^part-\d+-([0-9a-f-]{36})""".r.findFirstMatchIn(_))
+      .map(_.group(1)).distinct.size
+    val out = ((ctr, rows(s"$root/$id"), rows(s"$root/${id}__dlq")), dlqAppends)
     sup.shutdownAll()
     out
   }
@@ -653,7 +682,10 @@ class RuntimeSpec extends AnyFunSuite {
       (true, "fail") -> (ctr(0, 0, 0), Nil, Nil),
       (true, "discard") -> (ctr(221, 3, 1), hookSink, Nil))
     expected.foreach { case ((hook, houe), want) =>
-      assert(parityRun(hook, houe) == want, s"hook=$hook houe=$houe")
+      val (got, dlqAppends) = parityRun(hook, houe)
+      assert(got == want, s"hook=$hook houe=$houe")
+      // hook-flagged rows and transform errors share ONE dead-letter append
+      assert(dlqAppends == (if (want._3.isEmpty) 0 else 1), s"hook=$hook houe=$houe DLQ appends")
     }
   }
 
