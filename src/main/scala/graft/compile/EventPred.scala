@@ -113,11 +113,4 @@ object EventPred {
   def keepPred(single: Seq[ExcludeEventsWith], multi: Seq[MultiCondExclude]): EventPred =
     if (single.isEmpty && multi.isEmpty) True0()
     else Not(specExclusion(single, multi))
-
-  /** AND combinator used by the compiler. */
-  def and(a: EventPred, b: EventPred): EventPred = (a, b) match {
-    case (True0(), x) => x
-    case (x, True0()) => x
-    case _ => AllOf(Seq(a, b))
-  }
 }

@@ -50,6 +50,22 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object text {
 
+  /** The word tokenization every text kernel shares with its SQL oracle,
+    * `split(lower(trim(text)), '\\s+')`: trim strips ' ' only, then Spark's
+    * own lowercase (UTF8String.toLowerCase, including its non-ASCII path).
+    * Limit -1 keeps trailing empty tokens — split(col, "\\s+") and DuckDB's
+    * string_split_regex both do; Java's default limit 0 would silently drop
+    * them (split of "" is [""], so there is always at least one token).
+    */
+  private def words(input: Any): Array[String] = {
+    val raw = input.asInstanceOf[UTF8String].toString
+    var st = 0
+    var en = raw.length
+    while (st < en && raw.charAt(st) == ' ') st += 1
+    while (en > st && raw.charAt(en - 1) == ' ') en -= 1
+    UTF8String.fromString(raw.substring(st, en)).toLowerCase.toString.split("\\s+", -1)
+  }
+
   /** xxhash64-style avalanche of a byte sequence — reuses Spark's own
     * XXH64 so results are consistent with functions.xxhash64.
     */
@@ -309,20 +325,7 @@ object text {
       StructField("dup_2gram_frac", DoubleType, nullable = false),
       StructField("dup_3gram_frac", DoubleType, nullable = false)))
     override def nullSafeEval(input: Any): Any = {
-      val raw = input.asInstanceOf[UTF8String].toString
-      // trim ' ' only, then Spark's own lowercase (UTF8String.toLowerCase):
-      // byte-for-byte the value lower(trim(text)) produces in the sibling
-      // operators, including its non-ASCII path
-      var st = 0
-      var en = raw.length
-      while (st < en && raw.charAt(st) == ' ') st += 1
-      while (en > st && raw.charAt(en - 1) == ' ') en -= 1
-      val s = UTF8String.fromString(raw.substring(st, en)).toLowerCase.toString
-      // limit -1 keeps trailing empty tokens — split(col, "\\s+") and
-      // DuckDB's string_split_regex both do; Java's default limit 0 would
-      // silently drop them and diverge from every sibling tokenization
-      // (note: split of "" is [""], so n_words >= 1 always — same as SQL)
-      val toks: Array[String] = s.split("\\s+", -1)
+      val toks = words(input)
       val nWords = toks.length
       var sumChars = 0L
       var stopHits = 0L
@@ -424,13 +427,7 @@ object text {
     require(n >= 1, "n must be >= 1")
     override def dataType: DataType = ArrayType(StringType, containsNull = false)
     override def nullSafeEval(input: Any): Any = {
-      val raw = input.asInstanceOf[UTF8String].toString
-      var st = 0
-      var en = raw.length
-      while (st < en && raw.charAt(st) == ' ') st += 1
-      while (en > st && raw.charAt(en - 1) == ' ') en -= 1
-      val s = UTF8String.fromString(raw.substring(st, en)).toLowerCase.toString
-      val toks = s.split("\\s+", -1)
+      val toks = words(input)
       val grams: Seq[String] =
         if (toks.length < n) Seq(toks.mkString(" "))
         else {
@@ -508,13 +505,7 @@ object text {
       StructField("pick", StringType, nullable = false),
       StructField("n_tokens", LongType, nullable = false)))
     override def nullSafeEval(input: Any): Any = {
-      val raw = input.asInstanceOf[UTF8String].toString
-      var st = 0
-      var en = raw.length
-      while (st < en && raw.charAt(st) == ' ') st += 1
-      while (en > st && raw.charAt(en - 1) == ' ') en -= 1
-      val s = UTF8String.fromString(raw.substring(st, en)).toLowerCase.toString
-      val toks = s.split("\\s+", -1)
+      val toks = words(input)
       val counts = new Array[Long](sets.length)
       var i = 0
       while (i < toks.length) {
@@ -565,13 +556,7 @@ object text {
       "need size >= 1 and 0 <= overlap < size")
     override def dataType: DataType = ArrayType(StringType, containsNull = false)
     override def nullSafeEval(input: Any): Any = {
-      val raw = input.asInstanceOf[UTF8String].toString
-      var st = 0
-      var en = raw.length
-      while (st < en && raw.charAt(st) == ' ') st += 1
-      while (en > st && raw.charAt(en - 1) == ' ') en -= 1
-      val s = UTF8String.fromString(raw.substring(st, en)).toLowerCase.toString
-      val toks = s.split("\\s+", -1)
+      val toks = words(input)
       val stride = size - overlap
       val chunks = scala.collection.mutable.ArrayBuffer.empty[String]
       var i = 0
@@ -654,13 +639,7 @@ object text {
       StructType(Seq(StructField("bucket", IntegerType, nullable = false),
         StructField("c", LongType, nullable = false))), containsNull = false)
     override def nullSafeEval(input: Any): Any = {
-      val raw = input.asInstanceOf[UTF8String].toString
-      var st = 0
-      var en = raw.length
-      while (st < en && raw.charAt(st) == ' ') st += 1
-      while (en > st && raw.charAt(en - 1) == ' ') en -= 1
-      val s = UTF8String.fromString(raw.substring(st, en)).toLowerCase.toString
-      val toks = s.split("\\s+", -1)
+      val toks = words(input)
       val counts = new java.util.TreeMap[Integer, Long]
       def add(g: String): Unit = {
         val u = UTF8String.fromString(g)
@@ -804,13 +783,7 @@ object text {
       out ++= syms
     }
     override def nullSafeEval(input: Any): Any = {
-      val raw = input.asInstanceOf[UTF8String].toString
-      var st = 0
-      var en = raw.length
-      while (st < en && raw.charAt(st) == ' ') st += 1
-      while (en > st && raw.charAt(en - 1) == ' ') en -= 1
-      val s = UTF8String.fromString(raw.substring(st, en)).toLowerCase.toString
-      val toks = s.split("\\s+", -1)
+      val toks = words(input)
       val out = scala.collection.mutable.ArrayBuffer.empty[String]
       var i = 0
       while (i < toks.length) { encodeWord(toks(i), out); i += 1 }
@@ -1384,13 +1357,7 @@ object text {
         StructField(s"top_${n}gram_frac", DoubleType, nullable = false))) ++
       (5 to 10).map(n => StructField(s"dup_${n}gram_frac", DoubleType, nullable = false)))
     override def nullSafeEval(input: Any): Any = {
-      val raw = input.asInstanceOf[UTF8String].toString
-      var st = 0
-      var en = raw.length
-      while (st < en && raw.charAt(st) == ' ') st += 1
-      while (en > st && raw.charAt(en - 1) == ' ') en -= 1
-      val s = UTF8String.fromString(raw.substring(st, en)).toLowerCase.toString
-      val toks: Array[String] = s.split("\\s+", -1)
+      val toks = words(input)
       val nWords = toks.length
       // (count map, total gram chars) for one n — single pass over toks
       def gramCounts(n: Int): (java.util.HashMap[String, Long], Long) = {

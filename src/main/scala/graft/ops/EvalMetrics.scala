@@ -29,12 +29,11 @@ import org.apache.spark.sql.functions._
   * = one row's grams; guide §2.4 "remove shuffles outright") — with
   * ZERO exchange beyond the caller's pair frame. The round-10
   * distributed form (two-stage generator → ONE (pair, n, gram) hash
-  * shuffle with map-side partials → pair-sized pivot) survives as the
-  * `*Shuffled` law witnesses and as the documented fallback for corpora
-  * whose SINGLE rows are too large to clip in task memory — there, one
-  * pathological pair's grams spread over Σ-of-its-grams reducers
-  * instead of one task. No join of the two sides, no window, no driver
-  * state in either form.
+  * shuffle with map-side partials → pair-sized pivot) survives only as
+  * the `*Shuffled` law witnesses: test-only reference implementations
+  * that EvalMetricsSpec compares the kernels against. No code path
+  * selects them. No join of the two sides, no window, no driver state
+  * in either form.
   */
 object EvalMetrics {
 
@@ -145,12 +144,11 @@ object EvalMetrics {
     // needs a (pair, n, gram) exchange — one bounded hash-multiset pass
     // per row (O(4·len) hash ops, linear, memory = one row's grams)
     // computes the identical integer components with ZERO shuffle. The
-    // distributed form survives as [[bleuComponentsShuffled]] (the
-    // independent law witness in EvalMetricsSpec, and the shape to reach
-    // for if a corpus ever carries single rows too large to clip in
-    // task memory). Measured on the ns_bleu gate: 1.70 s → the TER/
-    // ROUGE-L zero-shuffle class; the gram exchange, its two-stage
-    // generator, and three downstream aggregates all disappear.
+    // distributed form survives as [[bleuComponentsShuffled]], the
+    // independent law witness in EvalMetricsSpec. Measured on the
+    // ns_bleu gate: 1.70 s → the TER/ROUGE-L zero-shuffle class; the gram
+    // exchange, its two-stage generator, and three downstream aggregates
+    // all disappear.
     val staged = pairs
       .select(col(pairIdCol).as("pair_id"),
         toks(col(candCol)).as("__ct"), toks(col(refCol)).as("__rt"))
@@ -171,11 +169,8 @@ object EvalMetrics {
 
   /** The distributed (pair, n, gram)-shuffle form [[bleuComponents]]
     * used through round 10 — identical output (the EvalMetricsSpec law
-    * pins kernel == shuffle column-for-column). Kept as the law witness
-    * and as the documented fallback for corpora whose SINGLE rows are
-    * too large for a row-local clip (one pathological pair's grams
-    * spread over Σ-of-its-grams reducers here; the kernel holds one
-    * row's gram multiset in task memory).
+    * pins kernel == shuffle column-for-column). Kept only as that test's
+    * reference implementation; no code path selects it.
     */
   private[graft] def bleuComponentsShuffled(pairs: DataFrame,
       pairIdCol: String, candCol: String, refCol: String): DataFrame = {
@@ -238,10 +233,9 @@ object EvalMetrics {
     * order never matters). The round-10 distributed form — gram-keyed
     * clip join + three aggregates + a separate BP-length reduce — paid
     * FOUR exchanges on amplified gram rows; this shape pays TWO on
-    * text-sized rows. It survives as [[bleuComponentsMultiRefShuffled]]
-    * (the EvalMetricsSpec law witness, and the fallback for single rows
-    * too large to clip in task memory). No window, no product, no
-    * driver state.
+    * text-sized rows. It survives as [[bleuComponentsMultiRefShuffled]],
+    * the EvalMetricsSpec law witness. No window, no product, no driver
+    * state.
     */
   def bleuComponentsMultiRef(cands: DataFrame, refs: DataFrame,
       pairIdCol: String, candCol: String, refOrdCol: String,
@@ -269,9 +263,8 @@ object EvalMetrics {
 
   /** The round-10 distributed form of [[bleuComponentsMultiRef]] —
     * identical output (the EvalMetricsSpec law pins kernel == shuffle
-    * column-for-column); kept as the law witness and the documented
-    * fallback for corpora whose single (pair, references) rows are too
-    * large for the row-local max-clip.
+    * column-for-column); kept only as that test's reference
+    * implementation.
     */
   private[graft] def bleuComponentsMultiRefShuffled(cands: DataFrame,
       refs: DataFrame, pairIdCol: String, candCol: String,
@@ -1693,8 +1686,7 @@ object EvalMetrics {
         col("__e.ref_total").as("ref_total"))
 
   /** The distributed form of [[rougeN]] (the round-10 shape) — identical
-    * output; kept as the EvalMetricsSpec law witness and the fallback
-    * for single rows too large to clip in task memory.
+    * output; kept only as the EvalMetricsSpec law witness.
     */
   private[graft] def rougeNShuffled(pairs: DataFrame, pairIdCol: String,
       candCol: String, refCol: String, maxN: Int = 2): DataFrame = {
@@ -1731,8 +1723,7 @@ object EvalMetrics {
   }
 
   /** The distributed form of [[chrF]] (the round-10 shape) — identical
-    * output; kept as the EvalMetricsSpec law witness and the fallback
-    * when maxChars must exceed what one task comfortably holds.
+    * output; kept only as the EvalMetricsSpec law witness.
     */
   private[graft] def chrFShuffled(pairs: DataFrame, pairIdCol: String,
       candCol: String, refCol: String, maxN: Int = 3,

@@ -10,6 +10,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
 import graft.compile.SpecCompiler
 import graft.compile.SpecCompiler.CompiledPipeline
 import graft.sinks.{KeyedTableSink, SinkCompiler, VoidSink}
+import graft.sources.{EventSim, KafkaSource}
 import graft.spec.{Houe, SpecValidationException, StreamSpec}
 
 import scala.jdk.CollectionConverters._
@@ -64,33 +65,16 @@ final class Notifier(bufferSize: Int = 64) {
   /** Notifications refused because the buffer was full. */
   val dropped = new AtomicLong(0)
   def notify(level: String, streamId: String, msg: String): Unit = {
-    // ERROR pays for a stack excerpt; other levels only walk the few
-    // frames needed to name the caller (notifications fire per batch/retry,
-    // so a full getStackTrace on every INFO/WARN would be wasted work)
-    val (origin, stack) =
-      if (level == "ERROR") {
-        val frames = Thread.currentThread().getStackTrace
-        val callerIdx = frames.indexWhere(f =>
-          !f.getClassName.startsWith("java.lang.Thread") &&
-            !f.getClassName.contains("Notifier"))
-        if (callerIdx < 0) ("", Nil)
-        else {
-          val f = frames(callerIdx)
-          (s"${f.getClassName}.${f.getMethodName}:${f.getLineNumber}",
-            frames.slice(callerIdx, callerIdx + 8).map(_.toString).toSeq)
-        }
-      } else {
-        val caller = java.lang.StackWalker.getInstance().walk { s =>
-          s.limit(8).filter(f => !f.getClassName.contains("Notifier"))
-            .findFirst()
-        }
-        val origin =
-          if (caller.isPresent) {
-            val f = caller.get
-            s"${f.getClassName}.${f.getMethodName}:${f.getLineNumber}"
-          } else ""
-        (origin, Nil)
-      }
+    // one lazy stack walk for every level: the caller's frame names the
+    // origin, and only ERROR keeps it and the next 7 as a stack excerpt
+    // (notifications fire per batch/retry, so INFO/WARN walk one frame)
+    val frames = java.lang.StackWalker.getInstance().walk { s =>
+      s.dropWhile(_.getClassName.contains("Notifier"))
+        .limit(if (level == "ERROR") 8 else 1).toList
+    }.asScala
+    val origin = frames.headOption
+      .fold("")(f => s"${f.getClassName}.${f.getMethodName}:${f.getLineNumber}")
+    val stack = if (level == "ERROR") frames.map(_.toStackTraceElement.toString).toSeq else Nil
     if (!queue.offer(NotificationEvent(level, streamId, msg,
         java.time.Instant.now(), origin, stack)))
       dropped.incrementAndGet()
@@ -125,35 +109,42 @@ final class Registry(spark: SparkSession, specTablePath: Option[String], env: St
     } catch { case _: org.apache.spark.sql.AnalysisException => }
   }
 
-  /** Validate + version-gate + persist + cache
-    * (registry.go:167-182 ExistsWithSameOrHigherVersion).
+  /** Gate → prepare → persist + cache (registry.go:167-182
+    * ExistsWithSameOrHigherVersion): a protected id or a same-or-lower
+    * version is rejected before `prepare` runs, and nothing is persisted
+    * unless it succeeds. One synchronized step, so two registrations of one
+    * id cannot both pass the gate.
     */
-  def register(specJson: String): Either[SpecValidationException, StreamSpec] = {
-    StreamSpec.parse(specJson).flatMap { spec =>
+  def register[A](spec: StreamSpec, specJson: String)(
+      prepare: StreamSpec => Either[SpecValidationException, A]): Either[SpecValidationException, A] =
+    synchronized {
       if (protectedIds.contains(spec.id))
         Left(SpecValidationException(s"stream id ${spec.id} is protected"))
-      else Option(specs.get(spec.id)) match {
-        case Some(existing) if existing.version >= spec.version =>
-          Left(SpecValidationException(
-            s"spec ${spec.id} with version ${spec.version} already exists with same or higher version"))
-        case _ =>
-          specTablePath.foreach { path =>
-            import spark.implicits._
-            Seq((spec.id, spec.version, specJson)).toDF("id", "version", "specJson")
-              .write.mode("append").parquet(path)
-          }
-          specs.put(spec.id, spec)
-          Right(spec)
+      else if (get(spec.id).exists(_.version >= spec.version))
+        Left(SpecValidationException(
+          s"spec ${spec.id} with version ${spec.version} already exists with same or higher version"))
+      else prepare(spec).map { prepared =>
+        specTablePath.foreach { path =>
+          import spark.implicits._
+          Seq((spec.id, spec.version, specJson)).toDF("id", "version", "specJson")
+            .write.mode("append").parquet(path)
+        }
+        specs.put(spec.id, spec)
+        prepared
       }
     }
-  }
 
   def get(id: String): Option[StreamSpec] = Option(specs.get(id))
   def all: Seq[StreamSpec] = specs.values.asScala.toSeq
   def isDisabled(spec: StreamSpec): Boolean = spec.isDisabledIn(env)
 }
 
-/** One deployed stream: compiled pipeline + sink + metrics. */
+/** One stream, built whole from a spec before it starts: compiled
+  * pipeline, resolved source config, sinks and metrics. Construction runs
+  * no Spark action and touches nothing outside the object, so everything a
+  * spec can get wrong in its sink or source config throws here, before a
+  * running version stops.
+  */
 final class Stream(
     val spec: StreamSpec,
     val pipeline: CompiledPipeline,
@@ -161,6 +152,16 @@ final class Stream(
     supervisor: Supervisor) {
 
   @volatile var query: Option[StreamingQuery] = None
+
+  // source config, parsed once: the eventsim generator spec and the Kafka
+  // topics/properties the query start reads
+  private[runtime] val sim: Option[EventSim.SimSpec] =
+    if (spec.source.sourceType != "eventsim") None
+    else Some(spec.source.config.customConfig.map(EventSim.fromNode).getOrElse(EventSim.SimSpec()))
+  private[runtime] val kafka: Option[KafkaSource.KafkaConfig] =
+    if (spec.source.sourceType != "kafka") None
+    else Some(KafkaSource.parseConfig(spec, supervisor.config.env))
+
   private[runtime] val voidSink = new VoidSink(spec.sink.config.properties)
   private[runtime] val tables = spec.sink.config.customConfig
     .map(SinkCompiler.parseTables).getOrElse(Nil)
@@ -168,17 +169,16 @@ final class Stream(
   // parquet directory (multi-table specs write differently-shaped rows);
   // each sink carries its table's G6 creation config (partitioning,
   // clustering, partition-filter requirement)
-  private def sinkOf(path: String, t: Option[SinkCompiler.TableSpec]): KeyedTableSink = {
-    val rowsPerFile = spec.sink.config.properties.get("rowsPerFile")
-      .map(_.toLong).getOrElse(1000000L)
-    t match {
-      case Some(ts) => new KeyedTableSink(path, ts.partitionField, ts.partitionType,
-        ts.clustering, ts.requirePartitionFilter, rowsPerFile)
-      case None => new KeyedTableSink(path, rowsPerFile = rowsPerFile)
-    }
-  }
   private[runtime] val keyedSinks: Map[String, KeyedTableSink] =
     supervisor.config.sinkRoot.map { root =>
+      val rowsPerFile = spec.sink.config.properties.get("rowsPerFile").map(v => v.toLongOption
+        .getOrElse(throw new IllegalArgumentException(s"rowsPerFile must be an integer (got $v)")))
+        .getOrElse(1000000L)
+      def sinkOf(path: String, t: Option[SinkCompiler.TableSpec]) = t match {
+        case Some(ts) => new KeyedTableSink(path, ts.partitionField, ts.partitionType,
+          ts.clustering, ts.requirePartitionFilter, rowsPerFile)
+        case None => new KeyedTableSink(path, rowsPerFile = rowsPerFile)
+      }
       if (tables.size > 1)
         tables.map(t => t.name -> sinkOf(s"$root/${spec.id}/${t.name}", Some(t))).toMap
       else Map("default" -> sinkOf(s"$root/${spec.id}", tables.headOption))
@@ -305,8 +305,8 @@ final class Stream(
         if (tables.nonEmpty) tables.map(tb => tb.name -> SinkCompiler.tableStage(tb)(branchDf))
         else Seq("default" -> branchDf)
       routed.foreach { case (tableName, out) =>
-        val sunk = loadWithRetry(out, tableName)
-        if (sunk._2.nonEmpty) resourceId = sunk._2
+        val rid = loadWithRetry(out, tableName)
+        if (rid.nonEmpty) resourceId = rid
       }
     }
 
@@ -333,12 +333,11 @@ final class Stream(
   /** Sink load with event-level retry + exponential backoff
     * (executor.go:282-329; defaults entity/spec.go:11-18). Unretryable
     * errors propagate immediately; retryable retry up to
-    * maxEventProcessingRetries.
+    * maxEventProcessingRetries. Returns the load's resource id, "" when
+    * nothing was loaded.
     */
-  private def loadWithRetry(out0: DataFrame, tableName: String): (Long, String) = {
+  private def loadWithRetry(out0: DataFrame, tableName: String): String = {
     val maxRetries = spec.ops.maxEventProcessingRetries
-    var attempt = 0
-    var backoffMs = supervisor.config.retryBackoffBaseMs
     // cache: write + stats must observe the SAME rows (current_timestamp
     // row keys would otherwise differ between the write and the stats scan)
     val out = out0.cache()
@@ -357,8 +356,7 @@ final class Stream(
     val keyed = keyedSinkFor(tableName).filter(_ => loader.isEmpty && out.columns.contains("key"))
     val probe = out.select(count(lit(1)) +: keyed.map(_ => min(col("key"))).toSeq: _*).collect()(0)
     val batchRows = probe.getLong(0)
-    if (batchRows == 0L) return (0L, "")
-    while (true) {
+    def load(attempt: Int, backoffMs: Long): String =
       try {
         val t0 = System.nanoTime()
         val rid = (loader, keyed) match {
@@ -376,18 +374,16 @@ final class Stream(
         // still accounts rows that did land in the sink
         metrics.eventsStoredInSink.addAndGet(batchRows)
         metrics.sinkProcessingTimeMicros.addAndGet((System.nanoTime() - t0) / 1000)
-        return (batchRows, rid)
+        rid
       } catch {
         case e: VoidSink#SimulatedError if e.retryable && attempt < maxRetries =>
-          attempt += 1
-          supervisor.notifier.notify("WARN", spec.id, s"retryable sink error, attempt $attempt: ${e.getMessage}")
+          supervisor.notifier.notify("WARN", spec.id, s"retryable sink error, attempt ${attempt + 1}: ${e.getMessage}")
           Thread.sleep(backoffMs)
-          backoffMs *= 2
+          load(attempt + 1, backoffMs * 2)
         case e: VoidSink#SimulatedError if e.retryable =>
           throw new RetryableStreamException(s"retries exhausted after $attempt attempts", e)
       }
-    }
-    (0L, "")
+    if (batchRows == 0L) "" else load(0, supervisor.config.retryBackoffBaseMs)
     } finally out.unpersist()
   }
 }
@@ -513,71 +509,53 @@ final class Supervisor(val spark: SparkSession, val config: RuntimeConfig) {
 
   /** Register (or upgrade) a stream spec and (re)deploy it — the
     * RegisterStream + handleStreamRegistryModified flow
-    * (geist.go:83-108, supervisor.go:220-250): parse → [[prepare]] →
-    * persist → [[replace]]. A spec that parses but cannot compile (e.g.
-    * unsupported gjson path syntax) or whose source config is invalid is
-    * rejected without persisting it or killing the healthy deployment.
+    * (geist.go:83-108, supervisor.go:220-250): parse → version gate →
+    * [[prepare]] → persist → [[replace]]. A spec that parses but cannot
+    * compile (e.g. unsupported gjson path syntax) or whose sink or source
+    * config is invalid is rejected without persisting it or killing the
+    * healthy deployment.
     */
   def registerStream(specJson: String): Either[SpecValidationException, String] =
-    StreamSpec.parse(specJson).flatMap(prepare).flatMap { case (spec, pipeline) =>
-      registry.register(specJson).flatMap { _ =>
-        if (registry.isDisabled(spec)) {
-          deployLock.synchronized { Option(streams.get(spec.id)).foreach(shutdownStream) }
-          notifier.notify("INFO", spec.id, "stream registered disabled; not deployed")
-          Right(spec.id)
-        } else
-          try { replace(spec, pipeline); Right(spec.id) }
-          catch { case e: Exception =>
-            // environmental deploy failure: surface via the contract (the
-            // spec is persisted; a later sync deploys it once fixed)
-            notifier.notify("ERROR", spec.id, s"deploy failed: ${e.getMessage}")
-            Left(SpecValidationException(s"spec ${spec.id} failed to deploy: ${e.getMessage}"))
-          }
-      }
+    StreamSpec.parse(specJson).flatMap(registry.register(_, specJson)(prepare)).flatMap { st =>
+      val id = st.spec.id
+      if (registry.isDisabled(st.spec)) {
+        deployLock.synchronized { Option(streams.get(id)).foreach(shutdownStream) }
+        notifier.notify("INFO", id, "stream registered disabled; not deployed")
+        Right(id)
+      } else
+        try { replace(st); Right(id) }
+        catch { case e: Exception =>
+          // environmental deploy failure: surface via the contract (the
+          // spec is persisted; a later sync deploys it once fixed)
+          notifier.notify("ERROR", id, s"deploy failed: ${e.getMessage}")
+          Left(SpecValidationException(s"spec $id failed to deploy: ${e.getMessage}"))
+        }
     }
 
   /** Everything that can reject a spec before anything is persisted or a
     * running version stops: resolve the env's ops (registry.go:88-106
     * adjustOpsConfig — opsPerEnv overrides replace the base ops
-    * wholesale), compile once, and dry-run the source config.
+    * wholesale), compile once, and build the unstarted [[Stream]], which
+    * resolves the sink and source config.
     */
-  private def prepare(spec: StreamSpec): Either[SpecValidationException, (StreamSpec, CompiledPipeline)] = {
+  private def prepare(spec: StreamSpec): Either[SpecValidationException, Stream] = {
     val resolved = spec.copy(ops = spec.opsFor(config.env))
     def check[A](what: String)(f: => A): Either[SpecValidationException, A] =
       try Right(f)
       catch { case e: Exception => Left(SpecValidationException(s"spec ${spec.id} $what: ${e.getMessage}")) }
-    for {
-      pipeline <- check("failed to compile")(SpecCompiler.compile(resolved))
-      _ <- check("source config invalid")(validateSource(resolved))
-    } yield (resolved, pipeline)
+    check("failed to compile")(SpecCompiler.compile(resolved)).flatMap(pipeline =>
+      check("sink or source config invalid")(new Stream(resolved, pipeline, metrics(spec.id), this)))
   }
 
-  /** Hot-swap (I7): stop whatever runs under the spec's id and start the
-    * prepared pipeline as a new Stream. A Stream whose start throws is
-    * removed again, so it never reports as deployed and a later sync
-    * retries it.
+  /** Hot-swap (I7): stop whatever runs under the prepared Stream's id and
+    * start it. A Stream whose start throws is removed again, so it never
+    * reports as deployed and a later sync retries it.
     */
-  private def replace(spec: StreamSpec, pipeline: CompiledPipeline): Unit = deployLock.synchronized {
-    Option(streams.get(spec.id)).foreach(shutdownStream)
-    val st = new Stream(spec, pipeline, metrics(spec.id), this)
-    streams.put(spec.id, st)
+  private def replace(st: Stream): Unit = deployLock.synchronized {
+    Option(streams.get(st.spec.id)).foreach(shutdownStream)
+    streams.put(st.spec.id, st)
     try startStreamingQuery(st)
     catch { case e: Exception => shutdownStream(st); throw e }
-  }
-
-  /** Dry-run the source configuration (no query started, nothing stopped). */
-  private def validateSource(spec: StreamSpec): Unit = spec.source.sourceType match {
-    case "eventsim" =>
-      val sim = spec.source.config.customConfig
-        .map(graft.sources.EventSim.fromNode).getOrElse(graft.sources.EventSim.SimSpec())
-      if (sim.eventGeneration.genType == "sinusoid") {
-        require(sim.eventGeneration.periodSeconds > 0, "sinusoid requires positive periodSeconds")
-        if (sim.eventGeneration.peakTime.nonEmpty)
-          java.time.Instant.parse(sim.eventGeneration.peakTime) // throws on bad format
-      }
-    case "kafka" =>
-      graft.sources.KafkaSource.parseConfig(spec, config.env)
-    case _ =>
   }
 
   /** Bootstrap persisted specs and deploy the enabled ones — the restart
@@ -609,10 +587,10 @@ final class Supervisor(val spark: SparkSession, val config: RuntimeConfig) {
           // as in registerStream, the running version stops only once the
           // new one is prepared — a spec that deploys on the driver that
           // persisted it can still fail environmentally here
-          val (resolved, pipeline) = prepare(spec).fold(e => throw e, identity)
+          val st = prepare(spec).fold(e => throw e, identity)
           if (running.isDefined)
             notifier.notify("INFO", spec.id, s"sync: hot-swapping to version ${spec.version}")
-          replace(resolved, pipeline)
+          replace(st)
         }
       }
       catch { case e: Exception =>
@@ -723,31 +701,30 @@ final class Supervisor(val spark: SparkSession, val config: RuntimeConfig) {
         return
       case None =>
     }
-    spec.source.sourceType match {
-      case "eventsim" =>
-        val sim = spec.source.config.customConfig
-          .map(graft.sources.EventSim.fromNode).getOrElse(graft.sources.EventSim.SimSpec())
-        val src = graft.sources.EventSim.stream(spark, sim, seed = 42L)
+    // the source config was resolved when the Stream was built
+    (st.sim, st.kafka, config.kafkaBootstrapServers) match {
+      case (Some(sim), _, _) =>
+        val src = EventSim.stream(spark, sim, seed = 42L)
         // the sim resolution IS the trigger cadence (eventsim.go StreamExtract loop)
         startQuery(src, Some(org.apache.spark.sql.streaming.Trigger
           .ProcessingTime(sim.simResolutionMilliseconds)))
         notifier.notify("INFO", spec.id, "eventsim stream started")
-      case "geistapi" =>
-        // interactive push source: events arrive via publish()
-        notifier.notify("INFO", spec.id, "geistapi stream ready for publish")
-      case "kafka" if config.kafkaBootstrapServers.nonEmpty =>
-        val src = graft.sources.KafkaSource.stream(spark, spec, config.env,
-          config.kafkaBootstrapServers.get)
+      case (_, Some(kafka), Some(servers)) =>
+        val src = KafkaSource.stream(spark, spec.ops, kafka, servers)
         // I5 micro-batch shaping: timeout threshold → trigger interval
         val trigger = if (spec.ops.microBatch)
           Some(org.apache.spark.sql.streaming.Trigger.ProcessingTime(spec.ops.microBatchTimeoutMs))
         else None
         startQuery(src, trigger)
         notifier.notify("INFO", spec.id, "kafka stream started")
-      case other =>
+      case _ if spec.source.sourceType == "geistapi" =>
+        // interactive push source: events arrive via publish()
+        notifier.notify("INFO", spec.id, "geistapi stream ready for publish")
+      case _ =>
         // kafka-without-brokers/pubsub etc. need external infrastructure;
         // registered but not auto-started in this environment.
-        notifier.notify("INFO", spec.id, s"source type '$other' registered; start requires external source")
+        notifier.notify("INFO", spec.id,
+          s"source type '${spec.source.sourceType}' registered; start requires external source")
     }
   }
 

@@ -79,7 +79,9 @@ object EventSim {
 
   private val mapper = new ObjectMapper()
 
-  /** Parse the `source.config.customConfig` eventsim block. */
+  /** Parse the `source.config.customConfig` eventsim block; a sinusoid
+    * without a positive period or with an unparseable peakTime throws.
+    */
   def parseSpec(json: String): SimSpec = fromNode(mapper.readTree(json))
 
   def fromNode(n: JsonNode): SimSpec = {
@@ -130,6 +132,11 @@ object EventSim {
           fields = parseFields(o.get("fields")))
       }.toSeq).getOrElse(Nil)
     )
+    val eg = sim.eventGeneration
+    if (eg.genType == "sinusoid") {
+      require(eg.periodSeconds > 0, "sinusoid requires positive periodSeconds")
+      if (eg.peakTime.nonEmpty) java.time.Instant.parse(eg.peakTime) // throws on bad format
+    }
     sim
   }
 

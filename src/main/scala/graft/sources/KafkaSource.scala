@@ -4,7 +4,7 @@ import com.fasterxml.jackson.databind.JsonNode
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.spec.StreamSpec
+import graft.spec.{Ops, StreamSpec}
 
 import scala.jdk.CollectionConverters._
 
@@ -53,15 +53,16 @@ object KafkaSource {
     KafkaConfig(topics, options)
   }
 
-  /** Streaming frame in the engine event shape (value/ts/key). */
-  def stream(spark: SparkSession, spec: StreamSpec, env: String, bootstrapServers: String): DataFrame = {
-    val cfg = parseConfig(spec, env)
+  /** Streaming frame in the engine event shape (value/ts/key), read with a
+    * config [[parseConfig]] resolved.
+    */
+  def stream(spark: SparkSession, ops: Ops, cfg: KafkaConfig, bootstrapServers: String): DataFrame = {
     var reader = spark.readStream.format("kafka")
       .option("kafka.bootstrap.servers", bootstrapServers)
       .option("subscribe", cfg.topics.mkString(","))
       .option("failOnDataLoss", "false")
-    if (spec.ops.microBatch)
-      reader = reader.option("maxOffsetsPerTrigger", spec.ops.microBatchSize.toString)
+    if (ops.microBatch)
+      reader = reader.option("maxOffsetsPerTrigger", ops.microBatchSize.toString)
     cfg.options.foreach { case (k, v) => reader = reader.option(k, v) }
     reader.load().select(
       col("value").cast("string").as("value"),

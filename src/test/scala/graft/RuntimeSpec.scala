@@ -57,6 +57,13 @@ class RuntimeSpec extends AnyFunSuite {
     val g = new Geist(spark, RuntimeConfig(retryBackoffBaseMs = 1))
     assert(g.registerStream(apiSpec("rt", "vgate", 2)).isRight)
     assert(g.registerStream(apiSpec("rt", "vgate", 2)).isLeft, "same version rejected")
+    // the version gate runs before the compile: a same-version spec that
+    // would not compile gets the version rejection, not a compile error
+    val uncompilable = apiSpec("rt", "vgate", 2)
+      .replace("\"jsonPath\": \"cust.id\"", "\"jsonPath\": \"cust.#(id).x\"")
+    val gated = g.registerStream(uncompilable)
+    assert(gated.left.exists(_.msg.contains("already exists with same or higher version")),
+      s"same version must be rejected by the gate, got $gated")
     assert(g.registerStream(apiSpec("rt", "vgate", 1)).isLeft, "lower version rejected")
     assert(g.registerStream(apiSpec("rt", "vgate", 3)).isRight, "upgrade accepted")
     assert(g.getStreamSpec("rt-vgate").get.version == 3)
@@ -217,6 +224,31 @@ class RuntimeSpec extends AnyFunSuite {
     assert(g.deployedIds.contains("rt-guard"), "running v1 stream must survive")
     assert(g.getStreamSpec("rt-guard").get.version == 1, "poisoned spec must not be persisted")
     g.shutdown()
+
+    // a sink config the Stream cannot be built from is a validation error
+    // too: rejected before anything is persisted or the running v1 stops
+    val specTable = tmpDir() + "/specs"
+    val cfg = RuntimeConfig(specTablePath = Some(specTable), sinkRoot = Some(tmpDir()),
+      retryBackoffBaseMs = 1)
+    val a = new Geist(spark, cfg)
+    assert(a.registerStream(apiSpec("rt", "sinkguard", 1)).isRight)
+    for (rows <- Seq("abc", "0")) {
+      val badSink = s"""{"type": "void", "config": {"properties": [
+        |  {"key": "rowsPerFile", "value": "$rows"}]}}""".stripMargin
+      val bad = a.registerStream(apiSpec("rt", "sinkguard", 2, sink = badSink))
+      assert(bad.left.exists(_.msg.contains("config invalid")),
+        s"rowsPerFile=$rows must be rejected as invalid config, got $bad")
+      assert(a.deployedIds.contains("rt-sinkguard"), s"v1 must survive rowsPerFile=$rows")
+      assert(a.getStreamSpec("rt-sinkguard").get.version == 1, s"rowsPerFile=$rows must not be persisted")
+      a.publish("rt-sinkguard", """{"name": "n1", "cust": {"id": "c1"}}""")
+    }
+    assert(a.metrics("rt-sinkguard")("EventsStoredInSink") == 2, "v1 still publishes")
+    val b = new Geist(spark, cfg)
+    b.bootstrap()
+    assert(b.getStreamSpec("rt-sinkguard").exists(_.version == 1))
+    assert(b.deployedIds.contains("rt-sinkguard"))
+    assert(!b.notifications().exists(_.level == "ERROR"), "bootstrap must find nothing to fail on")
+    a.shutdown(); b.shutdown()
   }
 
   test("opsPerEnv overrides resolve at deployment (houe per env)") {
