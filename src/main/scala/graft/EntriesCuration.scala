@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.compile.SpecCompiler
 import graft.spec.StreamSpec
+import graft.functions.text.wordsOf
 
 /** Curation tier: quality filtering, decontamination, tokenization, dialogs, mix construction, privacy.
   *
@@ -60,7 +61,7 @@ private[graft] object EntriesCuration {
       graft.ops.EvalMetrics.selfBleu(
         t(s, dir, "documents").select(col("doc_id"),
           concat_ws(" ",
-            slice(split(lower(trim(col("text"))), "\\s+"), 1, 40)).as("text")),
+            slice(wordsOf(col("text")), 1, 40)).as("text")),
         "text", "doc_id", peers = 2, seed = "graft-selfbleu")),
     "ns_ter" -> ((s, dir) =>
       // TER-lite: token-level edit distance over the shared eval-pair
@@ -373,7 +374,7 @@ private[graft] object EntriesCuration {
         graft.ops.EvalMetrics.selfBleu(
           t(s, dir, "documents").select(col("doc_id"),
             concat_ws(" ",
-              slice(split(lower(trim(col("text"))), "\\s+"), 1, 40)).as("text")),
+              slice(wordsOf(col("text")), 1, 40)).as("text")),
           "text", "doc_id", peers = 2, seed = "graft-selfbleu"))),
     "ns_bradley_terry" -> ((s, dir) =>
       // global leaderboard strength over the same judgment stream the

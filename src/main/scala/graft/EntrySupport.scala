@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.compile.SpecCompiler
 import graft.spec.StreamSpec
+import graft.functions.text.wordsOf
 
 /** Shared plumbing for the Entries* tier files: table loaders, the JSON
   * event-stream synthesizer, spec templates, and reusable oracle-SQL
@@ -714,13 +715,13 @@ private[graft] object EntrySupport {
     // touching what the gates prove; ScaleProbe measures the ops on
     // FULL-LENGTH texts
     def tr(c: Column): Column =
-      concat_ws(" ", slice(split(lower(trim(c)), "\\s+"), 1, 60))
+      concat_ws(" ", slice(wordsOf(c), 1, 60))
     val a = docs.select(col("doc_id"), tr(col("text")).as("text"))
     val b = docs.select((col("doc_id") - 1L).as("doc_id"),
       tr(col("text")).as("__next"))
     a.join(b, "doc_id").select(col("doc_id").as("pair_id"),
       when(col("doc_id") % 2 === 0,
-        concat_ws(" ", slice(split(lower(trim(col("text"))), "\\s+"), 1, 40)))
+        concat_ws(" ", slice(wordsOf(col("text")), 1, 40)))
         .otherwise(col("text")).as("cand"),
       when(col("doc_id") % 2 === 0, col("text")).otherwise(col("__next")).as("ref"))
       // gate-scale parallelism: the one-file toy scan is ONE partition,
@@ -748,7 +749,7 @@ private[graft] object EntrySupport {
       dir: String): (DataFrame, DataFrame) = {
     val docs = t(s, dir, "documents")
     def tr(c: Column, k: Int): Column =
-      concat_ws(" ", slice(split(lower(trim(c)), "\\s+"), 1, k))
+      concat_ws(" ", slice(wordsOf(c), 1, k))
     val a = docs.select(col("doc_id"), col("text"))
     val b = docs.select((col("doc_id") - 1L).as("doc_id"),
       col("text").as("__next"))

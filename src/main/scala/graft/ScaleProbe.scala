@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.functions.text.wordsOf
 
 /** One-off scale spot-runs above the contract data size (round-6/7
   * verdict items): operators whose 100 TB claims are design-verified and
@@ -65,7 +66,7 @@ object ScaleProbe {
     // stay salt-local except one boundary pair per copy)
     def multiRefOf(df: DataFrame): (DataFrame, DataFrame) = {
       def tr(c: Column, k: Int): Column =
-        concat_ws(" ", slice(split(lower(trim(c)), "\\s+"), 1, k))
+        concat_ws(" ", slice(wordsOf(c), 1, k))
       val a = df.select(col("doc_id"), col("text"))
       val b = df.select((col("doc_id") - 1L).as("doc_id"),
         col("text").as("__next"))
@@ -222,7 +223,7 @@ object ScaleProbe {
     def refDocsAt(m: Int) = d0.crossJoin(salts(m))
       .select((col("doc_id") + col("salt") * off).as("doc_id"),
         when(col("salt") === 0, col("text")).otherwise(
-          concat_ws(" ", transform(split(lower(trim(col("text"))), "\\s+"),
+          concat_ws(" ", transform(wordsOf(col("text")),
             t => concat(col("salt").cast("string"), lit("_"), t))))
           .as("text"))
     for (m <- Seq(1, staticM)) {

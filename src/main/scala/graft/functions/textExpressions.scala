@@ -4,6 +4,7 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.functions.{lower, split, trim}
 import org.apache.spark.sql.graft.{bridge => ExpressionUtils}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -65,6 +66,11 @@ object text {
     while (en > st && raw.charAt(en - 1) == ' ') en -= 1
     UTF8String.fromString(raw.substring(st, en)).toLowerCase.toString.split("\\s+", -1)
   }
+
+  /** [[words]] as a Column, for the operators that tokenize in Spark SQL
+    * rather than inside a kernel — the same split, so the two cannot drift.
+    */
+  def wordsOf(text: Column): Column = split(lower(trim(text)), "\\s+")
 
   /** xxhash64-style avalanche of a byte sequence — reuses Spark's own
     * XXH64 so results are consistent with functions.xxhash64.
@@ -640,7 +646,7 @@ object text {
         StructField("c", LongType, nullable = false))), containsNull = false)
     override def nullSafeEval(input: Any): Any = {
       val toks = words(input)
-      val counts = new java.util.TreeMap[Integer, Long]
+      val counts = new java.util.TreeMap[Integer, java.lang.Long]
       def add(g: String): Unit = {
         val u = UTF8String.fromString(g)
         val h = if (portable) PortableHash.h31(u) else hashUtf8(u, 42L) & Long.MaxValue
@@ -1413,7 +1419,7 @@ object text {
         o += 1
         n += 1
       }
-      org.apache.spark.sql.catalyst.InternalRow(out: _*)
+      new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(out)
     }
     override protected def withNewChildInternal(newChild: Expression): Expression = copy(child = newChild)
   }

@@ -1313,7 +1313,7 @@ object Curation {
         lit(accuracy)).as(thrName))
     df.join(broadcast(thresholds), groupCols)
       .where(col(scoreCol) >= col(thrName))
-      .select(df.columns.map(col): _*) // the join key-first reorder is an artifact
+      .select(df.columns.toSeq.map(col): _*) // the join key-first reorder is an artifact
   }
 
   /** Quantile alignment: map every row's score onto a REFERENCE corpus's

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.functions.text.wordsOf
 
 /** Large-scale deduplication operators for training-data pipelines.
   *
@@ -58,7 +59,7 @@ object Dedup {
     * Pure codegen'd HOFs — no UDF, no extra parse.
     */
   def shingles(textCol: Column, n: Int): Column = {
-    val tokens = split(lower(trim(textCol)), "\\s+")
+    val tokens = wordsOf(textCol)
     when(size(tokens) < n, array(concat_ws(" ", tokens)))
       .otherwise(
         transform(
@@ -72,7 +73,7 @@ object Dedup {
     */
   def minhashSigAndBuckets(textCol: Column, shingleLen: Int, numHashes: Int, bands: Int,
       portable: Boolean = false): Column =
-    graft.functions.text.minhash(split(lower(trim(textCol)), "\\s+"), shingleLen, numHashes, bands, portable)
+    graft.functions.text.minhash(wordsOf(textCol), shingleLen, numHashes, bands, portable)
 
   /** Skew guard shared by the banded-LSH candidate generators: keep only
     * (band, bucket) groups of size ≤ maxBucket (a bucket of size m yields
@@ -795,7 +796,7 @@ object Dedup {
     */
   def simhash(df: DataFrame, textCol: String, idCol: String, portable: Boolean = false): DataFrame =
     df.select(col(idCol).as("id"),
-      graft.functions.text.simhash64(split(lower(trim(col(textCol))), "\\s+"), portable).as("simhash"))
+      graft.functions.text.simhash64(wordsOf(col(textCol)), portable).as("simhash"))
 
   /** Embedding-cosine near-duplicate pairs: hyperplane-LSH bucket join
     * (any of `tables` tables) followed by exact cosine ≥ threshold —

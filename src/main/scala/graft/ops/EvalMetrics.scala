@@ -67,9 +67,10 @@ object EvalMetrics {
     * a candidate repeating a reference word 50 times scores it once per
     * reference occurrence, never 50. EVERY (pair, n) appears, including
     * all-zero rows for gram-free pairs (the explode_outer coverage
-    * contract [[bleuComponents]] relies on — see sideCounts); [[rougeN]]
-    * and [[chrF]] filter the zero rows back out. The building block both
-    * pivot from.
+    * contract — see sideCounts). The building block of the test-only
+    * reference forms: [[bleuComponentsShuffled]] pivots it wide and
+    * [[rougeNShuffled]] filters the zero rows back out. No production
+    * path calls it.
     */
   def ngramOverlap(pairs: DataFrame, pairIdCol: String, candCol: String,
       refCol: String, maxN: Int): DataFrame = {
@@ -523,13 +524,14 @@ object EvalMetrics {
       .drop("__ct", "__rt", "__bc")
   }
 
-  /** [[corpusBleu]] generalized to a grouping (empty = the global one-row
-    * reduce; the streaming twin pools per window column) — one shared
+  /** [[corpusBleu]] generalized to group keys (empty = the global one-row
+    * reduce; the streaming twin passes its window column) — one shared
     * aggregate list + the staged isqrt tail, so the batch and windowed
-    * corpus numbers cannot drift.
+    * corpus numbers cannot drift. Output: the keys, then corpusBleu's
+    * columns.
     */
   private[graft] def corpusBleuOver(components: DataFrame,
-      keyCols: Seq[String]): DataFrame = {
+      keys: Seq[Column]): DataFrame = {
     val aggs = Seq(
       count(lit(1)).as("n_pairs"),
       coalesce(sum(col("cand_len")), lit(0L)).as("cand_tokens"),
@@ -537,13 +539,9 @@ object EvalMetrics {
       (1 to 4).flatMap(n => Seq(
         coalesce(sum(col(s"matches_$n")), lit(0L)).as(s"matches_$n"),
         coalesce(sum(col(s"total_$n")), lit(0L)).as(s"total_$n")))
-    val grouped =
-      if (keyCols.isEmpty) components.agg(aggs.head, aggs.tail: _*)
-      else components.groupBy(keyCols.map(col): _*).agg(aggs.head, aggs.tail: _*)
-    stagedGeo(grouped).select(keyCols.map(col) ++
-      (col("n_pairs") +: col("cand_tokens") +: col("ref_tokens") +:
-        (1 to 4).flatMap(n => Seq(col(s"matches_$n"), col(s"total_$n")))) :+
-      col("__geo").as("precision_geo_permille"): _*)
+    stagedGeo(components.groupBy(keys: _*).agg(aggs.head, aggs.tail: _*))
+      .withColumnRenamed("__geo", "precision_geo_permille")
+      .drop("__prod", "__sq1")
   }
 
   /** Corpus-level BLEU over a [[bleuComponents]] output frame — the
@@ -810,20 +808,28 @@ object EvalMetrics {
     * bleuComponents already ends in an aggregate.
     */
   private def integralSide(df: DataFrame, pairIdCol: String,
-      metricCol: String, p: String): DataFrame = {
-    val m = col(metricCol)
-    val md = m.cast("double")
+      metricCol: String, p: String): DataFrame =
     df.select(
       col(pairIdCol).as("pair_id"),
-      when(m.isNull, lit(null).cast("long"))
-        .when(md === floor(md) && abs(md) <= 1.0e12, m.cast("long"))
-        .otherwise(raise_error(concat(
-          lit("paired metric test: metric must be integral inside " +
-            "[-1e12, 1e12] (grid fractional metrics first); got "),
-          m.cast("string"), lit(" for pair "),
-          col(pairIdCol).cast("string")))).as(s"__$p"))
+      integralMetric(col(metricCol), concat(
+        lit("paired metric test: metric for pair "),
+        col(pairIdCol).cast("string"))).as(s"__$p"))
       .groupBy(col("pair_id"))
       .agg(max(col(s"__$p")).as(s"__$p"))
+
+  /** The integral-metric guard of [[integralSide]] and the streaming
+    * paired-delta twin: `m` as a long when its value is an integer inside
+    * [-1e12, 1e12], NULL when it is NULL, and otherwise a raised error
+    * led by `what` (a fractional metric must never truncate silently).
+    */
+  private[graft] def integralMetric(m: Column, what: Column): Column = {
+    val md = m.cast("double")
+    when(m.isNull, lit(null).cast("long"))
+      .when(md === floor(md) && abs(md) <= 1.0e12, m.cast("long"))
+      .otherwise(raise_error(concat(what,
+        lit(" must be integral inside [-1e12, 1e12] (grid fractional " +
+          "metrics first); got "),
+        m.cast("string"))))
   }
 
   /** Approximate-randomization significance test (Riezler & Maxwell
@@ -999,25 +1005,30 @@ object EvalMetrics {
     * row per (problem, k in `ks`).
     */
   def passAtK(df: DataFrame, problemCol: String, passedCol: String,
-      ks: Seq[Int]): DataFrame = {
+      ks: Seq[Int]): DataFrame =
+    passAtKOver(df, Seq(col(problemCol).as("problem")), passedCol, ks)
+
+  /** [[passAtK]] generalized to group keys (the streaming twin adds its
+    * window column) — the `ks` guard, the (n, c) aggregate, the k explode
+    * and the compounded-floor fold, once. Output: the keys, then
+    * (n_samples, n_passed, k, pass_at_k_micro).
+    */
+  private[graft] def passAtKOver(df: DataFrame, keys: Seq[Column],
+      passedCol: String, ks: Seq[Int]): DataFrame = {
     require(ks.nonEmpty && ks.forall(k => k >= 1 && k <= 64),
       "ks must be non-empty with each k in [1, 64]")
     require(ks == ks.distinct, "ks must be distinct")
-    val per = df.groupBy(col(problemCol).as("problem"))
+    df.groupBy(keys: _*)
       .agg(count(lit(1)).as("n_samples"),
         sum(when(col(passedCol).cast("boolean"), 1L).otherwise(0L))
           .as("n_passed"))
-    per
-      .select(col("problem"), col("n_samples"), col("n_passed"),
-        explode(array(ks.map(k => lit(k.toLong)): _*)).as("k"))
-      .withColumn("__m",
+      .withColumn("k", explode(array(ks.map(k => lit(k.toLong)): _*)))
+      .withColumn("pass_at_k_micro", lit(1000000L) -
         when(col("k") <= col("n_samples"),
           aggregate(sequence(lit(0L), col("k") - 1L), lit(1000000L),
             (acc, i) => call_function("div",
               acc * (col("n_samples") - col("n_passed") - i),
               col("n_samples") - i))))
-      .select(col("problem"), col("n_samples"), col("n_passed"), col("k"),
-        (lit(1000000L) - col("__m")).as("pass_at_k_micro"))
   }
 
   /** G-Pass@k_τ per problem (Liu et al. 2024's stable-reasoning

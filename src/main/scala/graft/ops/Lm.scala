@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.functions.text.wordsOf
 
 /** Distributed n-gram language-model quality scoring — the CCNet signal
   * (Wenzek et al. 2019, "CCNet: Extracting high quality monolingual
@@ -48,15 +49,13 @@ object Lm {
       totalTokens: Long,
       vocabSize: Long)
 
-  private def toks(text: Column): Column = split(lower(trim(text)), "\\s+")
-
   /** Train a bigram stupid-backoff LM on `corpus(textCol)`. Tokenization is
     * the engine-wide whitespace convention (lower, trim, split on \s+).
     * Two shuffles (unigram and bigram groupBy, both map-side combined) and
     * one tiny action for the scalar totals.
     */
   def train(corpus: DataFrame, textCol: String): LmModel = {
-    val tk = corpus.select(toks(col(textCol)).as("toks"))
+    val tk = corpus.select(wordsOf(col(textCol)).as("toks"))
     val uni = tk.select(explode(col("toks")).as("tok"))
       .groupBy("tok").agg(count(lit(1)).as("c"))
     val big = tk
@@ -86,7 +85,7 @@ object Lm {
       alpha: Double = 0.4): DataFrame = {
     require(alpha > 0 && alpha <= 1, "backoff alpha must be in (0, 1]")
     val pt = docs
-      .select(col(idCol), toks(col(textCol)).as("toks"))
+      .select(col(idCol), wordsOf(col(textCol)).as("toks"))
       .select(col(idCol), col("toks"),
         posexplode(col("toks")).as(Seq("pos", "tok")))
       .select(col(idCol), col("pos"), col("tok"),

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.functions.text.wordsOf
 
 /** Corpus profiling: the per-group statistics a curation run consults before
   * choosing thresholds (how many docs / tokens per language, vocabulary
@@ -30,8 +31,6 @@ import org.apache.spark.sql.functions._
   */
 object Profile {
 
-  private def toks(text: Column): Column = split(lower(trim(text)), "\\s+")
-
   /** Shared by both tiers so exact and sketch fail identically on bad
     * input: quantiles in (0, 1] and no two rounding to the same column name.
     */
@@ -56,7 +55,7 @@ object Profile {
   def groupProfile(docs: DataFrame, textCol: String, groupCol: String,
       quantiles: Seq[Double] = Seq(0.5, 0.9)): DataFrame = {
     val qNames = quantileNames(quantiles)
-    val perDoc = docs.select(col(groupCol).as("__g"), toks(col(textCol)).as("__t"))
+    val perDoc = docs.select(col(groupCol).as("__g"), wordsOf(col(textCol)).as("__t"))
       .select(col("__g"), col("__t"), size(col("__t")).cast("long").as("__n"))
 
     val base = perDoc.groupBy("__g").agg(
@@ -130,7 +129,7 @@ object Profile {
       quantiles: Seq[Double] = Seq(0.5, 0.9), rsd: Double = 0.05,
       accuracy: Int = 10000): DataFrame = {
     val qNames = quantileNames(quantiles)
-    val perDoc = docs.select(col(groupCol).as("__g"), toks(col(textCol)).as("__t"))
+    val perDoc = docs.select(col(groupCol).as("__g"), wordsOf(col(textCol)).as("__t"))
       .select(col("__g"), col("__t"), size(col("__t")).cast("long").as("__n"))
 
     val distinctSketch = perDoc
@@ -204,7 +203,7 @@ object Profile {
     */
   def lengthHistogram(docs: DataFrame, textCol: String, groupCol: String): DataFrame =
     docs.select(col(groupCol),
-        size(toks(col(textCol))).cast("long").as("__n"))
+        size(wordsOf(col(textCol))).cast("long").as("__n"))
       .withColumn("bucket", (length(bin(col("__n"))) - 1).cast("int"))
       .groupBy(col(groupCol), col("bucket"))
       .agg(count(lit(1)).as("n_docs"),
@@ -230,10 +229,10 @@ object Profile {
       idCol: String, k: Int): DataFrame = {
     require(k > 0, "k must be positive")
     val tf = docs
-      .select(col(groupCol).as("__g"), explode(toks(col(textCol))).as("tok"))
+      .select(col(groupCol).as("__g"), explode(wordsOf(col(textCol))).as("tok"))
       .groupBy("__g", "tok").agg(count(lit(1)).as("tf"))
     val dfreq = docs
-      .select(col(idCol).as("__id"), explode(array_distinct(toks(col(textCol)))).as("tok"))
+      .select(col(idCol).as("__id"), explode(array_distinct(wordsOf(col(textCol)))).as("tok"))
       .distinct()
       .groupBy("tok").agg(count(lit(1)).as("df"))
     tf.join(dfreq, "tok")
@@ -269,7 +268,7 @@ object Profile {
   def tokenDrift(a: DataFrame, b: DataFrame, textCol: String, k: Int): DataFrame = {
     require(k > 0, "k must be positive")
     def counts(df: DataFrame, cntName: String) =
-      df.select(explode(toks(col(textCol))).as("tok"))
+      df.select(explode(wordsOf(col(textCol))).as("tok"))
         .groupBy("tok").agg(count(lit(1)).as(cntName))
     val ca = counts(a, "cnt_a")
     val cb = counts(b, "cnt_b")
@@ -313,7 +312,7 @@ object Profile {
       k: Int): DataFrame = {
     require(k > 0, "k must be positive")
     val counts = docs
-      .select(col(groupCol).as("__g"), explode(toks(col(textCol))).as("tok"))
+      .select(col(groupCol).as("__g"), explode(wordsOf(col(textCol))).as("tok"))
       .groupBy("__g", "tok").agg(count(lit(1)).as("cnt"))
     counts
       .withColumn("rank",
@@ -1099,8 +1098,6 @@ object Profile {
     */
   def calibrationAudit(df: DataFrame, scoreMilliCol: String, labelCol: String,
       bucketWidth: Long = 100L): DataFrame = {
-    require(bucketWidth >= 1 && bucketWidth <= 1000,
-      "bucketWidth must be in [1, 1000]")
     val score = when(col(scoreMilliCol) >= 0 && col(scoreMilliCol) <= 1000,
       col(scoreMilliCol).cast("long"))
       .otherwise(raise_error(concat(
@@ -1108,16 +1105,28 @@ object Profile {
         col(scoreMilliCol).cast("string"))))
     val label = when(col(labelCol).isNotNull, col(labelCol).cast("long"))
       .otherwise(raise_error(lit("calibrationAudit: NULL label")))
-    df.select(call_function("div", score, lit(bucketWidth)).as("bucket"),
-        score.as("__s"), label.as("__l"))
-      .groupBy("bucket")
-      .agg(count(lit(1)).as("n"), sum(col("__l")).as("n_pos"),
-        sum(col("__s")).as("__sum_s"))
-      .select(col("bucket"), col("n"), col("n_pos"),
-        call_function("div", col("__sum_s"), col("n")).as("mean_score_milli"),
-        call_function("div", col("n_pos") * 1000L, col("n")).as("observed_permille"))
+    calibrationOver(df.select(score.as("__s"), label.as("__l")), Seq.empty,
+      col("__s"), col("__l"), bucketWidth)
+  }
+
+  /** [[calibrationAudit]]'s bucket finish generalized to group keys (the
+    * streaming twin passes its window column): `score` and `label` are
+    * long columns the caller has already guarded (the batch auditor
+    * raises on poison rows, the twin drops them), bucketed by `div`.
+    * Output: the keys, then calibrationAudit's columns.
+    */
+  private[graft] def calibrationOver(df: DataFrame, keys: Seq[Column],
+      score: Column, label: Column, bucketWidth: Long): DataFrame = {
+    require(bucketWidth >= 1 && bucketWidth <= 1000,
+      "bucketWidth must be in [1, 1000]")
+    df.groupBy(keys :+ call_function("div", score, lit(bucketWidth)).as("bucket"): _*)
+      .agg(count(lit(1)).as("n"), sum(label).as("n_pos"), sum(score).as("__sum_s"))
+      .withColumn("mean_score_milli", call_function("div", col("__sum_s"), col("n")))
+      .withColumn("observed_permille",
+        call_function("div", col("n_pos") * 1000L, col("n")))
       .withColumn("gap_milli",
         col("observed_permille") - col("mean_score_milli"))
+      .drop("__sum_s")
   }
 
   def crossTab(df: DataFrame, colA: String, colB: String): DataFrame = {

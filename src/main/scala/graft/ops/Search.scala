@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.functions.text.wordsOf
 
 /** Keyword search over the corpus: BM25 ranking (Robertson & Zaragoza 2009,
   * "The Probabilistic Relevance Framework: BM25 and Beyond") computed as a
@@ -29,8 +30,6 @@ import org.apache.spark.sql.functions._
   */
 object Search {
 
-  private def toks(text: Column): Column = split(lower(trim(text)), "\\s+")
-
   /** Query-term postings: one row per (document, matched term) with term
     * frequency and document length. `(id, term, tf, dl)`.
     */
@@ -38,7 +37,7 @@ object Search {
       terms: Seq[String]): DataFrame = {
     require(terms.nonEmpty, "need at least one query term")
     corpus
-      .select(col(idCol).as("id"), toks(col(textCol)).as("toks"))
+      .select(col(idCol).as("id"), wordsOf(col(textCol)).as("toks"))
       .select(col("id"), size(col("toks")).as("dl"),
         explode(col("toks")).as("term"))
       .filter(col("term").isin(terms.map(_.toLowerCase): _*))
@@ -56,7 +55,7 @@ object Search {
       k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     require(k >= 1 && k1 >= 0 && b >= 0 && b <= 1, "bad BM25 parameters")
     val stats = corpus
-      .select(size(toks(col(textCol))).cast("long").as("dl"))
+      .select(size(wordsOf(col(textCol))).cast("long").as("dl"))
       .agg(count(lit(1)), avg(col("dl"))).head()
     val nDocs = stats.getLong(0)
     val avgdl = stats.getDouble(1)
@@ -199,11 +198,11 @@ object Search {
     */
   def buildBm25Index(corpus: DataFrame, textCol: String, idCol: String): Bm25Index = {
     val post = corpus
-      .select(col(idCol).as("id"), toks(col(textCol)).as("toks"))
+      .select(col(idCol).as("id"), wordsOf(col(textCol)).as("toks"))
       .select(col("id"), size(col("toks")).cast("long").as("dl"),
         explode(col("toks")).as("term"))
       .groupBy("id", "dl", "term").agg(count(lit(1)).as("tf"))
-    val s = corpus.select(size(toks(col(textCol))).cast("long").as("dl"))
+    val s = corpus.select(size(wordsOf(col(textCol))).cast("long").as("dl"))
       .agg(count(lit(1)).as("n"), sum(col("dl")).as("s")).head()
     Bm25Index(post, s.getLong(0), s.getLong(1))
   }

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.functions.text.wordsOf
 
 /** Document-level text analysis for training-data pipelines: token
   * statistics, quality scoring, language identification, fingerprinting.
@@ -88,7 +89,7 @@ object TextAnalysis {
     */
   def lexicalDiversity(text: Column): Column = {
     val toks = when(length(trim(text)) === 0, array().cast("array<string>"))
-      .otherwise(split(lower(trim(text)), "\\s+"))
+      .otherwise(wordsOf(text))
     val types = array_distinct(toks)
     val nTok = size(toks).cast("long")
     val nTyp = size(types).cast("long")
@@ -269,7 +270,7 @@ object TextAnalysis {
   }
 
   def qualityMetrics(text: Column, stopwords: Seq[String]): Column = {
-    val toks = split(lower(trim(text)), "\\s+")
+    val toks = wordsOf(text)
     // guarded count: "" splits to [""] — empty text has zero words
     val nTok = when(length(trim(text)) === 0, lit(0)).otherwise(size(toks))
     val safeTok = greatest(nTok, lit(1)) // division guard
@@ -497,7 +498,7 @@ object TextAnalysis {
       topK: Int = 1000): DataFrame = {
     require(minCount >= 1 && topK >= 1, "minCount and topK must be positive")
     val dec = "decimal(38,0)"
-    val tk = split(lower(trim(col(textCol))), "\\s+")
+    val tk = wordsOf(col(textCol))
     val totals = docs.agg(
       sum(size(tk)).cast(dec).as("__U"),
       sum(greatest(size(tk) - lit(1), lit(0))).cast(dec).as("__B"))
@@ -550,7 +551,7 @@ object TextAnalysis {
   def keywords(docs: DataFrame, textCol: String, idCol: String, k: Int,
       minTermLen: Int = 3, maxDfPermille: Int = 1000): DataFrame = {
     val terms = docs.select(col(idCol),
-        explode(split(lower(trim(col(textCol))), "\\s+")).as("term"))
+        explode(wordsOf(col(textCol))).as("term"))
       .where(length(col("term")) >= minTermLen)
     val tf = terms.groupBy(col(idCol), col("term")).agg(count(lit(1)).as("tf"))
     val dfTable = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))

@@ -114,7 +114,7 @@ object Web {
       reg => if (blocklist.isEmpty) lit(false) else reg.isin(blocklist: _*)
     df.withColumn("__p", urlParts(col(urlCol)))
       .withColumn("__reg", registrableDomain(col("__p.host"), multiLabelSuffixes))
-      .select(df.columns.map(col) ++ Seq(
+      .select(df.columns.toSeq.map(col) ++ Seq(
         col("__p.scheme").as("scheme"), col("__p.host").as("host"),
         col("__p.path").as("path"), col("__p.query").as("query"),
         col("__reg").as("reg_domain"),

@@ -376,11 +376,11 @@ final class Stream(
         metrics.sinkProcessingTimeMicros.addAndGet((System.nanoTime() - t0) / 1000)
         rid
       } catch {
-        case e: VoidSink#SimulatedError if e.retryable && attempt < maxRetries =>
+        case e: VoidSink.SimulatedError if e.retryable && attempt < maxRetries =>
           supervisor.notifier.notify("WARN", spec.id, s"retryable sink error, attempt ${attempt + 1}: ${e.getMessage}")
           Thread.sleep(backoffMs)
           load(attempt + 1, backoffMs * 2)
-        case e: VoidSink#SimulatedError if e.retryable =>
+        case e: VoidSink.SimulatedError if e.retryable =>
           throw new RetryableStreamException(s"retries exhausted after $attempt attempts", e)
       }
     if (batchRows == 0L) "" else load(0, supervisor.config.retryBackoffBaseMs)
@@ -538,7 +538,7 @@ final class Supervisor(val spark: SparkSession, val config: RuntimeConfig) {
     * wholesale), compile once, and build the unstarted [[Stream]], which
     * resolves the sink and source config.
     */
-  private def prepare(spec: StreamSpec): Either[SpecValidationException, Stream] = {
+  private[runtime] def prepare(spec: StreamSpec): Either[SpecValidationException, Stream] = {
     val resolved = spec.copy(ops = spec.opsFor(config.env))
     def check[A](what: String)(f: => A): Either[SpecValidationException, A] =
       try Right(f)
@@ -801,8 +801,12 @@ final class Geist(spark: SparkSession, config: RuntimeConfig = RuntimeConfig()) 
     supervisor.publish(streamId, eventJson)
   def getStreamSpec(id: String): Option[StreamSpec] = supervisor.registry.get(id)
   def getStreamSpecs: Seq[StreamSpec] = supervisor.registry.all
+  /** The checks [[registerStream]] runs before it persists a spec —
+    * parse, compile, sink and source config ([[Supervisor.prepare]]) —
+    * with no version gate, and nothing persisted, stopped or deployed.
+    */
   def validateStreamSpec(json: String): Either[SpecValidationException, StreamSpec] =
-    StreamSpec.parse(json)
+    StreamSpec.parse(json).flatMap(spec => supervisor.prepare(spec).map(_ => spec))
   def metrics(streamId: String): Map[String, Long] = supervisor.metrics(streamId).snapshot
   def notifications(): Seq[NotificationEvent] = supervisor.notifier.drain()
   /** Notifications dropped so far because the buffer was full. */

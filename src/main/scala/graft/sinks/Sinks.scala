@@ -338,15 +338,17 @@ final class VoidSink(props: Map[String, String]) {
   private val errorsSimulated = new java.util.concurrent.atomic.AtomicInteger(0)
   private val maxErrors = props.get("maxErrors").flatMap(_.toIntOption).getOrElse(Int.MaxValue)
 
-  final case class SimulatedError(retryable: Boolean)
-    extends RuntimeException(s"simulated ${if (retryable) "retryable" else "unretryable"} error")
-
   /** Loads nothing; throws per the simulateError contract. */
   def load(): Unit =
     props.get("simulateError") match {
       case Some(mode @ ("alwaysRetryable" | "alwaysUnretryable")) if errorsSimulated.get() < maxErrors =>
         errorsSimulated.incrementAndGet()
-        throw SimulatedError(retryable = mode == "alwaysRetryable")
+        throw VoidSink.SimulatedError(retryable = mode == "alwaysRetryable")
       case _ =>
     }
+}
+
+object VoidSink {
+  final case class SimulatedError(retryable: Boolean)
+    extends RuntimeException(s"simulated ${if (retryable) "retryable" else "unretryable"} error")
 }

@@ -319,7 +319,7 @@ object RowLocal {
     "Curation.temperatureMixture" -> "stratum-sized weight projection + one-row broadcast total",
     "Curation.isqrtExact" -> "row-local scalar column (corrected floor sqrt) - pure per-row arithmetic with no frame semantics",
     "Curation.bradleyTerry" -> "iterative MM fixed point over pair aggregates (loop-lineage rule)",
-    "EvalMetrics.ngramOverlap" -> "distributed (pair, n, gram) aggregate — the row-local kernels' law witness and the fallback for rows too large to clip in task memory",
+    "EvalMetrics.ngramOverlap" -> "distributed (pair, n, gram) aggregate — building block of the test-only *Shuffled reference forms (the row-local kernels' law witnesses)",
     "EvalMetrics.bleuComponentsShuffled" -> "private[graft] distributed law witness of the row-local bleuComponents",
     "EvalMetrics.rougeNShuffled" -> "private[graft] distributed law witness of the row-local rougeN",
     "EvalMetrics.chrFShuffled" -> "private[graft] distributed law witness of the row-local chrF",
@@ -329,6 +329,8 @@ object RowLocal {
     "EvalMetrics.corpusBleu" -> "corpus-level one-row component reduce (micro-average pooling)",
     "EvalMetrics.withRowLocalBleuComponents" -> "private[graft] helper (row-local clip kernel shared by bleuComponentsRowLocal and the streaming corpus-BLEU twin)",
     "EvalMetrics.corpusBleuOver" -> "private[graft] helper (shared pool+root tail for the global and windowed corpus BLEU)",
+    "EvalMetrics.passAtKOver" -> "private[graft] helper (shared (n, c) aggregate + k fold for passAtK and the windowed twin)",
+    "EvalMetrics.integralMetric" -> "private[graft] helper (row-local integral-metric guard column shared by the paired tests and the windowed paired-delta twin)",
     "EvalMetrics.corpusChrf" -> "corpus-level per-n component reduce (micro-average pooling)",
     "EvalMetrics.corpusRougeN" -> "corpus-level per-n component reduce (micro-average pooling)",
     "EvalMetrics.passAtKRollup" -> "per-k mean over problem-sized aggregate rows",
@@ -443,6 +445,7 @@ object RowLocal {
     "Profile.bootstrapCI" -> "replicate-frame rank window over bootstrapMeans",
     "Profile.bootstrapMeans" -> "constant replicate fan-out + per-replicate aggregate",
     "Profile.calibrationAudit" -> "score-bucket aggregate",
+    "Profile.calibrationOver" -> "private[graft] helper (shared score-bucket aggregate + finish for calibrationAudit and the windowed twin)",
     "Profile.cohenKappa" -> "confusion-cell aggregate",
     "Profile.confusionReport" -> "confusion-cell aggregate",
     "Profile.correlationMatrix" -> "one-scan co-moment aggregate",

@@ -3,6 +3,8 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import graft.functions.text.wordsOf
+import graft.ops.EvalMetrics.integralMetric
 
 /** Event-time streaming operators — the capability tier the reference
   * explicitly delegates to Spark ("stream joins and aggregations ... better
@@ -43,7 +45,7 @@ object Windows {
   def streamingNearDedup(df: DataFrame, tsCol: String, textCol: String,
       watermark: String, portable: Boolean = false): DataFrame =
     df.withColumn("__simhash",
-        graft.functions.text.simhash64(split(lower(trim(col(textCol))), "\\s+"), portable))
+        graft.functions.text.simhash64(wordsOf(col(textCol)), portable))
       .withWatermark(tsCol, watermark)
       .dropDuplicatesWithinWatermark("__simhash")
       .drop("__simhash")
@@ -129,7 +131,7 @@ object Windows {
       watermark: String, maxDist: Int = 3, maxBucket: Int = 64): DataFrame = {
     val withFp = stream.withColumn("__fp",
         graft.functions.text.simhash64(
-          split(lower(trim(col(textCol))), "\\s+"), index.portable))
+          wordsOf(col(textCol)), index.portable))
       .withColumn("__chunks", graft.ops.Dedup.simhashBandCols(col("__fp")))
     val idx = graft.ops.Dedup.capBuckets(index.entries, Seq("band", "chunk"), maxBucket)
     var cur = withFp
@@ -195,6 +197,26 @@ object Windows {
       .drop("__v", "__keys", "__qm", "__qnsq", "__vkey")
   }
 
+  /** The windowing step every windowed aggregate below shares: the
+    * watermark applies only to a streaming input (on a batch frame the
+    * window is a plain group key — how the batch twins and the parity
+    * laws run the same code), `agg` groups the watermarked frame by the
+    * event-time window it is handed (aliased `__w`) plus its own keys, and
+    * the window's bounds lead the output as window_start/window_end,
+    * followed by every other column `agg` returns.
+    */
+  private def windowed(df: DataFrame, tsCol: String, windowDuration: String,
+      watermark: String, slideDuration: Option[String] = None)(
+      agg: (DataFrame, Column) => DataFrame): DataFrame = {
+    val src = if (df.isStreaming) df.withWatermark(tsCol, watermark) else df
+    val w = slideDuration.fold(window(col(tsCol), windowDuration))(
+      window(col(tsCol), windowDuration, _))
+    agg(src, w.as("__w"))
+      .select(col("__w.start").as("window_start"), col("__w.end").as("window_end"),
+        col("*"))
+      .drop("__w")
+  }
+
   /** Tumbling/sliding windowed counts + sums per key with a watermark:
     * the standard event-time aggregation. Late rows beyond the watermark
     * are dropped by the engine — at scale the watermark bounds state size.
@@ -207,17 +229,11 @@ object Windows {
       windowDuration: String,
       slideDuration: Option[String] = None,
       watermark: String = "10 minutes"
-  ): DataFrame = {
-    val src = if (df.isStreaming) df.withWatermark(tsCol, watermark) else df
-    val win = slideDuration match {
-      case Some(slide) => window(col(tsCol), windowDuration, slide)
-      case None => window(col(tsCol), windowDuration)
+  ): DataFrame =
+    windowed(df, tsCol, windowDuration, watermark, slideDuration) { (src, w) =>
+      src.groupBy(w, col(keyCol))
+        .agg(count(lit(1)).as("n"), sum(col(valueCol)).as("total"))
     }
-    src.groupBy(win.as("w"), col(keyCol))
-      .agg(count(lit(1)).as("n"), sum(col(valueCol)).as("total"))
-      .select(col("w.start").as("window_start"), col("w.end").as("window_end"),
-        col(keyCol), col("n"), col("total"))
-  }
 
   /** Streaming twin of [[graft.ops.Temporal.activeActors]]: event counts
     * and distinct-actor counts per tumbling event-time window with a
@@ -232,14 +248,11 @@ object Windows {
     */
   def streamingActiveActors(df: DataFrame, tsCol: String, actorCol: String,
       windowDuration: String, watermark: String = "10 minutes",
-      rsd: Double = 0.02): DataFrame = {
-    val src = if (df.isStreaming) df.withWatermark(tsCol, watermark) else df
-    src.groupBy(window(col(tsCol), windowDuration).as("w"))
-      .agg(count(lit(1)).as("n_events"),
+      rsd: Double = 0.02): DataFrame =
+    windowed(df, tsCol, windowDuration, watermark) { (src, w) =>
+      src.groupBy(w).agg(count(lit(1)).as("n_events"),
         approx_count_distinct(col(actorCol), rsd).as("n_actors_approx"))
-      .select(col("w.start").as("window_start"), col("w.end").as("window_end"),
-        col("n_events"), col("n_actors_approx"))
-  }
+    }
 
   /** Session windows (gap-based) via the built-in session_window —
     * state-bounded by the watermark.
@@ -278,28 +291,25 @@ object Windows {
     */
   def streamingCorpusMonitor(docs: DataFrame, tsCol: String, textCol: String,
       groupCol: String, windowDuration: String,
-      keep: Column, watermark: String = "10 minutes"): DataFrame = {
-    val src = if (docs.isStreaming) docs.withWatermark(tsCol, watermark) else docs
-    val toks = graft.ops.TextAnalysis.wsTokenCount(col(textCol))
-    src.groupBy(window(col(tsCol), windowDuration).as("w"), col(groupCol))
-      .agg(
-        count(lit(1)).as("n_docs"),
-        sum(toks).as("n_tokens"),
-        sum(when(keep, 1L).otherwise(0L)).as("n_kept"),
-        sum(when(length(trim(col(textCol))) === 0, 1L).otherwise(0L)).as("n_empty"),
-        approx_count_distinct(md5(col(textCol))).as("approx_distinct"))
-      .select(col("w.start").as("window_start"), col("w.end").as("window_end"),
-        col(groupCol), col("n_docs"), col("n_tokens"), col("n_kept"),
-        col("n_empty"), col("approx_distinct"))
-  }
+      keep: Column, watermark: String = "10 minutes"): DataFrame =
+    windowed(docs, tsCol, windowDuration, watermark) { (src, w) =>
+      src.groupBy(w, col(groupCol))
+        .agg(
+          count(lit(1)).as("n_docs"),
+          sum(graft.ops.TextAnalysis.wsTokenCount(col(textCol))).as("n_tokens"),
+          sum(when(keep, 1L).otherwise(0L)).as("n_kept"),
+          sum(when(length(trim(col(textCol))) === 0, 1L).otherwise(0L)).as("n_empty"),
+          approx_count_distinct(md5(col(textCol))).as("approx_distinct"))
+    }
 
   /** Streaming twin of [[graft.ops.Profile.calibrationAudit]]: per
     * tumbling window, the reliability-diagram buckets of a live scorer —
     * the drift monitor that catches a quality/reward model going
     * miscalibrated IN PRODUCTION (a filter thresholded at 0.8 silently
     * over- or under-deleting as the corpus shifts), window by window
-    * rather than after the next offline audit. Same integer-exact bucket
-    * arithmetic as the batch operator; on a closed in-order history the
+    * rather than after the next offline audit. The bucket aggregate and
+    * finish are the batch operator's own
+    * ([[graft.ops.Profile.calibrationOver]]); on a closed in-order history the
     * per-window rows equal the batch operator applied per window slice
     * (the StreamingSpec parity law). One windowed keyed aggregate —
     * state is (window × bucket)-sized, bounded by the watermark.
@@ -315,25 +325,13 @@ object Windows {
     */
   def streamingCalibration(df: DataFrame, tsCol: String, scoreMilliCol: String,
       labelCol: String, windowDuration: String, bucketWidth: Long = 100L,
-      watermark: String = "10 minutes"): DataFrame = {
-    require(bucketWidth >= 1 && bucketWidth <= 1000,
-      "bucketWidth must be in [1, 1000]")
-    val src = if (df.isStreaming) df.withWatermark(tsCol, watermark) else df
-    src
-      .where(col(labelCol).isNotNull && col(scoreMilliCol).isNotNull)
-      .groupBy(window(col(tsCol), windowDuration).as("w"),
-        call_function("div", col(scoreMilliCol).cast("long"), lit(bucketWidth))
-          .as("bucket"))
-      .agg(count(lit(1)).as("n"),
-        sum(col(labelCol).cast("long")).as("n_pos"),
-        sum(col(scoreMilliCol).cast("long")).as("__sum_s"))
-      .select(col("w.start").as("window_start"), col("w.end").as("window_end"),
-        col("bucket"), col("n"), col("n_pos"),
-        call_function("div", col("__sum_s"), col("n")).as("mean_score_milli"),
-        call_function("div", col("n_pos") * 1000L, col("n")).as("observed_permille"))
-      .withColumn("gap_milli",
-        col("observed_permille") - col("mean_score_milli"))
-  }
+      watermark: String = "10 minutes"): DataFrame =
+    windowed(df, tsCol, windowDuration, watermark) { (src, w) =>
+      graft.ops.Profile.calibrationOver(
+        src.where(col(labelCol).isNotNull && col(scoreMilliCol).isNotNull),
+        Seq(w), col(scoreMilliCol).cast("long"), col(labelCol).cast("long"),
+        bucketWidth)
+    }
 
   /** Streaming twin of [[graft.ops.Profile.distributionDrift]] against a
     * FROZEN reference: per tumbling window, the KS statistic and
@@ -367,30 +365,29 @@ object Windows {
     require(lo < hi, "lo must be < hi")
     require(BigInt(hi) - BigInt(lo) <= Long.MaxValue,
       "hi - lo must fit a long (the span literal)")
-    val src = if (df.isStreaming) df.withWatermark(tsCol, watermark) else df
     // cast-filter + the SHARED clamp-then-bucket definition (the batch
     // twin's — the two ops must agree on which bucket a value lands in)
     val v = col(valueCol).cast("long")
     val bk = graft.ops.Profile.clampedBucket(v, lo, hi, buckets)
     val aggs = (0 until buckets).map(i =>
       sum(when(col("__bk") === i, 1L).otherwise(0L)).as(s"__n$i"))
-    val perWindow = src.where(v.isNotNull)
-      .withColumn("__bk", bk)
-      .groupBy(window(col(tsCol), windowDuration).as("w"))
-      .agg(aggs.head, aggs.tail: _*)
     val refCumMicro: Seq[Long] =
       referenceShares.scanLeft(0L)(_ + _).tail.map(_ * 1000L)
     val tot = (0 until buckets).map(i => col(s"__n$i")).reduce(_ + _)
-    val withTot = perWindow.withColumn("__tot", tot)
     val xs = (0 until buckets).map { i =>
       val cum = (0 to i).map(j => col(s"__n$j")).reduce(_ + _)
       abs(cum * 1000000L - lit(refCumMicro(i)) * col("__tot"))
     }
-    withTot.select(
-      col("w.start").as("window_start"), col("w.end").as("window_end"),
-      col("__tot").as("n_obs"),
-      call_function("div", xs.reduce(greatest(_, _)), col("__tot")).as("ks_micro"),
-      call_function("div", xs.reduce(_ + _), col("__tot")).as("emd_micro"))
+    windowed(df, tsCol, windowDuration, watermark) { (src, w) =>
+      src.where(v.isNotNull)
+        .withColumn("__bk", bk)
+        .groupBy(w)
+        .agg(aggs.head, aggs.tail: _*)
+        .withColumn("__tot", tot)
+        .select(col("__w"), col("__tot").as("n_obs"),
+          call_function("div", xs.reduce(greatest(_, _)), col("__tot")).as("ks_micro"),
+          call_function("div", xs.reduce(_ + _), col("__tot")).as("emd_micro"))
+    }
   }
 
   /** Streaming twin of [[graft.ops.EvalMetrics.passAtK]]: per tumbling
@@ -401,8 +398,9 @@ object Windows {
     * Streaming-legal shape: ONE windowed aggregate takes (n, c) per
     * (window, problem); the k-step micro fold and the per-k explode are
     * STATELESS projections over finalized aggregate rows (Structured
-    * Streaming forbids a second aggregate, not a generator). Same
-    * integer contract as the batch operator — the fold's compounded
+    * Streaming forbids a second aggregate, not a generator). The
+    * aggregate, explode and fold are the batch operator's own
+    * ([[graft.ops.EvalMetrics.passAtKOver]]) — the fold's compounded
     * floors replay anywhere; k > n is NULL. State is
     * windows × problems rows, bounded by the watermark.
     *
@@ -411,31 +409,11 @@ object Windows {
     */
   def streamingPassAtK(df: DataFrame, tsCol: String, problemCol: String,
       passedCol: String, ks: Seq[Int], windowDuration: String,
-      watermark: String = "10 minutes"): DataFrame = {
-    require(ks.nonEmpty && ks.forall(k => k >= 1 && k <= 64),
-      "ks must be non-empty with each k in [1, 64]")
-    require(ks == ks.distinct, "ks must be distinct")
-    val src = if (df.isStreaming) df.withWatermark(tsCol, watermark) else df
-    val per = src
-      .groupBy(window(col(tsCol), windowDuration).as("w"),
-        col(problemCol).as("problem"))
-      .agg(count(lit(1)).as("n_samples"),
-        sum(when(col(passedCol).cast("boolean"), 1L).otherwise(0L))
-          .as("n_passed"))
-    per
-      .select(col("w.start").as("window_start"), col("w.end").as("window_end"),
-        col("problem"), col("n_samples"), col("n_passed"),
-        explode(array(ks.map(k => lit(k.toLong)): _*)).as("k"))
-      .withColumn("__m",
-        when(col("k") <= col("n_samples"),
-          aggregate(sequence(lit(0L), col("k") - 1L), lit(1000000L),
-            (acc, i) => call_function("div",
-              acc * (col("n_samples") - col("n_passed") - i),
-              col("n_samples") - i))))
-      .select(col("window_start"), col("window_end"), col("problem"),
-        col("n_samples"), col("n_passed"), col("k"),
-        (lit(1000000L) - col("__m")).as("pass_at_k_micro"))
-  }
+      watermark: String = "10 minutes"): DataFrame =
+    windowed(df, tsCol, windowDuration, watermark) { (src, w) =>
+      graft.ops.EvalMetrics.passAtKOver(src,
+        Seq(w, col(problemCol).as("problem")), passedCol, ks)
+    }
 
   /** Streaming twin of [[graft.ops.EvalMetrics.selfConsistency]]: per
     * tumbling window and problem, the Wang-2022 majority vote — the live
@@ -472,16 +450,9 @@ object Windows {
       windowDuration: String, watermark: String = "10 minutes"): DataFrame = {
     require(nAnswers >= 2 && nAnswers <= 64,
       "nAnswers (answer domain size) must be in [2, 64]")
-    val src = if (df.isStreaming) df.withWatermark(tsCol, watermark) else df
     val ans = col(answerCol).cast("long")
     val aggs = (0 until nAnswers).map(a =>
       sum(when(col("__ans") === a, 1L).otherwise(0L)).as(s"__v$a"))
-    val perWindow = src
-      .where(ans.isNotNull && ans >= 0 && ans < nAnswers)
-      .withColumn("__ans", ans)
-      .groupBy(window(col(tsCol), windowDuration).as("w"),
-        col(problemCol).as("problem"))
-      .agg(aggs.head, aggs.tail: _*)
     val best = (0 until nAnswers).map(a => col(s"__v$a")).reduce(greatest(_, _))
     val majority = (0 until nAnswers).foldRight(lit(null).cast("long")) {
       // ascending first-match: a CASE chain evaluates in order, so fold
@@ -491,15 +462,20 @@ object Windows {
       case (a, rest) => when(col(s"__v$a") === col("__best"), a.toLong)
         .otherwise(rest)
     }
-    perWindow
-      .withColumn("__best", best)
-      .withColumn("n_samples",
-        (0 until nAnswers).map(a => col(s"__v$a")).reduce(_ + _))
-      .select(col("w.start").as("window_start"), col("w.end").as("window_end"),
-        col("problem"), majority.as("majority_answer"),
-        col("__best").as("n_majority"), col("n_samples"),
-        call_function("div", col("__best") * 1000L, col("n_samples"))
-          .as("majority_permille"))
+    windowed(df, tsCol, windowDuration, watermark) { (src, w) =>
+      src
+        .where(ans.isNotNull && ans >= 0 && ans < nAnswers)
+        .withColumn("__ans", ans)
+        .groupBy(w, col(problemCol).as("problem"))
+        .agg(aggs.head, aggs.tail: _*)
+        .withColumn("__best", best)
+        .withColumn("n_samples",
+          (0 until nAnswers).map(a => col(s"__v$a")).reduce(_ + _))
+        .select(col("__w"), col("problem"), majority.as("majority_answer"),
+          col("__best").as("n_majority"), col("n_samples"),
+          call_function("div", col("__best") * 1000L, col("n_samples"))
+            .as("majority_permille"))
+    }
   }
 
   /** Streaming corpus-BLEU monitor: per tumbling window, the pooled BLEU
@@ -536,16 +512,11 @@ object Windows {
     // rides the attribute — tag the exact attribute the window reads)
     val base = df.select(col(tsCol).as("__ts"), col(candCol).as("__cand"),
       col(refCol).as("__ref"))
-    val src = if (df.isStreaming) base.withWatermark("__ts", watermark) else base
-    val comp = graft.ops.EvalMetrics.withRowLocalBleuComponents(
-      src, "__cand", "__ref", maxTokens)
-      .withColumn("__w", window(col("__ts"), windowDuration))
-    graft.ops.EvalMetrics.corpusBleuOver(comp, Seq("__w"))
-      .select(col("__w.start").as("window_start") +:
-        col("__w.end").as("window_end") +:
-        col("n_pairs") +: col("cand_tokens") +: col("ref_tokens") +:
-        (1 to 4).flatMap(n => Seq(col(s"matches_$n"), col(s"total_$n"))) :+
-        col("precision_geo_permille"): _*)
+    windowed(base, "__ts", windowDuration, watermark) { (src, w) =>
+      graft.ops.EvalMetrics.corpusBleuOver(
+        graft.ops.EvalMetrics.withRowLocalBleuComponents(
+          src, "__cand", "__ref", maxTokens), Seq(w))
+    }
   }
 
   /** Streaming n-gram novelty monitor: per tumbling window and n, the
@@ -590,25 +561,22 @@ object Windows {
     require(!refGrams.isStreaming,
       "the novelty index must be a static frame (stream-static join contract)")
     val base = df.select(col(tsCol).as("__ts"), col(textCol).as("__text"))
-    val src = if (df.isStreaming) base.withWatermark("__ts", watermark) else base
     val specs = array((1 to maxN).map(n => lit(n.toLong)): _*)
-    val grams = src
-      .select(col("__ts"), graft.ops.EvalMetrics.toksOf(col("__text")).as("__t"))
-      .withColumn("n", explode(specs))
-      .select(col("__ts"), col("n"),
-        explode(graft.ops.EvalMetrics.wordGramsOf(col("__t"), col("n")))
-          .as("gram"))
-    val marked = grams.join(
-      refGrams.select(col("n"), col("gram"), lit(1L).as("__hit")),
-      Seq("n", "gram"), "left_outer")
-    marked
-      .groupBy(window(col("__ts"), windowDuration).as("w"), col("n"))
-      .agg(count(lit(1)).as("total_grams"),
-        sum(when(col("__hit").isNull, 1L).otherwise(0L)).as("novel_grams"))
-      .select(col("w.start").as("window_start"), col("w.end").as("window_end"),
-        col("n"), col("total_grams"), col("novel_grams"),
-        call_function("div", col("novel_grams") * 1000L, col("total_grams"))
-          .as("novelty_permille"))
+    windowed(base, "__ts", windowDuration, watermark) { (src, w) =>
+      src
+        .select(col("__ts"), graft.ops.EvalMetrics.toksOf(col("__text")).as("__t"))
+        .withColumn("n", explode(specs))
+        .select(col("__ts"), col("n"),
+          explode(graft.ops.EvalMetrics.wordGramsOf(col("__t"), col("n")))
+            .as("gram"))
+        .join(refGrams.select(col("n"), col("gram"), lit(1L).as("__hit")),
+          Seq("n", "gram"), "left_outer")
+        .groupBy(w, col("n"))
+        .agg(count(lit(1)).as("total_grams"),
+          sum(when(col("__hit").isNull, 1L).otherwise(0L)).as("novel_grams"))
+        .withColumn("novelty_permille",
+          call_function("div", col("novel_grams") * 1000L, col("total_grams")))
+    }
   }
 
   /** Streaming rep-n monitor: per tumbling window and n, the pooled
@@ -630,21 +598,18 @@ object Windows {
       watermark: String = "10 minutes"): DataFrame = {
     require(maxN >= 1 && maxN <= 8, "maxN must be in [1, 8]")
     val base = df.select(col(tsCol).as("__ts"), col(textCol).as("__text"))
-    val src = if (df.isStreaming) base.withWatermark("__ts", watermark) else base
-    src
-      .select(col("__ts"),
-        explode(graft.functions.text.gramRepCounts(
-          graft.ops.EvalMetrics.toksOf(col("__text")), maxN)).as("__g"))
-      .groupBy(window(col("__ts"), windowDuration).as("w"),
-        col("__g.n").as("n"))
-      .agg(count(lit(1)).as("n_docs"),
-        sum(col("__g.total_grams")).as("total_grams"),
-        sum(col("__g.distinct_grams")).as("distinct_grams"))
-      .select(col("w.start").as("window_start"), col("w.end").as("window_end"),
-        col("n"), col("n_docs"), col("total_grams"), col("distinct_grams"),
-        (lit(1000L) - call_function("div",
+    windowed(base, "__ts", windowDuration, watermark) { (src, w) =>
+      src
+        .select(col("__ts"),
+          explode(graft.functions.text.gramRepCounts(
+            graft.ops.EvalMetrics.toksOf(col("__text")), maxN)).as("__g"))
+        .groupBy(w, col("__g.n").as("n"))
+        .agg(count(lit(1)).as("n_docs"),
+          sum(col("__g.total_grams")).as("total_grams"),
+          sum(col("__g.distinct_grams")).as("distinct_grams"))
+        .withColumn("rep_permille", lit(1000L) - call_function("div",
           col("distinct_grams") * 1000L, col("total_grams")))
-          .as("rep_permille"))
+    }
   }
 
   /** Streaming paired-eval A/B monitor: per tumbling window, the paired
@@ -659,7 +624,7 @@ object Windows {
     * state for nothing); a row missing either side abstains (dropped —
     * a paired comparison needs both; `n_pairs` makes thinning visible).
     * Metrics must be integral — a fractional value FAILS the query
-    * loudly (the batch family's integralSide contract; silent
+    * loudly (the batch family's [[graft.ops.EvalMetrics.integralMetric]] guard; silent
     * truncation in a monitor is worse than a crash, because the monitor
     * exists to be trusted).
     *
@@ -674,33 +639,23 @@ object Windows {
   def streamingPairedDelta(df: DataFrame, tsCol: String, aCol: String,
       bCol: String, windowDuration: String,
       watermark: String = "10 minutes"): DataFrame = {
-    def guarded(c: Column, what: String): Column = {
-      val md = c.cast("double")
-      when(md === floor(md) && abs(md) <= 1.0e12, c.cast("long"))
-        .otherwise(raise_error(concat(
-          lit(s"streamingPairedDelta: $what must be integral inside " +
-            "[-1e12, 1e12] (grid fractional metrics first); got "),
-          c.cast("string"))))
-    }
     val base = df.select(col(tsCol).as("__ts"),
       col(aCol).as("__ma"), col(bCol).as("__mb"))
-    val src = if (df.isStreaming) base.withWatermark("__ts", watermark) else base
-    src
-      .where(col("__ma").isNotNull && col("__mb").isNotNull)
-      .select(col("__ts"),
-        (guarded(col("__ma"), "metric A") - guarded(col("__mb"), "metric B"))
-          .as("__d"))
-      .groupBy(window(col("__ts"), windowDuration).as("w"))
-      .agg(count(lit(1)).as("n_pairs"),
-        sum(when(col("__d") > 0, 1L).otherwise(0L)).as("a_wins"),
-        sum(when(col("__d") < 0, 1L).otherwise(0L)).as("b_wins"),
-        sum(when(col("__d") === 0, 1L).otherwise(0L)).as("ties"),
-        sum(col("__d")).as("delta_sum"))
-      .select(col("w.start").as("window_start"), col("w.end").as("window_end"),
-        col("n_pairs"), col("a_wins"), col("b_wins"), col("ties"),
-        col("delta_sum"),
-        call_function("div", col("delta_sum") * 1000L, col("n_pairs"))
-          .as("mean_delta_milli"))
+    windowed(base, "__ts", windowDuration, watermark) { (src, w) =>
+      src
+        .where(col("__ma").isNotNull && col("__mb").isNotNull)
+        .select(col("__ts"),
+          (integralMetric(col("__ma"), lit("streamingPairedDelta: metric A")) -
+            integralMetric(col("__mb"), lit("streamingPairedDelta: metric B"))).as("__d"))
+        .groupBy(w)
+        .agg(count(lit(1)).as("n_pairs"),
+          sum(when(col("__d") > 0, 1L).otherwise(0L)).as("a_wins"),
+          sum(when(col("__d") < 0, 1L).otherwise(0L)).as("b_wins"),
+          sum(when(col("__d") === 0, 1L).otherwise(0L)).as("ties"),
+          sum(col("__d")).as("delta_sum"))
+        .withColumn("mean_delta_milli",
+          call_function("div", col("delta_sum") * 1000L, col("n_pairs")))
+    }
   }
 
   final case class RollEvent(key: String, ts: java.sql.Timestamp, value: Long)

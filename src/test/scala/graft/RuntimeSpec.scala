@@ -218,6 +218,8 @@ class RuntimeSpec extends AnyFunSuite {
     // compile-time rejection
     val poisoned = apiSpec("rt", "guard", 2)
       .replace("\"jsonPath\": \"cust.id\"", "\"jsonPath\": \"cust.#(id).x\"")
+    assert(g.validateStreamSpec(poisoned).left.exists(_.msg.contains("failed to compile")),
+      "validateStreamSpec runs the same compile check as registerStream")
     val res = g.registerStream(poisoned)
     assert(res.isLeft, "uncompilable spec must be rejected as a validation error")
     assert(res.left.exists(_.msg.contains("failed to compile")))
@@ -235,6 +237,9 @@ class RuntimeSpec extends AnyFunSuite {
     for (rows <- Seq("abc", "0")) {
       val badSink = s"""{"type": "void", "config": {"properties": [
         |  {"key": "rowsPerFile", "value": "$rows"}]}}""".stripMargin
+      assert(a.validateStreamSpec(apiSpec("rt", "sinkguard", 2, sink = badSink))
+        .left.exists(_.msg.contains("config invalid")),
+        s"validateStreamSpec must reject rowsPerFile=$rows like registerStream")
       val bad = a.registerStream(apiSpec("rt", "sinkguard", 2, sink = badSink))
       assert(bad.left.exists(_.msg.contains("config invalid")),
         s"rowsPerFile=$rows must be rejected as invalid config, got $bad")
@@ -243,6 +248,11 @@ class RuntimeSpec extends AnyFunSuite {
       a.publish("rt-sinkguard", """{"name": "n1", "cust": {"id": "c1"}}""")
     }
     assert(a.metrics("rt-sinkguard")("EventsStoredInSink") == 2, "v1 still publishes")
+    // a valid v2 validates without being persisted, deployed or swapped in
+    val deployedBefore = a.deployedIds
+    assert(a.validateStreamSpec(apiSpec("rt", "sinkguard", 2)).isRight)
+    assert(a.getStreamSpec("rt-sinkguard").get.version == 1, "validation must not persist")
+    assert(a.deployedIds == deployedBefore, "validation must not deploy")
     val b = new Geist(spark, cfg)
     b.bootstrap()
     assert(b.getStreamSpec("rt-sinkguard").exists(_.version == 1))

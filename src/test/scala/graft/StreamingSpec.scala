@@ -335,7 +335,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("streamingCalibration: per-window reliability buckets equal the batch auditor per slice") {
-    val input = MemoryStream[(java.sql.Timestamp, Long, Long)](spark, 48)
+    val input = MemoryStream[(java.sql.Timestamp, Long, Option[Long])](spark, 48)
     val df = input.toDF().toDF("ts", "score", "label")
     val agg = Windows.streamingCalibration(df, "ts", "score", "label", "10 minutes")
     val q = agg.writeStream.format("memory").queryName("scalib")
@@ -343,9 +343,11 @@ class StreamingSpec extends AnyFunSuite {
     try {
       def ts(m: Int) = java.sql.Timestamp.valueOf(f"2024-01-01 10:$m%02d:00")
       // window A [10:00,10:10): bucket0 {(50,0),(80,1)}, bucket9 {(950,1)}
-      // window B [10:10,10:20): bucket0 {(90,1)}
-      val rowsA = Seq((ts(1), 50L, 0L), (ts(2), 80L, 1L), (ts(3), 950L, 1L))
-      val rowsB = Seq((ts(11), 90L, 1L))
+      // window B [10:10,10:20): bucket0 {(90,1)}, plus two poison rows the
+      // twin must absorb without raising: a NULL label (dropped) and an
+      // out-of-range score 1500 (its own bucket 15)
+      val rowsA = Seq((ts(1), 50L, Some(0L)), (ts(2), 80L, Some(1L)), (ts(3), 950L, Some(1L)))
+      val rowsB = Seq((ts(11), 90L, Some(1L)), (ts(12), 300L, None), (ts(13), 1500L, Some(1L)))
       input.addData(rowsA ++ rowsB: _*)
       q.processAllAvailable()
       val got = spark.table("scalib").collect()
@@ -355,7 +357,8 @@ class StreamingSpec extends AnyFunSuite {
       assert(got == Set(
         ("2024-01-01 10:00:00.0", 0L, 2L, 1L, 65L, 500L, 435L),
         ("2024-01-01 10:00:00.0", 9L, 1L, 1L, 950L, 1000L, 50L),
-        ("2024-01-01 10:10:00.0", 0L, 1L, 1L, 90L, 1000L, 910L)), s"got $got")
+        ("2024-01-01 10:10:00.0", 0L, 1L, 1L, 90L, 1000L, 910L),
+        ("2024-01-01 10:10:00.0", 15L, 1L, 1L, 1500L, 1000L, -500L)), s"got $got")
       // per-window slices equal the batch auditor on the same rows
       val batchA = graft.ops.Profile.calibrationAudit(
         rowsA.map(t => (t._2, t._3)).toDF("score", "label"), "score", "label")
@@ -434,6 +437,15 @@ class StreamingSpec extends AnyFunSuite {
           r.getLong(3), r.getLong(4), r.getLong(5),
           if (r.isNullAt(6)) -1L else r.getLong(6))).toSet
       assert(batch == got)
+      // each window's rows equal the batch operator over that window's slice
+      for ((start, slice) <- Seq("2024-01-01 10:00:00.0" -> rows.filter(_._1.before(ts(10))),
+          "2024-01-01 10:10:00.0" -> rows.filterNot(_._1.before(ts(10))))) {
+        val perSlice = graft.ops.EvalMetrics.passAtK(
+          slice.toDF("ts", "problem", "passed"), "problem", "passed", ks = Seq(1, 2))
+          .collect().map(r => (start, r.getLong(0), r.getLong(1), r.getLong(2),
+            r.getLong(3), if (r.isNullAt(4)) -1L else r.getLong(4))).toSet
+        assert(perSlice == got.filter(_._1 == start), s"window $start")
+      }
     } finally q.stop()
   }
 
