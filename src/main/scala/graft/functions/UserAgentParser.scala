@@ -1,5 +1,7 @@
 package graft.functions
 
+import java.util.regex.Pattern
+
 /** Minimal user-agent classifier with the output contract of the reference's
   * `userAgent` field type (/root/reference/entity/transform/ua.go:9-62):
   * URL-unescape, classify, serialize as a fixed-key JSON object
@@ -45,6 +47,18 @@ object UserAgentParser {
 
   private val botMarkers = Seq("bot", "crawler", "spider", "slurp", "curl/", "wget/", "python-requests")
 
+  // compiled once: parseDecoded runs per event
+  private val iosVersion = """OS (\d[\d_]*)""".r
+  private val macVersion = """Mac OS X (\d[\d_.]*)""".r
+  private val locale = Pattern.compile("[a-z]{2}(-[a-zA-Z]{2})?")
+  private val windowsNames = Map(
+    "10.0" -> "10", "6.3" -> "8.1", "6.2" -> "8",
+    "6.1" -> "7", "6.0" -> "Vista", "5.1" -> "XP")
+  /** One "Name/version" token pattern per product name [[product]] takes. */
+  private val products: Map[String, Pattern] =
+    Seq("AppleWebKit", "Gecko", "Trident", "Edg", "Edge", "OPR", "Chrome", "Firefox", "Version")
+      .map(n => n -> Pattern.compile(Pattern.quote(n) + """/([\w.]+)""")).toMap
+
   /** URL-unescape then parse. Returns None only on invalid URL escaping
     * (the reference's sole error path, ua.go:33-36).
     */
@@ -72,14 +86,14 @@ object UserAgentParser {
       case Some(ios) =>
         osFullName = ios
         osName = if (ios.startsWith("CPU iPhone OS")) "iPhone OS" else "OS"
-        osVersion = """OS (\d[\d_]*)""".r.findFirstMatchIn(ios)
+        osVersion = iosVersion.findFirstMatchIn(ios)
           .map(_.group(1).replace('_', '.')).getOrElse("")
       case None =>
         comment.find(_.contains("Mac OS X")) match {
           case Some(mac) =>
             osFullName = mac
             osName = "Mac OS X"
-            osVersion = """Mac OS X (\d[\d_.]*)""".r.findFirstMatchIn(mac)
+            osVersion = macVersion.findFirstMatchIn(mac)
               .map(_.group(1).replace('_', '.')).getOrElse("")
           case None =>
             comment.find(_.startsWith("Android")) match {
@@ -91,10 +105,7 @@ object UserAgentParser {
                 comment.find(_.startsWith("Windows NT")) match {
                   case Some(win) =>
                     val nt = win.stripPrefix("Windows NT").trim
-                    val marketing = Map(
-                      "10.0" -> "10", "6.3" -> "8.1", "6.2" -> "8",
-                      "6.1" -> "7", "6.0" -> "Vista", "5.1" -> "XP"
-                    ).getOrElse(nt, nt)
+                    val marketing = windowsNames.getOrElse(nt, nt)
                     osName = "Windows"
                     osFullName = s"Windows $marketing"
                     osVersion = marketing
@@ -114,7 +125,7 @@ object UserAgentParser {
     // --- localization: a comment token like "en-US" / "sv-se" ---
     // "wv" is Android WebView's flag token, not a locale
     val localization = comment
-      .find(t => t.matches("[a-z]{2}(-[a-zA-Z]{2})?") && t != "wv")
+      .find(t => locale.matcher(t).matches() && t != "wv")
       .getOrElse("")
 
     // --- engine ---
@@ -153,7 +164,7 @@ object UserAgentParser {
 
   /** "Name/version" product token. */
   private def product(ua: String, name: String): Option[(String, String)] = {
-    val re = (java.util.regex.Pattern.quote(name) + """/([\w.]+)""").r
-    re.findFirstMatchIn(ua).map(m => (name, m.group(1)))
+    val m = products(name).matcher(ua)
+    if (m.find()) Some((name, m.group(1))) else None
   }
 }

@@ -58,10 +58,11 @@ final case class NotificationEvent(level: String, streamId: String, message: Str
     origin: String = "", stack: Seq[String] = Nil)
 
 /** Bounded non-blocking notification bus: full buffer drops events
-  * (pkg/notify/notify.go:155-158, default size 64) and counts them.
+  * (pkg/notify/notify.go:155-158, the reference's default size 64) and
+  * counts them.
   */
-final class Notifier(bufferSize: Int = 64) {
-  val queue = new ArrayBlockingQueue[NotificationEvent](bufferSize)
+final class Notifier {
+  val queue = new ArrayBlockingQueue[NotificationEvent](64)
   /** Notifications refused because the buffer was full. */
   val dropped = new AtomicLong(0)
   def notify(level: String, streamId: String, msg: String): Unit = {
@@ -398,7 +399,6 @@ final case class RuntimeConfig(
       * restart, capped at ops.maxStreamRetryBackoffIntervalSec.
       */
     streamRetryBackoffBaseMs: Long = 4000,
-    notifyBufferSize: Int = 64,
     /** A4: when set, kafka-source specs start as streaming queries. */
     kafkaBootstrapServers: Option[String] = None,
     /** I1: checkpoint root for streaming queries — offsets + state survive
@@ -421,7 +421,7 @@ final case class RuntimeConfig(
   * restarts failed streaming queries with exponential backoff.
   */
 final class Supervisor(val spark: SparkSession, val config: RuntimeConfig) {
-  val notifier = new Notifier(config.notifyBufferSize)
+  val notifier = new Notifier()
 
   val registry = new Registry(spark, config.specTablePath, config.env)
   private val streams = new ConcurrentHashMap[String, Stream]()

@@ -295,24 +295,25 @@ final class KeyedTableSink(
     * TTL is a directory delete, never a data rewrite. Returns the number of
     * partitions dropped. Partition dir names carry Spark's escaped partition
     * value (`__pdate=2024-06-01 00%3A00%3A00`); values are unescaped before
-    * comparison.
+    * comparison. Listing and deletes go through the Hadoop FileSystem of
+    * `path`, the same one the writes and reads use, so scheme-qualified
+    * paths (`file:`, `hdfs:`, `s3a:`) are collected too.
     */
   def gcMaxAge(olderThan: java.sql.Timestamp): Int = {
     require(partitionField.nonEmpty, s"table at $path has no time partitioning")
-    val root = new java.io.File(path)
-    val dirs = Option(root.listFiles()).getOrElse(Array.empty)
-      .filter(d => d.isDirectory && d.getName.startsWith("__pdate="))
-    def delete(f: java.io.File): Unit = {
-      Option(f.listFiles()).getOrElse(Array.empty).foreach(delete)
-      f.delete()
-    }
+    val root = new org.apache.hadoop.fs.Path(path)
+    val fs = root.getFileSystem(
+      org.apache.spark.sql.SparkSession.active.sparkContext.hadoopConfiguration)
+    val dirs = (if (fs.exists(root)) fs.listStatus(root).toSeq else Nil)
+      .filter(d => d.isDirectory && d.getPath.getName.startsWith("__pdate="))
+      .map(_.getPath)
     val dropped = dirs.filter { d =>
       val escaped = d.getName.stripPrefix("__pdate=")
       val value = java.net.URLDecoder.decode(escaped.replace("+", "%2B"), "UTF-8")
       try java.sql.Timestamp.valueOf(value).before(olderThan)
       catch { case _: IllegalArgumentException => false } // unknown dir: keep
     }
-    dropped.foreach(delete)
+    dropped.foreach(fs.delete(_, true))
     dropped.length
   }
 

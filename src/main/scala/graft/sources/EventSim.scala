@@ -27,8 +27,8 @@ import scala.jdk.CollectionConverters._
   * xxhash64(rowId, seed, fieldIndex), so the same (spec, seed, triggers)
   * produce identical events on any cluster layout — unlike the reference's
   * wall-clock rand, which its own tests work around. Batch mode powers the
-  * correctness harness; `stream` produces the same schema from the rate
-  * source for runtime use.
+  * correctness harness; `stream` produces the same schema from the
+  * built-in, epoch-anchored `rate-micro-batch` source for runtime use.
   */
 object EventSim {
 
@@ -311,23 +311,21 @@ object EventSim {
     withGeneratedJson(rows, spec, seed)
   }
 
-  /** Streaming generation over a tick source: same schema and generators;
-    * trigger index derives from the tick stream's value column.
-    * Sinusoid/random modulation drops excess rows of each trigger's
-    * allotment — a narrow filter, fully distributed.
+  /** Streaming generation over Spark's built-in `rate-micro-batch` source:
+    * same schema and generators; trigger index derives from the tick
+    * stream's value column. Sinusoid/random modulation drops excess rows
+    * of each trigger's allotment — a narrow filter, fully distributed.
     *
-    * The default tick source is the registered DataSource V2
-    * `format("eventsim")` ([[EventSimSourceProvider]] — SURVEY §2 A5's
-    * custom-source registry, end-to-end): clock anchored at
-    * `startTimestampMs` = 0, so replays are bit-deterministic and a
-    * uniform-rate stream equals [[batch]] row-for-row (ScalaTest-gated).
-    * Pass `format = "rate-micro-batch"` for the built-in wall-clock-
-    * anchored source — the projection is tick-schema-compatible with both.
+    * The source emits `rowsPerBatch` ticks per micro-batch and stamps
+    * micro-batch b with `startTimestamp + b * advanceMillisPerBatch`;
+    * `startTimestamp` stays at its default, the epoch, so replays are
+    * bit-deterministic and a uniform-rate stream equals [[batch]] at
+    * `Instant.EPOCH` row-for-row (ScalaTest-gated). Offsets checkpoint the
+    * tick index, so a restarted query resumes the clock where it stopped.
     */
-  def stream(spark: SparkSession, spec: SimSpec, seed: Long,
-      format: String = "eventsim"): DataFrame = {
+  def stream(spark: SparkSession, spec: SimSpec, seed: Long): DataFrame = {
     val maxPerTrigger = math.max(1, math.max(spec.eventGeneration.maxCount, 1))
-    val src = spark.readStream.format(format)
+    val src = spark.readStream.format("rate-micro-batch")
       .option("rowsPerBatch", maxPerTrigger)
       // source time advances by one sim resolution per micro-batch, so the
       // sinusoid phase matches the batch generator's trigger clock

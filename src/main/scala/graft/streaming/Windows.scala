@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import graft.functions.text.wordsOf
@@ -658,6 +658,30 @@ object Windows {
     }
   }
 
+  /** The keyed-state step the event-time twins below share: on a
+    * streaming input the `ts` column is watermarked and the state function
+    * may arm event-time timeouts; on a batch input the same function runs
+    * once per key with NoTimeout over the closed history — the
+    * batch-identical-path convention of this file. `step` receives the
+    * current watermark on streaming input and None on batch input (where
+    * the engine has no watermark to read), so each twin picks its own
+    * batch-mode value.
+    */
+  private def keyedState[T, K: Encoder, S: Encoder, U: Encoder](
+      events: Dataset[T], watermark: String)(key: T => K)(
+      step: (K, Iterator[T], GroupState[S], Option[Long]) => Iterator[U]): Dataset[U] = {
+    // captured BEFORE the state function: a Dataset referenced inside the
+    // closure ships with a null logical plan and NPEs on executors
+    val isStream = events.isStreaming
+    val src = if (isStream) events.withWatermark("ts", watermark) else events
+    val timeout = if (isStream) GroupStateTimeout.EventTimeTimeout()
+      else GroupStateTimeout.NoTimeout()
+    src.groupByKey(key)
+      .flatMapGroupsWithState(OutputMode.Append(), timeout)(
+        (k: K, rows: Iterator[T], state: GroupState[S]) =>
+          step(k, rows, state, if (isStream) Some(state.getCurrentWatermarkMs()) else None))
+  }
+
   final case class RollEvent(key: String, ts: java.sql.Timestamp, value: Long)
   final case class RollBuf(entries: List[(Long, Long)])
   final case class RollOutput(key: String, ts: java.sql.Timestamp, value: Long,
@@ -683,33 +707,28 @@ object Windows {
     implicit val stateEnc = Encoders.product[RollBuf]
     implicit val outEnc = Encoders.product[RollOutput]
     implicit val keyEnc = Encoders.STRING
-    val src = if (events.isStreaming) events.withWatermark("ts", watermark) else events
-    val timeout = if (events.isStreaming) GroupStateTimeout.EventTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
-    src.groupByKey(_.key)
-      .flatMapGroupsWithState(OutputMode.Append(), timeout)(
-        (key: String, rows: Iterator[RollEvent], state: GroupState[RollBuf]) => {
-          var buf = state.getOption.map(_.entries).getOrElse(Nil)
-          val out = List.newBuilder[RollOutput]
-          // ts-grouped ascending: equal-time rows are peers (RANGE-frame
-          // tie semantics) — every member of a tie group sees the whole
-          // group in its trailing sum
-          rows.toSeq.groupBy(_.ts.getTime).toSeq.sortBy(_._1).foreach {
-            case (t, group) =>
-              buf = group.map(e => (t, e.value)).toList ::: buf
-              val inWin = buf.filter { case (et, _) => et >= t - windowMs && et <= t }
-              val s = inWin.map(_._2).sum
-              val n = inWin.size.toLong
-              group.foreach(e => out += RollOutput(key, e.ts, e.value, s, n))
-          }
-          // prune entries no future event (ts ≥ watermark) can reach
-          // (batch mode / no watermark → 0 → nothing prunes, keep all)
-          val wm = try state.getCurrentWatermarkMs() catch { case _: Throwable => 0L }
-          val horizon = wm - windowMs
-          buf = buf.filter(_._1 >= horizon)
-          state.update(RollBuf(buf))
-          out.result().iterator
-        })
+    keyedState(events, watermark)(_.key) {
+      (key: String, rows: Iterator[RollEvent], state: GroupState[RollBuf], wm: Option[Long]) =>
+        var buf = state.getOption.map(_.entries).getOrElse(Nil)
+        val out = List.newBuilder[RollOutput]
+        // ts-grouped ascending: equal-time rows are peers (RANGE-frame
+        // tie semantics) — every member of a tie group sees the whole
+        // group in its trailing sum
+        rows.toSeq.groupBy(_.ts.getTime).toSeq.sortBy(_._1).foreach {
+          case (t, group) =>
+            buf = group.map(e => (t, e.value)).toList ::: buf
+            val inWin = buf.filter { case (et, _) => et >= t - windowMs && et <= t }
+            val s = inWin.map(_._2).sum
+            val n = inWin.size.toLong
+            group.foreach(e => out += RollOutput(key, e.ts, e.value, s, n))
+        }
+        // prune entries no future event (ts ≥ watermark) can reach
+        // (batch mode / no watermark → 0 → nothing prunes, keep all)
+        val horizon = wm.getOrElse(0L) - windowMs
+        buf = buf.filter(_._1 >= horizon)
+        state.update(RollBuf(buf))
+        out.result().iterator
+    }
   }
 
   /** Streaming twin of [[graft.ops.Temporal.intervalJoin]]: stream-stream
@@ -796,44 +815,39 @@ object Windows {
     implicit val stateEnc = Encoders.product[AsofState]
     implicit val outEnc = Encoders.product[AsofOut]
     implicit val keyEnc = Encoders.STRING
-    val streaming = left.isStreaming || right.isStreaming
     val env = left.map(e => AsofEnv(e.key, e.ts, 1, e.value))
       .unionByName(right.map(e => AsofEnv(e.key, e.ts, 0, e.rvalue)))
-    val src = if (streaming) env.withWatermark("ts", watermark) else env
-    val timeout = if (streaming) GroupStateTimeout.EventTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
-    src.groupByKey(_.key)
-      .flatMapGroupsWithState(OutputMode.Append(), timeout)(
-        (key: String, rows: Iterator[AsofEnv], state: GroupState[AsofState]) => {
-          var st = state.getOption.getOrElse(AsofState(Nil, Nil))
-          rows.foreach { e =>
-            val t = e.ts.getTime
-            if (e.side == 0) st = st.copy(rights = (t, e.value) :: st.rights)
-            else st = st.copy(lefts = (t, e.value) :: st.lefts)
-          }
-          val wm = try state.getCurrentWatermarkMs() catch { case _: Throwable => 0L }
-          // batch mode has no watermark: the history is closed, finalize all
-          val cut = if (streaming) wm else Long.MaxValue
-          val (ready, pending) = st.lefts.partition(_._1 <= cut)
-          val out = ready.sortBy(l => (l._1, l._2)).map { case (lt, lv) =>
-            val cand = st.rights.filter { case (rt, _) =>
-              rt <= lt && toleranceMs.forall(tol => lt - rt <= tol) }
-            val m = if (cand.isEmpty) None else Some(cand.max) // (rt, value) max = latest, max-payload tie-break
-            AsofOut(key, new java.sql.Timestamp(lt), lv,
-              m.map(r => new java.sql.Timestamp(r._1)), m.map(_._2))
-          }
-          // among rights at or before the watermark only the latest can
-          // ever match a future (post-watermark) left — drop the rest
-          val (rNew, rOld) = st.rights.partition(_._1 > wm)
-          val keep = rNew ::: (if (rOld.isEmpty) Nil else List(rOld.max))
-          state.update(AsofState(keep, pending))
-          if (streaming && pending.nonEmpty) {
-            // wake this key when the watermark reaches the earliest pending
-            // left (timeout timestamps must sit strictly past the watermark)
-            state.setTimeoutTimestamp(math.max(pending.map(_._1).min, wm + 1))
-          }
-          out.iterator
-        })
+    keyedState(env, watermark)(_.key) {
+      (key: String, rows: Iterator[AsofEnv], state: GroupState[AsofState], wm: Option[Long]) =>
+        var st = state.getOption.getOrElse(AsofState(Nil, Nil))
+        rows.foreach { e =>
+          val t = e.ts.getTime
+          if (e.side == 0) st = st.copy(rights = (t, e.value) :: st.rights)
+          else st = st.copy(lefts = (t, e.value) :: st.lefts)
+        }
+        // batch mode has no watermark: the history is closed, finalize all
+        val cut = wm.getOrElse(Long.MaxValue)
+        val (ready, pending) = st.lefts.partition(_._1 <= cut)
+        val out = ready.sortBy(l => (l._1, l._2)).map { case (lt, lv) =>
+          val cand = st.rights.filter { case (rt, _) =>
+            rt <= lt && toleranceMs.forall(tol => lt - rt <= tol) }
+          val m = if (cand.isEmpty) None else Some(cand.max) // (rt, value) max = latest, max-payload tie-break
+          AsofOut(key, new java.sql.Timestamp(lt), lv,
+            m.map(r => new java.sql.Timestamp(r._1)), m.map(_._2))
+        }
+        // among rights at or before the watermark only the latest can
+        // ever match a future (post-watermark) left — drop the rest
+        val (rNew, rOld) = st.rights.partition(_._1 > cut)
+        val keep = rNew ::: (if (rOld.isEmpty) Nil else List(rOld.max))
+        state.update(AsofState(keep, pending))
+        if (pending.nonEmpty) {
+          // only a streaming watermark leaves lefts pending: wake this key
+          // when the watermark reaches the earliest one (timeout
+          // timestamps must sit strictly past the watermark)
+          state.setTimeoutTimestamp(math.max(pending.map(_._1).min, cut + 1))
+        }
+        out.iterator
+    }
   }
 
   final case class KeyedEvent(key: String, ts: java.sql.Timestamp, value: Double)
@@ -897,64 +911,56 @@ object Windows {
     implicit val stateEnc = Encoders.product[GridBuf]
     implicit val outEnc = Encoders.product[GridOut]
     implicit val keyEnc = Encoders.STRING
-    val isStream = events.isStreaming
-    val src = if (isStream) events.withWatermark("ts", watermark) else events
-    val timeout = if (isStream) GroupStateTimeout.EventTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
-    src.groupByKey(_.key)
-      .flatMapGroupsWithState(OutputMode.Append(), timeout)(
-        (key: String, rows: Iterator[GridEvent], state: GroupState[GridBuf]) => {
-          val step = gridStepMs
-          var buf = state.getOption.getOrElse(
-            GridBuf(started = false, emitted = false, 0L, 0L, Long.MinValue, Map.empty))
-          // merge incoming rows into open buckets; a row whose bucket is
-          // behind the EMISSION frontier is late beyond repair → dropped
-          rows.foreach { e =>
-            val t = e.ts.getTime
-            val tick = Math.floorDiv(t, step) * step
-            val lateBeyondEmit = buf.emitted && tick < buf.nextTick
-            if (!lateBeyondEmit) {
-              val cur = buf.open.get(tick)
-              val keepNew = cur.forall { case (bt, bv, _) =>
-                t > bt || (t == bt && e.value > bv) }
-              val rep = if (keepNew) (t, e.value) else (cur.get._1, cur.get._2)
-              buf = buf.copy(
-                started = true,
-                // before any emission the grid start follows the earliest
-                // observed bucket (out-of-order-safe); after, it is pinned
-                nextTick = if (!buf.started) tick
-                  else if (!buf.emitted) math.min(buf.nextTick, tick)
-                  else buf.nextTick,
-                maxTick = math.max(buf.maxTick, tick),
-                open = buf.open + (tick -> ((rep._1, rep._2, cur.map(_._3).getOrElse(0L) + 1L))))
-            }
+    keyedState(events, watermark)(_.key) {
+      (key: String, rows: Iterator[GridEvent], state: GroupState[GridBuf], wm: Option[Long]) =>
+        val step = gridStepMs
+        var buf = state.getOption.getOrElse(
+          GridBuf(started = false, emitted = false, 0L, 0L, Long.MinValue, Map.empty))
+        // merge incoming rows into open buckets; a row whose bucket is
+        // behind the EMISSION frontier is late beyond repair → dropped
+        rows.foreach { e =>
+          val t = e.ts.getTime
+          val tick = Math.floorDiv(t, step) * step
+          val lateBeyondEmit = buf.emitted && tick < buf.nextTick
+          if (!lateBeyondEmit) {
+            val cur = buf.open.get(tick)
+            val keepNew = cur.forall { case (bt, bv, _) =>
+              t > bt || (t == bt && e.value > bv) }
+            val rep = if (keepNew) (t, e.value) else (cur.get._1, cur.get._2)
+            buf = buf.copy(
+              started = true,
+              // before any emission the grid start follows the earliest
+              // observed bucket (out-of-order-safe); after, it is pinned
+              nextTick = if (!buf.started) tick
+                else if (!buf.emitted) math.min(buf.nextTick, tick)
+                else buf.nextTick,
+              maxTick = math.max(buf.maxTick, tick),
+              open = buf.open + (tick -> ((rep._1, rep._2, cur.map(_._3).getOrElse(0L) + 1L))))
           }
-          val out = List.newBuilder[GridOut]
-          if (buf.started) {
-            val wm = if (isStream)
-              (try state.getCurrentWatermarkMs() catch { case _: Throwable => 0L })
-            else Long.MaxValue
-            // a bucket closes once tick + step <= wm; like the batch
-            // operator the grid never extends past the key's own last
-            // observed bucket
-            val horizon = math.min(if (isStream) wm - step else Long.MaxValue, buf.maxTick)
-            var t = buf.nextTick
-            var last = buf.last
-            while (t <= horizon) {
-              val obs = buf.open.get(t)
-              obs.foreach { case (_, v, _) => last = v }
-              out += GridOut(key, t, last, obs.map(_._3).getOrElse(0L))
-              buf = buf.copy(emitted = true, nextTick = t + step, last = last,
-                open = buf.open - t)
-              t += step
-            }
+        }
+        val out = List.newBuilder[GridOut]
+        if (buf.started) {
+          // a bucket closes once tick + step <= wm (batch: every bucket
+          // closes); like the batch operator the grid never extends past
+          // the key's own last observed bucket
+          val horizon = math.min(wm.fold(Long.MaxValue)(_ - step), buf.maxTick)
+          var t = buf.nextTick
+          var last = buf.last
+          while (t <= horizon) {
+            val obs = buf.open.get(t)
+            obs.foreach { case (_, v, _) => last = v }
+            out += GridOut(key, t, last, obs.map(_._3).getOrElse(0L))
+            buf = buf.copy(emitted = true, nextTick = t + step, last = last,
+              open = buf.open - t)
+            t += step
           }
-          if (isStream && buf.started && buf.nextTick <= buf.maxTick)
-            // pending ticks: re-arm so gap ticks emit as the watermark moves
-            state.setTimeoutTimestamp(buf.nextTick + step)
-          state.update(buf)
-          out.result().iterator
-        })
+        }
+        if (wm.isDefined && buf.started && buf.nextTick <= buf.maxTick)
+          // pending ticks: re-arm so gap ticks emit as the watermark moves
+          state.setTimeoutTimestamp(buf.nextTick + step)
+        state.update(buf)
+        out.result().iterator
+    }
   }
 
   final case class JourneyEvent(key: String, ts: java.sql.Timestamp, id: Long, typ: String)
@@ -985,34 +991,26 @@ object Windows {
     implicit val keyEnc = Encoders.STRING
     val re = pattern.r
     val gapMs = idleGapMs
-    // capture BEFORE the state function: a Dataset referenced inside the
-    // closure ships with a null logical plan and NPEs on executors
-    val isStream = events.isStreaming
-    val src = if (isStream) events.withWatermark("ts", watermark) else events
-    val timeout = if (isStream) GroupStateTimeout.EventTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
-    src.groupByKey(_.key)
-      .flatMapGroupsWithState(OutputMode.Append(), timeout)(
-        (key: String, rows: Iterator[JourneyEvent], state: GroupState[JourneyBuf]) => {
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
+    keyedState(events, watermark)(_.key) {
+      (key: String, rows: Iterator[JourneyEvent], state: GroupState[JourneyBuf], wm: Option[Long]) =>
+        if (state.hasTimedOut) { state.remove(); Iterator.empty }
+        else {
+          val prev = state.getOption.getOrElse(JourneyBuf(Nil, matched = false))
+          if (prev.matched) { rows.foreach(_ => ()); Iterator.empty }
           else {
-            val prev = state.getOption.getOrElse(JourneyBuf(Nil, matched = false))
-            if (prev.matched) { rows.foreach(_ => ()); Iterator.empty }
-            else {
-              val merged = (prev.entries ++
-                rows.map(e => (e.ts.getTime, e.id, e.typ))).sortBy(t => (t._1, t._2))
-              val journey = merged.map(_._3).mkString(sep)
-              val hit = re.findFirstIn(journey).isDefined
-              if (isStream) {
-                val wm = try state.getCurrentWatermarkMs() catch { case _: Throwable => 0L }
-                val last = merged.lastOption.map(_._1).getOrElse(wm)
-                state.setTimeoutTimestamp(math.max(last, wm + 1) + gapMs)
-              }
-              state.update(JourneyBuf(if (hit) Nil else merged, matched = hit))
-              if (hit) Iterator(JourneyHit(key, journey)) else Iterator.empty
+            val merged = (prev.entries ++
+              rows.map(e => (e.ts.getTime, e.id, e.typ))).sortBy(t => (t._1, t._2))
+            val journey = merged.map(_._3).mkString(sep)
+            val hit = re.findFirstIn(journey).isDefined
+            wm.foreach { w =>
+              val last = merged.lastOption.map(_._1).getOrElse(w)
+              state.setTimeoutTimestamp(math.max(last, w + 1) + gapMs)
             }
+            state.update(JourneyBuf(if (hit) Nil else merged, matched = hit))
+            if (hit) Iterator(JourneyHit(key, journey)) else Iterator.empty
           }
-        })
+        }
+    }
   }
 
   final case class TrendEvent(ts: java.sql.Timestamp, item: String)
@@ -1045,43 +1043,36 @@ object Windows {
     implicit val stateEnc = Encoders.product[TrendBuf]
     implicit val outEnc = Encoders.product[TrendOut]
     implicit val keyEnc = Encoders.scalaLong
-    val isStream = events.isStreaming
-    val src = if (isStream) events.withWatermark("ts", watermark) else events
-    val timeout = if (isStream) GroupStateTimeout.EventTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
     def topK(ws: Long, counts: Map[String, Long]): Iterator[TrendOut] =
       counts.toSeq.sortBy { case (item, c) => (-c, item) }.take(k)
         .zipWithIndex.map { case ((item, c), i) => TrendOut(ws, item, c, i + 1L) }
         .iterator
-    src.groupByKey(e => Math.floorDiv(e.ts.getTime, windowMs) * windowMs)
-      .flatMapGroupsWithState(OutputMode.Append(), timeout)(
-        (ws: Long, rows: Iterator[TrendEvent], state: GroupState[TrendBuf]) => {
-          if (state.hasTimedOut) {
-            // watermark passed window end: the window is final — rank & emit
-            val counts = state.getOption.map(_.counts).getOrElse(Map.empty[String, Long])
-            state.remove()
-            topK(ws, counts)
-          } else {
-            var counts = state.getOption.map(_.counts).getOrElse(Map.empty[String, Long])
-            rows.foreach { e =>
-              counts = counts.updated(e.item, counts.getOrElse(e.item, 0L) + 1L)
-            }
-            if (!isStream) topK(ws, counts)
-            else {
-              val wm = try state.getCurrentWatermarkMs() catch { case _: Throwable => 0L }
-              if (ws + windowMs <= wm) {
-                // window already closed when its first data arrived in this
-                // batch (watermark advanced within the same trigger) — emit
-                // now; later rows are watermark-dropped, so no double emit
-                state.remove()
-                topK(ws, counts)
-              } else {
-                state.update(TrendBuf(counts))
-                state.setTimeoutTimestamp(ws + windowMs)
-                Iterator.empty
-              }
-            }
+    keyedState(events, watermark)(e => Math.floorDiv(e.ts.getTime, windowMs) * windowMs) {
+      (ws: Long, rows: Iterator[TrendEvent], state: GroupState[TrendBuf], wm: Option[Long]) =>
+        if (state.hasTimedOut) {
+          // watermark passed window end: the window is final — rank & emit
+          val counts = state.getOption.map(_.counts).getOrElse(Map.empty[String, Long])
+          state.remove()
+          topK(ws, counts)
+        } else {
+          var counts = state.getOption.map(_.counts).getOrElse(Map.empty[String, Long])
+          rows.foreach { e =>
+            counts = counts.updated(e.item, counts.getOrElse(e.item, 0L) + 1L)
           }
-        })
+          wm match {
+            case None => topK(ws, counts)
+            case Some(w) if ws + windowMs <= w =>
+              // window already closed when its first data arrived in this
+              // batch (watermark advanced within the same trigger) — emit
+              // now; later rows are watermark-dropped, so no double emit
+              state.remove()
+              topK(ws, counts)
+            case Some(_) =>
+              state.update(TrendBuf(counts))
+              state.setTimeoutTimestamp(ws + windowMs)
+              Iterator.empty
+          }
+        }
+    }
   }
 }

@@ -112,11 +112,11 @@ class EventSimSpec extends AnyFunSuite {
     assert(byTrigger(15L) == 5, "quarter period → midpoint")
   }
 
-  test("DataSource V2 format(\"eventsim\") stream replays EventSim.batch bit-for-bit") {
+  test("rate-micro-batch stream replays EventSim.batch bit-for-bit") {
     // uniform rate (one event per trigger): stream tick ids equal batch row
     // ids, so the generated JSON must match EXACTLY for the same seed. The
-    // v2 source anchors trigger 0 at startTimestampMs=0, so the batch twin
-    // uses Instant.EPOCH.
+    // built-in source anchors trigger 0 at its default startTimestamp (the
+    // epoch), so the batch twin uses Instant.EPOCH.
     val uniform = EventSim.parseSpec(
       """{
         |  "simResolutionMilliseconds": 1000,
@@ -140,24 +140,37 @@ class EventSimSpec extends AnyFunSuite {
       val want = EventSim.batch(spark, uniform, triggers = 5,
         java.time.Instant.EPOCH, seed = 7L).orderBy("trigger").collect().map(_.toSeq)
       assert(got.toSeq == want.toSeq,
-        "format(\"eventsim\") stream must equal the batch generator row-for-row")
+        "the rate-micro-batch stream must equal the batch generator row-for-row")
     } finally q.stop()
   }
 
-  test("eventsim v2 bounded batch read honors numBatches and the tick clock") {
-    val ticks = spark.read.format("eventsim")
-      .option("rowsPerBatch", 3).option("advanceMillisPerBatch", 500)
-      .option("numBatches", 4).load()
-    val rows = ticks.orderBy("value").collect()
-    assert(rows.length == 12)
-    assert(rows.map(_.getLong(1)).toSeq == (0L until 12L))
-    // trigger b's timestamp = b * advanceMillis (micros precision)
-    val tsOfLast = rows.last.getTimestamp(0).getTime
-    assert(tsOfLast == 3 * 500)
+  test("a checkpointed eventsim stream resumes its tick clock") {
+    // two AvailableNow runs on one checkpoint: the first emits trigger 0,
+    // the restart resumes from the checkpointed offset and emits trigger 1
+    // (not trigger 0 again), stamped one sim resolution later. A constant
+    // 3 events per trigger keeps stream tick ids equal to batch row ids.
+    val constant = EventSim.parseSpec(simJson.replace(
+      "\"minCount\": 2, \"maxCount\": 5", "\"minCount\": 3, \"maxCount\": 3"))
+    val checkpoint = java.nio.file.Files.createTempDirectory("evsim-ckpt").toString
+    val out = java.nio.file.Files.createTempDirectory("evsim-out").toString
+    def runOnce(): Unit = EventSim.stream(spark, constant, seed = 42L)
+      .writeStream.format("parquet").option("path", out)
+      .option("checkpointLocation", checkpoint)
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start().awaitTermination()
+    runOnce()
+    val first = spark.read.parquet(out).select("trigger").distinct().collect().map(_.getLong(0))
+    assert(first.toSeq == Seq(0L), "the first run emits trigger 0 only")
+    runOnce()
+    val got = spark.read.parquet(out).orderBy("trigger", "value").collect().map(_.toSeq)
+    val want = EventSim.batch(spark, constant, triggers = 2, java.time.Instant.EPOCH, seed = 42L)
+      .orderBy("trigger", "value").collect().map(_.toSeq)
+    assert(got.length == 6)
+    assert(got.toSeq == want.toSeq, "two resumed runs must equal triggers 0 and 1 of the batch generator")
   }
 
   test("streaming variant produces the same schema via rate-micro-batch") {
-    val q = EventSim.stream(spark, spec, seed = 42L, format = "rate-micro-batch")
+    val q = EventSim.stream(spark, spec, seed = 42L)
       .writeStream.format("memory").queryName("evsim").outputMode("append").start()
     try {
       // rate source is unbounded: await a few micro-batches, then stop

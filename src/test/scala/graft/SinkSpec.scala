@@ -145,6 +145,13 @@ class SinkSpec extends AnyFunSuite {
     assert(dropped == 1, "exactly the 06-01 partition must drop")
     assert(sink.all(spark).select("key").as[String].collect().toSeq == Seq("k3"))
     assert(sink.gcMaxAge(java.sql.Timestamp.valueOf("2024-06-02 00:00:00")) == 0, "idempotent")
+    // a scheme-qualified path is the same table to writes, reads and gc
+    val uriSink = new KeyedTableSink(new java.io.File(tmp()).toURI.toString,
+      partitionField = "dateIngested", partitionType = "DAY")
+    uriSink.write(rows)
+    assert(uriSink.gcMaxAge(java.sql.Timestamp.valueOf("2024-06-02 00:00:00")) == 1,
+      "a file: URI path must drop the 06-01 partition too")
+    assert(uriSink.all(spark).select("key").as[String].collect().toSeq == Seq("k3"))
   }
 
   test("G6 requirePartitionFilter: full scans refused, ranged + keyed reads allowed") {
