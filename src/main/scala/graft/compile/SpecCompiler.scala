@@ -226,16 +226,24 @@ object SpecCompiler {
       * projected to the branch schema after `keepColumns`.
       */
     def rowsOf(tagged: DataFrame, i: Int, keepColumns: Seq[String] = Nil): DataFrame =
-      tagged.filter(col(routed(i)) && col(ok(i)))
+      tagged.filter(emitted(i))
         .select(keepColumns.map(c => col(s"`$c`")) ++
-          branches(i).outputColumns.map(c => col(s"`${out(i, c)}`").as(c)): _*)
+          branches(i).outputColumns.map(c => outputCol(i, c).as(c)): _*)
+
+    /** True on tagged rows that branch `i` emits (routed and transformed):
+      * the rows [[rowsOf]] keeps.
+      */
+    def emitted(i: Int): Column = col(routed(i)) && col(ok(i))
+
+    /** Branch `i`'s output column `c`, read on a tagged frame. */
+    def outputCol(i: Int, c: String): Column = col(s"`${out(i, c)}`")
 
     /** True on tagged rows that yield ≥1 transformed record — the H1
       * `BytesIngested` predicate (executor.go:214-237: a non-nil transform
       * output credits the raw event's bytes; excluded / unrouted /
       * transform-error events credit nothing).
       */
-    def ingested: Column = anyBranch(i => col(routed(i)) && col(ok(i)))
+    def ingested: Column = anyBranch(emitted)
 
     /** True on tagged rows that some routed branch failed to transform
       * (regexp non-match or time conversion, userAgent unescape) — the

@@ -30,18 +30,35 @@ object UserAgentParser {
       mobile: Boolean
   ) {
     def toJson: String = {
-      def q(s: String) = "\"" + s.flatMap {
-        case '"' => "\\\""
-        case '\\' => "\\\\"
-        case '<' => "\\u003c" // Go json.Marshal HTML-escapes these by default
-        case '>' => "\\u003e"
-        case '&' => "\\u0026"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"
-        case c => c.toString
-      } + "\""
-      s"""{"platform":${q(platform)},"operatingSystem":{"name":${q(osName)},"fullName":${q(osFullName)},"version":${q(osVersion)}},""" +
-        s""""localization":${q(localization)},"browser":{"name":${q(browserName)},"version":${q(browserVersion)},""" +
-        s""""engine":${q(engine)},"engineVersion":${q(engineVersion)}},"bot":$bot,"mobile":$mobile}"""
+      val b = new java.lang.StringBuilder(256)
+      def q(s: String): Unit = {
+        b.append('"')
+        var i = 0
+        while (i < s.length) {
+          s.charAt(i) match {
+            case '"' => b.append("\\\"")
+            case '\\' => b.append("\\\\")
+            case '<' => b.append("\\u003c") // Go json.Marshal HTML-escapes these by default
+            case '>' => b.append("\\u003e")
+            case '&' => b.append("\\u0026")
+            case c if c < ' ' => b.append(f"\\u${c.toInt}%04x")
+            case c => b.append(c)
+          }
+          i += 1
+        }
+        b.append('"')
+      }
+      b.append("{\"platform\":"); q(platform)
+      b.append(",\"operatingSystem\":{\"name\":"); q(osName)
+      b.append(",\"fullName\":"); q(osFullName)
+      b.append(",\"version\":"); q(osVersion)
+      b.append("},\"localization\":"); q(localization)
+      b.append(",\"browser\":{\"name\":"); q(browserName)
+      b.append(",\"version\":"); q(browserVersion)
+      b.append(",\"engine\":"); q(engine)
+      b.append(",\"engineVersion\":"); q(engineVersion)
+      b.append("},\"bot\":").append(bot).append(",\"mobile\":").append(mobile).append('}')
+      b.toString
     }
   }
 
@@ -54,10 +71,6 @@ object UserAgentParser {
   private val windowsNames = Map(
     "10.0" -> "10", "6.3" -> "8.1", "6.2" -> "8",
     "6.1" -> "7", "6.0" -> "Vista", "5.1" -> "XP")
-  /** One "Name/version" token pattern per product name [[product]] takes. */
-  private val products: Map[String, Pattern] =
-    Seq("AppleWebKit", "Gecko", "Trident", "Edg", "Edge", "OPR", "Chrome", "Firefox", "Version")
-      .map(n => n -> Pattern.compile(Pattern.quote(n) + """/([\w.]+)""")).toMap
 
   /** URL-unescape then parse. Returns None only on invalid URL escaping
     * (the reference's sole error path, ua.go:33-36).
@@ -162,9 +175,23 @@ object UserAgentParser {
     ua.substring(open + 1, close).split(";").map(_.trim).toSeq.filter(_.nonEmpty)
   }
 
-  /** "Name/version" product token. */
-  private def product(ua: String, name: String): Option[(String, String)] = {
-    val m = products(name).matcher(ua)
-    if (m.find()) Some((name, m.group(1))) else None
+  /** "Name/version" product token: the first "Name/" followed by at least
+    * one version character `[A-Za-z0-9_.]`, its version the longest such
+    * run (the regex `Name/([\w.]+)`, scanned without one).
+    */
+  private[graft] def product(ua: String, name: String): Option[(String, String)] = {
+    val token = name + "/"
+    var at = ua.indexOf(token)
+    while (at >= 0) {
+      val from = at + token.length
+      var end = from
+      while (end < ua.length && isVersionChar(ua.charAt(end))) end += 1
+      if (end > from) return Some((name, ua.substring(from, end)))
+      at = ua.indexOf(token, at + 1)
+    }
+    None
   }
+
+  private def isVersionChar(c: Char): Boolean =
+    (c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z') || (c >= '0' && c <= '9') || c == '_' || c == '.'
 }

@@ -1,9 +1,9 @@
 package graft.runtime
 
 import java.util.concurrent.atomic.AtomicLong
-import java.util.concurrent.{ArrayBlockingQueue, ConcurrentHashMap}
+import java.util.concurrent.{ArrayBlockingQueue, ConcurrentHashMap, TimeoutException}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -13,6 +13,8 @@ import graft.sinks.{KeyedTableSink, SinkCompiler, VoidSink}
 import graft.sources.{EventSim, KafkaSource}
 import graft.spec.{Houe, SpecValidationException, StreamSpec}
 
+import scala.concurrent.Await
+import scala.concurrent.duration._
 import scala.jdk.CollectionConverters._
 
 /** Per-stream running metrics (reference entity/common.go:36-73; counters
@@ -267,17 +269,42 @@ final class Stream(
     }).cache())
 
     // ONE aggregation over the cache (it also materializes it) carries the
-    // processed counters, the ingested bytes, the error count and the hook
-    // action tallies. Per-batch job budget: each extra action is a fixed
-    // scheduler cost on every micro-batch.
+    // processed counters, the ingested bytes, the error count, the hook
+    // action tallies and each (branch, table) load's row count. Per-batch
+    // job budget: each extra action is a fixed scheduler cost on every
+    // micro-batch.
     val len = col(CompiledPipeline.Len)
     def tally(act: String) = if (hooked) count(when(col("__act") === act, 1)) else lit(0L)
-    val stats = tagged.select(
+    val targets = if (tables.nonEmpty) tables.map(Some(_)) else Seq(None)
+    val post = supervisor.config.postTransformStage
+    // a table's rows are its branch's emitted rows that pass the table's
+    // whitelist, read on the tagged columns; insert-id dedup never empties
+    // a non-empty frame, so the count decides the skip exactly. Unknown
+    // (None) under an F10 post-transform stage, which may drop, add or
+    // rename rows and columns, and for a whitelist id that names no branch
+    // output column (the table stage resolves it, or fails, at load time).
+    def tableRows(i: Int, table: Option[SinkCompiler.TableSpec]): Option[Column] =
+      if (post.nonEmpty) None
+      else table.flatMap(_.whitelist) match {
+        case None => Some(count(when(pipeline.emitted(i), 1)))
+        case Some(w) =>
+          pipeline.branches(i).outputColumns
+            .find(c => c.equalsIgnoreCase(w.id) && !w.id.exists(".`".contains(_)))
+            .map(c => count(when(pipeline.emitted(i) &&
+              SinkCompiler.whitelistPred(w, _ => pipeline.outputCol(i, c)), 1)))
+      }
+    val counted = for {
+      i <- pipeline.branches.indices; (t, j) <- targets.zipWithIndex; c <- tableRows(i, t)
+    } yield (i, j) -> c
+    val counters = Seq(
       count(lit(1)),
       coalesce(sum(if (hooked) col("__rawlen") else len).cast("long"), lit(0L)),
       coalesce(sum(when(pipeline.ingested, len)).cast("long"), lit(0L)),
       count(when(pipeline.failed, 1)),
-      tally("u"), tally("x")).collect()(0)
+      tally("u"), tally("x"))
+    val stats = tagged.select(counters ++ counted.map(_._2): _*).collect()(0)
+    val knownRows = counted.map(_._1).zipWithIndex
+      .map { case (ij, k) => ij -> stats.getLong(counters.size + k) }.toMap
 
     // Processed counters advance whether or not the sink loads succeed
     // (executor_test.go:536-575: Microbatches/EventsProcessed/BytesProcessed
@@ -297,17 +324,23 @@ final class Stream(
     }
     if (stats.getLong(5) > 0) shutdownRequested = true
 
+    // Nothing transformed for a table → successful no-op: no load attempt,
+    // no sink operation, no error simulation, no file (executor.go:240-243;
+    // executor_test.go:518-533 pins SinkOperations/EventsStoredInSink flat
+    // across an all-excluded batch). The table's stats count decides it;
+    // where that count is unknown, one `count` of the table's frame does.
+    // Either count is also the keyed write's file-packing hint.
     pipeline.branches.indices.foreach { i =>
       val branchDf0 = pipeline.rowsOf(tagged, i)
       // F10 post-transform hook stage on the branch output.
-      val branchDf = supervisor.config.postTransformStage
-        .map(stage => stage(spec, branchDf0)).getOrElse(branchDf0)
-      val routed: Seq[(String, DataFrame)] =
-        if (tables.nonEmpty) tables.map(tb => tb.name -> SinkCompiler.tableStage(tb)(branchDf))
-        else Seq("default" -> branchDf)
-      routed.foreach { case (tableName, out) =>
-        val rid = loadWithRetry(out, tableName)
-        if (rid.nonEmpty) resourceId = rid
+      val branchDf = post.map(stage => stage(spec, branchDf0)).getOrElse(branchDf0)
+      targets.zipWithIndex.foreach { case (table, j) =>
+        val out = table.fold(branchDf)(SinkCompiler.tableStage(_)(branchDf))
+        val rows = knownRows.getOrElse((i, j), out.count())
+        if (rows > 0) {
+          val rid = loadWithRetry(out, table.fold("default")(_.name), rows)
+          if (rid.nonEmpty) resourceId = rid
+        }
       }
     }
 
@@ -334,46 +367,47 @@ final class Stream(
   /** Sink load with event-level retry + exponential backoff
     * (executor.go:282-329; defaults entity/spec.go:11-18). Unretryable
     * errors propagate immediately; retryable retry up to
-    * maxEventProcessingRetries. Returns the load's resource id, "" when
-    * nothing was loaded.
+    * maxEventProcessingRetries. Returns the load's resource id.
+    *
+    * The keyed and void targets observe the frame they write (an
+    * `Observation` of its row count and, for a keyed table, its min row
+    * key), so the load's one action — the keyed parquet write or the void
+    * sink's `noop` write — also reports what it wrote: `EventsStoredInSink`
+    * and the resource id come from the written rows themselves
+    * (current_timestamp row keys included), with no separate action. A
+    * custom loader's rows are one plain `count` of its frame. `rows` (the
+    * caller's count, before insert-id dedup) is the keyed write's
+    * file-packing hint.
     */
-  private def loadWithRetry(out0: DataFrame, tableName: String): String = {
+  private def loadWithRetry(out: DataFrame, tableName: String, rows: Long): String = {
     val maxRetries = spec.ops.maxEventProcessingRetries
-    // cache: write + stats must observe the SAME rows (current_timestamp
-    // row keys would otherwise differ between the write and the stats scan)
-    val out = out0.cache()
-    try {
-    // Nothing transformed for this table → successful no-op: no load
-    // attempt, no sink operation, no error simulation (executor.go:240-243;
-    // executor_test.go:518-533 pins SinkOperations/EventsStoredInSink flat
-    // across an all-excluded batch). ONE action probes the batch size AND
-    // (keyed sinks) the deterministic min row key, materializing the cache
-    // the write below reuses — every job is a fixed cost paid on each
-    // micro-batch. The probe sits OUTSIDE the retry loop: retries re-run
-    // only the write.
     // The target, chosen once: an A5 pluggable loader, else the keyed
     // table when the rows carry a key, else the void sink.
     val loader = supervisor.config.customLoaders.get(spec.sink.sinkType)
     val keyed = keyedSinkFor(tableName).filter(_ => loader.isEmpty && out.columns.contains("key"))
-    val probe = out.select(count(lit(1)) +: keyed.map(_ => min(col("key"))).toSeq: _*).collect()(0)
-    val batchRows = probe.getLong(0)
+    // one Observation per attempt: a failed action completes it, empty
+    def observed(write: DataFrame => Unit): Row = {
+      val obs = Observation()
+      write(out.observe(obs, count(lit(1)).as("rows"), keyed.map(_ => min(col("key")).as("key")).toSeq: _*))
+      Stream.observedRow(obs, spec.id)
+    }
     def load(attempt: Int, backoffMs: Long): String =
       try {
         val t0 = System.nanoTime()
-        val rid = (loader, keyed) match {
-          case (Some(l), _) => l(spec, out) // the loader returns the resource id
+        val (stored, rid) = (loader, keyed) match {
+          case (Some(l), _) => (out.count(), l(spec, out)) // the loader returns the resource id
           case (None, Some(ks)) =>
-            ks.write(out, batchRows) // size hint packs small-batch files
-            Option(probe.getString(1)).getOrElse("") // the min key came with the probe
+            val seen = observed(ks.write(_, rows)) // size hint packs small-batch files
+            (seen.getLong(0), Option(seen.get(1)).fold("")(_.toString))
           case (None, None) =>
-            voidSink.load()
-            "<noResourceId>"
+            voidSink.load() // a simulated error throws before the write
+            (observed(_.write.format("noop").mode("overwrite").save()).getLong(0), "<noResourceId>")
         }
         metrics.sinkOperations.incrementAndGet()
         // per successful load, like the reference's sinkMetrics.Events
         // (executor.go:295) — NOT at batch end, so a later houe=fail abort
         // still accounts rows that did land in the sink
-        metrics.eventsStoredInSink.addAndGet(batchRows)
+        metrics.eventsStoredInSink.addAndGet(stored)
         metrics.sinkProcessingTimeMicros.addAndGet((System.nanoTime() - t0) / 1000)
         rid
       } catch {
@@ -384,9 +418,29 @@ final class Stream(
         case e: VoidSink.SimulatedError if e.retryable =>
           throw new RetryableStreamException(s"retries exhausted after $attempt attempts", e)
       }
-    if (batchRows == 0L) "" else load(0, supervisor.config.retryBackoffBaseMs)
-    } finally out.unpersist()
+    load(0, supervisor.config.retryBackoffBaseMs)
   }
+}
+
+object Stream {
+  /** How long a load waits for its observed row count after the write
+    * returned. The listener bus delivers an `Observation` within
+    * milliseconds of its action; the bound turns an event the bus never
+    * delivers (its shared queue drops events when it overflows) into an
+    * error instead of a batch thread blocked for good.
+    */
+  val ObservationTimeout: FiniteDuration = 60.seconds
+
+  /** The row `obs` observed, waiting at most `timeout`; on timeout, an
+    * error naming stream `streamId`.
+    */
+  private[graft] def observedRow(obs: Observation, streamId: String,
+      timeout: FiniteDuration = ObservationTimeout): Row =
+    try Await.result(obs.future, timeout)
+    catch {
+      case e: TimeoutException => throw new IllegalStateException(
+        s"stream $streamId: the sink write completed but its row count did not arrive within $timeout", e)
+    }
 }
 
 final case class RuntimeConfig(

@@ -108,10 +108,14 @@ object SinkCompiler {
     }
   }
 
-  /** Whitelist routing (G2): `or` = any value matches; `and` = all match. */
-  def whitelistPred(w: Whitelist): Column = w.wtype match {
-    case "and" => w.values.map(v => col(w.id) === lit(v)).reduceOption(_ && _).getOrElse(lit(true))
-    case _ => col(w.id).isin(w.values.map(_.asInstanceOf[Any]): _*)
+  /** Whitelist routing (G2): `or` = any value matches; `and` = all match.
+    * `field` resolves the whitelisted field id to a column — by name on a
+    * branch output, or to its tagged-frame column when the runtime counts
+    * a table's rows before the table stage runs.
+    */
+  def whitelistPred(w: Whitelist, field: String => Column = col): Column = w.wtype match {
+    case "and" => w.values.map(v => field(w.id) === lit(v)).reduceOption(_ && _).getOrElse(lit(true))
+    case _ => field(w.id).isin(w.values.map(_.asInstanceOf[Any]): _*)
   }
 
   /** Row-key synthesis (G1): concat of field values with delimiter;
@@ -231,8 +235,8 @@ final class KeyedTableSink(
       * small-files failure on a long-lived table. Default ~1M small keyed
       * rows ≈ tens of MB of parquet, a sane file size for later scans;
       * tunable per sink via the `rowsPerFile` sink property (rows are the
-      * unit the runtime's fused batch probe already knows — no byte
-      * estimation pass).
+      * unit the runtime already knows: each table's row count rides the
+      * batch's stats aggregate — no byte estimation pass, no extra action).
       */
     val rowsPerFile: Long = 1000000L) {
   require(rowsPerFile >= 1, s"rowsPerFile must be >= 1 (got $rowsPerFile)")

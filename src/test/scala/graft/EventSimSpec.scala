@@ -170,20 +170,16 @@ class EventSimSpec extends AnyFunSuite {
   }
 
   test("streaming variant produces the same schema via rate-micro-batch") {
-    val q = EventSim.stream(spark, spec, seed = 42L)
-      .writeStream.format("memory").queryName("evsim").outputMode("append").start()
-    try {
-      // rate source is unbounded: await a few micro-batches, then stop
-      // (processAllAvailable would block forever here).
-      val deadline = System.currentTimeMillis() + 15000
-      while (spark.table("evsim").isEmpty && System.currentTimeMillis() < deadline)
-        Thread.sleep(500)
-      val got = spark.table("evsim")
-      assert(got.schema.fieldNames.toSeq == Seq("trigger", "ts", "value"))
-      if (got.count() > 0) {
-        assert(got.select(get_json_object(col("value"), "$.name")).collect()
-          .forall(r => Set("CONN_OPENED", "CONN_CLOSED")(r.getString(0))))
-      }
-    } finally q.stop()
+    // one AvailableNow run (as in the resume test above) ends on its own
+    // after the ticks available at start, so the check needs no sleep loop
+    EventSim.stream(spark, spec, seed = 42L)
+      .writeStream.format("memory").queryName("evsim").outputMode("append")
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start().awaitTermination()
+    val got = spark.table("evsim")
+    assert(got.schema.fieldNames.toSeq == Seq("trigger", "ts", "value"))
+    val names = got.select(get_json_object(col("value"), "$.name")).collect().map(_.getString(0))
+    assert(names.nonEmpty, "the run emitted events")
+    assert(names.forall(Set("CONN_OPENED", "CONN_CLOSED")), names.distinct.mkString(","))
   }
 }

@@ -106,6 +106,25 @@ class HooksSpec extends AnyFunSuite {
     g.shutdown()
   }
 
+  test("post-transform stage may add the column a sink table whitelists (F10 + G2)") {
+    val stage: Hooks.PostTransformStage = (_, df) => df.withColumn("route", upper(col("name")))
+    val g = new Geist(spark, RuntimeConfig(retryBackoffBaseMs = 1, postTransformStage = Some(stage),
+      sinkRoot = Some(java.nio.file.Files.createTempDirectory("graft-hk").toString)))
+    val spec = apiSpec("postwl").replace(""""sink": {"type": "void"}""",
+      """"sink": {"type": "bigtable", "config": {"customConfig": {"tables": [
+        |  {"name": "t", "whitelist": {"id": "route", "type": "or", "values": ["KEEP"]},
+        |   "rowKey": {"keys": ["name"], "delimiter": "#"},
+        |   "columnFamilies": [{"name": "d", "columnQualifiers": [{"id": "route", "name": "r"}]}]}
+        |]}}}""".stripMargin)
+    val id = g.registerStream(spec).fold(e => fail(e.msg), identity)
+    assert(g.publish(id, """{"name": "keep"}""") == "keep", "resource id = the written row key")
+    assert(g.metrics(id)("SinkOperations") == 1 && g.metrics(id)("EventsStoredInSink") == 1)
+    g.publish(id, """{"name": "drop"}""") // the added column fails the whitelist: no load
+    assert(g.metrics(id)("EventsProcessed") == 2)
+    assert(g.metrics(id)("SinkOperations") == 1 && g.metrics(id)("EventsStoredInSink") == 1)
+    g.shutdown()
+  }
+
   test("custom pluggable source round trip (A5, geist_test.go emitter example)") {
     val builder = (s: org.apache.spark.sql.SparkSession, spec: graft.spec.StreamSpec) => {
       import s.implicits._

@@ -176,6 +176,46 @@ class PropertySpec extends AnyFunSuite {
     }
   }
 
+  test("userAgent product scan equals the Name/([\\w.]+) regex; toJson serializes as before") {
+    import graft.functions.UserAgentParser
+    val names = Seq("AppleWebKit", "Gecko", "Trident", "Edg", "Edge", "OPR", "Chrome", "Firefox", "Version")
+    // the regex the scan replaced, and the per-character serializer the
+    // single-builder toJson replaced
+    val regex = names.map(n => n -> java.util.regex.Pattern.compile(
+      java.util.regex.Pattern.quote(n) + """/([\w.]+)""")).toMap
+    def q(s: String) = "\"" + s.flatMap {
+      case '"' => "\\\""
+      case '\\' => "\\\\"
+      case '<' => "\\u003c"
+      case '>' => "\\u003e"
+      case '&' => "\\u0026"
+      case c if c < ' ' => f"\\u${c.toInt}%04x"
+      case c => c.toString
+    } + "\""
+    def oldJson(u: UserAgentParser.Ua) =
+      s"""{"platform":${q(u.platform)},"operatingSystem":{"name":${q(u.osName)},"fullName":${q(u.osFullName)},"version":${q(u.osVersion)}},""" +
+        s""""localization":${q(u.localization)},"browser":{"name":${q(u.browserName)},"version":${q(u.browserVersion)},""" +
+        s""""engine":${q(u.engine)},"engineVersion":${q(u.engineVersion)}},"bot":${u.bot},"mobile":${u.mobile}}"""
+    // UA-shaped strings: product tokens (with and without a version, some
+    // glued to a following name), comments, separators and characters the
+    // JSON serializer must escape
+    val piece: Gen[String] = Gen.frequency(
+      4 -> Gen.zip(Gen.oneOf(names), Gen.oneOf("/", "/ ", "//", ""),
+        Gen.stringOf(Gen.oneOf("0123456789._abzAZ-+ ".toSeq))).map { case (n, s, v) => n + s + v },
+      2 -> Gen.oneOf(" (", ")", "; ", " ", "Mozilla/5.0", "Windows NT 10.0", "Android 10",
+        "CPU iPhone OS 14_8 like Mac OS X", "Intel Mac OS X 10_15_7", "en-US", "wv", "Safari/537.36"),
+      1 -> Gen.stringOf(Gen.oneOf("\"\\<>&\u0001\t\u00e9é/;()".toSeq)))
+    val uaGen = Gen.listOf(piece).map(_.mkString)
+    forAll(uaGen, n = 500) { ua =>
+      names.foreach { n =>
+        val m = regex(n).matcher(ua)
+        assert(UserAgentParser.product(ua, n) == (if (m.find()) Some((n, m.group(1))) else None), s"$n in [$ua]")
+      }
+      val parsed = UserAgentParser.parseDecoded(ua)
+      assert(parsed.toJson == oldJson(parsed), ua)
+    }
+  }
+
   test("keepTopFractionApprox: GK rank-error accuracy contract vs the exact tier") {
     // The approx tier's stated contract (the one a 100 TB user relies on):
     // with percentile_approx at `accuracy`, the per-group kept count is

@@ -546,9 +546,9 @@ class RuntimeSpec extends AnyFunSuite {
     // whole cost of a thin one-event publish (SCALE.md "Streaming
     // runtime"). The batch fuses its accounting: ONE aggregation over the
     // cached tagged pass carries the processed counters, ingested bytes,
-    // error count and hook action tallies; the sink probe carries batch
-    // size + min row key and materializes the per-table cache the write
-    // reuses. This pins the budget so an innocent extra .count() can't
+    // error count, hook action tallies and every table's row count; each
+    // load is ONE observed action that reports its own row count and min
+    // row key. This pins the budget so an innocent extra .count() can't
     // silently tax every micro-batch at every deployment.
     val keyedSink =
       """{"type": "bigtable", "config": {"customConfig": {"tables": [
@@ -556,34 +556,94 @@ class RuntimeSpec extends AnyFunSuite {
         |   "columnFamilies": [{"name": "d", "columnQualifiers": [
         |     {"id": "name", "name": "n"}]}]}
         |]}}}""".stripMargin
-    def jobsPerPublish(hook: Boolean): Int = {
+    def jobsPerPublish(hook: Boolean, sink: String): Int = {
       val sup = new graft.runtime.Supervisor(spark, RuntimeConfig(
         sinkRoot = Some(tmpDir()), retryBackoffBaseMs = 1,
         preTransformHook =
           if (hook) Some((_: String, e: String) => graft.runtime.Hooks.Proceed(e))
           else None))
-      val id = sup.registerStream(metricSpec(s"jobs$hook", keyedSink))
+      val id = sup.registerStream(metricSpec(s"jobs$hook${sink.length}", sink))
         .fold(e => fail(e.msg), identity)
       sup.publish(id, """{"name": "WARM_EVENT"}""") // untimed plan warm-up
       val jobs = SparkTestBase.countJobs {
         sup.publish(id, """{"name": "GREAT_EVENT"}""")
       }
+      assert(counters(sup, id)("EventsStoredInSink") == 2L, "both publishes loaded one row")
       sup.shutdownAll()
       jobs
     }
-    val hookJobs = jobsPerPublish(hook = true)
-    val plainJobs = jobsPerPublish(hook = false)
-    // measured composition (both modes): 3 ACTIONS — the stats
-    // aggregation (which also builds the tagged cache, running the
-    // transform chain once per event; with a hook, the hook map runs
-    // inside it) + sink probe + parquet write — which AQE executes as 7
-    // scheduler jobs (each aggregate's shuffle runs as 2 stage-
-    // materialization sub-jobs plus the result job; the narrow write is
-    // 1). houe=fail|dlq adds no emptiness probe: the error count rides the
-    // stats row. Budget 8 leaves one job of engine variance while still
-    // failing a regression to per-concern actions (6 actions ≈ 13+ jobs).
-    assert(hookJobs <= 8, s"hook-mode micro-batch used $hookJobs jobs (budget 8 ≈ 3 actions)")
-    assert(plainJobs <= 8, s"hook-free micro-batch used $plainJobs jobs (budget 8 ≈ 3 actions)")
+    // measured composition (every leg): 2 ACTIONS — the stats aggregation
+    // (which also builds the tagged cache, running the transform chain
+    // once per event; with a hook, the hook map runs inside it), which AQE
+    // runs as 3 jobs (cache stage, shuffle map, result), and the observed
+    // load (keyed parquet write or void `noop` write), 1 job. houe=fail|dlq
+    // adds no emptiness probe: the error count and the table row counts
+    // ride the stats row. Budget 5 fails any extra action.
+    for (hook <- Seq(true, false); (kind, sink) <- Seq("keyed" -> keyedSink, "void" -> """{"type": "void"}""")) {
+      val jobs = jobsPerPublish(hook, sink)
+      assert(jobs <= 5, s"$kind micro-batch (hook=$hook) used $jobs jobs (budget 5 = 2 actions)")
+    }
+  }
+
+  test("a table that gets no rows gets no load: no sink operation, no file") {
+    val root = tmpDir()
+    val sup = new graft.runtime.Supervisor(spark, RuntimeConfig(sinkRoot = Some(root), retryBackoffBaseMs = 1))
+    def table(name: String, value: String) =
+      s"""{"name": "$name", "whitelist": {"id": "name", "type": "or", "values": ["$value"]},
+         | "rowKey": {"keys": ["name"], "delimiter": "#"},
+         | "columnFamilies": [{"name": "d", "columnQualifiers": [{"id": "name", "name": "n"}]}]}""".stripMargin
+    val id = sup.registerStream(metricSpec("skip",
+      s"""{"type": "bigtable", "config": {"customConfig": {"tables": [
+         |${table("a", "EVENT_A")}, ${table("b", "EVENT_B")}]}}}""".stripMargin))
+      .fold(e => fail(e.msg), identity)
+    def partFiles(t: String): Int =
+      Option(new java.io.File(s"$root/$id/$t").listFiles()).toSeq.flatten
+        .count(_.getName.startsWith("part-"))
+
+    def sinkCounters = counters(sup, id).filter { case (k, _) => k.startsWith("Sink") || k == "EventsStoredInSink" }
+    assert(sup.publish(id, """{"name": "EVENT_A"}""") == "EVENT_A", "resource id = table a's row key")
+    assert(sinkCounters == Map("SinkOperations" -> 1L, "EventsStoredInSink" -> 1L), "only table a loaded")
+    val aFiles = partFiles("a")
+    assert(aFiles >= 1, "table a written")
+    assert(partFiles("b") == 0, "table b got no rows and no file")
+
+    sup.publish(id, """{"name": "EVENT_C"}""") // matches neither whitelist
+    assert(sinkCounters == Map("SinkOperations" -> 1L, "EventsStoredInSink" -> 1L),
+      "no load for a batch no table takes")
+    assert(counters(sup, id)("EventsProcessed") == 2L)
+    assert(partFiles("a") == aFiles && partFiles("b") == 0, "neither table gained a file")
+    sup.shutdownAll()
+  }
+
+  test("a whitelist on a field no branch emits fails at load time, after the processed counters") {
+    val sup = new graft.runtime.Supervisor(spark, RuntimeConfig(sinkRoot = Some(tmpDir()), retryBackoffBaseMs = 1))
+    val id = sup.registerStream(metricSpec("wlmiss",
+      """{"type": "bigtable", "config": {"customConfig": {"tables": [
+        |  {"name": "t", "whitelist": {"id": "nosuch", "type": "or", "values": ["x"]},
+        |   "rowKey": {"keys": ["name"], "delimiter": "#"},
+        |   "columnFamilies": [{"name": "d", "columnQualifiers": [{"id": "name", "name": "n"}]}]}
+        |]}}}""".stripMargin)).fold(e => fail(e.msg), identity)
+    // no stats count covers the table, so the table stage resolves the id
+    // at load time and fails there, as it does with no stats count at all
+    intercept[org.apache.spark.sql.AnalysisException] { sup.publish(id, """{"name": "E"}""") }
+    val m = counters(sup, id)
+    assert(m("EventsProcessed") == 1L && m("SinkOperations") == 0L && m("EventsStoredInSink") == 0L)
+    sup.shutdownAll()
+  }
+
+  test("a load's observed row count is awaited with a bound: a lost observation names its stream") {
+    import scala.concurrent.duration._
+    import org.apache.spark.sql.Observation
+    import org.apache.spark.sql.functions.{count, lit}
+    val filled = Observation()
+    spark.range(3).observe(filled, count(lit(1))).write.format("noop").mode("overwrite").save()
+    assert(graft.runtime.Stream.observedRow(filled, "mt_seen").getLong(0) == 3L)
+    // an observation no action fills stands in for an event the listener
+    // bus never delivers: the wait ends in an error, not a blocked thread
+    val e = intercept[IllegalStateException] {
+      graft.runtime.Stream.observedRow(Observation(), "mt_lost", 100.millis)
+    }
+    assert(e.getMessage.contains("mt_lost"))
   }
 
   test("metric goldens: failed sink loads advance processed counters only (executor_test.go:536-575)") {
