@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{CreateArray, Expression, ExpressionInfo}
 
 /** SQL surface for the graft custom expressions: every scalar expression
   * whose configuration is literal-expressible is registered as a
@@ -160,10 +160,10 @@ object GraftFunctions {
     },
     // graft_bleu_components(cand array<string>, ref array<string>) — the
     // row-local clipped-count kernel (struct of lengths + matches/totals
-    // for n = 1..4)
+    // for n = 1..4) over the one reference
     "graft_bleu_components" -> { args =>
       arity("graft_bleu_components", args, 2 to 2)
-      text.BleuComponentsExpr(args.head, args(1))
+      text.BleuMultiRefExpr(args.head, CreateArray(Seq(args(1))))
     },
     // graft_corr_permille(num, dx, dy) — integer-exact Pearson tail;
     // arguments are cast to DECIMAL(38,0) (the co-moment carrier type)

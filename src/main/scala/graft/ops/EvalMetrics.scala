@@ -139,7 +139,7 @@ object EvalMetrics {
     * (all components 0 / NULL geo).
     */
   def bleuComponents(pairs: DataFrame, pairIdCol: String, candCol: String,
-      refCol: String): DataFrame = {
+      refCol: String): DataFrame =
     // row-local clip kernel (round-11 optimization; guide §2.4 "remove
     // shuffles outright"): the clip is per PAIR, so nothing about it
     // needs a (pair, n, gram) exchange — one bounded hash-multiset pass
@@ -150,23 +150,9 @@ object EvalMetrics {
     // ns_bleu gate: 1.70 s → the TER/ROUGE-L zero-shuffle class; the gram
     // exchange, its two-stage generator, and three downstream aggregates
     // all disappear.
-    val staged = pairs
-      .select(col(pairIdCol).as("pair_id"),
-        toks(col(candCol)).as("__ct"), toks(col(refCol)).as("__rt"))
-      .withColumn("__bc",
-        graft.functions.text.bleuComponentsStruct(col("__ct"), col("__rt")))
-    // stage the kernel struct through ONE column, then extract fields:
-    // cost-aware CollapseProject keeps the non-cheap alias a separate
-    // Project, so the kernel evaluates once per row, not once per field
-    val fields = Seq("cand_len", "ref_len") ++
-      (1 to 4).flatMap(n => Seq(s"matches_$n", s"total_$n"))
-    val wide = fields.foldLeft(staged)((d, f) => d.withColumn(f, col(s"__bc.$f")))
-      .drop("__ct", "__rt", "__bc")
-    stagedGeo(wide).select(col("pair_id") +:
-      col("cand_len") +: col("ref_len") +:
-      (1 to 4).flatMap(n => Seq(col(s"matches_$n"), col(s"total_$n"))) :+
-      col("__geo").as("precision_geo_permille"): _*)
-  }
+    bleuFinish(withRowLocalBleuComponents(
+      pairs.select(col(pairIdCol).as("pair_id"), col(candCol).as("__c"),
+        col(refCol).as("__r")), "__c", "__r", maxTokens = None))
 
   /** The distributed (pair, n, gram)-shuffle form [[bleuComponents]]
     * used through round 10 — identical output (the EvalMetricsSpec law
@@ -194,12 +180,7 @@ object EvalMetrics {
     // so inlining isqrt(isqrt(prod)) copies the product subtree ~25× and
     // the per-row evaluation cost with it — staged, each level computes
     // once (a NULL product flows through to a NULL geo unchanged).
-    val staged = stagedGeo(wide)
-    staged.select(col("pair_id") +:
-      col("total_1").as("cand_len") +:
-      col("__rt1").as("ref_len") +:
-      (1 to 4).flatMap(n => Seq(col(s"matches_$n"), col(s"total_$n"))) :+
-      col("__geo").as("precision_geo_permille"): _*)
+    bleuFinish(wide, Seq(col("total_1").as("cand_len"), col("__rt1").as("ref_len")))
   }
 
   /** Multi-reference BLEU components — sacrebleu's semantics (Post 2018,
@@ -250,16 +231,8 @@ object EvalMetrics {
     val staged = cands
       .select(col(pairIdCol).as("pair_id"), toks(col(candCol)).as("__ct"))
       .join(refsByPair, "pair_id")
-      .withColumn("__bc",
-        graft.functions.text.bleuMultiRefStruct(col("__ct"), col("__refs")))
-    val fields = Seq("cand_len", "ref_len") ++
-      (1 to 4).flatMap(n => Seq(s"matches_$n", s"total_$n"))
-    val wide = fields.foldLeft(staged)((d, f) => d.withColumn(f, col(s"__bc.$f")))
-      .drop("__ct", "__refs", "__bc")
-    stagedGeo(wide).select(col("pair_id") +:
-      col("cand_len") +: col("ref_len") +:
-      (1 to 4).flatMap(n => Seq(col(s"matches_$n"), col(s"total_$n"))) :+
-      col("__geo").as("precision_geo_permille"): _*)
+    bleuFinish(withBleuKernel(staged,
+      graft.functions.text.bleuMultiRefStruct(col("__ct"), col("__refs")), "__ct", "__refs"))
   }
 
   /** The round-10 distributed form of [[bleuComponentsMultiRef]] —
@@ -321,11 +294,8 @@ object EvalMetrics {
       .agg(min(struct(abs(col("__rl") - col("__cl")).as("__d"),
         col("__rl").as("__l"))).as("__m"))
       .select(col("pair_id"), col("__m.__l").as("__ref_len"))
-    stagedGeo(wide.join(closest, "pair_id")).select(col("pair_id") +:
-      col("total_1").as("cand_len") +:
-      col("__ref_len").as("ref_len") +:
-      (1 to 4).flatMap(n => Seq(col(s"matches_$n"), col(s"total_$n"))) :+
-      col("__geo").as("precision_geo_permille"): _*)
+    bleuFinish(wide.join(closest, "pair_id"),
+      Seq(col("total_1").as("cand_len"), col("__ref_len").as("ref_len")))
   }
 
   /** Multi-reference ROUGE-N — Lin 2004's multi-reference rule: score
@@ -465,63 +435,65 @@ object EvalMetrics {
       .withColumn("__geo", Curation.isqrtExact(col("__sq1")))
   }
 
-  /** Row-local BLEU components: the same integer-exact wide row as
-    * [[bleuComponents]] — identical columns, identical values on
-    * identical inputs (the law EvalMetricsSpec asserts) — computed
-    * entirely WITHIN each row instead of through the (pair, n, gram)
-    * shuffle. Exists for the streaming twin: Structured Streaming allows
-    * ONE aggregate, and the distributed clip is itself an aggregate, so
-    * a windowed corpus-BLEU monitor needs the clip row-local (stateless)
-    * with the window pool as the single legal aggregate. Batch callers
-    * should prefer [[bleuComponents]]: the shuffle form's per-gram hash
-    * aggregation handles pathological texts a single row must not
-    * (`maxTokens` truncates BOTH sides first — the TER / ROUGE-L
-    * bounded-kernel discipline; truncation is part of the metric's
-    * contract here, so compare like with like).
-    *
-    * Clip per n without the shuffle: ONE bounded pass per row through
-    * [[graft.functions.text.BleuComponentsExpr]] — a hash multiset of
-    * reference grams that candidate grams consume by decrement, which
-    * IS Σ_g min(cand_g, ref_g).
+  private val bleuFields: Seq[String] = Seq("cand_len", "ref_len") ++
+    (1 to 4).flatMap(n => Seq(s"matches_$n", s"total_$n"))
+
+  /** The BLEU finish every per-pair form shares: [[stagedGeo]], then the
+    * 11 output columns — pair_id, `lens` (cand_len, ref_len), matches_n /
+    * total_n, precision_geo_permille.
+    */
+  private def bleuFinish(wide: DataFrame,
+      lens: Seq[Column] = Seq(col("cand_len"), col("ref_len"))): DataFrame =
+    stagedGeo(wide).select(col("pair_id") +: lens ++:
+      (1 to 4).flatMap(n => Seq(col(s"matches_$n"), col(s"total_$n"))) :+
+      col("__geo").as("precision_geo_permille"): _*)
+
+  /** Appends the BLEU component columns of the kernel struct `kernel` to
+    * `df` and drops `temps`. The struct stages through ONE column
+    * (non-cheap alias referenced 10× — cost-aware CollapseProject keeps
+    * it a separate Project, so the kernel evaluates once per row, not
+    * once per extracted field).
+    */
+  private def withBleuKernel(df: DataFrame, kernel: Column, temps: String*): DataFrame =
+    bleuFields.foldLeft(df.withColumn("__bc", kernel))((d, f) => d.withColumn(f, col(s"__bc.$f")))
+      .drop(temps :+ "__bc": _*)
+
+  /** [[bleuComponents]] with both sides truncated to their first
+    * `maxTokens` tokens before the clip — the TER / ROUGE-L bounded-kernel
+    * discipline, and the streaming corpus-BLEU twin's per-row contract.
+    * Same columns as [[bleuComponents]], and the same values wherever no
+    * side exceeds `maxTokens` (the law EvalMetricsSpec asserts);
+    * truncation is part of the metric's contract here, so compare like
+    * with like. Both run the one row-local kernel
+    * ([[withRowLocalBleuComponents]]); bound `maxTokens` when single rows
+    * may be pathologically long.
     */
   def bleuComponentsRowLocal(pairs: DataFrame, pairIdCol: String,
       candCol: String, refCol: String, maxTokens: Int = 64): DataFrame = {
     require(maxTokens >= 4 && maxTokens <= 256,
       "maxTokens must be in [4, 256] (the row-local clip is maxTokens^2)")
-    val staged = withRowLocalBleuComponents(
+    bleuFinish(withRowLocalBleuComponents(
       pairs.select(col(pairIdCol).as("pair_id"), col(candCol).as("__c"),
-        col(refCol).as("__r")), "__c", "__r", maxTokens)
-    stagedGeo(staged).select(col("pair_id") +:
-      col("cand_len") +: col("ref_len") +:
-      (1 to 4).flatMap(n => Seq(col(s"matches_$n"), col(s"total_$n"))) :+
-      col("__geo").as("precision_geo_permille"): _*)
+        col(refCol).as("__r")), "__c", "__r", Some(maxTokens)))
   }
 
   /** Appends the row-local BLEU component columns (cand_len, ref_len,
     * matches_n / total_n for n = 1..4) to `df`, preserving its other
-    * columns — the kernel [[bleuComponentsRowLocal]] and the streaming
-    * corpus monitor share. One pass per row through
-    * [[graft.functions.text.BleuComponentsExpr]] (hash-multiset clip):
-    * a first draft as a chain of HOF folds (array_distinct + two
-    * size∘filter scans per distinct gram per n) measured 4.9 s over 1M
-    * short rows — ~20 CodegenFallback HOF nodes per row; the single
-    * bounded expression is ~5× cheaper and is the same
-    * custom-kernel-over-HOF-chain call as TokenLcsExpr. The struct
-    * stages through ONE column (non-cheap alias referenced 10× —
-    * cost-aware CollapseProject keeps it a separate Project, so the
-    * kernel evaluates once per row, not once per extracted field).
+    * columns — the clip [[bleuComponents]], [[bleuComponentsRowLocal]]
+    * and the streaming corpus monitor share; `maxTokens` truncates both
+    * sides first. One pass per row through
+    * [[graft.functions.text.BleuMultiRefExpr]] over the one reference
+    * (hash-multiset clip): a first draft as a chain of HOF folds
+    * (array_distinct + two size∘filter scans per distinct gram per n)
+    * measured 4.9 s over 1M short rows — ~20 CodegenFallback HOF nodes
+    * per row; the single bounded expression is ~5× cheaper and is the
+    * same custom-kernel-over-HOF-chain call as TokenLcsExpr.
     */
   private[graft] def withRowLocalBleuComponents(df: DataFrame,
-      candCol: String, refCol: String, maxTokens: Int): DataFrame = {
-    val staged = df
-      .withColumn("__ct", slice(toks(col(candCol)), 1, maxTokens))
-      .withColumn("__rt", slice(toks(col(refCol)), 1, maxTokens))
-      .withColumn("__bc",
-        graft.functions.text.bleuComponentsStruct(col("__ct"), col("__rt")))
-    val fields = Seq("cand_len", "ref_len") ++
-      (1 to 4).flatMap(n => Seq(s"matches_$n", s"total_$n"))
-    fields.foldLeft(staged)((d, f) => d.withColumn(f, col(s"__bc.$f")))
-      .drop("__ct", "__rt", "__bc")
+      candCol: String, refCol: String, maxTokens: Option[Int]): DataFrame = {
+    def side(c: String): Column = maxTokens.fold(toks(col(c)))(slice(toks(col(c)), 1, _))
+    withBleuKernel(df.withColumn("__ct", side(candCol)).withColumn("__rt", side(refCol)),
+      graft.functions.text.bleuComponentsStruct(col("__ct"), col("__rt")), "__ct", "__rt")
   }
 
   /** [[corpusBleu]] generalized to group keys (empty = the global one-row

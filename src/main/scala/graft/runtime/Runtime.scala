@@ -171,8 +171,10 @@ final class Stream(
   // one keyed table per sink table: mixed-schema tables must not share a
   // parquet directory (multi-table specs write differently-shaped rows);
   // each sink carries its table's G6 creation config (partitioning,
-  // clustering, partition-filter requirement)
-  private[runtime] val keyedSinks: Map[String, KeyedTableSink] =
+  // clustering, partition-filter requirement). The dead-letter table
+  // `<id>__dlq` packs its files the same way and is never a read-back
+  // target.
+  private[runtime] val (keyedSinks, dlqSink) =
     supervisor.config.sinkRoot.map { root =>
       val rowsPerFile = spec.sink.config.properties.get("rowsPerFile").map(v => v.toLongOption
         .getOrElse(throw new IllegalArgumentException(s"rowsPerFile must be an integer (got $v)")))
@@ -182,10 +184,12 @@ final class Stream(
           ts.clustering, ts.requirePartitionFilter, rowsPerFile)
         case None => new KeyedTableSink(path, rowsPerFile = rowsPerFile)
       }
-      if (tables.size > 1)
-        tables.map(t => t.name -> sinkOf(s"$root/${spec.id}/${t.name}", Some(t))).toMap
-      else Map("default" -> sinkOf(s"$root/${spec.id}", tables.headOption))
-    }.getOrElse(Map.empty)
+      val keyed =
+        if (tables.size > 1)
+          tables.map(t => t.name -> sinkOf(s"$root/${spec.id}/${t.name}", Some(t))).toMap
+        else Map("default" -> sinkOf(s"$root/${spec.id}", tables.headOption))
+      (keyed, Some(sinkOf(s"$root/${spec.id}__dlq", None)))
+    }.getOrElse((Map.empty[String, KeyedTableSink], None))
   private[runtime] def keyedSink: Option[KeyedTableSink] =
     keyedSinks.values.headOption
   private[runtime] def keyedSinkFor(table: String): Option[KeyedTableSink] =
@@ -349,9 +353,9 @@ final class Stream(
     // Under dlq ONE append carries them and the hook-flagged rows.
     if (errors > 0 && houe == Houe.Fail)
       throw new RuntimeException(s"unretryable events in stream ${spec.id} with houe=fail")
-    if (errors + hookUnretryable > 0 && houe == Houe.Dlq) supervisor.config.sinkRoot.foreach { root =>
+    if (errors + hookUnretryable > 0 && houe == Houe.Dlq) dlqSink.foreach { dlq =>
       val dead = if (hooked) pipeline.failed || col("__act") === "u" else pipeline.failed
-      tagged.filter(dead).select("value").write.mode("append").parquet(s"$root/${spec.id}__dlq")
+      dlq.write(tagged.filter(dead).select("value"), errors + hookUnretryable)
     }
 
     // H1 BytesIngested (executor.go:236-249): the raw bytes of (post-hook)
@@ -875,9 +879,11 @@ final class Geist(spark: SparkSession, config: RuntimeConfig = RuntimeConfig()) 
 }
 
 object Geist {
+  // thread-safe once configured, and hooks call setJsonField per event
+  private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+
   /** sjson-SetBytes-style field injection on a JSON document (F11). */
   def setJsonField(json: String, path: String, value: String): String = {
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
     val root = try mapper.readTree(json) catch { case _: Exception => mapper.createObjectNode() }
     val obj = root match {
       case o: com.fasterxml.jackson.databind.node.ObjectNode => o

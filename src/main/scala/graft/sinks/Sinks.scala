@@ -60,6 +60,14 @@ object SinkCompiler {
     tables.map { t =>
       def s(n: JsonNode, f: String): String =
         Option(n.get(f)).filterNot(_.isNull).map(_.asText("")).getOrElse("")
+      // a column's or qualifier's dynamic `nameFromId`: (prefix,
+      // suffixFromId, preset)
+      def nameFromId(n: JsonNode): (String, String, Seq[String]) = {
+        val nfi = Option(n.get("nameFromId"))
+        (nfi.map(s(_, "prefix")).getOrElse(""), nfi.map(s(_, "suffixFromId")).getOrElse(""),
+          nfi.flatMap(v => Option(v.get("preset")))
+            .map(_.elements().asScala.map(_.asText).toSeq).getOrElse(Nil))
+      }
       val rowKey = Option(t.get("rowKey")).map { rk =>
         RowKey(
           keys = Option(rk.get("keys")).map(_.elements().asScala.map(_.asText).toSeq).getOrElse(Nil),
@@ -74,22 +82,12 @@ object SinkCompiler {
         .flatMap(_.elements().asScala)
         .flatMap(cf => Option(cf.get("columnQualifiers")).toSeq.flatMap(_.elements().asScala))
         .map { q =>
-          val nfi = Option(q.get("nameFromId"))
-          Qualifier(s(q, "id"), s(q, "name"),
-            nameFromIdPrefix = nfi.map(n => s(n, "prefix")).getOrElse(""),
-            nameFromIdSuffix = nfi.map(n => s(n, "suffixFromId")).getOrElse(""),
-            nameFromIdPreset = nfi.flatMap(n => Option(n.get("preset")))
-              .map(_.elements().asScala.map(_.asText).toSeq).getOrElse(Nil))
+          val (prefix, suffix, preset) = nameFromId(q)
+          Qualifier(s(q, "id"), s(q, "name"), prefix, suffix, preset)
         }
       val columns = Option(t.get("columns")).toSeq.flatMap(_.elements().asScala).map { c =>
-        val nfi = Option(c.get("nameFromId"))
-        ColumnSpec(
-          name = s(c, "name"),
-          valueFromId = s(c, "valueFromId"),
-          nameFromIdPrefix = nfi.map(n => s(n, "prefix")).getOrElse(""),
-          nameFromIdSuffix = nfi.map(n => s(n, "suffixFromId")).getOrElse(""),
-          nameFromIdPreset = nfi.flatMap(n => Option(n.get("preset")))
-            .map(_.elements().asScala.map(_.asText).toSeq).getOrElse(Nil))
+        val (prefix, suffix, preset) = nameFromId(c)
+        ColumnSpec(s(c, "name"), s(c, "valueFromId"), prefix, suffix, preset)
       }
       val tableCreation = Option(t.get("tableCreation"))
       val timePartitioning = tableCreation.flatMap(tc => Option(tc.get("timePartitioning")))
@@ -131,13 +129,31 @@ object SinkCompiler {
   def keysInMapFrame(df: DataFrame, mapCol: String): DataFrame =
     df.select(explode(col(mapCol)).as(Seq("key", "value")))
 
+  /** Dynamic-name columns (G4) carrying `value`: with a preset, one
+    * column per preset value, populated when the suffix field holds that
+    * value, else null; open-ended (apisrc-bigtablesink-fooround.json
+    * "frt-<fooTrackingId>"), one map column — value-derived names have no
+    * static column domain, and a map is their columnar-native shape. Rows
+    * from other branches carry a null suffix: no dynamic column (null
+    * map), never a null map key.
+    */
+  private def dynamicNamed(prefix: String, suffixField: String, preset: Seq[String],
+      value: Column): Seq[Column] =
+    if (preset.nonEmpty)
+      preset.map(p => when(col(suffixField) === lit(p), value).as(s"$prefix$p"))
+    else
+      Seq(when(col(suffixField).isNotNull,
+        map(concat(lit(prefix), col(suffixField).cast("string")), value)).as(s"${prefix}cols"))
+
   /** Full per-table stage: whitelist filter → insert-id dedup → row key +
     * column mapping (bigtable qualifiers or bigquery columns incl.
-    * ingestion time and preset dynamic names).
+    * ingestion time and preset dynamic names). The whitelist id resolves
+    * on `df` itself, so an id `df` lacks fails even where `df` is a
+    * projection of a frame that has it.
     */
   def tableStage(table: TableSpec)(df: DataFrame): DataFrame = {
     var out = df
-    table.whitelist.foreach(w => out = out.filter(whitelistPred(w)))
+    table.whitelist.foreach(w => out = out.filter(whitelistPred(w, df.col)))
     if (table.insertIdFromId.nonEmpty)
       out = out.dropDuplicates(table.insertIdFromId)
 
@@ -148,37 +164,17 @@ object SinkCompiler {
           if (c.valueFromId == GeistIngestionTime) current_timestamp()
           else col(c.valueFromId)
         if (c.name.nonEmpty) Seq(value.as(c.name))
-        else if (c.nameFromIdPreset.nonEmpty)
-          // dynamic column per preset value (G4): populated when the
-          // suffix field holds that value, else null
-          c.nameFromIdPreset.map(p =>
-            when(col(c.nameFromIdSuffix) === lit(p), value).as(s"${c.nameFromIdPrefix}$p"))
-        else
-          // open-ended dynamic name (G4, apisrc-bigtablesink-fooround.json
-          // "frt-<fooTrackingId>"): unknown column domain → a map column,
-          // the columnar-native shape for value-derived names. Rows from
-          // other branches carry a null suffix — no dynamic column (null
-          // map), never a null map key.
-          Seq(when(col(c.nameFromIdSuffix).isNotNull,
-            map(concat(lit(c.nameFromIdPrefix), col(c.nameFromIdSuffix).cast("string")), value))
-            .as(s"${c.nameFromIdPrefix}cols"))
+        else dynamicNamed(c.nameFromIdPrefix, c.nameFromIdSuffix, c.nameFromIdPreset, value)
       }
       out.select(cols: _*)
     } else if (table.qualifiers.nonEmpty) {
-      // BigTable-style: row key + renamed qualifiers. Dynamic nameFromId
-      // qualifiers mirror the columns path: preset → one column per preset
-      // value; open-ended → a map column (value-derived names have no
-      // static column domain).
+      // BigTable-style: row key + renamed qualifiers, dynamic nameFromId
+      // qualifiers as in the columns path
       val key = rowKeyCol(table.rowKey).as("key")
       val qcols: Seq[Column] = table.qualifiers.flatMap { q =>
         if (q.name.nonEmpty) Seq(col(q.id).as(q.name))
-        else if (q.nameFromIdPreset.nonEmpty)
-          q.nameFromIdPreset.map(p =>
-            when(col(q.nameFromIdSuffix) === lit(p), col(q.id)).as(s"${q.nameFromIdPrefix}$p"))
-        else if (q.nameFromIdSuffix.nonEmpty)
-          Seq(when(col(q.nameFromIdSuffix).isNotNull,
-            map(concat(lit(q.nameFromIdPrefix), col(q.nameFromIdSuffix).cast("string")), col(q.id)))
-            .as(s"${q.nameFromIdPrefix}cols"))
+        else if (q.nameFromIdPreset.nonEmpty || q.nameFromIdSuffix.nonEmpty)
+          dynamicNamed(q.nameFromIdPrefix, q.nameFromIdSuffix, q.nameFromIdPreset, col(q.id))
         else Seq(col(q.id).as(q.id))
       }
       out.select(key +: qcols: _*)

@@ -327,7 +327,7 @@ object RowLocal {
     "EvalMetrics.selfBleuPairs" -> "corpus ring rank (bucket-offset, driver-read counts) + position equi-join",
     "EvalMetrics.selfBleu" -> "selfBleuPairs composition (ring rank + join) feeding the row-local clip kernel",
     "EvalMetrics.corpusBleu" -> "corpus-level one-row component reduce (micro-average pooling)",
-    "EvalMetrics.withRowLocalBleuComponents" -> "private[graft] helper (row-local clip kernel shared by bleuComponentsRowLocal and the streaming corpus-BLEU twin)",
+    "EvalMetrics.withRowLocalBleuComponents" -> "private[graft] helper (row-local clip kernel shared by bleuComponents, bleuComponentsRowLocal and the streaming corpus-BLEU twin)",
     "EvalMetrics.corpusBleuOver" -> "private[graft] helper (shared pool+root tail for the global and windowed corpus BLEU)",
     "EvalMetrics.passAtKOver" -> "private[graft] helper (shared (n, c) aggregate + k fold for passAtK and the windowed twin)",
     "EvalMetrics.integralMetric" -> "private[graft] helper (row-local integral-metric guard column shared by the paired tests and the windowed paired-delta twin)",

@@ -515,7 +515,7 @@ object Windows {
     windowed(base, "__ts", windowDuration, watermark) { (src, w) =>
       graft.ops.EvalMetrics.corpusBleuOver(
         graft.ops.EvalMetrics.withRowLocalBleuComponents(
-          src, "__cand", "__ref", maxTokens), Seq(w))
+          src, "__cand", "__ref", Some(maxTokens)), Seq(w))
     }
   }
 

@@ -359,6 +359,44 @@ class PropertySpec extends AnyFunSuite {
     }
   }
 
+  test("property: single-reference BLEU == multi-reference BLEU over array(ref) == word-mode gramPrfCounts") {
+    val spark = SparkTestBase.spark
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.functions.{array, col}
+    import org.apache.spark.sql.types._
+    import graft.functions.text
+    // token arrays straight into the kernels: empty arrays, null arrays,
+    // null elements and a tiny alphabet so grams repeat and clip
+    val tok = Gen.frequency(6 -> Gen.oneOf("a", "b", "c", "dd"), 1 -> Gen.const(null: String))
+    val arr = Gen.frequency(
+      1 -> Gen.const(null: Seq[String]),
+      2 -> Gen.const(Seq.empty[String]),
+      8 -> Gen.chooseNum(1, 10).flatMap(n => Gen.listOfN(n, tok)))
+    val schema = StructType(Seq(StructField("pair_id", LongType),
+      StructField("c", ArrayType(StringType)), StructField("r", ArrayType(StringType))))
+    forAll(Gen.listOfN(60, Gen.zip(arr, arr)), 4) { pairs =>
+      val rows = pairs.zipWithIndex.map { case ((c, r), i) => Row(i.toLong, c, r) }
+      val out = spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema)
+        .select(col("pair_id"),
+          text.bleuComponentsStruct(col("c"), col("r")).as("single"),
+          text.bleuMultiRefStruct(col("c"), array(col("r"))).as("multi"),
+          text.gramPrfCounts(col("c"), col("r"), 4, chars = false).as("prf"))
+        .collect()
+      assert(out.length == pairs.length)
+      out.foreach { row =>
+        val i = row.getLong(0)
+        val single = row.getStruct(1)
+        assert(single == row.getStruct(2), s"pair $i ${pairs(i.toInt)}: single-ref != multi-ref")
+        val prf = row.getSeq[Row](3)
+        (1 to 4).foreach { n =>
+          assert(single.getLong(2 * n) == prf(n - 1).getLong(1) &&
+            single.getLong(2 * n + 1) == prf(n - 1).getLong(2),
+            s"pair $i ${pairs(i.toInt)} n=$n: BLEU $single vs gramPrfCounts ${prf(n - 1)}")
+        }
+      }
+    }
+  }
+
   test("filterFunnel law: single-scan attribution equals sequential filtering") {
     val spark = SparkTestBase.spark
     import spark.implicits._

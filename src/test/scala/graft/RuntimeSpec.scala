@@ -617,17 +617,23 @@ class RuntimeSpec extends AnyFunSuite {
 
   test("a whitelist on a field no branch emits fails at load time, after the processed counters") {
     val sup = new graft.runtime.Supervisor(spark, RuntimeConfig(sinkRoot = Some(tmpDir()), retryBackoffBaseMs = 1))
-    val id = sup.registerStream(metricSpec("wlmiss",
-      """{"type": "bigtable", "config": {"customConfig": {"tables": [
-        |  {"name": "t", "whitelist": {"id": "nosuch", "type": "or", "values": ["x"]},
-        |   "rowKey": {"keys": ["name"], "delimiter": "#"},
-        |   "columnFamilies": [{"name": "d", "columnQualifiers": [{"id": "name", "name": "n"}]}]}
-        |]}}}""".stripMargin)).fold(e => fail(e.msg), identity)
-    // no stats count covers the table, so the table stage resolves the id
-    // at load time and fails there, as it does with no stats count at all
-    intercept[org.apache.spark.sql.AnalysisException] { sup.publish(id, """{"name": "E"}""") }
-    val m = counters(sup, id)
-    assert(m("EventsProcessed") == 1L && m("SinkOperations") == 0L && m("EventsStoredInSink") == 0L)
+    // `value` names no branch output but does name the tagged frame's raw
+    // event column: the table stage must resolve the id on the branch
+    // output itself, never through it
+    Seq("wlmiss" -> "nosuch", "wlvalue" -> "value").foreach { case (suffix, field) =>
+      val id = sup.registerStream(metricSpec(suffix,
+        s"""{"type": "bigtable", "config": {"customConfig": {"tables": [
+          |  {"name": "t", "whitelist": {"id": "$field", "type": "or", "values": ["x"]},
+          |   "rowKey": {"keys": ["name"], "delimiter": "#"},
+          |   "columnFamilies": [{"name": "d", "columnQualifiers": [{"id": "name", "name": "n"}]}]}
+          |]}}}""".stripMargin)).fold(e => fail(e.msg), identity)
+      // no stats count covers the table, so the table stage resolves the id
+      // at load time and fails there, as it does with no stats count at all
+      intercept[org.apache.spark.sql.AnalysisException] { sup.publish(id, """{"name": "E"}""") }
+      val m = counters(sup, id)
+      assert(m("EventsProcessed") == 1L && m("SinkOperations") == 0L && m("EventsStoredInSink") == 0L,
+        s"whitelist on $field: $m")
+    }
     sup.shutdownAll()
   }
 
