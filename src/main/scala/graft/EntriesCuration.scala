@@ -1151,10 +1151,7 @@ private[graft] object EntriesCuration {
          |    CASE WHEN t > 0 THEN m * 1000 // t END AS precision_permille,
          |    CASE WHEN rt > 0 THEN m * 1000 // rt END AS recall_permille
          |  FROM comp WHERE t + rt > 0),
-         |pf AS (SELECT *, CASE WHEN precision_permille IS NOT NULL AND recall_permille IS NOT NULL
-         |    AND precision_permille + recall_permille > 0
-         |    THEN precision_permille * recall_permille * 2 // (precision_permille + recall_permille)
-         |  END AS f1_permille FROM prf)
+         |pf AS (SELECT *, ${fBetaSql(1)} FROM prf)
          |${maxOverRefsTailSql(Seq("precision_permille", "recall_permille", "f1_permille"))}""".stripMargin,
     "ns_chrf_multiref" ->
       // the char-gram sibling (substr grams, beta=2 column), same
@@ -1184,14 +1181,8 @@ private[graft] object EntriesCuration {
          |    CASE WHEN rt > 0 THEN m * 1000 // rt END AS recall_permille
          |  FROM comp WHERE t + rt > 0),
          |pf AS (SELECT *,
-         |    CASE WHEN precision_permille IS NOT NULL AND recall_permille IS NOT NULL
-         |      AND precision_permille + recall_permille > 0
-         |      THEN precision_permille * recall_permille * 2 // (precision_permille + recall_permille)
-         |    END AS f1_permille,
-         |    CASE WHEN precision_permille IS NOT NULL AND recall_permille IS NOT NULL
-         |      AND precision_permille * 4 + recall_permille > 0
-         |      THEN precision_permille * recall_permille * 5 // (precision_permille * 4 + recall_permille)
-         |    END AS f2_permille
+         |    ${fBetaSql(1)},
+         |    ${fBetaSql(4)}
          |  FROM prf)
          |${maxOverRefsTailSql(Seq("precision_permille", "recall_permille", "f1_permille", "f2_permille"))}""".stripMargin,
     "ns_mcnemar" ->
@@ -1274,10 +1265,7 @@ private[graft] object EntriesCuration {
          |    CASE WHEN cand_len > 0 THEN lcs_len * 1000 // cand_len END AS precision_permille,
          |    CASE WHEN ref_len > 0 THEN lcs_len * 1000 // ref_len END AS recall_permille
          |  FROM fin),
-         |pf AS (SELECT *, CASE WHEN precision_permille IS NOT NULL AND recall_permille IS NOT NULL
-         |    AND precision_permille + recall_permille > 0
-         |    THEN precision_permille * recall_permille * 2 // (precision_permille + recall_permille)
-         |  END AS f1_permille FROM prf2)
+         |pf AS (SELECT *, ${fBetaSql(1)} FROM prf2)
          |SELECT pair_id, CAST(count(*) AS BIGINT) AS n_refs,
          |  CAST(max(precision_permille) AS BIGINT) AS precision_permille,
          |  CAST(max(recall_permille) AS BIGINT) AS recall_permille,
@@ -1393,19 +1381,13 @@ private[graft] object EntriesCuration {
          |    CASE WHEN cand_len > 0 THEN lcs_len * 1000 // cand_len END AS precision_permille,
          |    CASE WHEN ref_len > 0 THEN lcs_len * 1000 // ref_len END AS recall_permille
          |  FROM fin)
-         |SELECT *, CASE WHEN precision_permille IS NOT NULL AND recall_permille IS NOT NULL
-         |    AND precision_permille + recall_permille > 0
-         |    THEN precision_permille * recall_permille * 2 // (precision_permille + recall_permille)
-         |  END AS f1_permille
+         |SELECT *, ${fBetaSql(1)}
          |FROM prf2""".stripMargin,
     "ns_rouge" ->
       s"""WITH $evalPairsSql,
          |${ngramCompSql(2)},
          |$prfCteSql
-         |SELECT *, CASE WHEN precision_permille IS NOT NULL AND recall_permille IS NOT NULL
-         |    AND precision_permille + recall_permille > 0
-         |    THEN precision_permille * recall_permille * 2 // (precision_permille + recall_permille)
-         |  END AS f1_permille
+         |SELECT *, ${fBetaSql(1)}
          |FROM prf""".stripMargin,
     "ns_chrf" ->
       // shares evalPairsSql + prfCteSql with ns_bleu/ns_rouge (no-drift
@@ -1429,14 +1411,8 @@ private[graft] object EntriesCuration {
          |      FROM g GROUP BY 1, 2),
          |$prfCteSql
          |SELECT *,
-         |  CASE WHEN precision_permille IS NOT NULL AND recall_permille IS NOT NULL
-         |    AND precision_permille + recall_permille > 0
-         |    THEN precision_permille * recall_permille * 2 // (precision_permille + recall_permille)
-         |  END AS f1_permille,
-         |  CASE WHEN precision_permille IS NOT NULL AND recall_permille IS NOT NULL
-         |    AND precision_permille * 4 + recall_permille > 0
-         |    THEN precision_permille * recall_permille * 5 // (precision_permille * 4 + recall_permille)
-         |  END AS f2_permille
+         |  ${fBetaSql(1)},
+         |  ${fBetaSql(4)}
          |FROM prf""".stripMargin,
     "ns_bradley_terry" -> {
       // GENERATED 3-round MM unroll in micro-units (the pageRank/HITS

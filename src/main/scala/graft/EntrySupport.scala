@@ -1112,6 +1112,18 @@ private[graft] object EntrySupport {
       |    CASE WHEN ref_total > 0 THEN matches * 1000 // ref_total END AS recall_permille
       |  FROM s)""".stripMargin
 
+  /** The permille F-β select item over precision_permille and
+    * recall_permille, `b2` = β² (1 → f1_permille, 4 → f2_permille): the
+    * oracle side of [[graft.functions.exact.fBeta]], one line so it can sit
+    * inside any stripMargin'd query.
+    */
+  private[graft] def fBetaSql(b2: Int): String = {
+    val wp = if (b2 == 1) "precision_permille" else s"precision_permille * $b2"
+    "CASE WHEN precision_permille IS NOT NULL AND recall_permille IS NOT NULL " +
+      s"AND $wp + recall_permille > 0 THEN precision_permille * recall_permille * ${b2 + 1} " +
+      s"// ($wp + recall_permille) END AS f${math.round(math.sqrt(b2.toDouble))}_permille"
+  }
+
   /** P/R permille over a `comp`-shaped CTE — shared by the ns_rouge and
     * ns_chrf oracles so the ratio arithmetic cannot drift between them.
     */

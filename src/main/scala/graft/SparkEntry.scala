@@ -100,10 +100,7 @@ object SparkEntry {
            |    CASE WHEN cand_tokens > 0 THEN lcs_total * 1000 // cand_tokens END AS precision_permille,
            |    CASE WHEN ref_tokens > 0 THEN lcs_total * 1000 // ref_tokens END AS recall_permille
            |  FROM s)
-           |SELECT *, CASE WHEN precision_permille IS NOT NULL AND recall_permille IS NOT NULL
-           |    AND precision_permille + recall_permille > 0
-           |    THEN precision_permille * recall_permille * 2 // (precision_permille + recall_permille)
-           |  END AS f1_permille
+           |SELECT *, ${EntrySupport.fBetaSql(1)}
            |FROM pr2""".stripMargin) +
       // corpus TER derives from the per-pair oracle the same way
       ("ns_corpus_ter" ->
@@ -127,14 +124,8 @@ object SparkEntry {
            |),
            |${EntrySupport.pooledPrfByNSql}
            |SELECT *,
-           |  CASE WHEN precision_permille IS NOT NULL AND recall_permille IS NOT NULL
-           |    AND precision_permille + recall_permille > 0
-           |    THEN precision_permille * recall_permille * 2 // (precision_permille + recall_permille)
-           |  END AS f1_permille,
-           |  CASE WHEN precision_permille IS NOT NULL AND recall_permille IS NOT NULL
-           |    AND precision_permille * 4 + recall_permille > 0
-           |    THEN precision_permille * recall_permille * 5 // (precision_permille * 4 + recall_permille)
-           |  END AS f2_permille
+           |  ${EntrySupport.fBetaSql(1)},
+           |  ${EntrySupport.fBetaSql(4)}
            |FROM pooled""".stripMargin) +
       // corpus ROUGE-N derives from the per-pair oracle the same way
       ("ns_corpus_rouge_n" ->
@@ -143,10 +134,7 @@ object SparkEntry {
            |),
            |${EntrySupport.pooledPrfByNSql}
            |SELECT *,
-           |  CASE WHEN precision_permille IS NOT NULL AND recall_permille IS NOT NULL
-           |    AND precision_permille + recall_permille > 0
-           |    THEN precision_permille * recall_permille * 2 // (precision_permille + recall_permille)
-           |  END AS f1_permille
+           |  ${EntrySupport.fBetaSql(1)}
            |FROM pooled""".stripMargin) +
       // the benchmark-level pass@k rollup derives from the per-problem
       // oracle: mean over problems per k on the micro grid, plus the

@@ -31,23 +31,7 @@ object UserAgentParser {
   ) {
     def toJson: String = {
       val b = new java.lang.StringBuilder(256)
-      def q(s: String): Unit = {
-        b.append('"')
-        var i = 0
-        while (i < s.length) {
-          s.charAt(i) match {
-            case '"' => b.append("\\\"")
-            case '\\' => b.append("\\\\")
-            case '<' => b.append("\\u003c") // Go json.Marshal HTML-escapes these by default
-            case '>' => b.append("\\u003e")
-            case '&' => b.append("\\u0026")
-            case c if c < ' ' => b.append(f"\\u${c.toInt}%04x")
-            case c => b.append(c)
-          }
-          i += 1
-        }
-        b.append('"')
-      }
+      def q(s: String): Unit = gjson.quoteJson(b, s)
       b.append("{\"platform\":"); q(platform)
       b.append(",\"operatingSystem\":{\"name\":"); q(osName)
       b.append(",\"fullName\":"); q(osFullName)

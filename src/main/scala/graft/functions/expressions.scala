@@ -160,29 +160,49 @@ object gjson {
       val sb = new java.lang.StringBuilder("{")
       kv.toSeq.sortBy(_._1).zipWithIndex.foreach { case ((k, v), idx) =>
         if (idx > 0) sb.append(',')
-        sb.append(jsonQuote(k)).append(':').append(jsonQuote(v))
+        quoteJson(sb, k)
+        sb.append(':')
+        quoteJson(sb, v)
       }
       sb.append('}')
       UTF8String.fromString(sb.toString)
     }
   }
 
-  private def jsonQuote(s: String): String = {
-    val sb = new java.lang.StringBuilder("\"")
-    s.foreach {
-      case '"' => sb.append("\\\"")
-      case '\\' => sb.append("\\\\")
-      case '\n' => sb.append("\\n")
-      case '\r' => sb.append("\\r")
-      case '\t' => sb.append("\\t")
-      // Go json.Marshal HTML-escapes these by default — payload parity
-      case '<' => sb.append("\\u003c")
-      case '>' => sb.append("\\u003e")
-      case '&' => sb.append("\\u0026")
-      case c if c < ' ' => sb.append(f"\\u${c.toInt}%04x")
-      case c => sb.append(c)
+  /** Append `s` to `sb` as a JSON string, escaped the way Go 1.19's
+    * `json.Marshal` writes it (`encodeState.string` with HTML escaping on):
+    * `\"`, `\\`, `\n`, `\r` and `\t` as two-character escapes; every other
+    * control character and `<`, `>`, `&` as a lowercase `\u00xx`; U+2028
+    * and U+2029 as `\u2028` / `\u2029`. Appends into the caller's builder
+    * so a serializer pays no String per field.
+    */
+  private[graft] def quoteJson(sb: java.lang.StringBuilder, s: String): Unit = {
+    sb.append('"')
+    var from = 0 // start of the run of characters that need no escape
+    var i = 0
+    while (i < s.length) {
+      val c = s.charAt(i)
+      val esc = (c: @scala.annotation.switch) match {
+        case '"' => "\\\""
+        case '\\' => "\\\\"
+        case '\n' => "\\n"
+        case '\r' => "\\r"
+        case '\t' => "\\t"
+        case '<' | '>' | '&' | '\u2028' | '\u2029' => unicodeEscape(c)
+        case _ => if (c < ' ') unicodeEscape(c) else null
+      }
+      if (esc != null) {
+        sb.append(s, from, i).append(esc)
+        from = i + 1
+      }
+      i += 1
     }
-    sb.append('"').toString
+    sb.append(s, from, s.length).append('"')
+  }
+
+  private def unicodeEscape(c: Char): String = {
+    val hex = Integer.toHexString(c)
+    "\\u0000".substring(0, 6 - hex.length) + hex
   }
 
   /** `userAgent` field type as a standalone scalar function (F8). */

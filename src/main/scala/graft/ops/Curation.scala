@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.functions.exact.{cosPermille, div, normSq, quantized, scaled}
 
 /** Corpus-curation operators for LLM training-data pipelines: PII
   * detection/redaction, benchmark decontamination, Gopher-style quality
@@ -199,21 +200,15 @@ object Curation {
       "minCosPermille must be in [0, 1000]")
     def q(df: DataFrame, id: String, v: String) = df.select(
       col(idCol).as(id),
-      transform(col(vecCol).cast("array<double>"),
-        x => round(x * quantScale).cast("long")).as(v))
+      quantized(col(vecCol).cast("array<double>"), quantScale).as(v))
       .filter(size(col(v)) === dim)
-      .withColumn(s"${v}_nsq",
-        aggregate(col(v), lit(0L), (acc, x) => acc + x * x))
+      .withColumn(s"${v}_nsq", normSq(col(v)))
     val c = q(corpus, "cid", "cq")
     val b = q(benchmark, "bid", "bq")
     val scored = c.crossJoin(broadcast(b))
       .select(col("cid"), col("bid"),
         when(col("cq_nsq") > 0 && col("bq_nsq") > 0,
-          floor(lit(1000.0) *
-            aggregate(zip_with(col("cq"), col("bq"), (x, y) => x * y),
-              lit(0L), (acc, x) => acc + x) /
-            (sqrt(col("cq_nsq").cast("double")) *
-              sqrt(col("bq_nsq").cast("double")))).cast("long"))
+          cosPermille(col("cq"), col("cq_nsq"), col("bq"), col("bq_nsq")))
           .otherwise(lit(0L)).as("cos_permille"))
     scored.groupBy(col("cid"))
       .agg(max(struct(col("cos_permille"), (-col("bid")).as("nb"))).as("m"))
@@ -687,9 +682,8 @@ object Curation {
       (col("__n") - coalesce(sum(col("rs.killed")).over(w), lit(0L))).as("n_in"),
       col("rs.killed").as("n_killed"))
       .withColumn("n_out", col("n_in") - col("n_killed"))
-      .withColumn("killed_permille", when(col("n_in") > 0,
-        call_function("div", col("n_killed") * lit(1000L), col("n_in")))
-        .otherwise(lit(0L)))
+      .withColumn("killed_permille",
+        scaled(col("n_killed"), col("n_in"), 1000L).otherwise(lit(0L)))
   }
 
   /** The quality-filter conjunction over a [[curationStats]] struct —
@@ -1097,22 +1091,19 @@ object Curation {
     require(budgetTokens >= 0 && maxEpochsMilli >= 0, "budget and epoch cap must be >= 0")
     val targetMap = map(targetPermille.toSeq.sortBy(_._1)
       .flatMap { case (k, v) => Seq(lit(k), lit(v.toLong)) }: _*)
-    def idiv(a: Column, b: Column): Column = call_function("div", a, b)
     val planned = stats.select(
         col(stratumCol), col(tokensCol).cast("long").as("tokens"),
         coalesce(element_at(targetMap, col(stratumCol)), lit(0L)).as("permille"))
-      .withColumn("target_tokens", idiv(lit(budgetTokens) * col("permille"), lit(1000L)))
+      .withColumn("target_tokens", div(lit(budgetTokens) * col("permille"), lit(1000L)))
       .withColumn("epochs_milli", least(
-        when(col("tokens") > 0, idiv(col("target_tokens") * 1000L, col("tokens")))
-          .otherwise(lit(0L)),
+        scaled(col("target_tokens"), col("tokens"), 1000L).otherwise(lit(0L)),
         lit(maxEpochsMilli)))
-      .withColumn("planned_tokens", idiv(col("tokens") * col("epochs_milli"), lit(1000L)))
+      .withColumn("planned_tokens", div(col("tokens") * col("epochs_milli"), lit(1000L)))
       .withColumn("shortfall", col("target_tokens") - col("planned_tokens"))
     val total = planned.agg(sum(col("planned_tokens")).as("__total"))
     planned.crossJoin(broadcast(total))
       .withColumn("achieved_permille",
-        when(col("__total") > 0, idiv(col("planned_tokens") * 1000L, col("__total")))
-          .otherwise(lit(0L)))
+        scaled(col("planned_tokens"), col("__total"), 1000L).otherwise(lit(0L)))
       .drop("__total")
   }
 
@@ -1143,7 +1134,6 @@ object Curation {
     require(decayPermille >= 0 && decayPermille <= 1000,
       "decayPermille must be in [0, 1000]")
     val dec = "decimal(38,0)"
-    def idiv(a: Column, b: Column): Column = call_function("div", a, b)
     val em = when(col(epochsMilliCol) >= 0 && col(epochsMilliCol) <= 64000L,
       col(epochsMilliCol).cast("long"))
       .otherwise(raise_error(concat(lit("repeatedEpochValue: epochs_milli for "),
@@ -1159,7 +1149,7 @@ object Curation {
         lit(" outside [0, 1e15] - the integer-exactness budget"))))
     val base = plan.select(col(stratumCol),
       tok.as("tokens"), em.as("epochs_milli"))
-      .withColumn("__e", idiv(col("epochs_milli"), lit(1000L)))
+      .withColumn("__e", div(col("epochs_milli"), lit(1000L)))
       .withColumn("__frac", col("epochs_milli") - lit(1000L) * col("__e"))
       .withColumn("__fold", aggregate(
         when(col("__e") >= 1, sequence(lit(1L), col("__e")))
@@ -1167,17 +1157,17 @@ object Curation {
         struct(lit(0L).as("s"), lit(1000L).as("p")),
         (acc, _) => struct(
           (acc.getField("s") + acc.getField("p")).as("s"),
-          idiv(acc.getField("p") * decayPermille, lit(1000L)).as("p"))))
+          div(acc.getField("p") * decayPermille, lit(1000L)).as("p"))))
       .withColumn("__factor",
-        col("__fold.s") + idiv(col("__frac") * col("__fold.p"), lit(1000L)))
+        col("__fold.s") + div(col("__frac") * col("__fold.p"), lit(1000L)))
     base.select(col(stratumCol), col("tokens"), col("epochs_milli"),
-      idiv(col("tokens").cast(dec) * col("__factor"), lit(1000L).cast(dec))
+      div(col("tokens").cast(dec) * col("__factor"), lit(1000L).cast(dec))
         .cast("long").as("effective_tokens"),
-      idiv(col("tokens").cast(dec) * col("epochs_milli"), lit(1000L).cast(dec))
+      div(col("tokens").cast(dec) * col("epochs_milli"), lit(1000L).cast(dec))
         .cast("long").as("raw_tokens"))
       .withColumn("value_permille",
         when(col("raw_tokens") > 0,
-          idiv(col("effective_tokens").cast(dec) * lit(1000L).cast("decimal(4,0)"),
+          div(col("effective_tokens").cast(dec) * lit(1000L).cast("decimal(4,0)"),
             col("raw_tokens").cast(dec)))
           .otherwise(lit(null).cast("long")))
   }
@@ -1852,7 +1842,6 @@ object Curation {
     require(iters >= 1 && iters <= 16, "iters must be in [1, 16]")
     val M = 1000000L
     val dec = "decimal(38,0)"
-    def idiv(a: Column, b: Column): Column = call_function("div", a, b)
     val j = df.select(col(winnerCol).cast("long").as("w"),
         col(loserCol).cast("long").as("l"))
       .where(col("w").isNotNull && col("l").isNotNull && col("w") =!= col("l"))
@@ -1886,7 +1875,7 @@ object Curation {
       val terms = pairs.join(sa, "a").join(sb, "b")
         .select(col("a"), col("b"),
           when(col("__sa") + col("__sb") > 0,
-            idiv(col("n") * M * M, col("__sa") + col("__sb")))
+            div(col("n") * M * M, col("__sa") + col("__sb")))
             .otherwise(lit(0L)).as("t"))
       val denom = terms.select(col("a").as("item"), col("t"))
         .union(terms.select(col("b").as("item"), col("t")))
@@ -1897,14 +1886,14 @@ object Curation {
       val raw = base.join(denom, Seq("item"), "left")
         .select(col("item"),
           when(coalesce(col("d"), lit(0L).cast(dec)) > 0,
-            idiv((col("wins") * M).cast(dec) * lit(M).cast(dec), col("d")))
+            div((col("wins") * M).cast(dec) * lit(M).cast(dec), col("d")))
             .otherwise(lit(0L)).as("r"))
         .persist()
       // broadcast one-row max-norm (never 0 while any judgment exists:
       // some item won, its denominator is positive, its raw is positive)
       val mx = raw.agg(max(col("r")).as("__mx"))
       cur = Rounds.advance(Seq(raw, cur), raw.crossJoin(broadcast(mx))
-        .select(col("item"), idiv(col("r") * M, greatest(col("__mx"), lit(1L)))
+        .select(col("item"), div(col("r") * M, greatest(col("__mx"), lit(1L)))
           .as("s")))._1
     }
     // the result joins onto the final round, so it is checkpointed before
@@ -2003,9 +1992,7 @@ object Curation {
     alloc.unionByName(zeroW)
       .select(col(stratumCol), col("__avail").as("available"),
         col("__w").as("weight"), col("allocated"), col("capped"),
-        when(col("__avail") > 0,
-          call_function("div", col("allocated") * 1000L, col("__avail")))
-          .otherwise(lit(0L)).as("fill_permille"))
+        scaled(col("allocated"), col("__avail"), 1000L).otherwise(lit(0L)).as("fill_permille"))
   }
 
   /** Exact floor integer square root as pure codegen'd column arithmetic:

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.functions.exact.{cosPermille, normSq, quantized}
 import graft.functions.text.wordsOf
 
 /** Large-scale deduplication operators for training-data pipelines.
@@ -385,12 +386,8 @@ object Dedup {
     val entries = corpus
       .select(col(idCol).as("index_id"),
         col(vecCol).cast("array<double>").as("__v"))
-      .select(col("index_id"), col("__v"),
-        transform(col("__v"), x => round(x * quantScale).cast("long"))
-          .as("vec_micro"))
-      .select(col("index_id"), col("__v"), col("vec_micro"),
-        aggregate(col("vec_micro"), lit(0L), (a, x) => a + x * x)
-          .as("nsq_micro2"))
+      .select(col("index_id"), col("__v"), quantized(col("__v"), quantScale).as("vec_micro"))
+      .select(col("index_id"), col("__v"), col("vec_micro"), normSq(col("vec_micro")).as("nsq_micro2"))
       .select(col("index_id"), col("vec_micro"), col("nsq_micro2"),
         explode(graft.functions.text.hyperplaneKeys(col("__v"), planes, tables))
           .as("key"))
@@ -427,22 +424,15 @@ object Dedup {
     val b = batch
       .select(col(idCol).as("batch_id"),
         col(vecCol).cast("array<double>").as("__v"))
-      .select(col("batch_id"), col("__v"),
-        transform(col("__v"), x => round(x * index.quantScale).cast("long"))
-          .as("qm"))
-      .select(col("batch_id"), col("__v"), col("qm"),
-        aggregate(col("qm"), lit(0L), (a, x) => a + x * x).as("qnsq"))
+      .select(col("batch_id"), col("__v"), quantized(col("__v"), index.quantScale).as("qm"))
+      .select(col("batch_id"), col("__v"), col("qm"), normSq(col("qm")).as("qnsq"))
       .select(col("batch_id"), col("qm"), col("qnsq"),
         explode(graft.functions.text.hyperplaneKeys(col("__v"), index.planes,
           index.tables, probes)).as("key"))
     val scored = index.entries.join(b, Seq("key"))
       .select(col("batch_id"), col("index_id"),
         when(col("qnsq") > 0 && col("nsq_micro2") > 0,
-          floor(lit(1000.0) *
-            aggregate(zip_with(col("qm"), col("vec_micro"), (x, y) => x * y),
-              lit(0L), (a, x) => a + x) /
-            (sqrt(col("qnsq").cast("double")) *
-              sqrt(col("nsq_micro2").cast("double")))).cast("long"))
+          cosPermille(col("qm"), col("qnsq"), col("vec_micro"), col("nsq_micro2")))
           .otherwise(lit(0L)).as("cos_permille"))
       .where(col("cos_permille") >= minCosPermille)
     scored.groupBy("batch_id", "index_id")

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.functions.exact.{cosPermille, normSq}
 
 /** Embedding preprocessing: exact distributed second moments → driver-side
   * PCA, and the projection/whitening apply path the ANN family consumes
@@ -50,8 +51,7 @@ object Embeddings {
   }
 
   private def quantized(vecCol: String, quantScale: Long): Column =
-    transform(col(vecCol).cast("array<double>"),
-      x => round(x * quantScale).cast("long"))
+    graft.functions.exact.quantized(col(vecCol).cast("array<double>"), quantScale)
 
   /** Exact integer moment sums: (n, sum_i, sum_ij) with
     * `sum_ij(i·d + j) = Σ q_i·q_j`. One explode + one partial-aggregated
@@ -210,7 +210,7 @@ object Embeddings {
       quantScale: Long = 1000000L): DataFrame =
     vecs.select(quantized(vecCol, quantScale).as("q"))
       .filter(size(col("q")) === dim)
-      .select(aggregate(col("q"), lit(0L), (acc, x) => acc + x * x).as("norm2"))
+      .select(normSq(col("q")).as("norm2"))
       .agg(count(lit(1)).as("n"),
         sum(when(col("norm2") === 0, 1L).otherwise(0L)).as("n_zero"),
         min("norm2").as("min_norm2"),
@@ -287,10 +287,7 @@ object Embeddings {
       .join(norms.select(col("g").as("ga"), col("nsq").as("na")), "ga")
       .join(norms.select(col("g").as("gb"), col("nsq").as("nb")), "gb")
       .select(col("ga").as("group_a"), col("gb").as("group_b"), col("dot"),
-        when(col("na") > 0 && col("nb") > 0,
-          floor(lit(1000.0) * col("dot") /
-            (sqrt(col("na").cast("double")) * sqrt(col("nb").cast("double"))))
-            .cast("long"))
+        when(col("na") > 0 && col("nb") > 0, cosPermille(col("dot"), col("na"), col("nb")))
           .otherwise(lit(0L)).as("cos_permille"))
   }
 

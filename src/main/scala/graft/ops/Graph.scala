@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.functions.exact.scaled
 
 /** Link-graph signals for web-scale curation: PageRank is the standard
   * domain/page authority input to crawl-corpus quality filtering (rank the
@@ -876,9 +877,8 @@ object Graph {
     e.agg(count(lit(1)).as("n_edges"))
       .crossJoin(broadcast(recip.agg(count(lit(1)).as("n_reciprocated"))))
       .select(col("n_edges"), col("n_reciprocated"),
-        when(col("n_edges") > 0, call_function("div",
-          col("n_reciprocated") * lit(1000L), col("n_edges")))
-          .otherwise(lit(0L)).as("reciprocity_permille"))
+        scaled(col("n_reciprocated"), col("n_edges"), 1000L).otherwise(lit(0L))
+          .as("reciprocity_permille"))
   }
 
   /** Per-node degree profile: (node, out_deg, in_deg), zero-filled for

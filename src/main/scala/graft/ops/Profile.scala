@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.functions.exact.scaled
 import graft.functions.text.wordsOf
 
 /** Corpus profiling: the per-group statistics a curation run consults before
@@ -1243,12 +1244,8 @@ object Profile {
       // drift monitor exists to catch (the rougeN undefined-is-NULL
       // convention)
       .select(col("bucket"), col("n_a"), col("n_b"),
-        when(col("__ta") > 0,
-          call_function("div", col("n_a") * 1000L, col("__ta")))
-          .as("share_a_permille"),
-        when(col("__tb") > 0,
-          call_function("div", col("n_b") * 1000L, col("__tb")))
-          .as("share_b_permille"),
+        scaled(col("n_a"), col("__ta"), 1000L).as("share_a_permille"),
+        scaled(col("n_b"), col("__tb"), 1000L).as("share_b_permille"),
         when(col("__ta") > 0 && col("__tb") > 0,
           call_function("div", col("__mx") * lit(1000000L).cast(dec),
             col("__ta").cast(dec) * col("__tb").cast(dec)))
@@ -1317,8 +1314,6 @@ object Profile {
       .withColumn("__tot", sum(col("bytes")).over(Window.partitionBy(lit(1))))
       .select(col("shard"), col("n_rows"), col("bytes"), col("min_id"),
         col("max_id"), col("digest"),
-        when(col("__tot") > 0,
-          call_function("div", col("bytes") * 1000L, col("__tot")))
-          .otherwise(lit(0L)).as("bytes_share_permille"))
+        scaled(col("bytes"), col("__tot"), 1000L).otherwise(lit(0L)).as("bytes_share_permille"))
   }
 }

@@ -32,6 +32,17 @@ object Similarity {
     */
   def cosine(a: Column, b: Column): Column = graft.functions.text.cosineSim(a, b)
 
+  /** The rank-and-cut every kNN search below ends with: per query, rank
+    * the scored (query_id, neighbor_id, sim) rows by sim descending with
+    * neighbor_id breaking ties, and keep ranks 1..k. Output: (query_id,
+    * neighbor_id, `extra`…, rank).
+    */
+  private def topKPerQuery(scored: DataFrame, k: Int, extra: String*): DataFrame = {
+    val w = Window.partitionBy(col("query_id")).orderBy(col("sim").desc, col("neighbor_id"))
+    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+      .select((Seq("query_id", "neighbor_id") ++ extra :+ "rank").map(col): _*)
+  }
+
   /** Exact top-k neighbors for each query vector.
     * Output: (query_id, neighbor_id, rank) — ranks are deterministic
     * (similarity desc, id asc tie-break).
@@ -47,9 +58,7 @@ object Similarity {
     val joined = c.join(broadcast(q),
       if (excludeSelf) col("query_id") =!= col("neighbor_id") else lit(true))
       .select(col("query_id"), col("neighbor_id"), cosine(col("qv"), col("cv")).as("sim"))
-    val w = Window.partitionBy(col("query_id")).orderBy(col("sim").desc, col("neighbor_id"))
-    joined.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("rank"))
+    topKPerQuery(joined, k)
   }
 
   /** Hard-negative mining for contrastive training: for every query, its
@@ -89,10 +98,7 @@ object Similarity {
         !(col("__ql") <=> col("neg_label")))
       .select(col("query_id"), col("neighbor_id"), col("neg_label"),
         cosine(col("qv"), col("cv")).as("sim"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("neighbor_id"))
-    joined.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("neg_label"), col("rank"))
+    topKPerQuery(joined, k, "neg_label")
   }
 
   /** Multi-table LSH ANN top-k: candidates collide in at least one of
@@ -130,9 +136,7 @@ object Similarity {
       .filter(if (excludeSelf) col("query_id") =!= col("neighbor_id") else lit(true))
       .select(col("query_id"), col("neighbor_id"), cosine(col("qv"), col("cv")).as("sim"))
       .dropDuplicates("query_id", "neighbor_id")
-    val w = Window.partitionBy(col("query_id")).orderBy(col("sim").desc, col("neighbor_id"))
-    joined.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("rank"))
+    topKPerQuery(joined, k)
   }
 
   /** IVF (inverted-file) ANN: corpus vectors partition into Voronoi cells
@@ -213,9 +217,7 @@ object Similarity {
       .filter(if (excludeSelf) col("query_id") =!= col("neighbor_id") else lit(true))
       .select(col("query_id"), col("neighbor_id"), cosine(col("qv"), col("cv")).as("sim"))
       .dropDuplicates("query_id", "neighbor_id")
-    val w = Window.partitionBy(col("query_id")).orderBy(col("sim").desc, col("neighbor_id"))
-    joined.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("rank"))
+    topKPerQuery(joined, k)
   }
 
   /** Product-quantization model (Jégou, Douze, Schmid 2011, "Product
@@ -379,9 +381,7 @@ object Similarity {
       if (excludeSelf) col("query_id") =!= col("neighbor_id") else lit(true))
       .select(col("query_id"), col("neighbor_id"),
         text.pqAdc(col("codes"), col("dot_lut"), col("q_norm"), pq.normSqFlat, pq.ksub).as("sim"))
-    val w = Window.partitionBy(col("query_id")).orderBy(col("sim").desc, col("neighbor_id"))
-    joined.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("rank"))
+    topKPerQuery(joined, k)
   }
 
   /** IVF + PQ composition (IVFADC, Jégou, Douze & Schmid 2011 §IV): the
@@ -452,9 +452,7 @@ object Similarity {
       .select(col("query_id"), col("neighbor_id"),
         text.pqAdc(col("codes"), col("dot_lut"), col("q_norm"),
           pq.normSqFlat, pq.ksub).as("sim"))
-    val w = Window.partitionBy(col("query_id")).orderBy(col("sim").desc, col("neighbor_id"))
-    joined.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("rank"))
+    topKPerQuery(joined, k)
   }
 
   /** Scalar int8 quantization of an embedding corpus: per-vector

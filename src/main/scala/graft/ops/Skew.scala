@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.functions.exact.div
 
 /** Explicit salt-and-replicate equi-join for degenerate key skew.
   *
@@ -88,7 +89,6 @@ object Skew {
   def keyProfile(df: DataFrame, keyCols: Seq[String], k: Int = 20): DataFrame = {
     require(keyCols.nonEmpty, "keyCols must be non-empty")
     require(k >= 1, "k must be >= 1")
-    def idiv(a: Column, b: Column): Column = call_function("div", a, b)
     val counts = df.groupBy(keyCols.map(col): _*).agg(count(lit(1)).as("cnt"))
     val stats = counts.agg(sum(col("cnt")).as("total_rows"),
       count(lit(1)).as("n_keys"))
@@ -99,8 +99,8 @@ object Skew {
       .orderBy(col("cnt").desc +: keyCols.map(col): _*)
     top.crossJoin(broadcast(stats))
       .withColumn("key_rank", row_number().over(w).cast("long"))
-      .withColumn("share_permille", idiv(col("cnt") * 1000L, col("total_rows")))
-      .withColumn("vs_mean_permille", idiv(col("cnt") * 1000L,
-        greatest(idiv(col("total_rows"), col("n_keys")), lit(1L))))
+      .withColumn("share_permille", div(col("cnt") * 1000L, col("total_rows")))
+      .withColumn("vs_mean_permille", div(col("cnt") * 1000L,
+        greatest(div(col("total_rows"), col("n_keys")), lit(1L))))
   }
 }

@@ -354,6 +354,7 @@ object Tables {
     */
   def expectationReport(df: DataFrame, rules: Seq[Expectation]): DataFrame = {
     import org.apache.spark.sql.functions._
+    import graft.functions.exact.scaled
     require(rules.nonEmpty, "need at least one expectation")
     val aggs = count(lit(1)).cast("long").as("__n") +: rules.zipWithIndex.map {
       case (Expectation.Unique(c), i) =>
@@ -390,9 +391,7 @@ object Tables {
         // all-clear reading, and "the snapshot produced no rows" is the
         // maximal anomaly a promotion gate exists to catch) and passed =
         // false so the gate FAILS CLOSED rather than promoting a void
-        when(col("__n") > 0,
-          call_function("div", col("__r.n_violations") * 1000L, col("__n")))
-          .as("violation_permille"),
+        scaled(col("__r.n_violations"), col("__n"), 1000L).as("violation_permille"),
         (col("__n") > 0 && col("__r.n_violations") === 0L).as("passed"))
   }
 }

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.functions.exact.scaled
 import graft.functions.text.wordsOf
 
 /** Document-level text analysis for training-data pipelines: token
@@ -389,8 +390,7 @@ object TextAnalysis {
           .as("top_lang"),
         when(col("n_segments") > 0, array_max(col("__counts")).getField("n"))
           .as("top_n"),
-        when(col("n_segments") > 0, call_function("div",
-          array_max(col("__counts")).getField("n") * 1000L, col("n_segments")))
+        scaled(array_max(col("__counts")).getField("n"), col("n_segments"), 1000L)
           .as("top_share_permille"),
         (size(filter(col("__counts"), c => c.getField("n") > 0)) > 1)
           .as("switched"))
@@ -712,9 +712,7 @@ object TextAnalysis {
       .select(col("r.k").as("k"), col("r.covered_tokens").as("covered_tokens"),
         coalesce(col("__total"), lit(0L)).as("total_tokens"))
       .withColumn("coverage_permille",
-        when(col("total_tokens") > 0,
-          call_function("div", col("covered_tokens") * 1000L, col("total_tokens")))
-          .otherwise(lit(0L)))
+        scaled(col("covered_tokens"), col("total_tokens"), 1000L).otherwise(lit(0L)))
   }
 
   /** TextTiling-style semantic block segmentation (Hearst 1997, reduced

@@ -312,6 +312,9 @@ object StreamSpec {
   /** Mirrors Regexp.Validate (entity/regexp.go:42-66). */
   private def validateRegexp(r: RegexpSpec): Unit = {
     if (r.expression.isEmpty) fail("no RegExp is specified")
+    graft.functions.Re2.unsupported(r.expression).foreach { e =>
+      fail(s"error during RegExp compile: error parsing regexp: $e")
+    }
     try java.util.regex.Pattern.compile(graft.functions.Re2.toJavaRegex(r.expression))
     catch { case e: Exception => fail(s"error during RegExp compile: ${e.getMessage}") }
     if (r.groups.isEmpty) fail(s"no groupings where found in regular expression ${r.expression}")

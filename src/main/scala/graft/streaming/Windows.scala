@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import graft.functions.exact.{cosPermille, normSq, quantized}
 import graft.functions.text.wordsOf
 import graft.ops.EvalMetrics.integralMetric
 
@@ -170,10 +171,8 @@ object Windows {
       .withColumn("__v", col(vecCol).cast("array<double>"))
       .withColumn("__keys", graft.functions.text.hyperplaneKeys(col("__v"),
         index.planes, index.tables))
-      .withColumn("__qm",
-        transform(col("__v"), x => round(x * index.quantScale).cast("long")))
-      .withColumn("__qnsq",
-        aggregate(col("__qm"), lit(0L), (a, x) => a + x * x))
+      .withColumn("__qm", quantized(col("__v"), index.quantScale))
+      .withColumn("__qnsq", normSq(col("__qm")))
     val idx = graft.ops.Dedup.capBuckets(index.entries, Seq("key"), maxBucket)
     var cur = withQ
     for (tb <- 0 until index.tables) {
@@ -182,11 +181,7 @@ object Windows {
       cur = cur.join(ib,
         element_at(col("__keys"), tb + 1) === col(s"__k$tb") &&
           col("__qnsq") > 0 && col(s"__in$tb") > 0 &&
-          floor(lit(1000.0) *
-            aggregate(zip_with(col("__qm"), col(s"__im$tb"), (x, y) => x * y),
-              lit(0L), (a, x) => a + x) /
-            (sqrt(col("__qnsq").cast("double")) *
-              sqrt(col(s"__in$tb").cast("double")))).cast("long")
+          cosPermille(col("__qm"), col("__qnsq"), col(s"__im$tb"), col(s"__in$tb"))
             >= minCosPermille,
         "left_anti")
     }

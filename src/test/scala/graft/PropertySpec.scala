@@ -186,6 +186,9 @@ class PropertySpec extends AnyFunSuite {
     def q(s: String) = "\"" + s.flatMap {
       case '"' => "\\\""
       case '\\' => "\\\\"
+      case '\n' => "\\n"
+      case '\r' => "\\r"
+      case '\t' => "\\t"
       case '<' => "\\u003c"
       case '>' => "\\u003e"
       case '&' => "\\u0026"
@@ -1420,6 +1423,71 @@ class PropertySpec extends AnyFunSuite {
         .select("ks_micro", "emd_micro").head()
       assert(BigInt(out.getLong(0)) == wantKs, s"ks: a=$a b=$b")
       assert(BigInt(out.getLong(1)) == wantEmd, s"emd: a=$a b=$b")
+    }
+  }
+
+  test("Go json.Marshal string quoting: literal goldens for the regexp payload and userAgent") {
+    import graft.functions.{UserAgentParser, gjson}
+    def quoted(s: String) = {
+      val sb = new java.lang.StringBuilder
+      gjson.quoteJson(sb, s)
+      sb.toString
+    }
+    // expected values as Go 1.19's json.Marshal writes them
+    val goldens = Seq(
+      "" -> "\"\"",
+      "plain text é/€" -> "\"plain text é/€\"",
+      "a\"b\\c" -> "\"a\\\"b\\\\c\"",
+      "x\ny\rz\tw" -> "\"x\\ny\\rz\\tw\"",
+      "\u0000\u0001\b\f\u001f\u007f" -> "\"\\u0000\\u0001\\u0008\\u000c\\u001f\u007f\"",
+      "<a>&amp;</a>" -> "\"\\u003ca\\u003e\\u0026amp;\\u003c/a\\u003e\"",
+      "line\u2028para\u2029" -> "\"line\\u2028para\\u2029\"")
+    goldens.foreach { case (in, want) => assert(quoted(in) == want, in) }
+    val ua = UserAgentParser.Ua("p\tq", "os\n", "", "", "", "b<r>", "1\u2028", "", "", false, true)
+    assert(ua.toJson == "{\"platform\":\"p\\tq\",\"operatingSystem\":{\"name\":\"os\\n\"," +
+      "\"fullName\":\"\",\"version\":\"\"},\"localization\":\"\",\"browser\":{" +
+      "\"name\":\"b\\u003cr\\u003e\",\"version\":\"1\\u2028\",\"engine\":\"\"," +
+      "\"engineVersion\":\"\"},\"bot\":false,\"mobile\":true}")
+  }
+
+  test("shared integer-exact arithmetic: scaled, fBeta and cosPermille equal their Scala models") {
+    val spark = SparkTestBase.spark
+    import spark.implicits._
+    import org.apache.spark.sql.functions.{col, when}
+    import graft.functions.exact.{cosPermille, fBeta, normSq, scaled}
+    val edge = Gen.oneOf(0L, 1L, -1L)
+    def long(lo: Long, hi: Long) = Gen.frequency(1 -> edge, 4 -> Gen.chooseNum(lo, hi))
+    val perm = Gen.option(long(-1000L, 1000000L))
+    val gen = for {
+      n <- long(-1000000000000L, 1000000000000L)
+      d <- long(-1000000L, 1000000L)
+      sc <- Gen.oneOf(1L, 1000L, 1000000L)
+      p <- perm
+      r <- perm
+      dim <- Gen.chooseNum(1, 8)
+      qa <- Gen.listOfN(dim, long(-1000000L, 1000000L))
+      qb <- Gen.listOfN(dim, long(-1000000L, 1000000L))
+    } yield (n, d, sc, p, r, qa, qb)
+    forAll(gen, 60) { case (n, d, sc, p, r, qa, qb) =>
+      val row = Seq((n, d, p, r, qa, qb)).toDF("n", "d", "p", "r", "qa", "qb")
+        .select(scaled(col("n"), col("d"), sc).as("s"),
+          fBeta(col("p"), col("r"), 1L).as("f1"), fBeta(col("p"), col("r"), 4L).as("f2"),
+          // the callers' guard: a zero norm would divide by zero
+          when(normSq(col("qa")) > 0 && normSq(col("qb")) > 0,
+            cosPermille(col("qa"), normSq(col("qa")), col("qb"), normSq(col("qb")))).as("cos"))
+        .head()
+      def opt(i: Int): Option[Long] = if (row.isNullAt(i)) None else Some(row.getLong(i))
+      val ctx = s"n=$n d=$d scale=$sc p=$p r=$r qa=$qa qb=$qb"
+      assert(opt(0) == (if (d > 0) Some(n * sc / d) else None), ctx)
+      def f(b2: Long): Option[Long] = for {
+        pp <- p; rr <- r if b2 * pp + rr > 0
+      } yield (1 + b2) * pp * rr / (b2 * pp + rr)
+      assert(opt(1) == f(1L), ctx)
+      assert(opt(2) == f(4L), ctx)
+      val (na, nb) = (qa.map(x => x * x).sum, qb.map(x => x * x).sum)
+      val dot = qa.zip(qb).map { case (x, y) => x * y }.sum
+      assert(opt(3) == (if (na > 0 && nb > 0) Some(math.floor(1000.0 * dot /
+        (math.sqrt(na.toDouble) * math.sqrt(nb.toDouble))).toLong) else None), ctx)
     }
   }
 }

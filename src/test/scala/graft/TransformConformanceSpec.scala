@@ -460,6 +460,37 @@ class TransformConformanceSpec extends AnyFunSuite {
     intercept[IllegalArgumentException] { compiled(spec) }
   }
 
+  test("regexp syntax Go's RE2 refuses is rejected at spec validation with Go's error text") {
+    def validate(expr: String) = {
+      val json = expr.replace("\\", "\\\\").replace("\"", "\\\"")
+      StreamSpec.parse(exclusionSpec(s"""{"regexp": {"expression": "$json"}}"""))
+    }
+    val perl = "invalid or unsupported Perl syntax: "
+    val nested = "invalid nested repetition operator: "
+    Seq(
+      """(?P<a>x)(?=y)""" -> (perl + "`(?=`"),
+      """(?P<a>x)(?!y)""" -> (perl + "`(?!`"),
+      """(?<=y)(?P<a>x)""" -> (perl + "`(?<`"),
+      """(?<!y)(?P<a>x)""" -> (perl + "`(?<`"),
+      """(?>y)(?P<a>x)""" -> (perl + "`(?>`"),
+      """(?<n>y)(?P<a>x)""" -> (perl + "`(?<`"),
+      """(?P<a>x)\1""" -> "invalid escape sequence: `\\1`",
+      """(?P<a>x*+)""" -> (nested + "`*+`"),
+      """(?P<a>x++)""" -> (nested + "`++`"),
+      """(?P<a>x?+)""" -> (nested + "`?+`"),
+      """(?P<a>x{2,3}+)""" -> (nested + "`{2,3}+`")
+    ).foreach { case (expr, goText) =>
+      assert(validate(expr).left.map(_.msg) ==
+        Left(s"error during RegExp compile: error parsing regexp: $goText"), expr)
+    }
+    // the same characters inside classes, escapes and \Q..\E quotes, flag
+    // groups, lazy and counted repeats, and a literal } are all RE2
+    Seq("""(?P<a>[(?=*+]x{2}?)\(?=\Q(?=\1\E(?i:y)(?s)z}+[a\]]+?\_[[:alpha:]]""",
+      """^(?P<ts>.{29})\s{1}(?P<logLevel>.*) \s\[LOG\_(?P<customer>[^\.]+).*BarService\.""" +
+        """(?P<method>[^\]]+).*Invocation took: (?P<responseTime>[\d]+)"""
+    ).foreach { expr => assert(validate(expr).isRight, expr) }
+  }
+
   test("invalid userAgent escaping fails the event into the error frame") {
     val spec = exclusionSpec(
       """{"extractFields": [{"fields": [
