@@ -517,7 +517,7 @@ private[graft] object EntriesCuration {
       // by ClassifierSpec (re-derives the frozen weights from sf0.001).
       val model = graft.ops.Classifier.QualityModel(
         FrozenQualityWeightsMicro, FrozenQualityBiasMicro,
-        buckets = 64, maxN = 1, portable = true)
+        buckets = 64, maxN = 1)
       graft.ops.Classifier.score(t(s, dir, "documents"), model, "text", "doc_id")
         .select(col("id").as("doc_id"), col("n_feats"), col("dot_micro"),
           col("predicted"))
@@ -705,7 +705,7 @@ private[graft] object EntriesCuration {
       // non-hash-comparable — and is property-gated in CurationSpec.
       val d = t(s, dir, "documents")
       graft.ops.Curation.dsirScores(d, d.filter(col("lang") === "de"),
-        "text", "doc_id", buckets = 1024, portable = true)
+        "text", "doc_id", buckets = 1024)
         .select("doc_id", "n_feats", "t_hits", "r_hits")
     }),
     "ns_lm_score" -> ((s, dir) => {
@@ -901,14 +901,14 @@ private[graft] object EntriesCuration {
     }),
     "ns_decontaminate_neardup" -> ((s, dir) => {
       // Near-dup decontamination: docs < 250 play the benchmark, the rest
-      // the corpus; portable hashes + exhaustive buckets so the oracle
+      // the corpus; exhaustive buckets so the oracle
       // replays the banded candidate generation and the Jaccard threshold
       // exactly (same shared fragments as the other minhash gates).
       val docs = t(s, dir, "documents")
       graft.ops.Curation.decontaminateNearDup(
         docs.filter(col("doc_id") >= 250).select("doc_id", "text"),
         docs.filter(col("doc_id") < 250),
-        "text", "doc_id", minJaccard = 0.5, portable = true)
+        "text", "doc_id", minJaccard = 0.5)
         .select(col("doc_id"), col("contaminated"))
     }),
     "ns_decontaminate_embed" -> ((s, dir) => {

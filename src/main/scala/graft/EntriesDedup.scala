@@ -52,7 +52,7 @@ private[graft] object EntriesDedup {
         .select(col("id").as("vec_id"),
           posexplode(col("proj")).as(Seq("comp_idx", "proj")))
     }),
-    // portable (md5) hash family: the DuckDB oracle recomputes the full
+    // The DuckDB oracle recomputes the full md5-family
     // 64-hash signature per document and mirrors the banding semantics
     // (∃ band with identical signature rows), so the candidate set is
     // hash-verified end-to-end, not just row-counted. The maxBucket skew
@@ -61,11 +61,11 @@ private[graft] object EntriesDedup {
     // covered by its own OpsSpec test).
     "ns_dedup_minhash" -> ((s, dir) =>
       graft.ops.Dedup.minhashCandidates(t(s, dir, "documents"), "text", "doc_id",
-        maxBucket = Int.MaxValue, portable = true)
+        maxBucket = Int.MaxValue)
         .filter(col("est_jaccard") >= 0.5)),
     "ns_dedup_simhash" -> ((s, dir) =>
       graft.ops.Dedup.simhashCandidates(t(s, dir, "documents"), "text", "doc_id",
-        maxDist = 10, maxBucket = Int.MaxValue, portable = true)),
+        maxDist = 10, maxBucket = Int.MaxValue)),
     "ns_dedup_cluster" -> ((s, dir) => {
       // End-to-end near-dup dedup: minhash candidates → connected
       // components → one cluster id (min reachable doc) per document.
@@ -73,7 +73,7 @@ private[graft] object EntriesDedup {
       // and resolves components with a recursive transitive closure.
       val docs = t(s, dir, "documents")
       val pairs = graft.ops.Dedup.minhashCandidates(docs, "text", "doc_id",
-        maxBucket = Int.MaxValue, portable = true)
+        maxBucket = Int.MaxValue)
         .filter(col("est_jaccard") >= 0.5).select("idA", "idB")
       graft.ops.Dedup.clusterAssignments(docs, "doc_id", pairs)
         .select(col("id").as("doc_id"), col("cluster_id"))
@@ -273,13 +273,13 @@ private[graft] object EntriesDedup {
     }),
     "ns_substring_candidates" -> ((s, dir) => {
       // MOSS-style shared-substring candidates over winnowing fingerprints
-      // (guard disabled + portable hashes so n_shared is EXACTLY the
+      // (guard disabled so n_shared is EXACTLY the
       // fingerprint-set intersection the oracle recomputes; the skew
       // guard's pair-bounding has its own OpsSpec test). Bounded to 200
       // docs so the oracle's all-pairs intersect stays cheap at any SF.
       val d = t(s, dir, "documents").filter(col("doc_id") < 200)
       graft.ops.Dedup.fingerprintCandidates(d, "text", "doc_id",
-        k = 8, w = 4, minShared = 30, maxBucket = Int.MaxValue, portable = true)
+        k = 8, w = 4, minShared = 30, maxBucket = Int.MaxValue)
     }),
     "ns_substr_dedup" -> ((s, dir) => {
       // ExactSubstr span dedup over a deterministic duplicate injection
@@ -435,22 +435,22 @@ private[graft] object EntriesDedup {
     }),
     "ns_incremental_neardup" -> ((s, dir) => {
       // Near-dup candidates of the new batch against the prebuilt corpus
-      // minhash index — portable hash family + cap disabled so DuckDB
+      // minhash index — cap disabled so DuckDB
       // replays signatures, band equality, and est_jaccard exactly.
       val docs = t(s, dir, "documents")
       val index = graft.ops.Dedup.minhashIndex(
-        docs.filter(col("doc_id") < 250), "text", "doc_id", portable = true)
+        docs.filter(col("doc_id") < 250), "text", "doc_id")
       graft.ops.Dedup.incrementalMinhashCandidates(
         docs.filter(col("doc_id") >= 250), index, "text", "doc_id",
         maxBucket = Int.MaxValue)
     }),
     "ns_incremental_simhash" -> ((s, dir) => {
       // SimHash analog of ns_incremental_neardup: batch vs prebuilt
-      // simhash index, portable hashes + cap disabled so DuckDB replays
+      // simhash index, cap disabled so DuckDB replays
       // fingerprints, chunk banding, and hamming exactly.
       val docs = t(s, dir, "documents")
       val index = graft.ops.Dedup.simhashIndex(
-        docs.filter(col("doc_id") < 250), "text", "doc_id", portable = true)
+        docs.filter(col("doc_id") < 250), "text", "doc_id")
       graft.ops.Dedup.incrementalSimhashCandidates(
         docs.filter(col("doc_id") >= 250), index, "text", "doc_id",
         maxDist = 10, maxBucket = Int.MaxValue)
@@ -463,7 +463,7 @@ private[graft] object EntriesDedup {
       // DuckDB via the shared fragments.
       val docs = t(s, dir, "documents")
       val pairs = graft.ops.Dedup.minhashCandidates(docs, "text", "doc_id",
-        maxBucket = Int.MaxValue, portable = true)
+        maxBucket = Int.MaxValue)
         .filter(col("est_jaccard") >= 0.5).select("idA", "idB")
       graft.ops.Dedup.auditCandidates(pairs, docs, "text", "doc_id",
         minJaccardPermille = 500, samplePermille = 500)
@@ -477,7 +477,7 @@ private[graft] object EntriesDedup {
       // the minhash generator surfaced. Every stage replays in DuckDB.
       val docs = t(s, dir, "documents")
       val pairs = graft.ops.Dedup.minhashCandidates(docs, "text", "doc_id",
-        maxBucket = Int.MaxValue, portable = true)
+        maxBucket = Int.MaxValue)
         .filter(col("est_jaccard") >= 0.5).select("idA", "idB")
       graft.ops.Dedup.auditRecall(pairs, docs.filter(col("doc_id") <= 2000),
         "text", "doc_id", minJaccardPermille = 500, samplePermille = 600,
@@ -540,7 +540,7 @@ private[graft] object EntriesDedup {
       // gate pins)
       val docs = t(s, dir, "documents")
       val sig = graft.ops.Dedup.minhashSigAndBuckets(col("text"),
-        3, 64, 16, portable = true).getField("sig")
+        3, 64, 16).getField("sig")
       val entries = docs.select(col("doc_id"), sig.as("sig"))
         .select(col("doc_id"), posexplode(transform(
           sequence(lit(0), lit(15)),
@@ -571,9 +571,9 @@ private[graft] object EntriesDedup {
       val docs = t(s, dir, "documents")
       graft.ops.Dedup.corpusOverlap(
         graft.ops.Dedup.corpusSignature(
-          docs.filter(col("doc_id") < 250), "text", portable = true),
+          docs.filter(col("doc_id") < 250), "text"),
         graft.ops.Dedup.corpusSignature(
-          docs.filter(col("doc_id") >= 250), "text", portable = true))
+          docs.filter(col("doc_id") >= 250), "text"))
     }),
     "ns_hybrid" -> ((s, dir) => {
       // Hybrid retrieval gate: RRF-fuse two rankings that are BOTH exactly

@@ -266,12 +266,12 @@ private[graft] object EntriesProfile {
           col("snt.neg_hits").as("neg_hits"), col("snt.score").as("score"))
     }),
     "ns_fingerprint" -> ((s, dir) => {
-      // portable winnowing: the oracle recomputes every k-gram hash and the
+      // winnowing: the oracle recomputes every k-gram md5 hash and the
       // window minima in SQL; the output aggregates the fingerprint set so
       // values (not just counts) are hash-compared.
       val d = t(s, dir, "documents")
       d.select(col("doc_id"),
-        graft.functions.text.winnowFingerprint(col("text"), k = 8, w = 4, portable = true).as("fps"))
+        graft.functions.text.winnowFingerprint(col("text"), k = 8, w = 4).as("fps"))
         .select(col("doc_id"),
           size(col("fps")).cast("long").as("n_fp"),
           array_min(col("fps")).as("fp_min"),

@@ -105,7 +105,7 @@ private[graft] object EntrySupport {
 
   /** Frozen quality-classifier gate model:
     * `Classifier.train(sf0.001 documents, label = stopword-fraction >=
-    * 6.4%, buckets 64, maxN 1, iters 50, portable)` — inlined so the
+    * 6.4%, buckets 64, maxN 1, iters 50)` — inlined so the
     * scorer gates against a fixed artifact (ClassifierSpec re-derives it
     * from the corpus to pin provenance, the FrozenBpeMerges pattern).
     * Both the `ns_quality_classifier` query and its oracle are generated
@@ -381,7 +381,7 @@ private[graft] object EntrySupport {
 
   /** The 64 portable-minhash signature components as DuckDB expressions —
     * generated from the SAME affine constants the Spark-side
-    * MinHashExpr(portable = true) uses (graft.functions.text.PortableHash),
+    * MinHashExpr uses (graft.functions.text.PortableHash),
     * so the oracle recomputes signatures value-for-value.
     */
   private[graft] def minhashSigSql: String = {

@@ -11,16 +11,20 @@ package graft.functions
   * [[graft.spec.RegexpSpec.collectGroups]], mirroring entity/regexp.go:69-88).
   */
 object Re2 {
-  /** Rewrite RE2 named groups into plain capturing groups, preserving order. */
+  /** Rewrite RE2 named groups into plain capturing groups, preserving order.
+    * Escapes, `\Q…\E` quotes and character classes are copied whole, so a
+    * `(?P<` inside one stays the literal text it is there.
+    */
   def toJavaRegex(re2: String): String = {
     val sb = new java.lang.StringBuilder
     var i = 0
     val n = re2.length
     while (i < n) {
-      if (re2.charAt(i) == '\\' && i + 1 < n) {
-        sb.append(re2.charAt(i)).append(re2.charAt(i + 1))
-        i += 2
-      } else if (re2.regionMatches(i, "(?P<", 0, 4)) {
+      val skip = literalEnd(re2, i)
+      if (skip > i) {
+        sb.append(re2, i, skip)
+        i = skip
+      } else if (re2.startsWith("(?P<", i)) {
         val close = re2.indexOf('>', i + 4)
         require(close > 0, s"unterminated named group in: $re2")
         sb.append('(') // plain capturing group; names resolved positionally
@@ -36,6 +40,31 @@ object Re2 {
   private val countedRepeat = """\{\d+(,\d*)?\}""".r
   private val posixClass = """\[:\^?[a-z]+:\]""".r
 
+  /** End of `r`'s match at `i` in `s`, if `r` matches there. */
+  private def after(r: scala.util.matching.Regex, s: String, i: Int): Option[Int] =
+    r.findPrefixMatchOf(s.subSequence(i, s.length)).map(i + _.end)
+
+  /** End of the escape, `\Q…\E` quote or character class that starts at
+    * `i` (a leading `]` in a class is a literal; its escapes and POSIX
+    * classes are inside it), or `i` when none starts there. No group,
+    * flag or repetition syntax applies inside one.
+    */
+  private def literalEnd(re2: String, i: Int): Int = {
+    val n = re2.length
+    if (re2.charAt(i) == '\\' && i + 1 < n) {
+      if (re2.charAt(i + 1) != 'Q') i + 2
+      else { val e = re2.indexOf("\\E", i + 2); if (e < 0) n else e + 2 }
+    } else if (re2.charAt(i) == '[') {
+      var j = i + 1
+      if (re2.startsWith("^", j)) j += 1
+      if (re2.startsWith("]", j)) j += 1
+      while (j < n && re2.charAt(j) != ']')
+        j = if (re2.charAt(j) == '\\') j + 2
+          else after(posixClass, re2, j).getOrElse(j + 1)
+      math.min(j + 1, n)
+    } else i
+  }
+
   /** Go's error text (after "error parsing regexp: ") for the first
     * construct in `re2` that Go 1.19's `regexp` refuses but java.util.regex
     * would run: backreferences, lookarounds, atomic and `(?<name>` groups,
@@ -45,31 +74,23 @@ object Re2 {
     */
   def unsupported(re2: String): Option[String] = {
     val n = re2.length
-    def after(r: scala.util.matching.Regex, i: Int): Option[Int] =
-      r.findPrefixMatchOf(re2.subSequence(i, n)).map(i + _.end)
     // end of the repetition operator at i, its non-greedy `?` included, or
     // -1; a `{` that opens no counted repeat is a literal, as in Go
     def repeatEnd(i: Int): Int = {
       val end = re2.charAt(i) match {
         case '*' | '+' | '?' => i + 1
-        case '{' => after(countedRepeat, i).getOrElse(-1)
+        case '{' => after(countedRepeat, re2, i).getOrElse(-1)
         case _ => -1
       }
       if (end > 0 && end < n && re2.charAt(end) == '?') end + 1 else end
     }
     var i = 0
     while (i < n) {
-      if (re2.charAt(i) == '\\' && i + 1 < n) {
-        val c = re2.charAt(i + 1)
-        if (c >= '1' && c <= '9') return Some(s"invalid escape sequence: `\\$c`")
-        i = if (c != 'Q') i + 2 else { val e = re2.indexOf("\\E", i + 2); if (e < 0) n else e + 2 }
-      } else if (re2.charAt(i) == '[') { // a leading `]` is a literal
-        i += 1
-        if (re2.startsWith("^", i)) i += 1
-        if (re2.startsWith("]", i)) i += 1
-        while (i < n && re2.charAt(i) != ']')
-          i = if (re2.charAt(i) == '\\') i + 2 else after(posixClass, i).getOrElse(i + 1)
-        i += 1
+      val skip = literalEnd(re2, i)
+      if (skip > i) {
+        if (re2.charAt(i) == '\\' && re2.charAt(i + 1) >= '1' && re2.charAt(i + 1) <= '9')
+          return Some(s"invalid escape sequence: `${re2.substring(i, skip)}`")
+        i = skip
       } else if (re2.startsWith("(?P<", i)) i += 4
       else if (re2.startsWith("(?", i)) { // flags, then `:` or `)`
         val j = re2.indexWhere(c => "imsU-".indexOf(c) < 0, i + 2)

@@ -75,27 +75,25 @@ object GraftFunctions {
     * mirror the [[text]] wrappers; see each expression's scaladoc.
     */
   val all: Seq[(String, Seq[Expression] => Expression)] = Seq(
-    // graft_simhash64(tokens array<string> [, portable bool])
+    // graft_simhash64(tokens array<string>)
     "graft_simhash64" -> { args =>
-      arity("graft_simhash64", args, 1 to 2)
-      text.SimHash64Expr(args.head, boolArg("graft_simhash64", args, 1, default = false))
+      arity("graft_simhash64", args, 1 to 1)
+      text.SimHash64Expr(args.head)
     },
-    // graft_minhash(tokens array<string>, shingleLen, numHashes, bands [, portable])
+    // graft_minhash(tokens array<string>, shingleLen, numHashes, bands)
     "graft_minhash" -> { args =>
-      arity("graft_minhash", args, 4 to 5)
+      arity("graft_minhash", args, 4 to 4)
       text.MinHashExpr(args.head,
         intArg("graft_minhash", args, 1),
         intArg("graft_minhash", args, 2),
-        intArg("graft_minhash", args, 3),
-        boolArg("graft_minhash", args, 4, default = false))
+        intArg("graft_minhash", args, 3))
     },
-    // graft_winnow(text [, k, w, portable])
+    // graft_winnow(text [, k, w])
     "graft_winnow" -> { args =>
-      arity("graft_winnow", args, 1 to 4)
+      arity("graft_winnow", args, 1 to 3)
       val k = if (args.length > 1) intArg("graft_winnow", args, 1) else 8
       val w = if (args.length > 2) intArg("graft_winnow", args, 2) else 4
-      text.WinnowFingerprintExpr(args.head, k, w,
-        boolArg("graft_winnow", args, 3, default = false))
+      text.WinnowFingerprintExpr(args.head, k, w)
     },
     // graft_word_ngrams(text, n [, distinct])
     "graft_word_ngrams" -> { args =>

@@ -154,23 +154,14 @@ object text {
   private def payload(rows: Seq[Seq[_]], what: String): String =
     s"<${rows.length}x${rows.headOption.map(_.length).getOrElse(0)} $what>"
 
-  /** xxhash64-style avalanche of a byte sequence — reuses Spark's own
-    * XXH64 so results are consistent with functions.xxhash64.
-    */
-  private def hashUtf8(s: UTF8String, seed: Long): Long =
-    org.apache.spark.sql.catalyst.expressions.XXH64.hashUTF8String(s, seed)
-
   /** Cross-engine portable hash family: MD5-derived base values + affine
-    * permutations mod p = 2^31-1. The "portable" modes of the fingerprint
-    * expressions use this so an independent SQL engine (the driver's DuckDB
-    * correctness oracle) can recompute signatures EXACTLY: md5 agrees
-    * byte-for-byte across engines, the 31-bit truncation is
-    * `('0x' || substr(md5(s), 1, 8))::UBIGINT & 2147483647` in SQL, and the
-    * affine constants are interpolated into the oracle SQL from these same
-    * definitions (see SparkEntry.oracleSql). Default (non-portable) modes
-    * keep Spark's XXH64 — faster and Spark-native — and are what the scale
-    * path uses; signatures from the two families have identical statistical
-    * properties, only the hash values differ.
+    * permutations mod p = 2^31-1. It is the one token/shingle hash of the
+    * fingerprint and feature-hashing expressions, so an independent SQL
+    * engine (the DuckDB correctness oracle) can recompute signatures
+    * EXACTLY: md5 agrees byte-for-byte across engines, the 31-bit
+    * truncation is `('0x' || substr(md5(s), 1, 8))::UBIGINT & 2147483647`
+    * in SQL, and the affine constants are interpolated into the oracle SQL
+    * from these same definitions (see SparkEntry.oracleSql).
     */
   object PortableHash {
     val P: Long = 2147483647L // 2^31 - 1 (Mersenne prime)
@@ -207,10 +198,10 @@ object text {
   }
 
   /** 64-bit SimHash over a token array: token hashes vote per bit,
-    * vote-sum sign sets the output bit (Charikar 2002 construction).
-    * `portable = true` swaps the token hash to [[PortableHash.h64]].
+    * vote-sum sign sets the output bit (Charikar 2002 construction); the
+    * token hash is [[PortableHash.h64]].
     */
-  case class SimHash64Expr(child: Expression, portable: Boolean = false)
+  case class SimHash64Expr(child: Expression)
       extends UnaryExpression with CodegenFallback {
     override def dataType: DataType = LongType
     override def nullSafeEval(input: Any): Any = {
@@ -220,7 +211,7 @@ object text {
       while (i < arr.numElements()) {
         if (!arr.isNullAt(i)) {
           val tok = arr.getUTF8String(i)
-          val h = if (portable) PortableHash.h64(tok) else hashUtf8(tok, 42L)
+          val h = PortableHash.h64(tok)
           var b = 0
           while (b < 64) {
             if (((h >>> b) & 1L) == 1L) votes(b) += 1 else votes(b) -= 1
@@ -241,12 +232,12 @@ object text {
   }
 
   /** Winnowing document fingerprint (Schleimer et al., SIGMOD 2003):
-    * Rabin-Karp rolling hash over characters with window `k`, then the
-    * minimum hash in each window of `w` consecutive hashes; returns the
-    * distinct selected hashes. Robust to small edits — the standard
-    * document-fingerprint for plagiarism/near-dup detection.
+    * the md5-31 hash of every character k-gram, then the minimum hash in
+    * each window of `w` consecutive hashes; returns the distinct selected
+    * hashes. Robust to small edits — the standard document-fingerprint for
+    * plagiarism/near-dup detection.
     */
-  case class WinnowFingerprintExpr(child: Expression, k: Int, w: Int, portable: Boolean = false)
+  case class WinnowFingerprintExpr(child: Expression, k: Int, w: Int)
       extends UnaryExpression with CodegenFallback {
     override def dataType: DataType = ArrayType(LongType, containsNull = false)
     override def nullSafeEval(input: Any): Any = {
@@ -254,29 +245,13 @@ object text {
       if (s.length < k) return new GenericArrayData(Array.empty[Any])
       val nHashes = s.length - k + 1
       val hashes = new Array[Long](nHashes)
+      // direct md5-31 of each k-gram (no rolling): reproducible in SQL as
+      // the same hash of substr(text, i, k). Char-indexed substring ==
+      // SQL's codepoint substr for BMP text (the test corpus is ASCII).
       var i = 0
-      if (portable) {
-        // direct md5-31 of each k-gram (no rolling): reproducible in SQL as
-        // the same hash of substr(text, i, k). Char-indexed substring ==
-        // SQL's codepoint substr for BMP text (the test corpus is ASCII).
-        while (i < nHashes) {
-          hashes(i) = PortableHash.h31(UTF8String.fromString(s.substring(i, i + k)))
-          i += 1
-        }
-      } else {
-        val B = 1000000007L
-        var pow = 1L
-        while (i < k - 1) { pow *= B; i += 1 }
-        var h = 0L
-        i = 0
-        while (i < k) { h = h * B + s.charAt(i); i += 1 }
-        hashes(0) = h
-        i = 1
-        while (i < nHashes) {
-          h = (h - s.charAt(i - 1) * pow) * B + s.charAt(i + k - 1)
-          hashes(i) = h
-          i += 1
-        }
+      while (i < nHashes) {
+        hashes(i) = PortableHash.h31(UTF8String.fromString(s.substring(i, i + k)))
+        i += 1
       }
       // winnow: min of each window of w hashes (rightmost min on ties)
       val selected = scala.collection.mutable.LinkedHashSet.empty[Long]
@@ -308,8 +283,7 @@ object text {
     * Output: struct(sig: array<long>, buckets: array<long>) where
     * buckets(b) identifies the LSH bucket of band b.
     */
-  case class MinHashExpr(child: Expression, shingleLen: Int, numHashes: Int, bands: Int,
-      portable: Boolean = false)
+  case class MinHashExpr(child: Expression, shingleLen: Int, numHashes: Int, bands: Int)
       extends UnaryExpression with CodegenFallback {
     require(numHashes % bands == 0, "numHashes must be divisible by bands")
     private val rows = numHashes / bands
@@ -326,37 +300,19 @@ object text {
         val arr = raw.asInstanceOf[ArrayData]
         val n = arr.numElements()
         val nShingles = math.max(1, n - shingleLen + 1)
-        val toks = if (portable) tokensOf(arr) else null
+        val toks = tokensOf(arr)
         var i = 0
         while (i < nShingles) {
-          val end = math.min(i + shingleLen, n)
-          if (portable) {
-            // portable mode: md5-31 of the space-joined shingle string (the
-            // exact string SQL's array_to_string(slice, ' ') produces), then
-            // affine permutations — SQL-recomputable, slightly more alloc.
-            val base = PortableHash.h31(UTF8String.fromString(spaceJoin(toks, i, end)))
-            var j = 0
-            while (j < numHashes) {
-              val h = PortableHash.perm(j, base)
-              if (h < sig(j)) sig(j) = h
-              j += 1
-            }
-          } else {
-            // shingle base hash: chain-hash the token window (no string build)
-            var base = 0x9747b28cL
-            var t = i
-            while (t < end) {
-              val tok = if (arr.isNullAt(t)) UTF8String.EMPTY_UTF8 else arr.getUTF8String(t)
-              base = hashUtf8(tok, base)
-              t += 1
-            }
-            // numHashes derived hashes from the base via long-mixing
-            var j = 0
-            while (j < numHashes) {
-              val h = org.apache.spark.sql.catalyst.expressions.XXH64.hashLong(base, j.toLong)
-              if (h < sig(j)) sig(j) = h
-              j += 1
-            }
+          // md5-31 of the space-joined shingle string (the exact string
+          // SQL's array_to_string(slice, ' ') produces), then affine
+          // permutations — SQL-recomputable.
+          val shingle = spaceJoin(toks, i, math.min(i + shingleLen, n))
+          val base = PortableHash.h31(UTF8String.fromString(shingle))
+          var j = 0
+          while (j < numHashes) {
+            val h = PortableHash.perm(j, base)
+            if (h < sig(j)) sig(j) = h
+            j += 1
           }
           i += 1
         }
@@ -657,12 +613,10 @@ object text {
     * tokenization pass per row, zero shuffle. For each n, a document
     * shorter than n tokens contributes no n-grams (so unigrams always
     * exist, bigrams need >= 2 tokens — the convention an independent SQL
-    * engine reproduces with a plain sliding range).
-    * `portable = true` hashes with [[PortableHash.h31]] so the DuckDB
-    * oracle recomputes identical buckets; default is Spark's XXH64.
+    * engine reproduces with a plain sliding range). Grams hash with
+    * [[PortableHash.h31]] so the DuckDB oracle recomputes identical buckets.
     */
-  case class HashedNgramCountsExpr(child: Expression, buckets: Int, maxN: Int,
-      portable: Boolean)
+  case class HashedNgramCountsExpr(child: Expression, buckets: Int, maxN: Int)
       extends UnaryExpression with CodegenFallback {
     require(buckets >= 1 && maxN >= 1, "need buckets >= 1 and maxN >= 1")
     override def dataType: DataType = ArrayType(
@@ -672,9 +626,7 @@ object text {
       val toks = words(input)
       val counts = new java.util.TreeMap[Integer, java.lang.Long]
       def add(g: String): Unit = {
-        val u = UTF8String.fromString(g)
-        val h = if (portable) PortableHash.h31(u) else hashUtf8(u, 42L) & Long.MaxValue
-        val b = (h % buckets).toInt
+        val b = (PortableHash.h31(UTF8String.fromString(g)) % buckets).toInt
         val prev = counts.get(b)
         counts.put(b, if (prev == null) 1L else prev + 1L)
       }
@@ -701,9 +653,8 @@ object text {
     override protected def withNewChildInternal(newChild: Expression): Expression = copy(child = newChild)
   }
 
-  def hashedNgramCounts(text: Column, buckets: Int, maxN: Int, portable: Boolean): Column =
-    ExpressionUtils.column(HashedNgramCountsExpr(ExpressionUtils.expression(text),
-      buckets, maxN, portable))
+  def hashedNgramCounts(text: Column, buckets: Int, maxN: Int): Column =
+    ExpressionUtils.column(HashedNgramCountsExpr(ExpressionUtils.expression(text), buckets, maxN))
 
   /** Per-document inner products of a sparse hashed-feature vector with
     * three global per-bucket arrays riding in the task closure: the target
@@ -1018,8 +969,8 @@ object text {
     override protected def withNewChildInternal(newChild: Expression): Expression = copy(child = newChild)
   }
 
-  def simhash64(tokens: Column, portable: Boolean = false): Column =
-    ExpressionUtils.column(SimHash64Expr(ExpressionUtils.expression(tokens), portable))
+  def simhash64(tokens: Column): Column =
+    ExpressionUtils.column(SimHash64Expr(ExpressionUtils.expression(tokens)))
 
   /** A centroid matrix with its row norms, built once per executor. */
   private final class CentroidTable(centroids: Seq[Seq[Double]]) {
@@ -1111,12 +1062,11 @@ object text {
   def hyperplaneKeys(vec: Column, planes: Int, tables: Int, probes: Int = 1): Column =
     ExpressionUtils.column(HyperplaneKeysExpr(ExpressionUtils.expression(vec), planes, tables, probes))
 
-  def minhash(tokens: Column, shingleLen: Int, numHashes: Int, bands: Int,
-      portable: Boolean = false): Column =
-    ExpressionUtils.column(MinHashExpr(ExpressionUtils.expression(tokens), shingleLen, numHashes, bands, portable))
+  def minhash(tokens: Column, shingleLen: Int, numHashes: Int, bands: Int): Column =
+    ExpressionUtils.column(MinHashExpr(ExpressionUtils.expression(tokens), shingleLen, numHashes, bands))
 
-  def winnowFingerprint(text: Column, k: Int = 8, w: Int = 4, portable: Boolean = false): Column =
-    ExpressionUtils.column(WinnowFingerprintExpr(ExpressionUtils.expression(text), k, w, portable))
+  def winnowFingerprint(text: Column, k: Int = 8, w: Int = 4): Column =
+    ExpressionUtils.column(WinnowFingerprintExpr(ExpressionUtils.expression(text), k, w))
 
   private def codebookArrays(codebooks: Seq[Seq[Seq[Double]]]): Array[Array[Array[Double]]] =
     codebooks.map(_.map(_.toArray).toArray).toArray

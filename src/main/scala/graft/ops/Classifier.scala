@@ -34,7 +34,7 @@ import org.apache.spark.sql.functions._
   *     sign (dot + bias·n_feats > 0), so the decision — not just the
   *     score — replays exactly in an independent SQL engine (the
   *     `ns_quality_classifier` oracle recomputes bucket counts, dot and
-  *     sign value-for-value in portable-hash mode).
+  *     sign value-for-value).
   *
   * Features are L1-mean-normalized in the margin (dot/n_feats) so document
   * length does not dominate; the bias folds into the integer sign test as
@@ -44,11 +44,11 @@ object Classifier {
 
   /** A trained model: per-bucket weights + bias in integer micro-units,
     * plus the feature-hash parameters that produced it (carried together
-    * so scoring can never hash with a mismatched family — same rationale
-    * as [[Dedup.MinhashIndex]]).
+    * so scoring hashes into the same buckets — same rationale as
+    * [[Dedup.MinhashIndex]]).
     */
   final case class QualityModel(weightsMicro: Array[Long], biasMicro: Long,
-      buckets: Int, maxN: Int, portable: Boolean) {
+      buckets: Int, maxN: Int) {
 
     private[Classifier] def dotOnFeatures(features: Column): Column = {
       val zeros = new Array[Long](buckets)
@@ -56,7 +56,7 @@ object Classifier {
     }
     private[Classifier] def dotStruct(text: Column): Column =
       dotOnFeatures(
-        graft.functions.text.hashedNgramCounts(text, buckets, maxN, portable))
+        graft.functions.text.hashedNgramCounts(text, buckets, maxN))
   }
 
   /** Train: distributed one-pass feature extraction, then the sequential
@@ -78,7 +78,7 @@ object Classifier {
     */
   def train(labeled: DataFrame, textCol: String, labelCol: String,
       idCol: String, buckets: Int = 1 << 16, maxN: Int = 1, iters: Int = 10,
-      maxTrainDocs: Int = 200000, portable: Boolean = false): QualityModel = {
+      maxTrainDocs: Int = 200000): QualityModel = {
     require(buckets >= 1 && maxN >= 1 && iters >= 1, "bad hyperparameters")
     // size guard BEFORE collecting features: the bound exists to protect
     // the driver, so it must run distributed (limit+count is one cheap
@@ -88,7 +88,7 @@ object Classifier {
     val rows = labeled.select(
       col(idCol).cast("long").as("__id"),
       col(labelCol).cast("long").as("__y"),
-      graft.functions.text.hashedNgramCounts(col(textCol), buckets, maxN, portable).as("__f"))
+      graft.functions.text.hashedNgramCounts(col(textCol), buckets, maxN).as("__f"))
       .withColumn("__nf", expr("aggregate(__f, CAST(0 AS BIGINT), (acc, x) -> acc + x.c)"))
       .filter(col("__nf") > 0)
       .collect()
@@ -122,7 +122,7 @@ object Classifier {
       }
     }
     val avg = Array.tabulate(buckets)(b => w(b) - u(b) / t)
-    QualityModel(avg, bias - biasU / t, buckets, maxN, portable)
+    QualityModel(avg, bias - biasU / t, buckets, maxN)
   }
 
   /** Score documents: `(id, n_feats, dot_micro, predicted)` where

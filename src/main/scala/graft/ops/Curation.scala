@@ -149,9 +149,9 @@ object Curation {
   def decontaminateNearDup(corpus: DataFrame, benchmark: DataFrame,
       textCol: String, idCol: String, minJaccard: Double = 0.8,
       shingleLen: Int = 3, numHashes: Int = 64, bands: Int = 16,
-      maxBucket: Int = Int.MaxValue, portable: Boolean = false): DataFrame = {
+      maxBucket: Int = Int.MaxValue): DataFrame = {
     val idx = graft.ops.Dedup.minhashIndex(benchmark, textCol, idCol,
-      shingleLen, numHashes, bands, portable)
+      shingleLen, numHashes, bands)
     val hits = graft.ops.Dedup
       .incrementalMinhashCandidates(corpus, idx, textCol, idCol, maxBucket)
       .filter(col("est_jaccard") >= minJaccard)
@@ -749,8 +749,8 @@ object Curation {
     * DSIR feature map (Xie et al. 2023, "Data Selection for Language
     * Models via Importance Resampling").
     */
-  def dsirFeatures(text: Column, buckets: Int = 4096, portable: Boolean = false): Column =
-    graft.functions.text.hashedNgramCounts(text, buckets, maxN = 2, portable)
+  def dsirFeatures(text: Column, buckets: Int = 4096): Column =
+    graft.functions.text.hashedNgramCounts(text, buckets, maxN = 2)
 
   /** Global per-bucket gram totals for a corpus — the sufficient statistic
     * of the DSIR bag-of-grams model. One aggregation; the result is
@@ -758,12 +758,11 @@ object Curation {
     * across scoring runs — train once on the (small) target set and a raw
     * sample, then score any number of corpora without re-aggregating.
     */
-  def dsirBucketTotals(df: DataFrame, textCol: String, buckets: Int = 4096,
-      portable: Boolean = false): Array[Long] = {
+  def dsirBucketTotals(df: DataFrame, textCol: String, buckets: Int = 4096): Array[Long] = {
     // features materialize as an attribute BELOW the explode: as the
     // generator child the tokenize+hash pass would be re-inlined into the
     // isnotnull/size guards InferFiltersFromGenerate adds (2 extra evals)
-    val rows = df.select(dsirFeatures(col(textCol), buckets, portable).as("__f"))
+    val rows = df.select(dsirFeatures(col(textCol), buckets).as("__f"))
       .select(explode(col("__f")).as("f"))
       .groupBy(col("f.bucket").as("bucket"))
       .agg(sum(col("f.c")).as("c"))
@@ -793,11 +792,11 @@ object Curation {
     * hash thresholds or top-k on logw.
     */
   def dsirScores(raw: DataFrame, target: DataFrame, textCol: String, idCol: String,
-      buckets: Int = 4096, portable: Boolean = false,
+      buckets: Int = 4096,
       targetTotals: Option[Array[Long]] = None,
       rawTotals: Option[Array[Long]] = None): DataFrame = {
-    val t = targetTotals.getOrElse(dsirBucketTotals(target, textCol, buckets, portable))
-    val r = rawTotals.getOrElse(dsirBucketTotals(raw, textCol, buckets, portable))
+    val t = targetTotals.getOrElse(dsirBucketTotals(target, textCol, buckets))
+    val r = rawTotals.getOrElse(dsirBucketTotals(raw, textCol, buckets))
     require(t.length == buckets && r.length == buckets,
       "precomputed totals must have one entry per bucket")
     val tTot = t.sum.toDouble + buckets
@@ -807,7 +806,7 @@ object Curation {
     }
     raw.select(col(idCol),
         graft.functions.text.dsirDot(
-          dsirFeatures(col(textCol), buckets, portable), t, r, lambda).as("__d"))
+          dsirFeatures(col(textCol), buckets), t, r, lambda).as("__d"))
       .select(col(idCol),
         col("__d.n_feats").as("n_feats"),
         col("__d.t_hits").as("t_hits"),

@@ -12,7 +12,7 @@ import graft.functions.text.wordsOf
   *   - exact dedup: one hash-partitioned aggregation on a uniform digest key
   *     (no skew by construction — digests are uniform), map-side combine on.
   *   - MinHash LSH: per-row signature computation is narrow (one pass over
-  *     shingles via codegen'd HOFs + xxhash64); the only shuffle is the
+  *     shingles, md5 shingle hashes); the only shuffle is the
   *     band-bucket self-join, whose key cardinality (bands × buckets) and
   *     per-bucket size are tunable; oversized buckets are capped to bound
   *     worst-case quadratic pair expansion (documented skew guard).
@@ -72,9 +72,8 @@ object Dedup {
     * (graft.functions.text.MinHashExpr): O(shingles × hashes) per row,
     * computed exactly once regardless of how many band columns reference it.
     */
-  def minhashSigAndBuckets(textCol: Column, shingleLen: Int, numHashes: Int, bands: Int,
-      portable: Boolean = false): Column =
-    graft.functions.text.minhash(wordsOf(textCol), shingleLen, numHashes, bands, portable)
+  def minhashSigAndBuckets(textCol: Column, shingleLen: Int, numHashes: Int, bands: Int): Column =
+    graft.functions.text.minhash(wordsOf(textCol), shingleLen, numHashes, bands)
 
   /** Skew guard shared by the banded-LSH candidate generators: keep only
     * (band, bucket) groups of size ≤ maxBucket (a bucket of size m yields
@@ -129,9 +128,6 @@ object Dedup {
     * @param bands      number of LSH bands; rows = numHashes / bands.
     * @param maxBucket  skew guard: buckets larger than this are dropped
     *                   (see [[capBuckets]]).
-    * @param portable   use the SQL-recomputable md5 hash family (the
-    *                   correctness oracle recomputes the signatures in
-    *                   DuckDB); default XXH64 for the scale path.
     * Output: (idA, idB, est_jaccard) with idA < idB, distinct. Candidates
     * are pairs whose signatures agree on a FULL band (the bucket join is a
     * pre-filter on the band hash; the slice-equality filter removes the
@@ -148,15 +144,14 @@ object Dedup {
       shingleLen: Int = 3,
       numHashes: Int = 64,
       bands: Int = 16,
-      maxBucket: Int = 64,
-      portable: Boolean = false
+      maxBucket: Int = 64
   ): DataFrame = {
     require(numHashes % bands == 0, "numHashes must be divisible by bands")
     val rows = numHashes / bands
 
     val sigs = df.select(
       col(idCol).as("id"),
-      minhashSigAndBuckets(col(textCol), shingleLen, numHashes, bands, portable).as("mh"))
+      minhashSigAndBuckets(col(textCol), shingleLen, numHashes, bands).as("mh"))
 
     val banded = sigs.select(
       col("id"), col("mh.sig").as("sig"),
@@ -262,28 +257,24 @@ object Dedup {
   }
 
   /** Persistable minhash LSH index: the banded-bucket entries frame plus
-    * the hash-family parameters that produced it. Carrying the parameters
-    * WITH the entries makes a family mismatch (e.g. index built portable,
-    * delta hashed with XXH64 — buckets silently never collide)
-    * unrepresentable: the incremental path reads them from here. Persist
-    * `entries` as a bucketed table; reconstruct the wrapper with the same
-    * parameters on load.
+    * the shingle/hash/band parameters that produced it, which the
+    * incremental path reads from here. Persist `entries` as a bucketed
+    * table; reconstruct the wrapper with the same parameters on load.
     */
   final case class MinhashIndex(entries: DataFrame, shingleLen: Int,
-      numHashes: Int, bands: Int, portable: Boolean)
+      numHashes: Int, bands: Int)
 
   /** Build a [[MinhashIndex]] over the corpus — the near-dup analog of
     * [[exactIndex]]. Entries: (corpus_id, sig, band, bucket), bands rows
     * per doc.
     */
   def minhashIndex(corpus: DataFrame, textCol: String, idCol: String,
-      shingleLen: Int = 3, numHashes: Int = 64, bands: Int = 16,
-      portable: Boolean = false): MinhashIndex = {
+      shingleLen: Int = 3, numHashes: Int = 64, bands: Int = 16): MinhashIndex = {
     val entries = corpus.select(col(idCol).as("corpus_id"),
-      minhashSigAndBuckets(col(textCol), shingleLen, numHashes, bands, portable).as("mh"))
+      minhashSigAndBuckets(col(textCol), shingleLen, numHashes, bands).as("mh"))
       .select(col("corpus_id"), col("mh.sig").as("sig"),
         posexplode(col("mh.buckets")).as(Seq("band", "bucket")))
-    MinhashIndex(entries, shingleLen, numHashes, bands, portable)
+    MinhashIndex(entries, shingleLen, numHashes, bands)
   }
 
   /** Near-duplicate candidates of a new batch against a prebuilt
@@ -300,7 +291,7 @@ object Dedup {
     val rows = index.numHashes / index.bands
     val b = batch.select(col(idCol).as("batch_id"),
       minhashSigAndBuckets(col(textCol), index.shingleLen, index.numHashes,
-        index.bands, index.portable).as("mh"))
+        index.bands).as("mh"))
       .select(col("batch_id"), col("mh.sig").as("sigB"),
         posexplode(col("mh.buckets")).as(Seq("band", "bucket")))
     val idx = capBuckets(index.entries, Seq("band", "bucket"), maxBucket)
@@ -314,11 +305,9 @@ object Dedup {
 
   /** Persistable SimHash index — the SimHash analog of [[MinhashIndex]],
     * completing the incremental family (exact + minhash + simhash). One
-    * 8-byte fingerprint + 4 banded 16-bit chunk keys per document;
-    * parameters (the hash family) ride with the entries so a delta can
-    * never hash with a mismatched family.
+    * 8-byte fingerprint + 4 banded 16-bit chunk keys per document.
     */
-  final case class SimhashIndex(entries: DataFrame, portable: Boolean)
+  final case class SimhashIndex(entries: DataFrame)
 
   /** The 4 16-bit band chunks of a 64-bit simhash — shared by the full
     * generator and the incremental index so their banding can never drift.
@@ -331,12 +320,11 @@ object Dedup {
     * `(corpus_id, simhash, band, chunk)`, 4 rows per doc. Persist
     * `entries` bucketed on (band, chunk) for co-located delta joins.
     */
-  def simhashIndex(corpus: DataFrame, textCol: String, idCol: String,
-      portable: Boolean = false): SimhashIndex = {
-    val entries = simhash(corpus, textCol, idCol, portable)
+  def simhashIndex(corpus: DataFrame, textCol: String, idCol: String): SimhashIndex = {
+    val entries = simhash(corpus, textCol, idCol)
       .select(col("id").as("corpus_id"), col("simhash"),
         posexplode(simhashBandCols(col("simhash"))).as(Seq("band", "chunk")))
-    SimhashIndex(entries, portable)
+    SimhashIndex(entries)
   }
 
   /** Near-dup candidates of a new batch against a prebuilt
@@ -348,7 +336,7 @@ object Dedup {
   def incrementalSimhashCandidates(batch: DataFrame, index: SimhashIndex,
       textCol: String, idCol: String, maxDist: Int = 3,
       maxBucket: Int = 64): DataFrame = {
-    val b = simhash(batch, textCol, idCol, index.portable)
+    val b = simhash(batch, textCol, idCol)
       .select(col("id").as("batch_id"), col("simhash").as("fpB"),
         posexplode(simhashBandCols(col("simhash"))).as(Seq("band", "chunk")))
     val idx = capBuckets(index.entries, Seq("band", "chunk"), maxBucket)
@@ -544,9 +532,9 @@ object Dedup {
     * folded. Output: (hash_idx: 0..numHashes-1, minv).
     */
   def corpusSignature(df: DataFrame, textCol: String, shingleLen: Int = 3,
-      numHashes: Int = 64, portable: Boolean = false): DataFrame =
+      numHashes: Int = 64): DataFrame =
     df.select(minhashSigAndBuckets(col(textCol), shingleLen, numHashes,
-        bands = 1, portable).getField("sig").as("sig"))
+        bands = 1).getField("sig").as("sig"))
       .select(posexplode(col("sig")).as(Seq("hash_idx", "minv")))
       .groupBy("hash_idx").agg(min("minv").as("minv"))
 
@@ -760,13 +748,12 @@ object Dedup {
       k: Int = 8,
       w: Int = 4,
       minShared: Int = 3,
-      maxBucket: Int = 64,
-      portable: Boolean = false
+      maxBucket: Int = 64
   ): DataFrame = {
     // fps materializes below the explode (sibling-of-generator expressions
     // re-evaluate per exploded row — see WordNgramsExpr notes)
     val fps = df.select(col(idCol).as("id"),
-      graft.functions.text.winnowFingerprint(col(textCol), k, w, portable).as("fps"))
+      graft.functions.text.winnowFingerprint(col(textCol), k, w).as("fps"))
     val exploded = fps.select(col("id"), explode(col("fps")).as("fp"))
     val capped = capBuckets(exploded, Seq("fp"), maxBucket)
     val a = capped.select(col("fp"), col("id").as("idA"))
@@ -784,9 +771,9 @@ object Dedup {
     * with small Hamming distance, found by banding the fingerprint into
     * 16-bit chunks (any equal chunk → candidate).
     */
-  def simhash(df: DataFrame, textCol: String, idCol: String, portable: Boolean = false): DataFrame =
+  def simhash(df: DataFrame, textCol: String, idCol: String): DataFrame =
     df.select(col(idCol).as("id"),
-      graft.functions.text.simhash64(wordsOf(col(textCol)), portable).as("simhash"))
+      graft.functions.text.simhash64(wordsOf(col(textCol))).as("simhash"))
 
   /** Embedding-cosine near-duplicate pairs: hyperplane-LSH bucket join
     * (any of `tables` tables) followed by exact cosine ≥ threshold —
@@ -1117,8 +1104,8 @@ object Dedup {
     * all fingerprint 0) would otherwise make one bucket quadratic.
     */
   def simhashCandidates(df: DataFrame, textCol: String, idCol: String, maxDist: Int = 3,
-      maxBucket: Int = 64, portable: Boolean = false): DataFrame = {
-    val fp = simhash(df, textCol, idCol, portable)
+      maxBucket: Int = 64): DataFrame = {
+    val fp = simhash(df, textCol, idCol)
     val banded0 = fp.select(col("id"), col("simhash"),
       posexplode(simhashBandCols(col("simhash"))).as(Seq("band", "chunk")))
     val banded = capBuckets(banded0, Seq("band", "chunk"), maxBucket)

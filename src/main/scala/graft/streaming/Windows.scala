@@ -44,9 +44,8 @@ object Windows {
     * reconciliation sweeping the hamming<=k tail.
     */
   def streamingNearDedup(df: DataFrame, tsCol: String, textCol: String,
-      watermark: String, portable: Boolean = false): DataFrame =
-    df.withColumn("__simhash",
-        graft.functions.text.simhash64(wordsOf(col(textCol)), portable))
+      watermark: String): DataFrame =
+    df.withColumn("__simhash", graft.functions.text.simhash64(wordsOf(col(textCol))))
       .withWatermark(tsCol, watermark)
       .dropDuplicatesWithinWatermark("__simhash")
       .drop("__simhash")
@@ -97,26 +96,32 @@ object Windows {
     val rows = index.numHashes / index.bands
     val withSig = stream
       .withColumn("__mh", graft.ops.Dedup.minhashSigAndBuckets(col(textCol),
-        index.shingleLen, index.numHashes, index.bands, index.portable))
+        index.shingleLen, index.numHashes, index.bands))
       .withColumn("__sig", col("__mh.sig"))
       .withColumn("__bks", col("__mh.buckets"))
       .drop("__mh")
     val idx = graft.ops.Dedup.capBuckets(index.entries, Seq("band", "bucket"), maxBucket)
-    var cur = withSig
-    for (b <- 0 until index.bands) {
-      val ib = idx.filter(col("band") === b)
-        .select(col("bucket").as(s"__bkt$b"), col("sig").as(s"__sigA$b"))
-      cur = cur.join(ib,
-        element_at(col("__bks"), b + 1) === col(s"__bkt$b") &&
-          graft.ops.Dedup.fullBandEq(col(s"__sigA$b"), col("__sig"), lit(b), rows),
-        "left_anti")
-    }
-    cur
-      .withColumn("__sigkey", xxhash64(col("__sig")))
-      .withWatermark(tsCol, watermark)
-      .dropDuplicatesWithinWatermark("__sigkey")
-      .drop("__sig", "__bks", "__sigkey")
+    antiJoinIndex(stream, withSig, (0 until index.bands).map { b =>
+      idx.filter(col("band") === b)
+        .select(col("bucket").as(s"__bkt$b"), col("sig").as(s"__sigA$b")) ->
+        (element_at(col("__bks"), b + 1) === col(s"__bkt$b") &&
+          graft.ops.Dedup.fullBandEq(col(s"__sigA$b"), col("__sig"), lit(b), rows))
+    }, xxhash64(col("__sig")), tsCol, watermark)
   }
+
+  /** The stream-static tail the three index twins share: `keyed` (the
+    * stream plus its `__` temp columns) LEFT ANTI joins each index slice
+    * on that slice's condition, the survivors dedup on `key` within the
+    * watermark horizon, and the temp columns drop, leaving the stream's.
+    */
+  private def antiJoinIndex(stream: DataFrame, keyed: DataFrame,
+      slices: Seq[(DataFrame, Column)], key: Column, tsCol: String,
+      watermark: String): DataFrame =
+    slices.foldLeft(keyed) { case (cur, (slice, on)) => cur.join(slice, on, "left_anti") }
+      .withColumn("__dupkey", key)
+      .withWatermark(tsCol, watermark)
+      .dropDuplicatesWithinWatermark("__dupkey")
+      .drop(keyed.columns.diff(stream.columns).toIndexedSeq :+ "__dupkey": _*)
 
   /** SimHash twin of [[streamingIncrementalNearDedup]]: drop stream docs
     * within Hamming distance `maxDist` of any corpus doc in a persisted
@@ -130,24 +135,16 @@ object Windows {
   def streamingIncrementalNearDedupSimhash(stream: DataFrame,
       index: graft.ops.Dedup.SimhashIndex, tsCol: String, textCol: String,
       watermark: String, maxDist: Int = 3, maxBucket: Int = 64): DataFrame = {
-    val withFp = stream.withColumn("__fp",
-        graft.functions.text.simhash64(
-          wordsOf(col(textCol)), index.portable))
+    val withFp = stream
+      .withColumn("__fp", graft.functions.text.simhash64(wordsOf(col(textCol))))
       .withColumn("__chunks", graft.ops.Dedup.simhashBandCols(col("__fp")))
     val idx = graft.ops.Dedup.capBuckets(index.entries, Seq("band", "chunk"), maxBucket)
-    var cur = withFp
-    for (b <- 0 until 4) {
-      val ib = idx.filter(col("band") === b)
-        .select(col("chunk").as(s"__ck$b"), col("simhash").as(s"__fpA$b"))
-      cur = cur.join(ib,
-        element_at(col("__chunks"), b + 1) === col(s"__ck$b") &&
-          bit_count(col("__fp").bitwiseXOR(col(s"__fpA$b"))) <= maxDist,
-        "left_anti")
-    }
-    cur
-      .withWatermark(tsCol, watermark)
-      .dropDuplicatesWithinWatermark("__fp")
-      .drop("__fp", "__chunks")
+    antiJoinIndex(stream, withFp, (0 until 4).map { b =>
+      idx.filter(col("band") === b)
+        .select(col("chunk").as(s"__ck$b"), col("simhash").as(s"__fpA$b")) ->
+        (element_at(col("__chunks"), b + 1) === col(s"__ck$b") &&
+          bit_count(col("__fp").bitwiseXOR(col(s"__fpA$b"))) <= maxDist)
+    }, col("__fp"), tsCol, watermark)
   }
 
   /** Embedding twin of [[streamingIncrementalNearDedup]]: drop stream
@@ -174,22 +171,14 @@ object Windows {
       .withColumn("__qm", quantized(col("__v"), index.quantScale))
       .withColumn("__qnsq", normSq(col("__qm")))
     val idx = graft.ops.Dedup.capBuckets(index.entries, Seq("key"), maxBucket)
-    var cur = withQ
-    for (tb <- 0 until index.tables) {
-      val ib = idx.select(col("key").as(s"__k$tb"),
-        col("vec_micro").as(s"__im$tb"), col("nsq_micro2").as(s"__in$tb"))
-      cur = cur.join(ib,
-        element_at(col("__keys"), tb + 1) === col(s"__k$tb") &&
+    antiJoinIndex(stream, withQ, (0 until index.tables).map { tb =>
+      idx.select(col("key").as(s"__k$tb"),
+        col("vec_micro").as(s"__im$tb"), col("nsq_micro2").as(s"__in$tb")) ->
+        (element_at(col("__keys"), tb + 1) === col(s"__k$tb") &&
           col("__qnsq") > 0 && col(s"__in$tb") > 0 &&
           cosPermille(col("__qm"), col("__qnsq"), col(s"__im$tb"), col(s"__in$tb"))
-            >= minCosPermille,
-        "left_anti")
-    }
-    cur
-      .withColumn("__vkey", xxhash64(col("__qm")))
-      .withWatermark(tsCol, watermark)
-      .dropDuplicatesWithinWatermark("__vkey")
-      .drop("__v", "__keys", "__qm", "__qnsq", "__vkey")
+            >= minCosPermille)
+    }, xxhash64(col("__qm")), tsCol, watermark)
   }
 
   /** The windowing step every windowed aggregate below shares: the

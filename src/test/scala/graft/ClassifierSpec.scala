@@ -54,7 +54,7 @@ class ClassifierSpec extends AnyFunSuite {
       .withColumn("label",
         (size(filter(toks, t => t === "the" || t === "a")) * 1000 / size(toks) >= 64).cast("int"))
     val m = Classifier.train(d, "text", "label", "doc_id",
-      buckets = 64, maxN = 1, iters = 50, portable = true)
+      buckets = 64, maxN = 1, iters = 50)
     assert(m.weightsMicro.toSeq == EntrySupport.FrozenQualityWeightsMicro.toSeq)
     assert(m.biasMicro == EntrySupport.FrozenQualityBiasMicro)
     // the artifact is a real classifier: clearly above the 0.49/0.51 base
@@ -77,7 +77,7 @@ class ClassifierSpec extends AnyFunSuite {
 
   test("scoring is a zero-shuffle scan (weights ride the closure)") {
     val m = Classifier.QualityModel(EntrySupport.FrozenQualityWeightsMicro,
-      EntrySupport.FrozenQualityBiasMicro, 64, 1, portable = true)
+      EntrySupport.FrozenQualityBiasMicro, 64, 1)
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     val plan = Classifier.score(docs, m, "text", "doc_id")
       .queryExecution.executedPlan.toString

@@ -111,7 +111,7 @@ class FunctionRegistrySpec extends AnyFunSuite {
 
   test("builders reject wrong arity and non-literal config args") {
     val e1 = intercept[Throwable](spark.sql("SELECT graft_minhash(array('a'))").collect())
-    assert(messagesOf(e1).contains("graft_minhash expects 4..5 arguments"))
+    assert(messagesOf(e1).contains("graft_minhash expects 4..4 arguments"))
     val e2 = intercept[Throwable](
       spark.sql("SELECT graft_winnow(text, id, 4) FROM frdocs").collect())
     assert(messagesOf(e2).contains("argument 2 must be an integer literal"))

@@ -270,7 +270,7 @@ class GraphSpec extends AnyFunSuite {
       val before = spark.sparkContext.getPersistentRDDs.keySet
       val out = run()
       out.collect()
-      val added = spark.sparkContext.getPersistentRDDs.keySet -- before
+      val added = spark.sparkContext.getPersistentRDDs.keySet.diff(before)
       assert(added.size <= 1, s"$name left ${added.size} RDDs persisted: $added")
     }
   }

@@ -646,15 +646,15 @@ class OpsSpec extends AnyFunSuite {
     val base = (1 to 60).map(i => s"tok$i").mkString(" ")
     val docs = Seq((1L, base), (2L, base.replace("tok30", "tokX")),
       (3L, (1 to 60).map(i => s"zzz$i").mkString(" "))).toDF("doc_id", "text")
-    val mh = Dedup.minhashCandidates(docs, "text", "doc_id", portable = true)
+    val mh = Dedup.minhashCandidates(docs, "text", "doc_id")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(mh.contains((1L, 2L)) && !mh.contains((1L, 3L)))
-    val sh = Dedup.simhashCandidates(docs, "text", "doc_id", maxDist = 10, portable = true)
+    val sh = Dedup.simhashCandidates(docs, "text", "doc_id", maxDist = 10)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(sh.contains((1L, 2L)))
-    // identical docs fingerprint identically in both families
+    // identical docs fingerprint identically
     val both = Seq((1L, base), (2L, base)).toDF("doc_id", "text")
-    val fpP = Dedup.simhash(both, "text", "doc_id", portable = true)
+    val fpP = Dedup.simhash(both, "text", "doc_id")
       .collect().map(_.getLong(1)).distinct
     assert(fpP.length == 1)
   }
@@ -933,7 +933,7 @@ class OpsSpec extends AnyFunSuite {
   test("incremental minhash candidates equal the cross-pair subset of full dedup") {
     val docs = spark.read.parquet(s"$sf/documents.parquet")
     val idx = Dedup.minhashIndex(docs.filter(col("doc_id") < 250), "text", "doc_id")
-    assert(!idx.portable && idx.numHashes == 64, "index carries its hash-family parameters")
+    assert(idx.numHashes == 64, "index carries its hash-family parameters")
     val inc = Dedup.incrementalMinhashCandidates(
       docs.filter(col("doc_id") >= 250), idx, "text", "doc_id", maxBucket = Int.MaxValue)
       .collect().map(r => (r.getLong(1), r.getLong(0))).toSet // (corpus_id, batch_id)
@@ -1053,14 +1053,14 @@ class OpsSpec extends AnyFunSuite {
     val docs = spark.read.parquet(s"$sf/documents.parquet").limit(200)
     val corpus = docs.filter(col("doc_id") % 2 === 0)
     val batch = docs.filter(col("doc_id") % 2 === 1)
-    val idx = Dedup.simhashIndex(corpus, "text", "doc_id", portable = true)
+    val idx = Dedup.simhashIndex(corpus, "text", "doc_id")
     val inc = Dedup.incrementalSimhashCandidates(batch, idx, "text", "doc_id",
         maxDist = 10, maxBucket = Int.MaxValue)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
     // the full generator over corpus ∪ batch, restricted to cross pairs and
     // reoriented (batch, corpus), must agree exactly — shared band exprs
     val full = Dedup.simhashCandidates(docs, "text", "doc_id",
-        maxDist = 10, maxBucket = Int.MaxValue, portable = true)
+        maxDist = 10, maxBucket = Int.MaxValue)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
       .flatMap { case (a, b, h) =>
         if (a % 2 == 0 && b % 2 == 1) Some((b, a, h))
@@ -1076,11 +1076,11 @@ class OpsSpec extends AnyFunSuite {
     val a = docs.filter(col("doc_id") % 2 === 0)
     val b = docs.filter(col("doc_id") % 2 === 1)
     // mergeability law: sig(A ∪ B) = elementwise min of sig(A), sig(B)
-    val sigU = Dedup.corpusSignature(docs, "text", portable = true)
+    val sigU = Dedup.corpusSignature(docs, "text")
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    val sigA = Dedup.corpusSignature(a, "text", portable = true)
+    val sigA = Dedup.corpusSignature(a, "text")
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    val sigB = Dedup.corpusSignature(b, "text", portable = true)
+    val sigB = Dedup.corpusSignature(b, "text")
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
     assert(sigU.keySet == (0 until 64).toSet)
     assert(sigU == sigU.keySet.map(i => i -> math.min(sigA(i), sigB(i))).toMap,
@@ -1093,8 +1093,8 @@ class OpsSpec extends AnyFunSuite {
     val exact = ga.intersect(gb).size.toDouble / ga.union(gb).size
     val est = Dedup.corpusOverlapEstimate(
         Dedup.corpusOverlap(
-          Dedup.corpusSignature(a, "text", portable = true),
-          Dedup.corpusSignature(b, "text", portable = true)))
+          Dedup.corpusSignature(a, "text"),
+          Dedup.corpusSignature(b, "text")))
       .collect().head
     assert(est.getLong(0) == 64L)
     val estJ = est.getLong(2) / 1000.0

@@ -767,7 +767,7 @@ class PlanSpec extends AnyFunSuite {
 
   test("corpus signature reduces map-side: partial aggregate, 64-row exchange") {
     val docs = EntrySupport.t(spark, sf, "documents")
-    val plan = planOf(graft.ops.Dedup.corpusSignature(docs, "text", portable = true))
+    val plan = planOf(graft.ops.Dedup.corpusSignature(docs, "text"))
     // two HashAggregate nodes around the hash_idx exchange = the corpus
     // reduces to numHashes rows per partition BEFORE shuffling
     assert("HashAggregate".r.findAllIn(plan).size >= 2,

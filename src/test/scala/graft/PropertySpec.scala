@@ -1490,4 +1490,93 @@ class PropertySpec extends AnyFunSuite {
         (math.sqrt(na.toDouble) * math.sqrt(nb.toDouble))).toLong) else None), ctx)
     }
   }
+
+  test("hash-family kernels equal plain-Scala models built on PortableHash") {
+    val spark = SparkTestBase.spark
+    import spark.implicits._
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.catalyst.expressions.XXH64
+    import org.apache.spark.unsafe.types.UTF8String
+    import org.apache.spark.sql.functions.col
+    import graft.functions.text
+    import graft.functions.text.PortableHash
+    def u(s: String) = UTF8String.fromString(s)
+    val (shingleLen, numHashes, bands) = (3, 16, 4)
+    val token = Gen.frequency(1 -> Gen.const[String](null),
+      6 -> Gen.oneOf("a", "b", "The", "cat", "sat", "", "é"))
+    val toksGen = Gen.chooseNum(0, 8).flatMap(Gen.listOfN(_, token))
+    val textGen = Gen.chooseNum(0, 24).flatMap(Gen.listOfN(_,
+      Gen.frequency(6 -> Gen.alphaChar, 2 -> Gen.const(' '), 1 -> Gen.oneOf('\t', '\n'))))
+      .map(_.mkString)
+    val gen = for {
+      toks <- toksGen
+      txt <- textGen
+      k <- Gen.chooseNum(1, 6)
+      w <- Gen.chooseNum(1, 4)
+      buckets <- Gen.oneOf(1, 7, 64)
+      maxN <- Gen.chooseNum(1, 3)
+    } yield (toks, txt, k, w, buckets, maxN)
+    // empty array, null elements, fewer tokens than shingleLen, texts
+    // shorter than k, and null inputs, ahead of the generated cases
+    val edges = Seq((Seq.empty[String], "", 5, 3, 64, 2), (Seq[String](null), "abcd", 5, 3, 7, 2),
+      (Seq("a", null), " x ", 4, 2, 1, 3), (Seq("a", "b", "c"), "abcde", 5, 3, 64, 1),
+      (null, null, 5, 3, 64, 2))
+
+    def simhash(toks: Seq[String]): Long = {
+      val votes = new Array[Int](64)
+      for (t <- toks if t != null; b <- 0 until 64)
+        votes(b) += (if (((PortableHash.h64(u(t)) >>> b) & 1L) == 1L) 1 else -1)
+      (0 until 64).filter(votes(_) > 0).foldLeft(0L)((acc, b) => acc | (1L << b))
+    }
+    def minhashSig(toks: Seq[String]): Seq[Long] = {
+      val ts = Option(toks).getOrElse(Nil).map(t => if (t == null) "" else t)
+      val bases = if (toks == null) Nil
+        else (0 until math.max(1, ts.length - shingleLen + 1))
+          .map(i => PortableHash.h31(u(ts.slice(i, i + shingleLen).mkString(" "))))
+      (0 until numHashes).map(j => (bases.map(PortableHash.perm(j, _)) :+ Long.MaxValue).min)
+    }
+    def bandBuckets(sig: Seq[Long]): Seq[Long] = {
+      val rows = numHashes / bands
+      (0 until bands).map(b => (0 until rows).foldLeft(b.toLong)((h, r) =>
+        XXH64.hashLong(sig(b * rows + r), h)))
+    }
+    def winnow(s: String, k: Int, w: Int): Seq[Long] =
+      if (s.length < k) Nil
+      else {
+        val hs = (0 to s.length - k).map(i => PortableHash.h31(u(s.substring(i, i + k))))
+        if (hs.length <= w) Seq(hs.min) else hs.sliding(w).map(_.min).toSeq.distinct
+      }
+    def ngramCounts(s: String, buckets: Int, maxN: Int): Seq[(Int, Long)] = {
+      val toks = s.dropWhile(_ == ' ').reverse.dropWhile(_ == ' ').reverse
+        .toLowerCase.split("\\s+", -1).toSeq
+      val grams = for (n <- 1 to maxN; g <- toks.sliding(n) if g.length == n) yield g.mkString(" ")
+      grams.groupBy(g => (PortableHash.h31(u(g)) % buckets).toInt)
+        .map { case (b, gs) => (b, gs.length.toLong) }.toSeq.sorted
+    }
+
+    def check(c: (Seq[String], String, Int, Int, Int, Int)): Unit = {
+      val (toks, txt, k, w, buckets, maxN) = c
+      val row = Seq((toks, txt)).toDF("toks", "text")
+        .select(text.simhash64(col("toks")),
+          text.minhash(col("toks"), shingleLen, numHashes, bands),
+          text.winnowFingerprint(col("text"), k, w),
+          text.hashedNgramCounts(col("text"), buckets, maxN))
+        .head()
+      val ctx = s"toks=$toks text='$txt' k=$k w=$w buckets=$buckets maxN=$maxN"
+      val mh = row.getStruct(1)
+      val sig = minhashSig(toks)
+      assert(mh.getSeq[Long](0) == sig, ctx)
+      assert(mh.getSeq[Long](1) == bandBuckets(sig), ctx)
+      if (toks == null) assert(row.isNullAt(0), ctx)
+      else assert(row.getLong(0) == simhash(toks), ctx)
+      if (txt == null) assert(row.isNullAt(2) && row.isNullAt(3), ctx)
+      else {
+        assert(row.getSeq[Long](2) == winnow(txt, k, w), ctx)
+        assert(row.getSeq[Row](3).map(r => (r.getInt(0), r.getLong(1))) ==
+          ngramCounts(txt, buckets, maxN), ctx)
+      }
+    }
+    edges.foreach(check)
+    forAll(gen, 60)(check)
+  }
 }

@@ -491,6 +491,12 @@ class TransformConformanceSpec extends AnyFunSuite {
     ).foreach { expr => assert(validate(expr).isRight, expr) }
   }
 
+  test("RE2 to Java translation keeps character classes and \\Q..\\E quotes intact") {
+    import graft.functions.Re2.toJavaRegex
+    assert(toJavaRegex("""[(?P<x>]y(?P<g>z)""") == """[(?P<x>]y(z)""")
+    assert(toJavaRegex("""\Q(?P<x>\E(?P<g>z)""") == """\Q(?P<x>\E(z)""")
+  }
+
   test("invalid userAgent escaping fails the event into the error frame") {
     val spec = exclusionSpec(
       """{"extractFields": [{"fields": [
